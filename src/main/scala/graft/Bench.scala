@@ -229,9 +229,11 @@ object Bench {
     // parsed:null). The compact line always fits inside any tail window;
     // the per-query map still travels on the full line above AND in
     // bench_out.json. Measurement methodology is unchanged — this is an
-    // emission-only addition (r14 verdict item 1).
+    // emission-only addition (r14 verdict item 1). Errors are only COUNTED
+    // here: the messages are unbounded (one per failed query), so they
+    // travel on the full line and in bench_out.json only.
     val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"errors":$errJson,"repeats":$repeats,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.distinct.size},"repeats":$repeats,"sf":"$sfDir"}"""
     println(summary)
     System.out.flush()
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.budget._
 import graft.constraints._
-import graft.exec.{DpQuantile, Noise, NoiseInfo, NoiseMechanism}
+import graft.exec.{DpQuantile, MagnitudeBucket, Noise, NoiseInfo, NoiseMechanism}
 import graft.ir.MechanismHint
 import graft.ir.QueryExpr._
 import graft.ir.MeasureExpr
@@ -337,17 +337,11 @@ final class MeasurementPlanner(
       val sens = aggSensitivity(t)
       val eps = exponentialEpsilon(sens)
       val integer = t.schema(m).ctype == ColumnType.Integer
-      // magnitude bucket: smallest k with |x| <= 2^k, k in [-32, 62].
-      // 2^k is exactly representable, so the comparison is bit-exact across
+      // magnitude bucket: smallest k with |x| <= 2^k, k in [-32, 62],
+      // decided on the exponent and mantissa bits, so it is bit-exact across
       // engines — unlike ceil(log2(x)), whose libm rounding at power-of-2
       // boundaries differs between JVM and C runtimes.
-      val absx = abs(col(m).cast("double"))
-      val mag = when(absx === 0.0, lit(-32))
-        .otherwise(aggregate(
-          sequence(lit(62), lit(-32), lit(-1)), lit(62),
-          (acc, k) => when(absx <= pow(lit(2.0), k.cast("double")),
-            k.cast("int")).otherwise(acc)))
-      val binned = t.df.withColumn("__mag", mag)
+      val binned = t.df.withColumn("__mag", MagnitudeBucket.column(col(m)))
       val keyCols = keys.columns
       val counts = binned.groupBy((keyCols :+ "__mag").map(col).toIndexedSeq: _*)
         .agg(count(lit(1)).as("__c"))
