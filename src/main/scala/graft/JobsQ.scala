@@ -62,20 +62,22 @@ object JobsQ {
     spark.sparkContext.addSparkListener(listener)
     for (n <- names) {
       jobs.clear()
+      // epoch-millis origin for gapBefore: JobRec.start/end are listener
+      // event times (epoch millis), so the first gap must be measured from
+      // the same clock — nanoTime has an arbitrary origin. It is taken
+      // before construction, so jobs an eager operator launches while the
+      // DataFrame is built get non-negative gaps too.
+      val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, d)
       df.queryExecution.executedPlan
       val t1 = System.nanoTime()
-      // epoch-millis origin for gapBefore: JobRec.start/end are listener
-      // event times (epoch millis), so the first gap must be measured from
-      // the same clock — nanoTime has an arbitrary origin (ADVICE r14)
-      val execStartMs = System.currentTimeMillis()
       val c = df.count()
       val t2 = System.nanoTime()
       Thread.sleep(300) // let the listener bus drain
       println(f"===== $n plan=${(t1 - t0) / 1e9}%.3f exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f rows=$c")
       val recs = jobs.values().toArray(Array.empty[JobRec]).sortBy(_.start)
-      var prevEnd = execStartMs
+      var prevEnd = startMs
       recs.foreach { r =>
         val gap = r.start - prevEnd
         prevEnd = math.max(prevEnd, r.end)

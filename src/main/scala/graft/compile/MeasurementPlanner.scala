@@ -1,6 +1,7 @@
 package graft.compile
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.budget._
@@ -19,7 +20,7 @@ import graft.types.ColumnType
   */
 final case class MeasureOut(df: DataFrame, noise: Seq[NoiseInfo], spend: PrivacyBudget)
 
-import MeasurementPlanner.Sens
+import MeasurementPlanner.{Part, Sens}
 
 object MeasurementPlanner {
   /** One budget charge = at most one random draw: when any mechanism in the
@@ -65,6 +66,12 @@ object MeasurementPlanner {
     /** Squared sensitivity for Gaussian-family calibration. */
     def sq: Rat = l2Sq.getOrElse(l1 * l1)
   }
+
+  /** One noisy column of an additive release: its aggregate, whether it is
+    * integer-valued (0L fill, discrete noise) and its mechanism.
+    */
+  private[compile] final case class Part(
+      name: String, agg: Column, integer: Boolean, mech: NoiseMechanism)
 }
 
 /** Lowers `MeasureExpr` to: transform chain -> (truncation) -> aggregation
@@ -120,16 +127,13 @@ final class MeasurementPlanner(
         .compile(withKeys(agg, bound))
       MeasureOut(inner.df, inner.noise, budget)
 
-    case e @ GroupByCount(child, keys, out, hint) =>
+    case GroupByCount(child, keys, out, hint) =>
       val t = prepared(child, needed = Some(keys.columns))
       val sens = aggSensitivity(t, Some(keys), l2 = isL2(hint))
       val mech = selectMechanism(hint, integer = true, sens, parts = 1)
-      val aggd = groupAgg(t.df, keys, Seq(count(lit(1)).as(out)))
-      val joined = keysetJoin(keys, aggd, Seq(out -> Some(lit(0L))))
-      val noisy = joined.withColumn(out, Noise.addLongNoise(col(out), mech))
-      MeasureOut(noisy, Seq(NoiseInfo(out, mech)), noiseSpend)
+      additive(t.df, keys, Seq(Part(out, count(lit(1)), integer = true, mech)))
 
-    case e @ GroupByCountDistinct(child, keys, cols, out, hint) =>
+    case GroupByCountDistinct(child, keys, cols, out, hint) =>
       val t = prepared(child)
       val countCols = if (cols.nonEmpty) cols else t.schema.columnNames
       val idCase = t.metric match {
@@ -161,94 +165,30 @@ final class MeasurementPlanner(
       }
       val sens = idCase.getOrElse(aggSensitivity(t, Some(keys), l2 = isL2(hint)))
       val mech = selectMechanism(hint, integer = true, sens, parts = 1)
-      val aggd = groupAgg(t.df, keys,
-        Seq(countDistinct(struct(countCols.map(col).toIndexedSeq: _*)).as(out)))
-      val joined = keysetJoin(keys, aggd, Seq(out -> Some(lit(0L))))
-      val noisy = joined.withColumn(out, Noise.addLongNoise(col(out), mech))
-      MeasureOut(noisy, Seq(NoiseInfo(out, mech)), noiseSpend)
+      val distinct = countDistinct(struct(countCols.map(col).toIndexedSeq: _*))
+      additive(t.df, keys, Seq(Part(out, distinct, integer = true, mech)))
 
-    case e @ GroupByBoundedSum(child, keys, m, lo, hi, out, hint) =>
+    case GroupByBoundedSum(child, keys, m, lo, hi, out, hint) =>
       val t = prepared(child, dropSpecial = Some(m),
         needed = Some(keys.columns :+ m))
       val sens = aggSensitivity(t, Some(keys), l2 = isL2(hint)) *
         Rat(math.max(math.abs(lo), math.abs(hi)))
+      // the column type alone decides the family: a sum needs no midpoint
       val integer = t.schema(m).ctype == ColumnType.Integer
       val mech = selectMechanism(hint, integer, sens, parts = 1)
-      if (integer) {
-        val clamped = least(greatest(col(m), lit(lo.toLong)), lit(hi.toLong))
-        val aggd = groupAgg(t.df, keys, Seq(sum(clamped).as(out)))
-        val joined = keysetJoin(keys, aggd, Seq(out -> Some(lit(0L))))
-        MeasureOut(joined.withColumn(out, Noise.addLongNoise(col(out), mech)),
-          Seq(NoiseInfo(out, mech)), noiseSpend)
-      } else {
-        val clamped = least(greatest(col(m), lit(lo)), lit(hi))
-        val aggd = groupAgg(t.df, keys, Seq(sum(clamped).as(out)))
-        val joined = keysetJoin(keys, aggd, Seq(out -> Some(lit(0.0))))
-        MeasureOut(joined.withColumn(out, Noise.addDoubleNoise(col(out), mech)),
-          Seq(NoiseInfo(out, mech)), noiseSpend)
-      }
+      val clamped =
+        if (integer) least(greatest(col(m), lit(lo.toLong)), lit(hi.toLong))
+        else least(greatest(col(m), lit(lo)), lit(hi))
+      additive(t.df, keys, Seq(Part(out, sum(clamped), integer, mech)))
 
-    case e @ GroupByBoundedAverage(child, keys, m, lo, hi, out, hint) =>
-      // DP mean = noisy sum of deviations from the midpoint / noisy count,
-      // shifted back (reference _base_measurement_visitor.py:1249-1261);
-      // each part gets half the budget. For an INTEGER measure with whole
-      // clamp bounds the midpoint is floored to an integer so the deviation
-      // sum stays integer-valued and the discrete mechanism family applies
-      // (reference core get_midpoint(integer_midpoint=True); rewrite-rules
-      // matrix maps int_col -> GEOMETRIC/DISCRETE_GAUSSIAN). The midpoint
-      // shift cancels exactly in the result, so only the calibration — not
-      // the noiseless answer — depends on this choice; the asymmetric span
-      // side max(hi-mid, mid-lo) is the per-row sensitivity.
-      val t = prepared(child, dropSpecial = Some(m),
-        needed = Some(keys.columns :+ m))
-      val sens = aggSensitivity(t, Some(keys), l2 = isL2(hint))
-      val intPath = isIntegerMeasure(t.schema, m, lo, hi)
-      val mid = if (intPath) math.floor((lo + hi) / 2.0) else (lo + hi) / 2.0
-      val devSens =
-        if (intPath) sens * Rat(math.max(hi - mid, mid - lo))
-        else sens * Rat((hi - lo) / 2.0)
-      val sumMech = selectMechanism(hint, integer = intPath, devSens, parts = 2)
-      val cntMech = selectMechanism(hint, integer = true, sens, parts = 2)
-      val (sdAgg, sdFill) =
-        if (intPath) {
-          val c = least(greatest(col(m), lit(lo.toLong)), lit(hi.toLong))
-          (sum(c - lit(mid.toLong)).as("__sd"), Some(lit(0L)))
-        } else {
-          val c = least(greatest(col(m).cast("double"), lit(lo)), lit(hi))
-          (sum(c - lit(mid)).as("__sd"), Some(lit(0.0)))
-        }
-      val aggd = groupAgg(t.df, keys, Seq(sdAgg, count(lit(1)).as("__n")))
-      val joined = keysetJoin(keys, aggd,
-        Seq("__sd" -> sdFill, "__n" -> Some(lit(0L))))
-      val noisy = joined
-        .withColumn("__sd",
-          if (intPath) Noise.addLongNoise(col("__sd"), sumMech)
-          else Noise.addDoubleNoise(col("__sd"), sumMech))
-        .withColumn("__n", Noise.addLongNoise(col("__n"), cntMech))
-      val result = noisy
-        .withColumn(out,
-          col("__sd").cast("double") / greatest(col("__n").cast("double"), lit(1.0)) +
-            lit(mid))
-        .drop("__sd", "__n")
-      MeasureOut(result,
-        Seq(NoiseInfo(s"$out(sum)", sumMech), NoiseInfo(s"$out(count)", cntMech)),
-        noiseSpend)
+    // the remaining bounded aggregations: average, variance, stdev
+    case e: GroupByBounded => moments(e)
 
-    case e: GroupByBoundedVariance =>
-      MeasureOut(varianceResult(e, e.outputColumn, stdev = false), varianceNoise(e),
-        noiseSpend)
-
-    case e @ GroupByBoundedStdev(child, keys, m, lo, hi, out, hint) =>
-      val v = GroupByBoundedVariance(child, keys, m, lo, hi, out, hint)
-      MeasureOut(varianceResult(v, out, stdev = true), varianceNoise(v), noiseSpend)
-
-    case e @ GroupByQuantile(child, keys, m, q, lo, hi, out) =>
+    case GroupByQuantile(child, keys, m, q, lo, hi, out) =>
       val t = prepared(child, dropSpecial = Some(m),
         needed = Some(keys.columns :+ m))
       val sens = aggSensitivity(t, Some(keys))
       val eps = exponentialEpsilon(sens)
-      val mech = NoiseMechanism.Exponential(eps)
-      val keyCols = keys.columns
       // default: bounded-state binned mechanism (DpQuantile header). Opt-in
       // `spark.graft.quantile.method = intervals` runs the reference's
       // interval-scoring mechanism, which materializes each group's values.
@@ -264,34 +204,23 @@ final class MeasurementPlanner(
           val maxGroupRows = t.df.sparkSession.conf
             .getOption("spark.graft.quantile.intervals.maxGroupRows")
             .map(_.toInt).getOrElse(1 << 20)
-          val vals = t.df.withColumn("__v", col(m).cast("double"))
           val gather = graft.exec.BoundedCollect
             .boundedCollectList(col("__v"), maxGroupRows + 1).as("__vs")
-          val perGroup =
-            if (keys.isEmptyKey) vals.agg(gather)
-            else vals.groupBy(keyCols.map(col).toIndexedSeq: _*).agg(gather)
+          val perGroup = groupAgg(
+            t.df.withColumn("__v", col(m).cast("double")), keys, Seq(gather))
           keysetJoin(keys, perGroup, Seq("__vs" -> None))
             .withColumn(out,
               DpQuantile.finishIntervalsUdf(q, lo, hi, eps, maxGroupRows)(col("__vs")))
             .drop("__vs")
         case "binned" =>
-          val binned = t.df.withColumn("__bin", DpQuantile.binColumn(col(m), lo, hi))
-          val counts = binned.groupBy((keyCols :+ "__bin").map(col).toIndexedSeq: _*)
-            .agg(count(lit(1)).as("__c"))
-          val perGroup =
-            if (keys.isEmptyKey)
-              counts.agg(collect_list(struct(col("__bin"), col("__c"))).as("__bins"))
-            else counts.groupBy(keyCols.map(col).toIndexedSeq: _*)
-              .agg(collect_list(struct(col("__bin"), col("__c"))).as("__bins"))
-          keysetJoin(keys, perGroup, Seq("__bins" -> None))
-            .withColumn(out, DpQuantile.finishUdf(q, lo, hi, eps)(col("__bins")))
-            .drop("__bins")
+          histogramSelect(t.df, keys, DpQuantile.binColumn(col(m), lo, hi), out,
+            DpQuantile.finishUdf(q, lo, hi, eps))
         case other => throw new IllegalArgumentException(
           s"spark.graft.quantile.method must be 'binned' or 'intervals', got '$other'")
       }
-      MeasureOut(result, Seq(NoiseInfo(out, mech)), noiseSpend)
+      MeasureOut(result, Seq(NoiseInfo(out, NoiseMechanism.Exponential(eps))), noiseSpend)
 
-    case e @ GetGroups(child, columns) =>
+    case e @ GetGroups(child, _) =>
       // DP partition selection by noisy-count thresholding (Korolova et al. /
       // Wilson et al.; reference create_partition_selection_measurement call
       // at _measurement_visitor.py:141-147). ApproxDP only.
@@ -303,29 +232,25 @@ final class MeasurementPlanner(
       val t = prepared(child)
       val sens = aggSensitivity(t)
       val cols = e.schema(cat).columnNames
-      val aggd = t.df.groupBy(cols.map(col).toIndexedSeq: _*)
-        .agg(count(lit(1)).as("__c"))
-      val (noisy, threshold) =
-        if (eps.isInfinite) (aggd, 1.0)
+      val (b, threshold) =
+        if (eps.isInfinite) (0.0, 1.0)
         else {
           if (delta.isZero) throw new IllegalArgumentException(
             "get_groups requires delta > 0")
           if (eps.isZero) throw new IllegalArgumentException(
             "get_groups requires epsilon > 0")
-          val (b, tau) = MeasurementPlanner.partitionSelectionParams(
+          MeasurementPlanner.partitionSelectionParams(
             sens.toDouble, eps.toDouble, delta.toDouble)
-          (aggd.withColumn("__c",
-            Noise.addLongNoise(col("__c"), NoiseMechanism.Geometric(b))),
-            tau)
         }
-      val result = noisy.filter(col("__c") >= threshold)
+      val mech = NoiseMechanism.Geometric(b)
+      val result = t.df.groupBy(cols.map(col).toIndexedSeq: _*)
+        .agg(count(lit(1)).as("__c"))
+        .withColumn("__c", Noise.addLongNoise(col("__c"), mech))
+        .filter(col("__c") >= threshold)
         .select(cols.map(col).toIndexedSeq: _*)
-      MeasureOut(result,
-        Seq(NoiseInfo("__partition_selection",
-          NoiseMechanism.Geometric(if (eps.isInfinite) 0.0 else 2.0 * sens.toDouble / eps.toDouble))),
-        budget)
+      MeasureOut(result, Seq(NoiseInfo("__partition_selection", mech)), budget)
 
-    case e @ GetBounds(child, keys, m, lowerName, upperName) =>
+    case GetBounds(child, keys, m, lowerName, upperName) =>
       val t0 = prepared(child, dropSpecial = Some(m))
       // infinities cannot inform a finite bound: exclude them like nulls and
       // NaNs (reference get_bounds returns finite powers of two even when
@@ -341,18 +266,8 @@ final class MeasurementPlanner(
       // decided on the exponent and mantissa bits, so it is bit-exact across
       // engines — unlike ceil(log2(x)), whose libm rounding at power-of-2
       // boundaries differs between JVM and C runtimes.
-      val binned = t.df.withColumn("__mag", MagnitudeBucket.column(col(m)))
-      val keyCols = keys.columns
-      val counts = binned.groupBy((keyCols :+ "__mag").map(col).toIndexedSeq: _*)
-        .agg(count(lit(1)).as("__c"))
-      val perGroup =
-        if (keys.isEmptyKey)
-          counts.agg(collect_list(struct(col("__mag"), col("__c"))).as("__mags"))
-        else counts.groupBy(keyCols.map(col).toIndexedSeq: _*)
-          .agg(collect_list(struct(col("__mag"), col("__c"))).as("__mags"))
-      val joined = keysetJoin(keys, perGroup, Seq("__mags" -> None))
-      val boundUdf = GetBoundsImpl.finishUdf(eps)
-      val withK = joined.withColumn("__k", boundUdf(col("__mags"))).drop("__mags")
+      val withK = histogramSelect(t.df, keys, MagnitudeBucket.column(col(m)), "__k",
+        GetBoundsImpl.finishUdf(eps))
       val result =
         if (integer) {
           // powers of two are exact in doubles up to 2^62
@@ -629,66 +544,94 @@ final class MeasurementPlanner(
       lo == math.floor(lo) && hi == math.floor(hi) &&
       !lo.isInfinite && !hi.isInfinite
 
-  // variance / stdev share the three-part lowering (noisy sum of deviations,
-  // sum of squared deviations, count; reference _query_expr.py:1918-2038)
-  private def varianceParts(e: GroupByBoundedVariance) = {
-    val t = prepared(e.child, dropSpecial = Some(e.measureColumn))
+  // ------------------------------------------------------- release shapes
+
+  /** Additive-noise release: aggregate every part per group, left-join the
+    * keyset (absent groups read 0), then add each part's noise in the order
+    * given. Count, count-distinct, sum and the moments all lower here.
+    */
+  private def additive(df: DataFrame, keys: KeySet, parts: Seq[Part]): MeasureOut = {
+    val aggd = groupAgg(df, keys, parts.map(p => p.agg.as(p.name)))
+    val joined = keysetJoin(keys, aggd,
+      parts.map(p => p.name -> Some(if (p.integer) lit(0L) else lit(0.0))))
+    val noisy = parts.foldLeft(joined) { (d, p) =>
+      d.withColumn(p.name,
+        if (p.integer) Noise.addLongNoise(col(p.name), p.mech)
+        else Noise.addDoubleNoise(col(p.name), p.mech))
+    }
+    MeasureOut(noisy, parts.map(p => NoiseInfo(p.name, p.mech)), noiseSpend)
+  }
+
+  /** Average, variance and stdev: a noisy sum of deviations from the clamp
+    * midpoint, for the spread moments a noisy sum of squared deviations, and
+    * a noisy count, each part taking an equal share of the budget (reference
+    * _base_measurement_visitor.py:1249-1261, _query_expr.py:1918-2038). For
+    * an INTEGER measure with whole clamp bounds the midpoint is floored to an
+    * integer so the deviation sums stay integer-valued and the discrete
+    * mechanism family applies (reference core get_midpoint(
+    * integer_midpoint=True)); the per-row sensitivity is then the
+    * asymmetric span side max(hi-mid, mid-lo). The midpoint shift cancels
+    * exactly in the result, so only the calibration — not the noiseless
+    * answer — depends on this choice. Only the final projection differs
+    * between the three.
+    */
+  private def moments(e: GroupByBounded): MeasureOut = {
+    val (m, lo, hi, out) = (e.measureColumn, e.low, e.high, e.outputColumn)
+    val t = prepared(e.child, dropSpecial = Some(m),
+      needed = Some(e.keys.columns :+ m))
     val sens = aggSensitivity(t, Some(e.keys), l2 = isL2(e.mechanism))
-    val intPath = isIntegerMeasure(t.schema, e.measureColumn, e.low, e.high)
-    val mid =
-      if (intPath) math.floor((e.low + e.high) / 2.0) else (e.low + e.high) / 2.0
-    val half =
-      if (intPath) math.max(e.high - mid, mid - e.low) else (e.high - e.low) / 2.0
-    val sdMech = selectMechanism(e.mechanism, integer = intPath, sens * Rat(half), 3)
-    val sqMech = selectMechanism(e.mechanism, integer = intPath,
-      sens * Rat(half * half), 3)
-    val cntMech = selectMechanism(e.mechanism, integer = true, sens, 3)
-    (t, mid, intPath, sdMech, sqMech, cntMech)
+    val intPath = isIntegerMeasure(t.schema, m, lo, hi)
+    val mid = if (intPath) math.floor((lo + hi) / 2.0) else (lo + hi) / 2.0
+    val half = if (intPath) math.max(hi - mid, mid - lo) else (hi - lo) / 2.0
+    val spread = !e.isInstanceOf[GroupByBoundedAverage]
+    val nParts = if (spread) 3 else 2
+    def mech(integer: Boolean, s: Sens) =
+      selectMechanism(e.mechanism, integer, s, nParts)
+    val dev =
+      if (intPath) least(greatest(col(m), lit(lo.toLong)), lit(hi.toLong)) - lit(mid.toLong)
+      else least(greatest(col(m).cast("double"), lit(lo)), lit(hi)) - lit(mid)
+    // (noise-info label, part)
+    val parts =
+      Seq("sum" -> Part("__sd", sum(dev), intPath, mech(intPath, sens * Rat(half)))) ++
+        (if (spread) Seq("sumsq" -> Part("__sq", sum(dev * dev), intPath,
+          mech(intPath, sens * Rat(half * half)))) else Nil) :+
+        ("count" -> Part("__n", count(lit(1)), integer = true, mech(true, sens)))
+    val noisy = additive(t.df, e.keys, parts.map(_._2)).df
+    def d(c: String) = col(c).cast("double")
+    val result = e match {
+      case _: GroupByBoundedAverage =>
+        d("__sd") / greatest(d("__n"), lit(1.0)) + lit(mid)
+      case _ =>
+        val n = greatest(d("__n"), lit(1.0))
+        val nm1 = greatest(d("__n") - lit(1.0), lit(1.0))
+        // capped by the true half-span, not the floored-midpoint side
+        val span = (hi - lo) / 2.0
+        val variance = least(
+          greatest((d("__sq") - d("__sd") * d("__sd") / n) / nm1, lit(0.0)),
+          lit(span * span))
+        if (e.isInstanceOf[GroupByBoundedStdev]) sqrt(variance) else variance
+    }
+    MeasureOut(
+      noisy.withColumn(out, result).drop(parts.map(_._2.name): _*),
+      parts.map { case (label, p) => NoiseInfo(s"$out($label)", p.mech) },
+      noiseSpend)
   }
 
-  private def varianceNoise(e: GroupByBoundedVariance): Seq[NoiseInfo] = {
-    val (_, _, _, sd, sq, cnt) = varianceParts(e)
-    Seq(NoiseInfo(s"${e.outputColumn}(sum)", sd),
-      NoiseInfo(s"${e.outputColumn}(sumsq)", sq),
-      NoiseInfo(s"${e.outputColumn}(count)", cnt))
-  }
-
-  private def varianceResult(
-      e: GroupByBoundedVariance, out: String, stdev: Boolean): DataFrame = {
-    val (t, mid, intPath, sdMech, sqMech, cntMech) = varianceParts(e)
-    val (sdAgg, sqAgg, zeroFill) =
-      if (intPath) {
-        val c = least(greatest(col(e.measureColumn), lit(e.low.toLong)),
-          lit(e.high.toLong))
-        val dev = c - lit(mid.toLong)
-        (sum(dev).as("__sd"), sum(dev * dev).as("__sq"),
-          Some(lit(0L)): Option[org.apache.spark.sql.Column])
-      } else {
-        val c = least(greatest(col(e.measureColumn).cast("double"), lit(e.low)),
-          lit(e.high))
-        val dev = c - lit(mid)
-        (sum(dev).as("__sd"), sum(dev * dev).as("__sq"),
-          Some(lit(0.0)): Option[org.apache.spark.sql.Column])
-      }
-    val aggd = groupAgg(t.df, e.keys,
-      Seq(sdAgg, sqAgg, count(lit(1)).as("__n")))
-    val joined = keysetJoin(e.keys, aggd, Seq(
-      "__sd" -> zeroFill, "__sq" -> zeroFill, "__n" -> Some(lit(0L))))
-    def addNoise(c: org.apache.spark.sql.Column, m: graft.exec.NoiseMechanism) =
-      if (intPath) Noise.addLongNoise(c, m) else Noise.addDoubleNoise(c, m)
-    val noisy = joined
-      .withColumn("__sd", addNoise(col("__sd"), sdMech))
-      .withColumn("__sq", addNoise(col("__sq"), sqMech))
-      .withColumn("__n", Noise.addLongNoise(col("__n"), cntMech))
-    val n = greatest(col("__n").cast("double"), lit(1.0))
-    val nm1 = greatest(col("__n").cast("double") - lit(1.0), lit(1.0))
-    val half = (e.high - e.low) / 2.0
-    val varCol = least(
-      greatest((col("__sq").cast("double") -
-        col("__sd").cast("double") * col("__sd").cast("double") / n) / nm1, lit(0.0)),
-      lit(half * half))
-    noisy.withColumn(out, if (stdev) sqrt(varCol) else varCol)
-      .drop("__sd", "__sq", "__n")
+  /** Private selection over per-group histograms (binned quantile,
+    * get_bounds): count rows per (keys, bin), gather each group's
+    * (bin, count) pairs, left-join the keyset (absent groups get a null
+    * list) and let `finisher` choose `out` from the histogram.
+    */
+  private def histogramSelect(df: DataFrame, keys: KeySet, bin: Column,
+      out: String, finisher: UserDefinedFunction): DataFrame = {
+    val counts = df.withColumn("__bin", bin)
+      .groupBy((keys.columns :+ "__bin").map(col).toIndexedSeq: _*)
+      .agg(count(lit(1)).as("__c"))
+    val perGroup = groupAgg(counts, keys,
+      Seq(collect_list(struct(col("__bin"), col("__c"))).as("__bins")))
+    keysetJoin(keys, perGroup, Seq("__bins" -> None))
+      .withColumn(out, finisher(col("__bins")))
+      .drop("__bins")
   }
 }
 

@@ -46,18 +46,6 @@ object Multimodal {
 
   // ------------------------------------------------------------------ images
 
-  /** Container format sniffed from the payload via the registered ImageIO
-    * readers, or null when no JDK codec claims the bytes.
-    */
-  private[pipeline] def detectFormat(bytes: Array[Byte]): String = {
-    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-    if (iis == null) return null
-    try {
-      val readers = ImageIO.getImageReaders(iis)
-      if (readers.hasNext) readers.next().getFormatName.toLowerCase else null
-    } catch { case NonFatal(_) => null } finally iis.close()
-  }
-
   /** Mean Rec.601 luminance (in [0,1]) over `featureDim` horizontal bands —
     * band j covers pixel rows [j*h/D, (j+1)*h/D), widened to at least one
     * row, so every band is a real pixel statistic at any aspect ratio.

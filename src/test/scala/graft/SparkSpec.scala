@@ -15,6 +15,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def longCol(n: String): StructField = StructField(n, LongType)
   def strCol(n: String): StructField = StructField(n, StringType)
   def dblCol(n: String): StructField = StructField(n, DoubleType)
+
+  /** An isolated session that evaluates expressions under one codegen
+    * factory mode ("CODEGEN_ONLY" or "NO_CODEGEN") with no fallback. Local
+    * relations are kept from being folded at optimization time
+    * (ConvertToLocalRelation projects them interpreted whatever the mode),
+    * and whole-stage codegen is on only for CODEGEN_ONLY, so CODEGEN_ONLY
+    * runs generated code in a whole-stage-codegen stage and NO_CODEGEN runs
+    * `eval` in an interpreted projection.
+    */
+  def codegenSession(mode: String): SparkSession = {
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    sess.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+    sess.conf.set("spark.sql.codegen.fallback", "false")
+    sess.conf.set("spark.sql.codegen.factoryMode", mode)
+    sess
+  }
 }
 
 object SparkSpec {

@@ -70,6 +70,29 @@ class MechanismSelectionSpec extends SparkSpec {
       .noiseInfo(QueryBuilder("t").variance("d", 0, 4), PureDPBudget(Rat(3, 2)))
     // thirds of eps=3/2 -> 1/2 each; sd sens 2 -> 4; sq sens 4 -> 8; n -> 2
     assert(varInfo.map(_.mechanism) === Seq(Laplace(4.0), Laplace(8.0), Geometric(2.0)))
+    // stdev releases the same three parts as variance
+    val sdInfo = sess(PureDPBudget(Rat.Inf))
+      .noiseInfo(QueryBuilder("t").stdev("d", 0, 4), PureDPBudget(Rat(3, 2)))
+    assert(sdInfo.map(_.column) ===
+      Seq("d_stdev(sum)", "d_stdev(sumsq)", "d_stdev(count)"))
+    assert(sdInfo.map(_.mechanism) === Seq(Laplace(4.0), Laplace(8.0), Geometric(2.0)))
+    // integer measure, odd span [0, 5]: the midpoint floors to 2, so the
+    // deviation sensitivity is the wider side max(5-2, 2-0) = 3, and the
+    // parts stay discrete
+    val intAvg = sess(PureDPBudget(Rat.Inf))
+      .noiseInfo(QueryBuilder("t").average("i", 0, 5), eps)
+    // halves of eps=1/2 -> 1/4 each; sd sens 3 -> 12; n -> 4
+    assert(intAvg.map(_.mechanism) === Seq(Geometric(12.0), Geometric(4.0)))
+    val intVar = sess(PureDPBudget(Rat.Inf))
+      .noiseInfo(QueryBuilder("t").variance("i", 0, 5), PureDPBudget(Rat(3, 2)))
+    // thirds -> 1/2 each; sd sens 3 -> 6; sq sens 9 -> 18; n -> 2
+    assert(intVar.map(_.mechanism) === Seq(Geometric(6.0), Geometric(18.0), Geometric(2.0)))
+    // zCDP thirds of rho=1/2 -> 1/6 each; sigma^2 = Delta^2 / (2 * 1/6):
+    // sd 2^2 * 3 = 12; sq 4^2 * 3 = 48; n 1 * 3 = 3
+    val zVar = sess(RhoZCDPBudget(Rat.Inf))
+      .noiseInfo(QueryBuilder("t").variance("d", 0, 4), rho)
+    assert(zVar.map(_.mechanism) ===
+      Seq(Gaussian(12.0), Gaussian(48.0), DiscreteGaussian(3.0)))
   }
 
   test("exponential mechanism epsilon: direct under PureDP, sqrt(8 rho) under zCDP") {

@@ -66,16 +66,12 @@ class CosineSimSpec extends SparkSpec {
       "interpreted (NO_CODEGEN) path bit for bit") {
     import spark.implicits._
     val df = fixtures.toDF("a", "b")
-    def run(mode: String): Seq[Option[Long]] = {
-      val sess = spark.newSession()
-      sess.conf.set("spark.sql.codegen.fallback", "false")
-      sess.conf.set("spark.sql.codegen.factoryMode", mode)
-      sess.createDataFrame(df.collectAsList(), df.schema)
+    def run(mode: String): Seq[Option[Long]] =
+      codegenSession(mode).createDataFrame(df.collectAsList(), df.schema)
         .select(kernel(col("a"), col("b")).as("k")).collect()
         .map(r => if (r.isNullAt(0)) None
           else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0))))
         .toSeq
-    }
     assert(run("CODEGEN_ONLY") === run("NO_CODEGEN"))
   }
 

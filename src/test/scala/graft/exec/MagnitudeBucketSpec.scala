@@ -57,26 +57,14 @@ class MagnitudeBucketSpec extends SparkSpec {
 
   private val Modes = Seq("CODEGEN_ONLY", "NO_CODEGEN")
 
-  /** (x, kernel, hof) rows of `values` under one codegen factory mode.
-    * The local relation is kept from being folded at optimization time
-    * (ConvertToLocalRelation projects it interpreted whatever the mode), so
-    * CODEGEN_ONLY runs the generated code in a whole-stage-codegen stage and
-    * NO_CODEGEN runs `eval` in an interpreted projection.
-    */
+  /** (x, kernel, hof) rows of `values` under one codegen factory mode. */
   private def buckets(mode: String, field: StructField,
-      values: Seq[Any]): Array[Row] = {
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-    sess.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
-    sess.conf.set("spark.sql.codegen.fallback", "false")
-    sess.conf.set("spark.sql.codegen.factoryMode", mode)
-    sess.createDataFrame(java.util.Arrays.asList(values.map(Row(_)): _*),
+      values: Seq[Any]): Array[Row] =
+    codegenSession(mode).createDataFrame(java.util.Arrays.asList(values.map(Row(_)): _*),
         StructType(Seq(field)))
       .select(col("x"),
         MagnitudeBucket.column(col("x")).as("k"), hof(col("x")).as("h"))
       .collect()
-  }
 
   private def assertMatches(field: StructField, values: Seq[Any]): Unit =
     Modes.foreach { mode =>
