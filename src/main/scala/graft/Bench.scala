@@ -1,21 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Benchmark main: runs every registered query against
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+/** Benchmark main, and graft's one timing/profiling entry point.
+  *
+  * With no arguments it runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Failed queries are reported with value -1 and collected in "errors" so a
   * broken query can never masquerade as a fast one.
+  *
+  * With query names as arguments (`graft.Bench q1 q2 ...`) it profiles just
+  * those queries on the same session and data instead — see [[profile]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // unknown names fail here, before a session is built
+    val selected = queries(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus.toInt)
     // warm the JVM/codegen/scheduler so the first timed query measures the
     // engine, not startup
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -26,7 +31,7 @@ object Bench {
     // timed numbers measure the engine on sfDir's data, not compiler luck
     val warmDir0 = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir0).isDirectory && warmDir0 != sfDir)
-      SparkEntry.queries.foreach { case (_, fn) =>
+      selected.foreach { case (_, fn) =>
         try fn(spark, warmDir0).count() catch { case _: Throwable => () }
       }
     // median of 3 timed runs per query: a single run is at the mercy of
@@ -38,6 +43,14 @@ object Bench {
     // statistic could repair.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     require(repeats >= 1, s"SPARK_GRAFT_REPEATS must be >= 1, got $repeats")
+    if (args.nonEmpty) { profile(spark, sfDir, selected, repeats); spark.stop() }
+    else record(spark, sfDir, repeats)
+  }
+
+  /** The record path: every query, the adjudicated medians, bench_out.json
+    * and the two stdout JSON lines.
+    */
+  private def record(spark: SparkSession, sfDir: String, repeats: Int): Unit = {
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -236,5 +249,106 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.distinct.size},"repeats":$repeats,"sf":"$sfDir"}"""
     println(summary)
     System.out.flush()
+  }
+
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** The queries a run covers: every registered query when `names` is
+    * empty, else the named ones in the order given. Every unknown name is
+    * reported at once.
+    */
+  def queries(names: Seq[String]): Seq[(String, QueryFn)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains).distinct
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
+  /** Dev mode: for each query, its formatted physical plan once, then
+    * `repeats` timed runs with the record path's plan/exec split, each
+    * followed by every Spark job the run scheduled (wall time, the
+    * driver-side gap before it — 0 when it overlaps an earlier job —
+    * tasks, description) and that job's stages.
+    * Jobs an eager operator launches while the DataFrame is built belong
+    * to the run too. Nothing is written and nothing is adjudicated.
+    */
+  private def profile(spark: SparkSession, sfDir: String,
+      selected: Seq[(String, QueryFn)], repeats: Int): Unit = {
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    for ((name, fn) <- selected) {
+      println(s"===== $name =====")
+      println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+      for (run <- 1 to repeats) {
+        log.clear()
+        // epoch millis, the listener's clock, taken before construction
+        val startMs = System.currentTimeMillis()
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        df.queryExecution.executedPlan
+        val t1 = System.nanoTime()
+        val rows = df.count()
+        val t2 = System.nanoTime()
+        Thread.sleep(300) // let the listener bus drain
+        println(f"$name run$run plan=${(t1 - t0) / 1e9}%.3f " +
+          f"exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f rows=$rows")
+        val jobs = log.jobs.values.asScala.toSeq.sortBy(_.start)
+        var prevEnd = startMs
+        jobs.foreach { j =>
+          println(f"  job ${j.id}%4d  ${(j.end - j.start) / 1000.0}%7.3fs  " +
+            f"gapBefore=${math.max(0L, j.start - prevEnd) / 1000.0}%6.3fs " +
+            f"tasks=${j.stages.map(_._1).sum}%4d  ${j.desc.take(100)}")
+          j.stages.foreach(s => println(s._2))
+          prevEnd = math.max(prevEnd, j.end)
+        }
+        println(f"  jobs=${jobs.size} " +
+          f"jobTime=${jobs.map(j => j.end - j.start).sum / 1000.0}%.3fs")
+      }
+    }
+    spark.sparkContext.removeSparkListener(log)
+  }
+
+  /** Dev mode's recorder: every job with its completed stages as
+    * (tasks, report line), keyed by job id.
+    */
+  private final class JobLog extends SparkListener {
+    final class Job(val id: Int, val start: Long, val desc: String) {
+      @volatile var end = -1L
+      @volatile var stages = Vector.empty[(Int, String)]
+    }
+    val jobs = new ConcurrentHashMap[Int, Job]()
+    // skipped stages never complete, so their entries go at the next clear
+    private val jobOfStage = new ConcurrentHashMap[Int, Job]()
+    def clear(): Unit = { jobs.clear(); jobOfStage.clear() }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
+      // the job's own description, else its call site: the name of its
+      // result stage, the last one it submits
+      val desc = Option(js.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+        .getOrElse("")
+      val job = new Job(js.jobId, js.time, desc)
+      jobs.put(js.jobId, job)
+      js.stageIds.foreach(jobOfStage.put(_, job))
+    }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      Option(jobs.get(je.jobId)).foreach(_.end = je.time)
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val si = sc.stageInfo
+      val run = si.taskMetrics
+      Option(jobOfStage.remove(si.stageId)).foreach { job =>
+        job.stages :+= si.numTasks -> (
+          f"    stage ${si.stageId}%4d tasks=${si.numTasks}%4d " +
+          f"exec=${run.executorRunTime / 1000.0}%7.3fs " +
+          f"cpu=${run.executorCpuTime / 1e9}%7.3fs " +
+          f"deser=${run.executorDeserializeTime / 1000.0}%6.3fs " +
+          f"gc=${run.jvmGCTime / 1000.0}%6.3fs " +
+          f"shufRead=${run.shuffleReadMetrics.fetchWaitTime / 1000.0}%5.3fs " +
+          f"wall=${(si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0}%7.3fs  " +
+          si.name.take(60))
+      }
+    }
   }
 }

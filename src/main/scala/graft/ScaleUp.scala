@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: synthesize a key-shifted `copies`x replica of an sf dir's
@@ -22,11 +21,7 @@ object ScaleUp {
     val copies = if (args.length > 2) args(2).toInt else 8
     require(copies >= 2 && copies <= 64, s"copies in [2,64], got $copies")
     require(out.startsWith("/tmp/"), "refusing to write outside /tmp")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32)
     val K = 1000000000L
     def rep(table: String, shifted: Map[String, Long => org.apache.spark.sql.Column]): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

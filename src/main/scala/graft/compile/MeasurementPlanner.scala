@@ -11,6 +11,7 @@ import graft.ir.MechanismHint
 import graft.ir.QueryExpr._
 import graft.ir.MeasureExpr
 import graft.keyset.KeySet
+import graft.pipeline.Reserved
 import graft.types.ColumnType
 
 /** Result of compiling a measurement: the answer plan, per-column noise
@@ -201,6 +202,8 @@ final class MeasurementPlanner(
           // marks the overflow, never an OOM) and the finisher refuses an
           // oversized group loudly, naming the bounded-state binned path —
           // the same discipline as Similarity.bruteForcePairs' guard
+          Reserved.free(keys.columns :+ m, "intervals quantile",
+            "__v", "__vs")
           val maxGroupRows = t.df.sparkSession.conf
             .getOption("spark.graft.quantile.intervals.maxGroupRows")
             .map(_.toInt).getOrElse(1 << 20)
@@ -213,7 +216,7 @@ final class MeasurementPlanner(
               DpQuantile.finishIntervalsUdf(q, lo, hi, eps, maxGroupRows)(col("__vs")))
             .drop("__vs")
         case "binned" =>
-          histogramSelect(t.df, keys, DpQuantile.binColumn(col(m), lo, hi), out,
+          histogramSelect(t.df, keys, m, DpQuantile.binColumn(_, lo, hi), out,
             DpQuantile.finishUdf(q, lo, hi, eps))
         case other => throw new IllegalArgumentException(
           s"spark.graft.quantile.method must be 'binned' or 'intervals', got '$other'")
@@ -232,6 +235,7 @@ final class MeasurementPlanner(
       val t = prepared(child)
       val sens = aggSensitivity(t)
       val cols = e.schema(cat).columnNames
+      Reserved.free(cols, "get_groups", "__c")
       val (b, threshold) =
         if (eps.isInfinite) (0.0, 1.0)
         else {
@@ -266,7 +270,8 @@ final class MeasurementPlanner(
       // decided on the exponent and mantissa bits, so it is bit-exact across
       // engines — unlike ceil(log2(x)), whose libm rounding at power-of-2
       // boundaries differs between JVM and C runtimes.
-      val withK = histogramSelect(t.df, keys, MagnitudeBucket.column(col(m)), "__k",
+      Reserved.free(keys.columns :+ m, "get_bounds", "__k")
+      val withK = histogramSelect(t.df, keys, m, MagnitudeBucket.column, "__k",
         GetBoundsImpl.finishUdf(eps))
       val result =
         if (integer) {
@@ -523,6 +528,7 @@ final class MeasurementPlanner(
     if (keys.isEmptyKey) return aggd
     val ks = keys.dataframe(spark)
     val keyCols = keys.columns
+    Reserved.free(aggd, "keyset join", keyCols.map(c => s"__r_$c"): _*)
     val aggR = aggd.select(
       keyCols.map(c => col(c).as(s"__r_$c")) ++ outCols.map { case (c, _) => col(c) }: _*)
     val cond = keyCols.map(c => ks(c) <=> aggR(s"__r_$c")).reduce(_ && _)
@@ -577,6 +583,7 @@ final class MeasurementPlanner(
     */
   private def moments(e: GroupByBounded): MeasureOut = {
     val (m, lo, hi, out) = (e.measureColumn, e.low, e.high, e.outputColumn)
+    Reserved.free(e.keys.columns :+ m, "moments", "__sd", "__sq", "__n")
     val t = prepared(e.child, dropSpecial = Some(m),
       needed = Some(e.keys.columns :+ m))
     val sens = aggSensitivity(t, Some(e.keys), l2 = isL2(e.mechanism))
@@ -620,11 +627,15 @@ final class MeasurementPlanner(
   /** Private selection over per-group histograms (binned quantile,
     * get_bounds): count rows per (keys, bin), gather each group's
     * (bin, count) pairs, left-join the keyset (absent groups get a null
-    * list) and let `finisher` choose `out` from the histogram.
+    * list) and let `finisher` choose `out` from the histogram. `bin` maps
+    * the measure column `m` to its bin.
     */
-  private def histogramSelect(df: DataFrame, keys: KeySet, bin: Column,
-      out: String, finisher: UserDefinedFunction): DataFrame = {
-    val counts = df.withColumn("__bin", bin)
+  private def histogramSelect(df: DataFrame, keys: KeySet, m: String,
+      bin: Column => Column, out: String,
+      finisher: UserDefinedFunction): DataFrame = {
+    Reserved.free(keys.columns :+ m, "histogram selection",
+      "__bin", "__c", "__bins")
+    val counts = df.withColumn("__bin", bin(col(m)))
       .groupBy((keys.columns :+ "__bin").map(col).toIndexedSeq: _*)
       .agg(count(lit(1)).as("__c"))
     val perGroup = groupAgg(counts, keys,

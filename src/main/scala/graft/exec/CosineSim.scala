@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * including non-finite inputs, which flow through the arithmetic
   * unspecial-cased exactly as before.
   *
-  * NULL on null inputs, MISMATCHED dimensions, and ZERO-norm vectors —
-  * the [[graft.pipeline.Similarity.cosine]] contract verbatim (see the
-  * rationale there: NULL sorts last under desc, so degenerate rows lose
-  * rank instead of winning it).
+  * NULL on null inputs, NULL elements, MISMATCHED dimensions, and
+  * ZERO-norm vectors — the [[graft.pipeline.Similarity.cosine]] contract
+  * verbatim (see the rationale there: NULL sorts last under desc, so
+  * degenerate rows lose rank instead of winning it). A null element would
+  * otherwise read as 0.0 and score a plausible but wrong cosine.
   *
   * Why an expression and not the ScalaUDF (guide §4, the
   * Md5Prefix/NearestCentroid discipline): the UDF deserializes BOTH
@@ -58,19 +59,22 @@ final case class CosineSim(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
+      val hole = ctx.freshName("hole")
       s"""
          |int $n = $a.numElements();
          |if ($n != $b.numElements()) { ${ev.isNull} = true; }
          |else {
          |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  boolean $hole = false;
          |  for (int $i = 0; $i < $n; $i++) {
+         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { $hole = true; break; }
          |    double $xi = $a.getDouble($i);
          |    double $yi = $b.getDouble($i);
          |    $dot += $xi * $yi;
          |    $na += $xi * $xi;
          |    $nb += $yi * $yi;
          |  }
-         |  if ($na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
+         |  if ($hole || $na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
          |  else { ${ev.value} =
          |    $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)); }
          |}
@@ -85,9 +89,9 @@ final case class CosineSim(left: Expression, right: Expression)
 object CosineSim {
   /** Shared interpreted kernel (also the spec's ground truth): boxed
     * cosine of two ArrayData read in place, or null when the dimensions
-    * mismatch or a norm is exactly zero. Accumulation order matches the
-    * old closure kernel: one left-to-right pass updating dot/na/nb
-    * together.
+    * mismatch, an element is null, or a norm is exactly zero. Accumulation
+    * order matches the old closure kernel: one left-to-right pass updating
+    * dot/na/nb together.
     */
   def cosineOrNull(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
@@ -97,6 +101,7 @@ object CosineSim {
     var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getDouble(i)
       val yi = y.getDouble(i)
       dot += xi * yi

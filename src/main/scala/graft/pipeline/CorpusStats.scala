@@ -690,9 +690,9 @@ object CorpusStats {
     // declarative transform/slice/array_join chain is a higher-order
     // function — interpreted, no codegen — and measured ~2x slower on the
     // bench; `spread` fans the per-row work out of a small scan's few splits
-    val gramsUdf = udf((t: String) => Dedup.lowerShingles(t, n))
     val grams = Dedup.spread(df)
-      .select(col(idCol), explode(gramsUdf(col(textCol))).as("gram"))
+      .select(col(idCol),
+        explode(Dedup.lowerShinglesCol(col(textCol), n)).as("gram"))
       // the kernel dedupes grams within a row; a document ingested twice
       // (same id, two rows) must still vote once, so dedupe (id, gram)
       // pairs — a partial/final hash aggregate, cheap because the kernel

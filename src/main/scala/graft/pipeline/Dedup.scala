@@ -802,10 +802,10 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       blocklist: DataFrame, blockTextCol: String, n: Int = 8): DataFrame = {
     require(n >= 1, "shingle size must be positive")
-    val sh = udf((t: String) => lowerShingles(t, n)) // shared kernel
     val docGrams = spread(docs).select(col(idCol),
-      explode(sh(col(textCol))).as("__g"))
-    val blockGrams = blocklist.select(explode(sh(col(blockTextCol))).as("__g"))
+      explode(lowerShinglesCol(col(textCol), n)).as("__g"))
+    val blockGrams = blocklist
+      .select(explode(lowerShinglesCol(col(blockTextCol), n)).as("__g"))
       .distinct()
     docGrams.join(broadcast(blockGrams), Seq("__g"), "left_semi")
       .select(col(idCol)).distinct()
@@ -941,10 +941,10 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       blocklist: DataFrame, blockTextCol: String, n: Int = 8): DataFrame = {
     require(n >= 1, "shingle size must be positive")
-    val sh = udf((t: String) => lowerShingles(t, n)) // shared kernel
     val docGrams = spread(docs).select(col(idCol),
-      explode(sh(col(textCol))).as("__g"))
-    val blockGrams = blocklist.select(explode(sh(col(blockTextCol))).as("__g"))
+      explode(lowerShinglesCol(col(textCol), n)).as("__g"))
+    val blockGrams = blocklist
+      .select(explode(lowerShinglesCol(col(blockTextCol), n)).as("__g"))
       .distinct()
     docGrams
       .join(broadcast(blockGrams.withColumn("__hit", lit(1L))), Seq("__g"), "left")

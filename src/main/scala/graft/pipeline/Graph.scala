@@ -473,23 +473,39 @@ object Graph {
       .where(col("__n").isNotNull).distinct()
       .withColumn("__dist", lit(0L))
       .localCheckpoint(true)
-    // ONE accumulated settled table, re-checkpointed per round, instead of
-    // a growing list of per-level frontiers: with the list, round k's
-    // anti-join scheduled k separate scans and the final union was k-wide,
-    // so deep traversals paid O(hops) plan width per round; with the
-    // accumulator, every round reads exactly one in-memory table and the
-    // plan stays O(1) wide at any depth. The union write is the frontier
-    // appended to memory-resident blocks — the already-settled partitions
-    // are cached, so the incremental cost per round is the new level, not V.
-    var settled = seed0
-    var frontier = seed0.select("__n")
+    frontierLoop(e, seed0, Nil, maxHops)
+      .select(col("__n").as("node"), col("__dist").as("dist"))
+  }
+
+  /** The level-synchronous expansion shared by [[bfsDistances]] (no key)
+    * and [[reachProfile]] (keyed by `__seed`): `settled0` holds the hop-0
+    * rows `(key..., __n, __dist)`. Each round joins the previous round's
+    * new (key, node) pairs against the edge table `e` (`__s`, `__d`),
+    * dedupes, anti-joins out the already-settled pairs and checkpoints the
+    * new level at `__dist = hop`; it stops after `maxHops` rounds or at
+    * the first empty level. Returns the settled table.
+    *
+    * ONE accumulated settled table, re-checkpointed per round, instead of
+    * a growing list of per-level frontiers: with the list, round k's
+    * anti-join scheduled k separate scans and the final union was k-wide,
+    * so deep traversals paid O(hops) plan width per round; with the
+    * accumulator, every round reads exactly one in-memory table and the
+    * plan stays O(1) wide at any depth. The union write is the frontier
+    * appended to memory-resident blocks — the already-settled partitions
+    * are cached, so the incremental cost per round is the new level, not V.
+    */
+  private def frontierLoop(e: DataFrame, settled0: DataFrame,
+      key: Seq[String], maxHops: Int): DataFrame = {
+    val pair = key :+ "__n"
+    var settled = settled0
+    var frontier = settled0.select(pair.map(col): _*)
     var hop = 0L
     var exhausted = frontier.isEmpty
     while (hop < maxHops && !exhausted) {
       hop += 1
       val next = frontier.join(e, frontier("__n") === e("__s"))
-        .select(col("__d").as("__n")).distinct()
-        .join(settled.select("__n"), Seq("__n"), "left_anti")
+        .select(key.map(col) :+ col("__d").as("__n"): _*).distinct()
+        .join(settled.select(pair.map(col): _*), pair, "left_anti")
         .withColumn("__dist", lit(hop))
         .localCheckpoint(true)
       if (next.isEmpty) exhausted = true
@@ -501,10 +517,10 @@ object Graph {
         // final assembly pay more in plan width / broadcast rebuilds over
         // the union than the single materialized table costs to write.
         settled = settled.unionByName(next).localCheckpoint(true)
-        frontier = next.select("__n")
+        frontier = next.select(pair.map(col): _*)
       }
     }
-    settled.select(col("__n").as("node"), col("__dist").as("dist"))
+    settled
   }
 
   /** k-core decomposition by iterative peeling (Seidman 1983, "Network
@@ -801,28 +817,11 @@ object Graph {
       s"reachProfile: $nSeeds seeds exceed maxSeeds=$maxSeeds — settled " +
         "state is |seeds| x reach; raise the cap only if that product " +
         "is budgeted")
-    var settled = seed0.select(col("__seed"), col("__seed").as("__n"),
+    val start = seed0.select(col("__seed"), col("__seed").as("__n"),
       lit(0L).as("__dist"))
       .localCheckpoint(true)
-    var frontier = settled.select("__seed", "__n")
-    var hop = 0L
-    var exhausted = frontier.isEmpty
-    while (hop < maxHops && !exhausted) {
-      hop += 1
-      val next = frontier.join(e, frontier("__n") === e("__s"))
-        .select(col("__seed"), col("__d").as("__n")).distinct()
-        .join(settled.select("__seed", "__n"), Seq("__seed", "__n"),
-          "left_anti")
-        .withColumn("__dist", lit(hop))
-        .localCheckpoint(true)
-      if (next.isEmpty) exhausted = true
-      else {
-        // per-round re-checkpoint kept — the bfsDistances measurement
-        settled = settled.unionByName(next).localCheckpoint(true)
-        frontier = next.select("__seed", "__n")
-      }
-    }
-    settled.where(col("__dist") > 0L)
+    frontierLoop(e, start, Seq("__seed"), maxHops)
+      .where(col("__dist") > 0L)
       .groupBy(col("__seed").as("seed"))
       .agg(count(lit(1)).as("n_reached"), sum(col("__dist")).as("sum_dist"),
         max(col("__dist")).as("max_dist"))

@@ -15,7 +15,14 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Reserved {
   def free(df: DataFrame, op: String, names: String*): Unit =
+    free(df.columns.toSeq, op, names: _*)
+
+  /** The same guard over the columns an operator actually reads, not a
+    * whole frame: the DP planner's group-by keys and measure, pinned by
+    * WorkingColumnsSpec.
+    */
+  def free(columns: Seq[String], op: String, names: String*): Unit =
     names.foreach(n =>
-      require(!df.columns.contains(n),
+      require(!columns.contains(n),
         s"$op: input uses reserved column name '$n'; rename it first"))
 }

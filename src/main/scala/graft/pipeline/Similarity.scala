@@ -25,7 +25,8 @@ object Similarity {
     * [[graft.exec.CosineSim]] expression — bit-identical to the closure
     * kernel below (CosineSimSpec pins the equivalence) without the two
     * per-call Array[Double] deserializations, which were pure allocation
-    * churn on the million-pair verify paths (guide §4).
+    * churn on the million-pair verify paths (guide §4). A null ELEMENT
+    * in either vector makes the score NULL, like a null vector.
     */
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(

@@ -156,8 +156,11 @@ final class Session private (
     MeasurementPlanner.releaseOnce(out.df, out.noise)
   }
 
-  /** Per-output-column noise description without running or spending
-    * (reference session.py:1001-1048, _noise_info.py).
+  /** Per-output-column noise description (reference
+    * session.py:1001-1048, _noise_info.py). Spends no budget and releases
+    * nothing, but it compiles the query, so it may run the public-table
+    * statistics the calibration needs: a `join_public`'s fan-out scales
+    * the noise and is measured by a Spark job.
     */
   def noiseInfo(query: Query, budget: PrivacyBudget): Seq[NoiseInfo] = {
     checkActive() // a retired session answers no interactions, even free ones

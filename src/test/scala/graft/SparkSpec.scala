@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -32,6 +37,37 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sess.conf.set("spark.sql.codegen.fallback", "false")
     sess.conf.set("spark.sql.codegen.factoryMode", mode)
     sess
+  }
+
+  /** Spark jobs `body` launches from this thread. Suites share the
+    * SparkContext and run concurrently, so jobs are counted by a job group
+    * set on this thread only.
+    */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-probe-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-drained"
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobs probe")
+      try body finally sc.clearJobGroup()
+      // the listener bus delivers events in posting order: once the marker
+      // job's start is seen, every job `body` launched has been counted
+      sc.setJobGroup(marker, "jobs probe marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(marker), "listener bus did not deliver the marker job")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
   }
 }
 

@@ -1,6 +1,8 @@
 package graft.exec
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
@@ -73,6 +75,24 @@ class CosineSimSpec extends SparkSpec {
           else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(0))))
         .toSeq
     assert(run("CODEGEN_ONLY") === run("NO_CODEGEN"))
+  }
+
+  test("a null element in either vector scores NULL, under generated code " +
+      "(CODEGEN_ONLY) and interpreted (NO_CODEGEN) alike") {
+    val vec = ArrayType(DoubleType, containsNull = true)
+    val schema = StructType(Seq(StructField("a", vec), StructField("b", vec)))
+    val rows = Seq(
+      Row(Seq(1.0, null, 3.0), Seq(1.0, 2.0, 3.0)), // null left element
+      Row(Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, null)), // null right element
+      Row(Seq(null, null), Seq(null, null)),
+      Row(Seq(3.0, 4.0), Seq(3.0, 4.0)))            // control: cosine 1
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val out = codegenSession(mode)
+        .createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .select(kernel(col("a"), col("b"))).collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+      assert(out === Seq(None, None, None, Some(1.0)), mode)
+    }
   }
 
   test("float-array inputs coerce exactly like the old UDF signature " +
