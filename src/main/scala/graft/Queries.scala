@@ -7,6 +7,7 @@ import graft.budget._
 import graft.constraints._
 import graft.ir._
 import graft.ir.QueryExpr.TextFeatureKind
+import graft.exec.Materialize.Pin
 import graft.keyset.KeySet
 import graft.session.Session
 import graft.types.{ColumnDescriptor, ColumnType}
@@ -910,7 +911,7 @@ object Queries {
       val whole = ev.agg(C.sketch(col("event_type"), depth, width).as("sk"))
       val halves = ev.groupBy((col("event_id") % 2 === 0).as("h"))
         .agg(C.sketch(col("event_type"), depth, width).as("hs"))
-        .localCheckpoint(true)
+        .pin("q132_cms_frequencies halves")
       val merged = halves.filter(col("h")).select(col("hs").as("a"))
         .crossJoin(halves.filter(!col("h")).select(col("hs").as("b")))
         .select(C.merge(col("a"), col("b")).as("msk"))
@@ -2308,7 +2309,7 @@ object Queries {
       // two rows (one sketch per side): pin them so referencing each side
       // doesn't re-run the corpus aggregation per reference
       val sketches = sh.groupBy("even").agg(K.sketch(col("g"), k).as("sk"))
-        .localCheckpoint(true)
+        .pin("q126_kmv_overlap sketches")
       val a = sketches.filter(col("even")).select(col("sk").as("ska"))
       val b = sketches.filter(!col("even")).select(col("sk").as("skb"))
       a.crossJoin(b).select(

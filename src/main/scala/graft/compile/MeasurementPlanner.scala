@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.budget._
 import graft.constraints._
-import graft.exec.{DpQuantile, MagnitudeBucket, Noise, NoiseInfo, NoiseMechanism}
+import graft.exec.{DpQuantile, MagnitudeBucket, Materialize, Noise, NoiseInfo,
+  NoiseMechanism}
 import graft.ir.MechanismHint
 import graft.ir.QueryExpr._
 import graft.ir.MeasureExpr
@@ -25,16 +26,16 @@ import MeasurementPlanner.{Part, Sens}
 
 object MeasurementPlanner {
   /** One budget charge = at most one random draw: when any mechanism in the
-    * plan is genuinely random, pin the sampled result with an eager
-    * localCheckpoint so every later action replays the same release instead
-    * of redrawing noise. The checkpoint runs executor-side over the small
-    * post-aggregation rows — no driver collect, so it holds at any keyset
-    * size. Noiseless (infinite-budget) plans are pure functions and stay
-    * lazy, keeping their scan pruning visible to `.explain` audits.
+    * plan is genuinely random, pin the sampled result (`Materialize`) so
+    * every later action replays the same release instead of redrawing
+    * noise. The pin runs executor-side over the small post-aggregation
+    * rows — no driver collect, so it holds at any keyset size. Noiseless
+    * (infinite-budget) plans are pure functions and stay lazy, keeping
+    * their scan pruning visible to `.explain` audits.
     */
   def releaseOnce(df: DataFrame, noise: Seq[NoiseInfo]): DataFrame =
     if (noise.forall(_.mechanism.isNoiseless)) df
-    else df.localCheckpoint(true)
+    else Materialize(df, "MeasurementPlanner.releaseOnce").df
 
   /** Noise scale and count threshold for DP partition selection at input
     * distance `sens` (d_in-aware, mirroring the reference's pass of d_in to

@@ -18,32 +18,35 @@ import org.apache.spark.sql.functions._
   * (include a unique tiebreaker) — enforced nowhere (Spark cannot check
   * it statically) but required for rank stability, exactly as with the
   * single-window form. Range boundaries come from sampling, so the
-  * partitioned input is pinned once (localCheckpoint) to keep the count
-  * job and the rank job on the same boundaries; ranks themselves are
+  * partitioned input is pinned once, and the offsets are the per-partition
+  * row counts of that same pin job; ranks themselves are
   * boundary-independent.
   */
 object Ranks {
 
   /** Global 0-based row number under `order`, as an extra column. */
   def globalRowNumber(
-      df: DataFrame, order: Seq[Column], out: String = "row_number"): DataFrame = {
+      df: DataFrame, order: Seq[Column], out: String = "row_number"): DataFrame =
+    rowNumbered(df, order, out)._1
+
+  /** [[globalRowNumber]] and the total row count, both from one pin. */
+  private def rowNumbered(
+      df: DataFrame, order: Seq[Column], out: String): (DataFrame, Long) = {
     require(order.nonEmpty, "globalRowNumber needs at least one sort column")
     Seq("__rk_pid", "__rk_off").foreach(c =>
       require(!df.columns.contains(c), s"input uses reserved column '$c'"))
     val spark = df.sparkSession
-    val parted = df.repartitionByRange(order: _*)
-      .withColumn("__rk_pid", spark_partition_id())
-      .localCheckpoint(true)
-    val counts = parted.groupBy("__rk_pid").agg(count(lit(1)).as("__c"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft(0L)(_ + _._2).init
-    val offsetsDf = spark.createDataFrame(
-      counts.map(_._1).zip(offsets).toIndexedSeq).toDF("__rk_pid", "__rk_off")
+    // partition i of the pin holds exactly the rows with __rk_pid = i
+    val parted = Materialize(df.repartitionByRange(order: _*)
+      .withColumn("__rk_pid", spark_partition_id()), "Ranks.globalRowNumber")
+    val offsets = parted.partitionRows.scanLeft(0L)(_ + _).init
+    val offsetsDf = spark.createDataFrame(offsets.zipWithIndex.map(_.swap))
+      .toDF("__rk_pid", "__rk_off")
     val localW = Window.partitionBy("__rk_pid").orderBy(order: _*)
-    parted.join(broadcast(offsetsDf), Seq("__rk_pid"))
+    (parted.df.join(broadcast(offsetsDf), Seq("__rk_pid"))
       .withColumn(out,
         row_number().over(localW).cast("long") - 1L + col("__rk_off"))
-      .drop("__rk_pid", "__rk_off")
+      .drop("__rk_pid", "__rk_off"), parted.rows)
   }
 
   /** Global NTILE(n) under `order` (1-based buckets, SQL semantics: sizes
@@ -58,9 +61,7 @@ object Ranks {
     require(n >= 1, s"ntile needs n >= 1, got $n")
     require(!df.columns.contains("__rk_rn"),
       "input uses reserved column name '__rk_rn'; rename it first")
-    val ranked = globalRowNumber(df, order, "__rk_rn")
-      .localCheckpoint(true)
-    val total = ranked.count()
+    val (ranked, total) = rowNumbered(df, order, "__rk_rn")
     val q = total / n
     val r = total % n
     // first r buckets take q+1 rows; SQL NTILE's exact piecewise map,

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize.Pin
+
 /** Byte-pair-encoding vocabulary training and encoding — the tokenizer-
   * construction step of a training-data pipeline (Sennrich et al. 2016).
   *
@@ -198,7 +200,7 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(toSyms(col("w")).as("syms"), col("n"))
       .filter(size(col("syms")) >= 2) // single-symbol words never pair
-      .localCheckpoint()
+      .pin("Bpe.trainDistributed words")
     val merges = Vector.newBuilder[(String, String)]
     var step = 0
     var continue = true
@@ -278,7 +280,7 @@ object Bpe {
         words = words
           .select(mergeU(col("syms")).as("syms"), col("n"))
           .filter(size(col("syms")) >= 2)
-          .localCheckpoint()
+          .pin(s"Bpe.trainDistributed step $step")
         step += batch.size
       }
     }

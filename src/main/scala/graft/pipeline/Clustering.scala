@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize.Pin
+
 /** Corpus clustering for training-data curation: topic balance, diversity
   * sampling, per-cluster quality review all start from "give every
   * document a cluster id". Beyond-reference (the reference engine has no
@@ -164,7 +166,7 @@ object Clustering {
     }
     val outRaw = lastAssign.select(col("__id").as(idCol), col("cluster"),
       col("dist_sq"))
-    val out = if (materializeAssignment) outRaw.localCheckpoint(true) else outRaw
+    val out = if (materializeAssignment) outRaw.pin("Clustering.kMeans assignment") else outRaw
     cached.unpersist(false)
     (out, centroids)
   }

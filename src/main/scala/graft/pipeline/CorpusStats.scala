@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize.Pin
+
 /** One-pass corpus profiling: the summary a pipeline owner wants BEFORE
   * launching a 100 TB job — row/null counts, value-length mass, and
   * distinct-cardinality estimates per column. Everything folds into a
@@ -546,7 +548,7 @@ object CorpusStats {
     // already spilled to local disk (guide §2.4/§5)
     val tf = tokens(df, textCol, col(idCol))
       .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .pin("CorpusStats.topTfidfTerms tf")
     val docFreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val n = df.agg(count_distinct(col(idCol)).as("__n"))
     val w = org.apache.spark.sql.expressions.Window
@@ -662,7 +664,7 @@ object CorpusStats {
         round(log((col("__cu").cast("double") + lit(k) * col("__vsz").cast("double")) /
           (col("__cuv").cast("double") + lit(k))) * 1e6, 0)
           .cast("long").as("__cost_e6"))
-      .localCheckpoint(true)
+      .pin("CorpusStats.bigramLogProb costs")
     cuv.unpersist(false)
     bi.join(costs, Seq("__g"))
       .groupBy(col(idCol))
@@ -891,7 +893,7 @@ object CorpusStats {
       .groupBy(col("a.__i").as("item_a"), col("b.__i").as("item_b"))
       .agg(count(lit(1)).as("support"))
       .where(col("support") >= minSupport)
-      .localCheckpoint(true)
+      .pin("CorpusStats.frequentPairs")
     kept.unpersist(false)
     out
   }
@@ -944,7 +946,7 @@ object CorpusStats {
     // checkpointed rows (guide §2.4 / §5 — it is REUSED and recomputing
     // costs a full pass over the incidence).
     val supports = bi.groupBy(col("__i")).agg(count(lit(1)).as("__s"))
-      .localCheckpoint(true)
+      .pin("CorpusStats.pairAffinity supports")
     val pairs = frequentPairsWith(bi, supports, minSupport, maxBasketItems)
     val nBaskets = bi.agg(countDistinct(col("__b")).as("n_baskets"))
     val out = pairs
@@ -961,7 +963,7 @@ object CorpusStats {
           .as("conf_a_to_b_ppm"),
         idiv(dec(col("support")) * lit(ppmScale), dec(col("support_b")))
           .as("conf_b_to_a_ppm"))
-      .localCheckpoint(true)
+      .pin("CorpusStats.pairAffinity")
     bi.unpersist(false)
     out
   }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize
+import graft.exec.Materialize.Pin
+
 /** Deduplication operators for corpus-scale pipelines. Design rule: never
   * form all pairs — candidates come from banded LSH buckets (shuffle keyed
   * on (band, bucket-hash) only), and buckets above a size cap are treated
@@ -270,7 +273,7 @@ object Dedup {
           (m: Column) => m)).cast("double") / lit(numHashes.toDouble))
       .filter(col("jaccard_est") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), col("jaccard_est"))
-      .localCheckpoint(true)
+      .pin("Dedup.minhashPairs")
     sigs.unpersist(false)
     result
   }
@@ -464,7 +467,8 @@ object Dedup {
     // would double every iteration — checkpointing pins each round's rows
     // AND resets the lineage to a leaf
     var labels = e.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")).localCheckpoint(true)
+      .withColumn("component", col("id"))
+      .pin("Dedup.connectedComponents labels")
     var iter = 0
     var converged = false
     while (iter < maxIters && !converged) {
@@ -476,20 +480,19 @@ object Dedup {
       // the convergence flag rides the round's own select (newComp is the
       // same `least`, compared against the incoming component) — the old
       // probe JOINED next against labels, a full extra join job per round;
-      // now the probe is a limit(1) scan of the just-checkpointed rows
-      // (r14, guide §1.2: the check costs a cached scan, not a join)
+      // now the round's pin job counts the flag as it writes the rows, so
+      // the check costs no job at all
       val newComp = least(col("component"),
         coalesce(col("__in"), col("component")),
         coalesce(col("__jp"), col("component")))
-      val next = labels
+      val next = Materialize(labels
         .join(incoming, Seq("id"), "left")
         .join(jump, Seq("component"), "left")
         .select(col("id"), newComp.as("__nc"),
-          (newComp =!= col("component")).as("__chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("__chg")).limit(1).count()
-      labels = next.select(col("id"), col("__nc").as("component"))
-      converged = changed == 0
+          (newComp =!= col("component")).as("__chg")),
+        s"Dedup.connectedComponents round ${iter + 1}", Some("__chg"))
+      labels = next.df.select(col("id"), col("__nc").as("component"))
+      converged = next.flagged == 0L
       iter += 1
     }
     e.unpersist()
@@ -634,7 +637,7 @@ object Dedup {
     // released NOW instead of waiting for the context cleaner — repeated
     // pipeline runs in a long-lived session must not accumulate stale
     // blocks in executor storage.
-    val result = out.distinct().localCheckpoint(true)
+    val result = out.distinct().pin("Dedup.simhashPairs")
     cached.foreach(_.unpersist(false))
     result
   }
@@ -781,7 +784,7 @@ object Dedup {
       .withColumn("jaccard", jac(col("__sa"), col("__sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), col("jaccard"))
-      .localCheckpoint(true)
+      .pin("Dedup.ngramJaccardPairs")
     prefix.unpersist(false)
     toks.unpersist(false)
     docs.unpersist(false)
@@ -1020,7 +1023,7 @@ object Dedup {
     val matched = crossCorpusMatches(corpus, reference, idCol, textCol,
       numHashes, bands, shingleSize, threshold)
       .select(col("id").as(idCol)).distinct()
-      .localCheckpoint(true)
+      .pin("Dedup.dedupAgainst matches")
     corpus.join(broadcast(matched), Seq(idCol), "left_anti")
   }
 
@@ -1188,7 +1191,7 @@ object Dedup {
       array_join(toks, " ").as("__norm"),
       size(toks).cast("long").as("__ntok"),
       TextAnalysis.winnowingFingerprints(col(textCol), k, w).as("__fps"))
-      .localCheckpoint(true)
+      .pin("Dedup.containedDocs")
     val fp = base.select(col("__id"), col("__ntok"),
       explode(col("__fps")).as("__fp"))
     val cand = fp.select(col("__fp"), col("__id").as("__a"), col("__ntok").as("__an"))
@@ -1301,7 +1304,7 @@ object Dedup {
       .withColumn("dist", levenshtein(col("__a"), col("__b"), d))
       .filter(col("dist") =!= -1)
       .select(col("__a").as("name_a"), col("__b").as("name_b"), col("dist"))
-      .localCheckpoint(true)
+      .pin("Dedup.editDistancePairs")
     dict.unpersist(false)
     result
   }
@@ -1380,7 +1383,7 @@ object Dedup {
       .join(clustered, Seq("name"), "left")
       .select(col("name"),
         coalesce(col("__canon"), col("name")).as("canonical"))
-      .localCheckpoint(true)
+      .pin("Dedup.resolveEntities")
     ids.unpersist(false)
     out
   }
@@ -1426,7 +1429,7 @@ object Dedup {
         .getOrElse("")} appears more than once — dedup ids first")
     val ranked = graft.exec.Ranks.globalRowNumber(
       base, Seq(col("__k"), col("__id")), "__r")
-      .localCheckpoint(true)
+      .pin("Dedup.sortedNeighborPairs ranks")
     val w = windowSize.toLong
     // each row lands in bucket r div w and the PREVIOUS bucket probe
     // side: joining (b) x (b, b+1) covers every gap in (0, w]

@@ -3,6 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize
+import graft.exec.Materialize.Pin
+
 /** Graph analytics over edge lists — the second graph primitive after
   * [[Dedup.connectedComponents]]. PageRank here is EXACT FIXED-POINT
   * arithmetic end to end: ranks live as integer micro-units and every
@@ -157,7 +160,7 @@ object Graph {
       .where(wExpr.map(_ => col("__w").isNotNull).toSeq
         .foldLeft(col("__s").isNotNull && col("__d").isNotNull)(_ && _))
       .repartition(col("__s"))
-      .localCheckpoint(true)
+      .pin("Graph.pageRank edges")
     // nodes AND out-degree in ONE keyed aggregate (r14, guide §2.4): the
     // old shape ran a union-distinct for the node set plus a separate
     // source-keyed degree aggregate and joined them — two full shuffles of
@@ -212,7 +215,7 @@ object Graph {
     // per-round plans are what keep AQE's replanning constant-time.
     val statics = withBase
       .select(col("__n"), col("__base"), col("__deg"))
-      .localCheckpoint(true)
+      .pin("Graph.pageRank statics")
     var ranks = statics.select(col("__n"), col("__base").as("__r"),
       col("__deg"))
     val teleport = expr(s"((${dampingDen - dampingNum}L * __base) div ${dampingDen}L)")
@@ -243,7 +246,7 @@ object Graph {
             expr(s"(${dampingNum}L * coalesce(__in, 0L)) div ${dampingDen}L"))
             .as("__r"),
           col("__deg"))
-        .localCheckpoint(true)
+        .pin(s"Graph.pageRank round $it")
     }
     ranks.select(col("__n").as("node"), col("__r").as("rank_fp"))
   }
@@ -305,15 +308,15 @@ object Graph {
         col("__v").as("__nb")))
     val e = (if (assumeCanonical) symmetric else symmetric.distinct())
       .repartition(col("__nb"))
-      .localCheckpoint(true)
+      .pin("Graph.labelPropagation edges")
     var labels = e.select(col("__v").as("__n")).distinct()
       .select(col("__n"), col("__n").as("__lab"))
-      .localCheckpoint(true)
+      .pin("Graph.labelPropagation labels")
     // per-round checkpoint kept deliberately: fusing all rounds into one
     // lazy plan was measured SLOWER at bench scale (the pageRankImpl
     // note — AQE re-optimizes the accumulated plan at every stage
     // boundary), so each round stays a small, constant-size plan
-    for (_ <- 1 to iterations) {
+    for (round <- 1 to iterations) {
       labels = e
         .join(labels.select(col("__n").as("__nb"), col("__lab")), "__nb")
         .groupBy(col("__v"), col("__lab"))
@@ -322,7 +325,7 @@ object Graph {
         .agg(min(struct((-col("__c")).as("nc"), col("__lab").as("l")))
           .as("__b"))
         .select(col("__v").as("__n"), col("__b").getField("l").as("__lab"))
-        .localCheckpoint(true)
+        .pin(s"Graph.labelPropagation round $round")
     }
     labels.select(col("__n").as("node"), col("__lab").as("label"))
   }
@@ -403,7 +406,7 @@ object Graph {
       .select(least(col("__a"), col("__b")).as("__u"),
         greatest(col("__a"), col("__b")).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .pin("Graph.triangleCounts edges")
     val deg = und.select(col("__u").as("__n"))
       .unionByName(und.select(col("__v").as("__n")))
       .groupBy("__n").agg(count(lit(1)).as("__deg"))
@@ -417,7 +420,7 @@ object Graph {
           .otherwise(struct(col("__v").as("s"), col("__u").as("d")))
           .as("__e"))
       .select(col("__e.s").as("__s"), col("__e.d").as("__d"))
-      .localCheckpoint(true)
+      .pin("Graph.triangleCounts oriented")
     // wedges at apex a: out-neighbor pairs (b, c) in orientation order
     val degOf = deg // (node, deg) — reused to order the wedge pair
     val out = oriented
@@ -467,13 +470,12 @@ object Graph {
       .select(col(srcCol).cast("string").as("__s"),
         col(dstCol).cast("string").as("__d"))
       .where(col("__s").isNotNull && col("__d").isNotNull)
-      .localCheckpoint(true)
-    val seed0 = seeds
+      .pin("Graph.bfsDistances edges")
+    val seed0 = Materialize(seeds
       .select(col(seedCol).cast("string").as("__n"))
       .where(col("__n").isNotNull).distinct()
-      .withColumn("__dist", lit(0L))
-      .localCheckpoint(true)
-    frontierLoop(e, seed0, Nil, maxHops)
+      .withColumn("__dist", lit(0L)), "Graph.bfsDistances seeds")
+    frontierLoop(e, seed0, Nil, maxHops, "Graph.bfsDistances")
       .select(col("__n").as("node"), col("__dist").as("dist"))
   }
 
@@ -483,7 +485,8 @@ object Graph {
     * new (key, node) pairs against the edge table `e` (`__s`, `__d`),
     * dedupes, anti-joins out the already-settled pairs and checkpoints the
     * new level at `__dist = hop`; it stops after `maxHops` rounds or at
-    * the first empty level. Returns the settled table.
+    * the first empty level, read from the level's own pin. `op` names the
+    * caller in the pin labels. Returns the settled table.
     *
     * ONE accumulated settled table, re-checkpointed per round, instead of
     * a growing list of per-level frontiers: with the list, round k's
@@ -494,20 +497,19 @@ object Graph {
     * appended to memory-resident blocks — the already-settled partitions
     * are cached, so the incremental cost per round is the new level, not V.
     */
-  private def frontierLoop(e: DataFrame, settled0: DataFrame,
-      key: Seq[String], maxHops: Int): DataFrame = {
+  private def frontierLoop(e: DataFrame, settled0: Materialize.Pinned,
+      key: Seq[String], maxHops: Int, op: String): DataFrame = {
     val pair = key :+ "__n"
-    var settled = settled0
-    var frontier = settled0.select(pair.map(col): _*)
+    var settled = settled0.df
+    var frontier = settled.select(pair.map(col): _*)
     var hop = 0L
-    var exhausted = frontier.isEmpty
+    var exhausted = settled0.isEmpty
     while (hop < maxHops && !exhausted) {
       hop += 1
-      val next = frontier.join(e, frontier("__n") === e("__s"))
+      val next = Materialize(frontier.join(e, frontier("__n") === e("__s"))
         .select(key.map(col) :+ col("__d").as("__n"): _*).distinct()
         .join(settled.select(pair.map(col): _*), pair, "left_anti")
-        .withColumn("__dist", lit(hop))
-        .localCheckpoint(true)
+        .withColumn("__dist", lit(hop)), s"$op round $hop")
       if (next.isEmpty) exhausted = true
       else {
         // per-round re-checkpoint of the accumulator KEPT deliberately: a
@@ -516,8 +518,8 @@ object Graph {
         // two independent bench runs — the per-round anti-join and the
         // final assembly pay more in plan width / broadcast rebuilds over
         // the union than the single materialized table costs to write.
-        settled = settled.unionByName(next).localCheckpoint(true)
-        frontier = next.select(pair.map(col): _*)
+        settled = settled.unionByName(next.df).pin(s"$op settled round $hop")
+        frontier = next.df.select(pair.map(col): _*)
       }
     }
     settled
@@ -545,9 +547,9 @@ object Graph {
     * (bounded-width (node, long) rows) and TWO semi-joins filtering the
     * edge list to surviving endpoints — all keyed equi-joins, nothing
     * quadratic, no driver-resident state. The edge table is
-    * localCheckpoint'd per round so the plan stays O(1) deep; the
-    * convergence probe is a `limit(1)` count on the sub-k slice of the
-    * round's degree table, not a full materialization.
+    * pinned per round so the plan stays O(1) deep; the round's degree
+    * table carries a `__deg < k` flag, and the convergence test reads its
+    * count from that table's own pin job.
     */
   def kCore(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -569,19 +571,20 @@ object Graph {
     val symmetric = directed
       .unionByName(directed.select(col("__v").as("__u"), col("__u").as("__v")))
     var e = (if (assumeCanonical) symmetric else symmetric.distinct())
-      .localCheckpoint(true)
+      .pin("Graph.kCore edges")
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       round += 1
-      val deg = e.groupBy("__u").agg(count(lit(1)).as("__deg"))
-        .localCheckpoint(true)
-      if (deg.where(col("__deg") < k).limit(1).isEmpty) converged = true
+      val deg = Materialize(e.groupBy("__u").agg(count(lit(1)).as("__deg"))
+        .withColumn("__low", col("__deg") < k),
+        s"Graph.kCore round $round", Some("__low"))
+      if (deg.flagged == 0L) converged = true
       else {
-        val keep = deg.where(col("__deg") >= k).select("__u")
+        val keep = deg.df.where(col("__deg") >= k).select("__u")
         e = e.join(keep, Seq("__u"), "left_semi")
           .join(keep.select(col("__u").as("__v")), Seq("__v"), "left_semi")
-          .localCheckpoint(true)
+          .pin(s"Graph.kCore edges round $round")
       }
     }
     e.groupBy("__u").agg(count(lit(1)).as("core_deg"))
@@ -606,8 +609,9 @@ object Graph {
     * Scale shape: per round ONE wedge join (each edge against both
     * endpoints' adjacency lists — two keyed equi-joins, fan-out deg(u)
     * per edge, the O(m·d) truss cost) + one (u, v)-keyed count + one
-    * left-join filter; the support table is checkpointed per round so
-    * the probe and the filter share it and the plan stays O(1) deep.
+    * left-join filter; the support table is pinned per round with a
+    * `support < k-2` flag, so the convergence test reads its count from
+    * the pin job, the filter re-scans the pin and the plan stays O(1) deep.
     * The wedge fan-out is the real cost at 100 TB, so a mega-hub fails
     * LOUDLY up front: one bounded degree probe refuses graphs whose max
     * degree exceeds `maxDegree` instead of silently scheduling a
@@ -629,7 +633,7 @@ object Graph {
       .where(su.isNotNull && sv.isNotNull && su =!= sv)
       .select(least(su, sv).as("__u"), greatest(su, sv).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .pin("Graph.kTruss edges")
     def adj(ed: DataFrame) = ed
       .select(col("__u").as("__s"), col("__v").as("__w"))
       .unionByName(ed.select(col("__v").as("__s"), col("__u").as("__w")))
@@ -660,8 +664,11 @@ object Graph {
     var withSup: DataFrame = null
     while (round < maxRounds && !converged) {
       round += 1
-      withSup = supportOf(e).localCheckpoint(true)
-      if (withSup.where(col("support") < k - 2).limit(1).isEmpty)
+      val pinned = Materialize(
+        supportOf(e).withColumn("__low", col("support") < k - 2),
+        s"Graph.kTruss round $round", Some("__low"))
+      withSup = pinned.df
+      if (pinned.flagged == 0L)
         converged = true
       else
         // narrow filter/projection over the JUST-checkpointed support
@@ -703,9 +710,9 @@ object Graph {
     * ONE settled-merge full-outer join, all bounded-width (node, long)
     * shuffles. The merge carries a `__chg` improved-flag in its own
     * projection (the connectedComponents discipline, r15/guide §1.2):
-    * ONE checkpointed table per round serves as the new settled set, the
-    * convergence probe (`filter(__chg).limit(1)` over the just-written
-    * rows), and the next frontier (a lazy filter) — where the old shape
+    * ONE pinned table per round serves as the new settled set, the
+    * convergence test (the `__chg` count its pin job returns), and the
+    * next frontier (a lazy filter) — where the old shape
     * materialized `improved` and `settled` separately and re-aggregated
     * the whole settled table through a union+groupBy each round. Early
     * exit on an empty improvement frontier. The merged table is
@@ -730,16 +737,15 @@ object Graph {
       .where(col("__s").isNotNull && col("__d").isNotNull &&
         col("__w").isNotNull)
       .repartition(col("__s"))
-      .localCheckpoint(true)
-    val seed0 = seeds
+      .pin("Graph.ssspWeighted edges")
+    val seed0 = Materialize(seeds
       .select(col(seedCol).cast("string").as("__n"))
       .where(col("__n").isNotNull).distinct()
-      .withColumn("__dist", lit(0L))
-      .localCheckpoint(true)
-    var settled = seed0
-    var frontier = seed0
+      .withColumn("__dist", lit(0L)), "Graph.ssspWeighted seeds")
+    var settled = seed0.df
+    var frontier = seed0.df
     var round = 0
-    var exhausted = frontier.isEmpty
+    var exhausted = seed0.isEmpty
     while (round < maxRounds && !exhausted) {
       round += 1
       val cand = frontier.join(e, frontier("__n") === e("__s"))
@@ -750,20 +756,20 @@ object Graph {
       // NULLs, so settled-only rows keep __dist, newly reached rows take
       // __nd, and both-sides rows take the min — exactly the old
       // union+groupBy(min). __chg rides the same projection, so the
-      // convergence probe is a limit(1) scan of the just-checkpointed
-      // rows and the next frontier is a lazy filter — one checkpointed
-      // table per round instead of two (r15, guide §1.2/§2.4)
-      val merged = settled.join(cand, Seq("__n"), "full_outer")
+      // convergence test is the flag count of the round's own pin job and
+      // the next frontier is a lazy filter — one pinned table per round
+      // and no probe job
+      val merged = Materialize(settled.join(cand, Seq("__n"), "full_outer")
         .select(col("__n"),
           least(col("__dist"), col("__nd")).as("__dist"),
           (col("__nd").isNotNull &&
             (col("__dist").isNull || col("__nd") < col("__dist")))
-            .as("__chg"))
-        .localCheckpoint(true)
-      if (merged.where(col("__chg")).limit(1).isEmpty) exhausted = true
+            .as("__chg")),
+        s"Graph.ssspWeighted round $round", Some("__chg"))
+      if (merged.flagged == 0L) exhausted = true
       else {
-        settled = merged.select("__n", "__dist")
-        frontier = merged.where(col("__chg")).select("__n", "__dist")
+        settled = merged.df.select("__n", "__dist")
+        frontier = merged.df.where(col("__chg")).select("__n", "__dist")
       }
     }
     settled.select(col("__n").as("node"), col("__dist").as("dist"))
@@ -807,25 +813,23 @@ object Graph {
       .select(col(srcCol).cast("string").as("__s"),
         col(dstCol).cast("string").as("__d"))
       .where(col("__s").isNotNull && col("__d").isNotNull)
-      .localCheckpoint(true)
-    val seed0 = seeds
+      .pin("Graph.reachProfile edges")
+    val seed0 = Materialize(seeds
       .select(col(seedCol).cast("string").as("__seed"))
-      .where(col("__seed").isNotNull).distinct()
-      .localCheckpoint(true)
-    val nSeeds = seed0.count()
+      .where(col("__seed").isNotNull).distinct(), "Graph.reachProfile seeds")
+    val nSeeds = seed0.rows
     require(nSeeds <= maxSeeds,
       s"reachProfile: $nSeeds seeds exceed maxSeeds=$maxSeeds — settled " +
         "state is |seeds| x reach; raise the cap only if that product " +
         "is budgeted")
-    val start = seed0.select(col("__seed"), col("__seed").as("__n"),
-      lit(0L).as("__dist"))
-      .localCheckpoint(true)
-    frontierLoop(e, start, Seq("__seed"), maxHops)
+    val start = Materialize(seed0.df.select(col("__seed"),
+      col("__seed").as("__n"), lit(0L).as("__dist")), "Graph.reachProfile start")
+    frontierLoop(e, start, Seq("__seed"), maxHops, "Graph.reachProfile")
       .where(col("__dist") > 0L)
       .groupBy(col("__seed").as("seed"))
       .agg(count(lit(1)).as("n_reached"), sum(col("__dist")).as("sum_dist"),
         max(col("__dist")).as("max_dist"))
-      .join(seed0.select(col("__seed").as("seed")), Seq("seed"), "right")
+      .join(seed0.df.select(col("__seed").as("seed")), Seq("seed"), "right")
       .na.fill(0L, Seq("n_reached", "sum_dist", "max_dist"))
   }
 
@@ -867,11 +871,11 @@ object Graph {
       .where(su.isNotNull && sv.isNotNull && su =!= sv)
       .select(least(su, sv).as("__u"), greatest(su, sv).as("__v"))
       .distinct()
-      .localCheckpoint(true)
+      .pin("Graph.linkPrediction edges")
     val adj = und.select(col("__u").as("__s"), col("__v").as("__w"))
       .unionByName(und.select(col("__v").as("__s"), col("__u").as("__w")))
     // the loud hub refusal rides the degree table's own (mandatory, eager)
-    // materialization: raise_error fires during the localCheckpoint job,
+    // materialization: raise_error fires during the pin job,
     // so validation costs ZERO extra jobs — the previous limit(1) probe
     // was a separate scan of the checkpointed degrees
     val deg = adj.groupBy(col("__s").as("__n"))
@@ -883,7 +887,7 @@ object Graph {
               "would fan out quadratically on it; truncate hub adjacency " +
               "first or raise the cap"))).cast("long"))
           .otherwise(col("__deg")).as("__deg"))
-      .localCheckpoint(true)
+      .pin("Graph.linkPrediction degrees")
     val cn = adj.select(col("__s"), col("__w").as("__a"))
       .join(adj.select(col("__s"), col("__w").as("__b")), Seq("__s"))
       .where(col("__a") < col("__b"))

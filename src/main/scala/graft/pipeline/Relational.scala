@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize.Pin
+
 /** Temporal and interval join operators Spark has no built-in for. Both are
   * lowered to shapes Catalyst already executes well — a single keyed
   * exchange + sort for the as-of join, an equi hash join for the range
@@ -156,7 +158,7 @@ object Relational {
       .filter(col(typeCol) === steps.head && col(entityCol).isNotNull)
       .groupBy(col(entityCol).as("__e")).agg(min(col(timeCol)).as("__t"))
       .withColumn("__pt", lit(null).cast(tType))
-      .localCheckpoint(true)
+      .pin(s"Relational.funnelStages step ${steps.head}")
     val stages = scala.collection.mutable.ListBuffer(reached)
     for (step <- steps.drop(1)) {
       // conversion window: the next step must land within maxGap of the
@@ -172,7 +174,7 @@ object Relational {
         // one reached row per entity, so min(__t) IS the previous time
         .groupBy(col("__e"))
         .agg(min(col("__nt")).as("__t"), min(col("__t")).as("__pt"))
-        .localCheckpoint(true)
+        .pin(s"Relational.funnelStages step $step")
       stages += reached
     }
     stages.toSeq

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize.Pin
+
 /** Deterministic, engine-portable sampling and split assignment for
   * training-data pipelines. Both operators key on an md5-derived 32-bit
   * hash of the id column, so:
@@ -230,10 +232,10 @@ object Sampling {
         sepChecked(col(itemCol).cast("string"), itemCol).as("__i"))
       .where(col("__u").isNotNull && col("__i").isNotNull)
       .distinct()
-      .localCheckpoint(true)
+      .pin("Sampling.negativePrep positives")
     val items = graft.exec.Ranks.globalRowNumber(
       pos.select(col("__i")).distinct(), Seq(col("__i")), "__idx")
-      .localCheckpoint(true)
+      .pin("Sampling.negativePrep items")
     // one pass over the checkpointed rank table yields BOTH the exact row
     // count (the determinism contract needs it for the mod) and the mean
     // id width (the broadcast decision needs it) — same single job as the
@@ -343,7 +345,7 @@ object Sampling {
     val acc1 = batch(pos, 0 until 2 * k)
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") <= k)
-      .localCheckpoint(true)
+      .pin("Sampling.negativeSamplesExact phase 1")
     val have = acc1.groupBy(col("__u"), col("__i"))
       .agg(count(lit(1)).as("__have"))
     val short = pos.join(have, Seq("__u", "__i"), "left")
@@ -364,7 +366,7 @@ object Sampling {
           .join(short, Seq("__u", "__i"))
           .where(col("__rk") <= col("__need"))
           .select(acc1.columns.map(col): _*)
-        acc1.unionByName(acc2).localCheckpoint(true)
+        acc1.unionByName(acc2).pin("Sampling.negativeSamplesExact phase 2")
       }
     val stillShort = pos
       .join(accepted.groupBy(col("__u"), col("__i"))

@@ -24,7 +24,8 @@ final class Session private (
     privateTables: mutable.Map[String, PrivateTable],
     publicTables: mutable.Map[String, DataFrame]) {
 
-  private var remaining: PrivacyBudget = initialBudget
+  // written only by `spend`, under this session's lock
+  @volatile private var remaining: PrivacyBudget = initialBudget
   private[session] var retired: Boolean = false
   // names registered via createView — deleteView may only remove these,
   // never a base private table (reference session.py delete_view contract)
@@ -106,7 +107,11 @@ final class Session private (
     olderSiblings = Nil
   }
 
-  private def spend(b: PrivacyBudget): Unit = {
+  /** Charge `b`: the kind check, the sufficiency check and the subtraction
+    * are one step under this session's lock, so concurrent `evaluate`s can
+    * never both pass the check on the same remaining budget.
+    */
+  private def spend(b: PrivacyBudget): Unit = synchronized {
     // kind mismatch first: a PureDP request against a zCDP session is a
     // type error, not an overspend (reference
     // _validate_budget_type_matches_session, session.py)

@@ -505,14 +505,16 @@ object Streaming {
         }
         val afford = affordable
         if (afford > 0L) {
-          val kept =
+          // pin: the charge must match what is written, and the pin job
+          // counts the rows it charges
+          val kept = graft.exec.Materialize(
             batch.orderBy(orderCols.map(col): _*)
-              .limit(graft.Limits.toIntBound(math.min(afford, Int.MaxValue)))
-              .localCheckpoint(true) // pin: charge must match what is written
-          val n = kept.count()
-          if (n > 0L) {
-            charge(n) // charge-then-write: a crash here wastes, never leaks
-            write(kept)
+              .limit(graft.Limits.toIntBound(math.min(afford, Int.MaxValue))),
+            "Streaming.enforcedBatcher")
+          if (!kept.isEmpty) {
+            // charge-then-write: a crash here wastes, never leaks
+            charge(kept.rows)
+            write(kept.df)
           }
         } else {
           // nothing affordable: the batch still has to be CONSUMED — the

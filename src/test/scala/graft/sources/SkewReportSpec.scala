@@ -34,6 +34,24 @@ class SkewReportSpec extends SparkSpec {
     assert(one.getLong(2) === 3L)
   }
 
+  test("salted join equals the plain join and spreads the hot key") {
+    import org.apache.spark.sql.functions._
+    // one hot key (k=1) with many rows, plus a tail
+    val skewed = makeDf(StructType(Seq(longCol("k"), longCol("v"))),
+      (1L to 300L).map(i => Row(if (i <= 250) 1L else i, i)))
+    val dim = makeDf(StructType(Seq(longCol("k"), strCol("name"))),
+      (1L to 300L).map(i => Row(i, s"n$i")))
+    val plain = skewed.join(dim, Seq("k")).select("k", "v", "name")
+    val salted = Salting.saltedJoin(skewed, dim, Seq("k"), buckets = 8)
+      .select("k", "v", "name")
+    assert(salted.collect().toSet === plain.collect().toSet)
+    // the hot key's rows land in several salt buckets
+    val spread = skewed
+      .withColumn("s", Salting.saltExpr(skewed.columns.map(col).toSeq, 8))
+      .filter(col("k") === 1L).select("s").distinct().count()
+    assert(spread > 1, s"hot key stayed in $spread salt bucket(s)")
+  }
+
   test("saltedJoin refuses an input already carrying the salt scratch " +
       "column on either side (withColumn would silently replace it)") {
     import org.apache.spark.sql.functions._
