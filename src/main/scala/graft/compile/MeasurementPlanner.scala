@@ -205,9 +205,14 @@ final class MeasurementPlanner(
           // the same discipline as Similarity.bruteForcePairs' guard
           Reserved.free(keys.columns :+ m, "intervals quantile",
             "__v", "__vs")
-          val maxGroupRows = t.df.sparkSession.conf
-            .getOption("spark.graft.quantile.intervals.maxGroupRows")
-            .map(_.toInt).getOrElse(1 << 20)
+          // the gather holds maxGroupRows + 1 values, so the bound must
+          // leave room for the overflow row
+          val bound = "spark.graft.quantile.intervals.maxGroupRows"
+          val maxGroupRows = t.df.sparkSession.conf.getOption(bound)
+            .map(v => v.toIntOption.filter(n => n >= 1 && n < Int.MaxValue)
+              .getOrElse(throw new IllegalArgumentException(
+                s"$bound must be an integer in [1, ${Int.MaxValue - 1}], got '$v'")))
+            .getOrElse(1 << 20)
           val gather = graft.exec.BoundedCollect
             .boundedCollectList(col("__v"), maxGroupRows + 1).as("__vs")
           val perGroup = groupAgg(

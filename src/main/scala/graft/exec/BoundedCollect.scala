@@ -4,9 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -28,72 +26,52 @@ import org.apache.spark.sql.types._
   * round-trips through an UnsafeRow-projected array value, so any element
   * type (atomic, struct, array) is supported.
   */
-final case class BoundedCollectList(
-    child: Expression,
-    limit: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.ArrayBuffer[Any]]
-    with UnaryLike[Expression] {
+final case class BoundedCollectList(limit: Int) extends SketchKind[BoundedCollect.Buffer] {
+
+  import BoundedCollect.Buffer
 
   require(limit > 0, "bounded_collect_list requires a positive limit")
 
-  override def createAggregationBuffer(): mutable.ArrayBuffer[Any] =
-    mutable.ArrayBuffer.empty
+  def name: String = "bounded_collect_list"
+  def inputError(in: DataType): Option[String] = None
+  def resultType(in: DataType): DataType = ArrayType(in, containsNull = false)
+  def empty(): Buffer = mutable.ArrayBuffer.empty
 
-  override def update(
-      buffer: mutable.ArrayBuffer[Any], input: InternalRow): mutable.ArrayBuffer[Any] = {
-    if (buffer.size < limit) {
-      val v = child.eval(input)
-      // like collect_list, nulls are skipped; values are copied because the
-      // input row is reused by the aggregation iterator
-      if (v != null) buffer += InternalRow.copyValue(v)
-    }
-    buffer
-  }
+  // like collect_list, nulls are skipped (by the shell); values are copied
+  // because the input row is reused by the aggregation iterator
+  def add(state: Buffer, value: Any): Unit =
+    if (state.size < limit) state += InternalRow.copyValue(value)
 
-  override def merge(
-      buffer: mutable.ArrayBuffer[Any],
-      other: mutable.ArrayBuffer[Any]): mutable.ArrayBuffer[Any] = {
+  def merge(state: Buffer, other: Buffer): Unit = {
     var i = 0
-    while (buffer.size < limit && i < other.size) {
-      buffer += other(i)
+    while (state.size < limit && i < other.size) {
+      state += other(i)
       i += 1
     }
-    buffer
   }
 
-  override def eval(buffer: mutable.ArrayBuffer[Any]): Any =
-    new GenericArrayData(buffer.toSeq)
+  def result(state: Buffer): Any = new GenericArrayData(state.toSeq)
 
-  @transient private lazy val projection =
-    UnsafeProjection.create(Array[DataType](ArrayType(child.dataType, containsNull = false)))
-  @transient private lazy val reusedRow = new UnsafeRow(1)
-
-  override def serialize(obj: mutable.ArrayBuffer[Any]): Array[Byte] =
-    projection.apply(InternalRow.apply(new GenericArrayData(obj.toSeq))).getBytes()
-
-  override def deserialize(bytes: Array[Byte]): mutable.ArrayBuffer[Any] = {
-    val buffer = createAggregationBuffer()
-    reusedRow.pointTo(bytes, bytes.length)
-    reusedRow.getArray(0).foreach(child.dataType, (_, v: Any) => buffer += v)
-    buffer
+  def wire(in: DataType): (Buffer => Array[Byte], Array[Byte] => Buffer) = {
+    val projection =
+      UnsafeProjection.create(Array[DataType](ArrayType(in, containsNull = false)))
+    val reusedRow = new UnsafeRow(1)
+    val toBytes = (state: Buffer) =>
+      projection.apply(InternalRow.apply(new GenericArrayData(state.toSeq))).getBytes()
+    val fromBytes = (bytes: Array[Byte]) => {
+      val state = empty()
+      reusedRow.pointTo(bytes, bytes.length)
+      reusedRow.getArray(0).foreach(in, (_, v: Any) => state += v)
+      state
+    }
+    (toBytes, fromBytes)
   }
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(child.dataType, containsNull = false)
-  override def withNewMutableAggBufferOffset(newOffset: Int): BoundedCollectList =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BoundedCollectList =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BoundedCollectList =
-    copy(child = newChild)
-  override def prettyName: String = "bounded_collect_list"
 }
 
 object BoundedCollect {
+  type Buffer = mutable.ArrayBuffer[Any]
+
   /** Column API: collect up to `limit` values of `c` per group. */
   def boundedCollectList(c: Column, limit: Int): Column =
-    ColumnBridge.column(
-      BoundedCollectList(ColumnBridge.expression(c), limit).toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.expression(c), BoundedCollectList(limit))
 }

@@ -3,10 +3,6 @@ package graft.exec
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -36,75 +32,55 @@ import org.apache.spark.sql.types._
   * State is depth*width longs per group regardless of cardinality — the
   * frequency-table shape that never spills at 100 TB.
   */
-final case class CountMinAgg(
-    child: Expression,
-    depth: Int,
-    width: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]]
-    with UnaryLike[Expression] {
+final case class CountMinSketch(depth: Int, width: Int) extends SketchKind[Array[Long]] {
 
   require(depth >= 1 && depth <= 16, s"depth must be in [1, 16], got $depth")
   require(width >= 2, s"width must be >= 2, got $width")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"count_min sketches string keys; cast ${child.dataType.simpleString} first")
+  def name: String = "count_min"
+  def inputError(in: DataType): Option[String] =
+    if (in == StringType) None
+    else Some(s"count_min sketches string keys; cast ${in.simpleString} first")
+  def resultType(in: DataType): DataType = ArrayType(LongType, containsNull = false)
+  def empty(): Array[Long] = new Array[Long](depth * width)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = v.asInstanceOf[UTF8String].toString
-      var r = 0
-      while (r < depth) {
-        buffer(r * width + CountMin.cell(key, r, width)) += 1L
-        r += 1
-      }
+  def add(state: Array[Long], value: Any): Unit = {
+    val key = value.asInstanceOf[UTF8String].toString
+    var r = 0
+    while (r < depth) {
+      state(r * width + CountMin.cell(key, r, width)) += 1L
+      r += 1
     }
-    buffer
   }
 
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
+  def merge(state: Array[Long], other: Array[Long]): Unit = {
     var i = 0
-    while (i < buffer.length) { buffer(i) += other(i); i += 1 }
-    buffer
+    while (i < state.length) { state(i) += other(i); i += 1 }
   }
 
-  override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer)
+  def result(state: Array[Long]): Any = new GenericArrayData(state)
 
-  override def serialize(obj: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(obj.length * 8)
-    val out = new DataOutputStream(bos)
-    var i = 0
-    while (i < obj.length) { out.writeLong(obj(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
+  def wire(in: DataType): (Array[Long] => Array[Byte], Array[Byte] => Array[Long]) = {
+    val toBytes = (state: Array[Long]) => {
+      val bos = new ByteArrayOutputStream(state.length * 8)
+      val out = new DataOutputStream(bos)
+      var i = 0
+      while (i < state.length) { out.writeLong(state(i)); i += 1 }
+      out.flush()
+      bos.toByteArray
+    }
+    val fromBytes = (bytes: Array[Byte]) => {
+      val data = new DataInputStream(new ByteArrayInputStream(bytes))
+      val arr = new Array[Long](depth * width)
+      var i = 0
+      while (i < arr.length) { arr(i) = data.readLong(); i += 1 }
+      arr
+    }
+    (toBytes, fromBytes)
   }
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val arr = new Array[Long](depth * width)
-    var i = 0
-    while (i < arr.length) { arr(i) = in.readLong(); i += 1 }
-    arr
-  }
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CountMinAgg =
-    copy(child = newChild)
-  override def prettyName: String = "count_min"
 }
 
-/** Column API over [[CountMinAgg]]: the sketch aggregate, the point
+/** Column API over [[CountMinSketch]]: the sketch aggregate, the point
   * estimate, and the exact elementwise merge.
   */
 object CountMin {
@@ -118,9 +94,7 @@ object CountMin {
 
   /** Aggregate: CMS of `c` (cast keys to string first). Nulls are skipped. */
   def sketch(c: Column, depth: Int, width: Int): Column =
-    ColumnBridge.column(
-      CountMinAgg(ColumnBridge.expression(c), depth, width)
-        .toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.expression(c), CountMinSketch(depth, width))
 
   /** Point estimate for `key`: min over rows of the key's cell. Never
     * undercounts; overestimates by at most the colliding mass.

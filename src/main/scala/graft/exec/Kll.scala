@@ -4,9 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -43,71 +40,73 @@ import org.apache.spark.sql.types._
   * come with the certificate above; with uniform capacity k the bound
   * grows as ~(n/2k)·log2(n/k), i.e. a sub-percent fraction of n for
   * k in the hundreds at test scale.
+  *
+  * The three KLL kinds share the state, its merge and its bytes; they
+  * differ only in what they fold in (doubles or serialized sketches) and
+  * what they release (the certificate or the sketch).
   */
-final case class KllQuantileAgg(
-    child: Expression,
-    k: Int,
-    percentiles: Seq[Double],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KllQuantileAgg.State]
-    with UnaryLike[Expression] {
+sealed trait KllKind extends SketchKind[Kll.State] {
+  def k: Int
+  require(k >= 8, s"$name needs k >= 8, got $k")
 
-  require(k >= 8, s"kll_quantiles needs k >= 8, got $k")
-  require(percentiles.nonEmpty, "kll_quantiles needs at least one percentile")
-  percentiles.foreach(p =>
-    require(p >= 0.0 && p <= 1.0, s"percentile out of [0, 1]: $p"))
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kll_quantiles aggregates doubles, got ${child.dataType.simpleString}")
-
-  import KllQuantileAgg.State
-
-  override def createAggregationBuffer(): State = new State(k)
-
-  override def update(buffer: State, input: InternalRow): State = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(buffer: State, other: State): State = {
-    buffer.mergeWith(other)
-    buffer
-  }
-
-  /** (n, err_units, values[...]) — null values array when the group was
-    * empty (quantiles of nothing are undefined, mirroring SQL).
-    */
-  override def eval(buffer: State): Any = {
-    val n = buffer.totalWeight
-    val qs: Any =
-      if (n == 0L) null
-      else new GenericArrayData(buffer.quantilesOf(percentiles))
-    InternalRow(n, buffer.errUnits, qs)
-  }
-
-  override def serialize(obj: State): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): State = State.fromBytes(bytes, k)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("err_units", LongType, nullable = false),
-    StructField("values", ArrayType(DoubleType, containsNull = false))))
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllQuantileAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllQuantileAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllQuantileAgg =
-    copy(child = newChild)
-  override def prettyName: String = "kll_quantiles"
+  def empty(): Kll.State = new Kll.State(k)
+  def merge(state: Kll.State, other: Kll.State): Unit = state.mergeWith(other)
+  def wire(in: DataType): (Kll.State => Array[Byte], Array[Byte] => Kll.State) =
+    (_.toBytes, Kll.State.fromBytes(_, k))
 }
 
-object KllQuantileAgg {
+/** kll_quantiles: doubles in, the certificate struct (n, err_units,
+  * values) out.
+  */
+final case class KllQuantiles(k: Int, percentiles: Seq[Double]) extends KllKind {
+  Kll.checkPercentiles(name, percentiles)
+  def name: String = "kll_quantiles"
+  def inputError(in: DataType): Option[String] = Kll.doublesOnly(name, in)
+  def resultType(in: DataType): DataType = Kll.releaseType
+  def add(state: Kll.State, value: Any): Unit = state.add(value.asInstanceOf[Double])
+  def result(state: Kll.State): Any = Kll.release(state, percentiles)
+}
+
+/** kll_sketch: doubles in, the RAW serialized sketch (binary) out instead
+  * of extracted quantiles — the building block for ROLLUPS: sketch once
+  * per fine grouping, then re-aggregate coarser levels with [[KllUnion]]
+  * without re-reading the data (the [[KmvUnion]] story for quantiles).
+  * The wire format is the State's own serialization; the certificate
+  * (totalWeight, errUnits) rides inside.
+  */
+final case class KllSketch(k: Int) extends KllKind {
+  def name: String = "kll_sketch"
+  def inputError(in: DataType): Option[String] = Kll.doublesOnly(name, in)
+  def resultType(in: DataType): DataType = BinaryType
+  def add(state: Kll.State, value: Any): Unit = state.add(value.asInstanceOf[Double])
+  def result(state: Kll.State): Any = state.toBytes
+}
+
+/** kll_union: grouped union of released [[KllSketch]] sketches — merge
+  * per group, release the same (n, err_units, values) struct as
+  * [[KllQuantiles]]. Certificates COMPOSE: merged errUnits = sum of the
+  * parts plus any merge-time compactions, and the rank theorem holds for
+  * the union — so a rollup whose fine sketches were exact and whose merged
+  * buffer still fits k is itself EXACT (err_units 0), the regime the
+  * oracle pins. The caller must pass the SAME k the sketches were built
+  * with: k leads the wire format and deserialization `require`s a match,
+  * so a mixed-k union fails loudly instead of silently re-compacting under
+  * the caller's k (which would change the reported regime/err_units).
+  */
+final case class KllUnion(k: Int, percentiles: Seq[Double]) extends KllKind {
+  Kll.checkPercentiles(name, percentiles)
+  def name: String = "kll_union"
+  def inputError(in: DataType): Option[String] =
+    if (in == BinaryType) None
+    else Some(s"kll_union merges binary sketches, got ${in.simpleString}")
+  def resultType(in: DataType): DataType = Kll.releaseType
+  def add(state: Kll.State, value: Any): Unit =
+    state.mergeWith(Kll.State.fromBytes(value.asInstanceOf[Array[Byte]], k))
+  def result(state: Kll.State): Any = Kll.release(state, percentiles)
+}
+
+/** The KLL state and the column API over the KLL aggregates. */
+object Kll {
 
   /** Compactor cascade: `levels(l)` holds items of weight 2^l, at most k
     * each. Compaction sorts a level, keeps the odd survivor (largest) when
@@ -279,136 +278,32 @@ object KllQuantileAgg {
       st
     }
   }
-}
 
-/** Aggregate releasing the RAW serialized sketch (binary) instead of
-  * extracted quantiles — the building block for ROLLUPS: sketch once per
-  * fine grouping, then re-aggregate coarser levels with [[KllUnionAgg]]
-  * without re-reading the data (the [[KmvUnionAgg]] story for
-  * quantiles). The wire format is the State's own serialization; the
-  * certificate (totalWeight, errUnits) rides inside.
-  */
-final case class KllSketchAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KllQuantileAgg.State]
-    with UnaryLike[Expression] {
-
-  require(k >= 8, s"kll_sketch needs k >= 8, got $k")
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kll_sketch aggregates doubles, got ${child.dataType.simpleString}")
-
-  import KllQuantileAgg.State
-
-  override def createAggregationBuffer(): State = new State(k)
-
-  override def update(buffer: State, input: InternalRow): State = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Double])
-    buffer
+  private[exec] def checkPercentiles(name: String, percentiles: Seq[Double]): Unit = {
+    require(percentiles.nonEmpty, s"$name needs at least one percentile")
+    percentiles.foreach(p =>
+      require(p >= 0.0 && p <= 1.0, s"percentile out of [0, 1]: $p"))
   }
 
-  override def merge(buffer: State, other: State): State = {
-    buffer.mergeWith(other)
-    buffer
-  }
+  private[exec] def doublesOnly(name: String, in: DataType): Option[String] =
+    if (in == DoubleType) None
+    else Some(s"$name aggregates doubles, got ${in.simpleString}")
 
-  override def eval(buffer: State): Any = buffer.toBytes
-
-  override def serialize(obj: State): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): State = State.fromBytes(bytes, k)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllSketchAgg =
-    copy(child = newChild)
-  override def prettyName: String = "kll_sketch"
-}
-
-/** Grouped union of released [[KllSketchAgg]] sketches: merge per-group,
-  * release the same (n, err_units, values) struct as [[KllQuantileAgg]].
-  * Certificates COMPOSE: merged errUnits = sum of the parts plus any
-  * merge-time compactions, and the rank theorem holds for the union —
-  * so a rollup whose fine sketches were exact and whose merged buffer
-  * still fits k is itself EXACT (err_units 0), the regime the oracle
-  * pins. The caller must pass the SAME k the sketches were built with:
-  * k leads the wire format and deserialization `require`s a match, so a
-  * mixed-k union fails loudly instead of silently re-compacting under
-  * the caller's k (which would change the reported regime/err_units).
-  */
-final case class KllUnionAgg(
-    child: Expression,
-    k: Int,
-    percentiles: Seq[Double],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KllQuantileAgg.State]
-    with UnaryLike[Expression] {
-
-  require(k >= 8, s"kll_union needs k >= 8, got $k")
-  require(percentiles.nonEmpty, "kll_union needs at least one percentile")
-  percentiles.foreach(p =>
-    require(p >= 0.0 && p <= 1.0, s"percentile out of [0, 1]: $p"))
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kll_union merges binary sketches, got ${child.dataType.simpleString}")
-
-  import KllQuantileAgg.State
-
-  override def createAggregationBuffer(): State = new State(k)
-
-  override def update(buffer: State, input: InternalRow): State = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.mergeWith(State.fromBytes(v.asInstanceOf[Array[Byte]], k))
-    buffer
-  }
-
-  override def merge(buffer: State, other: State): State = {
-    buffer.mergeWith(other)
-    buffer
-  }
-
-  override def eval(buffer: State): Any = {
-    val n = buffer.totalWeight
-    val qs: Any =
-      if (n == 0L) null
-      else new GenericArrayData(buffer.quantilesOf(percentiles))
-    InternalRow(n, buffer.errUnits, qs)
-  }
-
-  override def serialize(obj: State): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): State = State.fromBytes(bytes, k)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = StructType(Seq(
+  private[exec] val releaseType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("err_units", LongType, nullable = false),
     StructField("values", ArrayType(DoubleType, containsNull = false))))
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllUnionAgg =
-    copy(child = newChild)
-  override def prettyName: String = "kll_union"
-}
 
-/** Column API over the KLL aggregates. */
-object Kll {
+  /** (n, err_units, values[...]) — null values array when the group was
+    * empty (quantiles of nothing are undefined, mirroring SQL).
+    */
+  private[exec] def release(state: State, percentiles: Seq[Double]): InternalRow = {
+    val n = state.totalWeight
+    val qs: Any =
+      if (n == 0L) null
+      else new GenericArrayData(state.quantilesOf(percentiles))
+    InternalRow(n, state.errUnits, qs)
+  }
 
   /** Aggregate: struct(n, err_units, values) — `values(i)` estimates the
     * `percentiles(i)` quantile of `c`, with the certificate
@@ -416,18 +311,15 @@ object Kll {
     * under the buffer) means every value is exact.
     */
   def quantiles(c: Column, k: Int, percentiles: Seq[Double]): Column =
-    ColumnBridge.column(
-      KllQuantileAgg(
-        ColumnBridge.resolvedExpression(c.cast("double")), k, percentiles)
-        .toAggregateExpression())
+    SketchAggregate.column(
+      ColumnBridge.resolvedExpression(c.cast("double")), KllQuantiles(k, percentiles))
 
   /** Aggregate: the serialized sketch of `c` (binary) — sketch per fine
     * group once, roll up with [[unionQuantiles]] without re-reading data.
     */
   def sketch(c: Column, k: Int): Column =
-    ColumnBridge.column(
-      KllSketchAgg(ColumnBridge.resolvedExpression(c.cast("double")), k)
-        .toAggregateExpression())
+    SketchAggregate.column(
+      ColumnBridge.resolvedExpression(c.cast("double")), KllSketch(k))
 
   /** Grouped rollup: union [[sketch]] outputs per group and extract
     * quantiles + certificate, same release shape as [[quantiles]]. Pass
@@ -435,7 +327,5 @@ object Kll {
     */
   def unionQuantiles(sketches: Column, k: Int,
       percentiles: Seq[Double]): Column =
-    ColumnBridge.column(
-      KllUnionAgg(ColumnBridge.expression(sketches), k, percentiles)
-        .toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.expression(sketches), KllUnion(k, percentiles))
 }

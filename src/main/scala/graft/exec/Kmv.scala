@@ -3,11 +3,7 @@ package graft.exec
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -35,56 +31,67 @@ import org.apache.spark.sql.types._
   * Encoding: values are stored as xxhash64 XOR Long.MinValue, making
   * SIGNED ascending order equal UNSIGNED ascending order of the raw hash —
   * so plain array_sort / array ops / min-k logic all use natural longs.
+  *
+  * The two KMV kinds share the state, its merge, its bytes and the
+  * released sorted array; they differ only in what they fold in.
   */
-final case class KmvSketchAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvSketchAgg.State]
-    with UnaryLike[Expression] {
+sealed trait KmvKind extends SketchKind[Kmv.State] {
+  def k: Int
+  require(k >= 2, s"$name needs k >= 2")
 
-  require(k >= 2, "kmv_sketch needs k >= 2")
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"kmv_sketch aggregates pre-hashed longs, got ${child.dataType.simpleString}")
-
-  import KmvSketchAgg.State
-
-  override def createAggregationBuffer(): State = new State(k)
-
-  override def update(buffer: State, input: InternalRow): State = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Long])
-    buffer
-  }
-
-  override def merge(buffer: State, other: State): State = {
-    buffer.mergeWith(other)
-    buffer
-  }
-
-  override def eval(buffer: State): Any =
-    new GenericArrayData(buffer.sortedValues)
-
-  override def serialize(obj: State): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): State = State.fromBytes(bytes, k)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvSketchAgg =
-    copy(child = newChild)
-  override def prettyName: String = "kmv_sketch"
+  def empty(): Kmv.State = new Kmv.State(k)
+  def merge(state: Kmv.State, other: Kmv.State): Unit = state.mergeWith(other)
+  def resultType(in: DataType): DataType = ArrayType(LongType, containsNull = false)
+  def result(state: Kmv.State): Any = new GenericArrayData(state.sortedValues)
+  def wire(in: DataType): (Kmv.State => Array[Byte], Array[Byte] => Kmv.State) =
+    (_.toBytes, Kmv.State.fromBytes(_, k))
 }
 
-object KmvSketchAgg {
+/** kmv_sketch: flipped 64-bit hashes in, the sorted sketch out. */
+final case class KmvSketch(k: Int) extends KmvKind {
+  def name: String = "kmv_sketch"
+  def inputError(in: DataType): Option[String] =
+    if (in == LongType) None
+    else Some(s"kmv_sketch aggregates pre-hashed longs, got ${in.simpleString}")
+  def add(state: Kmv.State, value: Any): Unit = state.add(value.asInstanceOf[Long])
+}
+
+/** kmv_union: grouped union of already-built KMV sketches — the rollup
+  * aggregate that turns per-(day, source) sketches into per-source
+  * sketches without re-reading data. Unlike HLL (whose direct builds score via HIP and
+  * unions via the standard estimator), KMV has ONE estimator, so a rolled-
+  * up sketch is BIT-IDENTICAL to a direct single-pass sketch of the
+  * combined data: k-smallest-of-union is associative, order-free, and
+  * exactly what one pass retains (KmvSpec pins this).
+  */
+final case class KmvUnion(k: Int) extends KmvKind {
+  def name: String = "kmv_union"
+  def inputError(in: DataType): Option[String] = in match {
+    case ArrayType(LongType, _) => None
+    case other =>
+      Some(s"kmv_union merges array<bigint> sketches, got ${other.simpleString}")
+  }
+  def add(state: Kmv.State, value: Any): Unit = {
+    val arr = value.asInstanceOf[ArrayData]
+    var i = 0
+    while (i < arr.numElements()) { state.add(arr.getLong(i)); i += 1 }
+  }
+}
+
+/** The KMV state, the column API over [[KmvSketch]] and [[KmvUnion]],
+  * plus the codegen'd set-operation estimators. Sketches are sorted array<long> in the flipped encoding;
+  * every helper below is a pure projection over released sketches.
+  *
+  * INVARIANT: every sketch passed to [[estimate]] / [[union]] /
+  * [[intersectEstimate]] / [[jaccardEstimate]] must have been built by
+  * [[sketch]]/[[unionAgg]] with the SAME `k` — the sketch array does not
+  * carry its k, so the estimators trust the caller. A sketch built with a
+  * LARGER k is caught structurally (size > k fails loudly via
+  * [[checkK]]); a sketch built with a SMALLER k is indistinguishable from
+  * an exact-regime sketch and would silently bias the estimator — keep k
+  * in one place at the call site.
+  */
+object Kmv {
   /** Bounded min-k set of flipped hashes. A TreeSet keeps membership and
     * max-eviction both O(log k); state never exceeds k entries.
     */
@@ -129,86 +136,6 @@ object KmvSketchAgg {
       st
     }
   }
-}
-
-/** Grouped union of already-built KMV sketches — the rollup aggregate
-  * that turns per-(day, source) sketches into per-source sketches without
-  * re-reading data. Unlike HLL (whose direct builds score via HIP and
-  * unions via the standard estimator), KMV has ONE estimator, so a rolled-
-  * up sketch is BIT-IDENTICAL to a direct single-pass sketch of the
-  * combined data: k-smallest-of-union is associative, order-free, and
-  * exactly what one pass retains (KmvSpec pins this).
-  */
-final case class KmvUnionAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvSketchAgg.State]
-    with UnaryLike[Expression] {
-
-  require(k >= 2, "kmv_union needs k >= 2")
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"kmv_union merges array<bigint> sketches, got ${other.simpleString}")
-    }
-
-  import KmvSketchAgg.State
-
-  override def createAggregationBuffer(): State = new State(k)
-
-  override def update(buffer: State, input: InternalRow): State = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      while (i < arr.numElements()) { buffer.add(arr.getLong(i)); i += 1 }
-    }
-    buffer
-  }
-
-  override def merge(buffer: State, other: State): State = {
-    buffer.mergeWith(other)
-    buffer
-  }
-
-  override def eval(buffer: State): Any =
-    new GenericArrayData(buffer.sortedValues)
-
-  override def serialize(obj: State): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): State =
-    KmvSketchAgg.State.fromBytes(bytes, k)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvUnionAgg =
-    copy(child = newChild)
-  override def prettyName: String = "kmv_union"
-}
-
-/** Column API over [[KmvSketchAgg]] plus the codegen'd set-operation
-  * estimators. Sketches are sorted array<long> in the flipped encoding;
-  * every helper below is a pure projection over released sketches.
-  *
-  * INVARIANT: every sketch passed to [[estimate]] / [[union]] /
-  * [[intersectEstimate]] / [[jaccardEstimate]] must have been built by
-  * [[sketch]]/[[unionAgg]] with the SAME `k` — the sketch array does not
-  * carry its k, so the estimators trust the caller. A sketch built with a
-  * LARGER k is caught structurally (size > k fails loudly via
-  * [[checkK]]); a sketch built with a SMALLER k is indistinguishable from
-  * an exact-regime sketch and would silently bias the estimator — keep k
-  * in one place at the call site.
-  */
-object Kmv {
 
   /** Structural k guard: a sketch can never hold more than its k hashes,
     * so size > k proves a mismatched (larger-k) sketch — fail loudly
@@ -221,13 +148,11 @@ object Kmv {
         lit(s" hashes but k=$k was passed — it was built with a larger k"))))
       .otherwise(sk)
 
-  /** Grouped rollup: union many sketches per group ([[KmvUnionAgg]]);
+  /** Grouped rollup: union many sketches per group ([[KmvUnion]]);
     * bit-identical to sketching the combined data directly.
     */
   def unionAgg(sketches: Column, k: Int): Column =
-    ColumnBridge.column(
-      KmvUnionAgg(ColumnBridge.expression(sketches), k)
-        .toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.expression(sketches), KmvUnion(k))
 
   /** Aggregate: the KMV sketch of `c` (any type; hashed with xxhash64).
     * Null items are skipped, matching count(DISTINCT c)'s null discipline.
@@ -235,9 +160,7 @@ object Kmv {
   def sketch(c: Column, k: Int): Column = {
     val flipped = when(c.isNotNull,
       xxhash64(c).bitwiseXOR(lit(Long.MinValue)))
-    ColumnBridge.column(
-      KmvSketchAgg(ColumnBridge.resolvedExpression(flipped), k)
-        .toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.resolvedExpression(flipped), KmvSketch(k))
   }
 
   /** Normalized uniform of the flipped hash at `idx` (0-based), in (0, 1). */

@@ -6,9 +6,6 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,64 +35,35 @@ import org.apache.spark.sql.types._
   * All tie-breaks (eviction victim, merge truncation, final ranking) are
   * on the key string, so results are deterministic under any partitioning.
   */
-final case class SpaceSavingTopK(
-    child: Expression,
-    capacity: Int,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[SpaceSavingTopK.Sketch]
-    with UnaryLike[Expression] {
+final case class SpaceSavingTopK(capacity: Int, k: Int)
+    extends SketchKind[SpaceSavingTopK.Sketch] {
 
   require(capacity >= 1, "space_saving_topk requires a positive capacity")
   require(k >= 1 && k <= capacity, "k must be in [1, capacity]")
 
-  // the child is unresolved at construction: type-check at analysis time
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"space_saving_topk tracks string keys; cast " +
-        s"${child.dataType.simpleString} to string first")
-
   import SpaceSavingTopK.Sketch
 
-  override def createAggregationBuffer(): Sketch = new Sketch(capacity)
-
-  override def update(buffer: Sketch, input: InternalRow): Sketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: Sketch, other: Sketch): Sketch = {
-    buffer.mergeWith(other)
-    buffer
-  }
-
-  override def eval(buffer: Sketch): Any = {
-    val top = buffer.top(k).map { case (key, c, e) =>
+  def name: String = "space_saving_topk"
+  def inputError(in: DataType): Option[String] =
+    if (in == StringType) None
+    else Some(s"space_saving_topk tracks string keys; cast " +
+      s"${in.simpleString} to string first")
+  def resultType(in: DataType): DataType = ArrayType(StructType(Seq(
+    StructField("key", StringType, nullable = false),
+    StructField("count", LongType, nullable = false),
+    StructField("error", LongType, nullable = false))), containsNull = false)
+  def empty(): Sketch = new Sketch(capacity)
+  def add(state: Sketch, value: Any): Unit =
+    state.add(value.asInstanceOf[UTF8String].toString)
+  def merge(state: Sketch, other: Sketch): Unit = state.mergeWith(other)
+  def result(state: Sketch): Any = {
+    val top = state.top(k).map { case (key, c, e) =>
       InternalRow(UTF8String.fromString(key), c, e)
     }
     new GenericArrayData(top)
   }
-
-  override def serialize(obj: Sketch): Array[Byte] = obj.toBytes
-  override def deserialize(bytes: Array[Byte]): Sketch =
-    Sketch.fromBytes(bytes, capacity)
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("key", StringType, nullable = false),
-    StructField("count", LongType, nullable = false),
-    StructField("error", LongType, nullable = false))), containsNull = false)
-  override def withNewMutableAggBufferOffset(newOffset: Int): SpaceSavingTopK =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SpaceSavingTopK =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): SpaceSavingTopK =
-    copy(child = newChild)
-  override def prettyName: String = "space_saving_topk"
+  def wire(in: DataType): (Sketch => Array[Byte], Array[Byte] => Sketch) =
+    (_.toBytes, Sketch.fromBytes(_, capacity))
 }
 
 object SpaceSavingTopK {
@@ -230,7 +198,5 @@ object SpaceSaving {
     * count fits the capacity.
     */
   def spaceSavingTopK(c: Column, capacity: Int, k: Int): Column =
-    ColumnBridge.column(
-      SpaceSavingTopK(ColumnBridge.expression(c), capacity, k)
-        .toAggregateExpression())
+    SketchAggregate.column(ColumnBridge.expression(c), SpaceSavingTopK(capacity, k))
 }

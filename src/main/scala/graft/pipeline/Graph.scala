@@ -149,10 +149,12 @@ object Graph {
         .otherwise(col(w).cast("long"))
     }
     // pre-partitioned by source ONCE: every iteration's contribution join
-    // keys on __s, and localCheckpoint preserves the physical
-    // partitioning, so the (big) edge table never crosses the wire again
-    // — without this, each of the `iterations` joins re-shuffles the
-    // whole edge list (the dominant volume at 100 TB)
+    // keys on __s, so while the pin keeps the physical partitioning the
+    // (big) edge table never crosses the wire again — without it, each of
+    // the `iterations` joins re-shuffles the whole edge list (the dominant
+    // volume at 100 TB). The pin keeps it only with adaptive execution
+    // off: under AQE (the default) the pinned frame reports
+    // UnknownPartitioning and a non-broadcast join re-shuffles the edges
     val e = edges
       .select(Seq(col(srcCol).cast("string").as("__s"),
         col(dstCol).cast("string").as("__d")) ++
@@ -275,8 +277,9 @@ object Graph {
     * than a run-dependent one.
     *
     * Scale shape per round: the label table joins the (pre-partitioned,
-    * checkpointed) edge list on the neighbor key — the edge table never
-    * re-shuffles, the [[pageRankImpl]] discipline — then one
+    * checkpointed) edge list on the neighbor key — the edge table does not
+    * re-shuffle while the pin keeps its partitioning, which holds today
+    * only with adaptive execution off (the [[pageRankImpl]] caveat) — then one
     * (node, label)-keyed count with map-side partials and one node-keyed
     * min-of-(-count, label) argmax, both bounded-width; the label table
     * re-checkpoints per round so the plan stays O(1) deep.
@@ -703,13 +706,15 @@ object Graph {
     * invariant above). Multi-edges are fine — the per-destination `min`
     * absorbs them.
     *
-    * Scale shape: the edge table is pre-partitioned by source ONCE
-    * (localCheckpoint preserves the physical partitioning — the
+    * Scale shape: the edge table is pre-partitioned by source ONCE (the
     * [[pageRank]] discipline), so each round's candidate join moves only
-    * the frontier; per round ONE equi-join + ONE destination-keyed min +
-    * ONE settled-merge full-outer join, all bounded-width (node, long)
-    * shuffles. The merge carries a `__chg` improved-flag in its own
-    * projection (the connectedComponents discipline, r15/guide §1.2):
+    * the frontier while the pin keeps that partitioning — today only with
+    * adaptive execution off; under AQE the pinned edges report
+    * UnknownPartitioning and re-shuffle. Per round ONE equi-join + ONE
+    * destination-keyed min + ONE settled-merge full-outer join, all
+    * bounded-width (node, long) shuffles. The merge carries a `__chg`
+    * improved-flag in its own projection (the connectedComponents
+    * discipline, r15/guide §1.2):
     * ONE pinned table per round serves as the new settled set, the
     * convergence test (the `__chg` count its pin job returns), and the
     * next frontier (a lazy filter) — where the old shape

@@ -958,7 +958,7 @@ object Streaming {
       key: String, n: Long, errUnits: Long, values: Seq[Double])
 
   /** Streaming per-key quantiles with BOUNDED state: each key's state is
-    * one serialized [[graft.exec.KllQuantileAgg.State]] — O(k·log n)
+    * one serialized [[graft.exec.Kll.State]] — O(k·log n)
     * bytes no matter how many values the key has streamed — updated per
     * batch and released as (key, n, err_units, values) after every batch
     * (update mode). The streaming percentile monitor ("p99 latency per
@@ -995,10 +995,10 @@ object Streaming {
       .mapGroupsWithState[KllStateBytes, QuantileRelease](
         GroupStateTimeout.NoTimeout) { (key, it, state) =>
         state.getOption.foreach(s => checkStateVersion(
-          "streamingWindowedSketches", StateVersions.Kll, s.gv))
+          "streamingQuantiles", StateVersions.Kll, s.gv))
         val st = state.getOption
-          .map(s => graft.exec.KllQuantileAgg.State.fromBytes(s.bytes, k))
-          .getOrElse(new graft.exec.KllQuantileAgg.State(k))
+          .map(s => graft.exec.Kll.State.fromBytes(s.bytes, k))
+          .getOrElse(new graft.exec.Kll.State(k))
         it.foreach(r => st.add(r._2))
         state.update(KllStateBytes(st.toBytes))
         QuantileRelease(key, st.totalWeight, st.errUnits,
@@ -1088,7 +1088,7 @@ object Streaming {
     * the sink table): for every window, the quantiles of EVERYTHING up to
     * that window's end — a running union of the per-window sketches, the
     * cumulative dashboard line recomputed from sketch bytes alone. The
-    * release carries the [[graft.exec.KllQuantileAgg]] certificate
+    * release carries the [[graft.exec.KllQuantiles]] certificate
     * (n, err_units): rank error composes through merges, and while the
     * cumulative n stays under k every release is EXACT (err_units 0).
     *

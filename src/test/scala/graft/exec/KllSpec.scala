@@ -70,14 +70,14 @@ class KllSpec extends SparkSpec {
 
   test("state stays bounded: the serialized sketch of 50k values at " +
       "k=128 is a few KB, not O(n)") {
-    val st = new KllQuantileAgg.State(128)
+    val st = new Kll.State(128)
     val rnd = new scala.util.Random(5)
     for (_ <- 1 to 50000) st.add(rnd.nextDouble())
     val bytes = st.toBytes.length
     // ~k doubles per level x log2(50000/128) ~ 9 levels ~ 10KB ceiling
     assert(bytes < 20000, s"state grew to $bytes bytes")
     // roundtrip preserves the certificate and the quantiles
-    val back = KllQuantileAgg.State.fromBytes(st.toBytes, 128)
+    val back = Kll.State.fromBytes(st.toBytes, 128)
     assert(back.errUnits === st.errUnits)
     assert(back.totalWeight === st.totalWeight)
     assert(back.quantile(0.5) === st.quantile(0.5))
@@ -85,8 +85,8 @@ class KllSpec extends SparkSpec {
 
   test("merge equals a sequential build's certificate discipline: " +
       "mergeWith never loses weight and keeps err accounting additive") {
-    val a = new KllQuantileAgg.State(64)
-    val b = new KllQuantileAgg.State(64)
+    val a = new Kll.State(64)
+    val b = new Kll.State(64)
     val rnd = new scala.util.Random(11)
     for (_ <- 1 to 5000) a.add(rnd.nextDouble())
     for (_ <- 1 to 3000) b.add(rnd.nextDouble() + 0.5)
@@ -155,12 +155,12 @@ class KllSpec extends SparkSpec {
     val k = 64
     // per-part states (the "fine sketches"), then a merge chain
     val fine = parts.map { p =>
-      val st = new KllQuantileAgg.State(k)
+      val st = new Kll.State(k)
       p.foreach(st.add)
       st
     }
     val partErr = fine.map(_.errUnits).sum
-    val merged = KllQuantileAgg.State.fromBytes(fine.head.toBytes, k)
+    val merged = Kll.State.fromBytes(fine.head.toBytes, k)
     fine.tail.foreach(merged.mergeWith)
     assert(merged.totalWeight === all.size.toLong)
     assert(merged.errUnits >= partErr)
@@ -207,13 +207,13 @@ class KllSpec extends SparkSpec {
 
   test("guards: k too small, bad percentiles, non-numeric input") {
     intercept[IllegalArgumentException] {
-      KllQuantileAgg(null, 4, Seq(0.5))
+      KllQuantiles(4, Seq(0.5))
     }
     intercept[IllegalArgumentException] {
-      KllQuantileAgg(null, 64, Seq(1.5))
+      KllQuantiles(64, Seq(1.5))
     }
     intercept[IllegalArgumentException] {
-      KllQuantileAgg(null, 64, Nil)
+      KllQuantiles(64, Nil)
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.accounting.AddOneRow
-import graft.budget.{PureDPBudget, Rat}
+import graft.budget.{PrivacyBudget, PureDPBudget, Rat}
 import graft.ir.QueryBuilder
 import graft.session.Session
 
@@ -167,6 +167,28 @@ class QuantileIntervalsSpec extends SparkSpec {
         .collect().head.getDouble(0)
       assert(m === 6.0)
     } finally spark.conf.unset("spark.graft.quantile.intervals.maxGroupRows")
+  }
+
+  test("session: a maxGroupRows outside [1, Int.MaxValue - 1] is refused " +
+      "while the query compiles, naming the conf, before any job or charge") {
+    val total = PureDPBudget(Rat(4))
+    for (bad <- Seq("abc", "-1", "0", "2147483647")) {
+      spark.conf.set("spark.graft.quantile.intervals.maxGroupRows", bad)
+      try withIntervals {
+        val df = makeDf(StructType(Seq(dblCol("x"))), (1 to 6).map(i => Row(i.toDouble)))
+        val s = Session.fromDataFrame(spark, total, "t", df, AddOneRow())
+        var err: IllegalArgumentException = null
+        val jobs = jobsLaunchedBy {
+          err = intercept[IllegalArgumentException](
+            s.evaluate(QueryBuilder("t").median("x", 0, 10), PureDPBudget(Rat(1))))
+        }
+        assert(err.getMessage.contains("spark.graft.quantile.intervals.maxGroupRows"),
+          s"$bad: ${err.getMessage}")
+        assert(err.getMessage.contains(s"'$bad'"), s"$bad: ${err.getMessage}")
+        assert(jobs === 0, bad)
+        assert(s.remainingPrivacyBudget === (total: PrivacyBudget), bad)
+      } finally spark.conf.unset("spark.graft.quantile.intervals.maxGroupRows")
+    }
   }
 
   test("session: unknown quantile method is rejected") {
