@@ -2901,9 +2901,10 @@ object Queries {
       // event time in seconds derived from event_id (the parquet ts column
       // is TIMESTAMP(NANOS), which Spark cannot decode — see readEvents);
       // sessions split on gaps > 600 s of per-user silence
-      graft.streaming.Streaming.batchSessions(
+      graft.pipeline.Relational.sessionTable(
         read(s, d, "events").select(col("user_id"), col("event_id").as("ts_sec")),
-        "user_id", "ts_sec", gapSec = 600L)
+        "user_id", "ts_sec", gapUnits = 600L)
+        .withColumnRenamed("session_id", "session_idx")
     }),
     "q70_winnowing_fingerprints" -> ((s, d) => {
       import org.apache.spark.sql.functions._

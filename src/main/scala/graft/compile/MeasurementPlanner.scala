@@ -12,7 +12,7 @@ import graft.ir.MechanismHint
 import graft.ir.QueryExpr._
 import graft.ir.MeasureExpr
 import graft.keyset.KeySet
-import graft.pipeline.Reserved
+import graft.pipeline.Inputs
 import graft.types.ColumnType
 
 /** Result of compiling a measurement: the answer plan, per-column noise
@@ -203,7 +203,7 @@ final class MeasurementPlanner(
           // marks the overflow, never an OOM) and the finisher refuses an
           // oversized group loudly, naming the bounded-state binned path —
           // the same discipline as Similarity.bruteForcePairs' guard
-          Reserved.free(keys.columns :+ m, "intervals quantile",
+          Inputs.free(keys.columns :+ m, "intervals quantile",
             "__v", "__vs")
           // the gather holds maxGroupRows + 1 values, so the bound must
           // leave room for the overflow row
@@ -241,7 +241,7 @@ final class MeasurementPlanner(
       val t = prepared(child)
       val sens = aggSensitivity(t)
       val cols = e.schema(cat).columnNames
-      Reserved.free(cols, "get_groups", "__c")
+      Inputs.free(cols, "get_groups", "__c")
       val (b, threshold) =
         if (eps.isInfinite) (0.0, 1.0)
         else {
@@ -276,7 +276,7 @@ final class MeasurementPlanner(
       // decided on the exponent and mantissa bits, so it is bit-exact across
       // engines — unlike ceil(log2(x)), whose libm rounding at power-of-2
       // boundaries differs between JVM and C runtimes.
-      Reserved.free(keys.columns :+ m, "get_bounds", "__k")
+      Inputs.free(keys.columns :+ m, "get_bounds", "__k")
       val withK = histogramSelect(t.df, keys, m, MagnitudeBucket.column, "__k",
         GetBoundsImpl.finishUdf(eps))
       val result =
@@ -534,7 +534,7 @@ final class MeasurementPlanner(
     if (keys.isEmptyKey) return aggd
     val ks = keys.dataframe(spark)
     val keyCols = keys.columns
-    Reserved.free(aggd, "keyset join", keyCols.map(c => s"__r_$c"): _*)
+    Inputs.free(aggd, "keyset join", keyCols.map(c => s"__r_$c"): _*)
     val aggR = aggd.select(
       keyCols.map(c => col(c).as(s"__r_$c")) ++ outCols.map { case (c, _) => col(c) }: _*)
     val cond = keyCols.map(c => ks(c) <=> aggR(s"__r_$c")).reduce(_ && _)
@@ -589,7 +589,7 @@ final class MeasurementPlanner(
     */
   private def moments(e: GroupByBounded): MeasureOut = {
     val (m, lo, hi, out) = (e.measureColumn, e.low, e.high, e.outputColumn)
-    Reserved.free(e.keys.columns :+ m, "moments", "__sd", "__sq", "__n")
+    Inputs.free(e.keys.columns :+ m, "moments", "__sd", "__sq", "__n")
     val t = prepared(e.child, dropSpecial = Some(m),
       needed = Some(e.keys.columns :+ m))
     val sens = aggSensitivity(t, Some(e.keys), l2 = isL2(e.mechanism))
@@ -639,7 +639,7 @@ final class MeasurementPlanner(
   private def histogramSelect(df: DataFrame, keys: KeySet, m: String,
       bin: Column => Column, out: String,
       finisher: UserDefinedFunction): DataFrame = {
-    Reserved.free(keys.columns :+ m, "histogram selection",
+    Inputs.free(keys.columns :+ m, "histogram selection",
       "__bin", "__c", "__bins")
     val counts = df.withColumn("__bin", bin(col(m)))
       .groupBy((keys.columns :+ "__bin").map(col).toIndexedSeq: _*)

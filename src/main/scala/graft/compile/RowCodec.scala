@@ -70,9 +70,6 @@ object RowCodec {
   def toMap(row: Row, schema: StructType): Map[String, Any] =
     new StructCodec(schema).view(row)
 
-  def fromMap(m: Map[String, Any], schema: StructType): Row =
-    new StructCodec(schema).buildRow(m, None)
-
   private def normalize(v: Any, f: StructField): Any = v match {
     case null => null
     case i: Int if f.dataType == LongType    => i.toLong

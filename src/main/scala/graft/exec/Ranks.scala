@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Inputs
+
 /** Scalable global ordering primitives. A bare
   * `row_number().over(Window.orderBy(...))` funnels the whole dataset
   * through ONE task — the classic scaling cliff of global ranks, NTILE
@@ -33,8 +35,7 @@ object Ranks {
   private def rowNumbered(
       df: DataFrame, order: Seq[Column], out: String): (DataFrame, Long) = {
     require(order.nonEmpty, "globalRowNumber needs at least one sort column")
-    Seq("__rk_pid", "__rk_off").foreach(c =>
-      require(!df.columns.contains(c), s"input uses reserved column '$c'"))
+    Inputs.free(df, "globalRowNumber", "__rk_pid", "__rk_off")
     val spark = df.sparkSession
     // partition i of the pin holds exactly the rows with __rk_pid = i
     val parted = Materialize(df.repartitionByRange(order: _*)
@@ -59,8 +60,7 @@ object Ranks {
       df: DataFrame, order: Seq[Column], n: Int,
       out: String = "ntile"): DataFrame = {
     require(n >= 1, s"ntile needs n >= 1, got $n")
-    require(!df.columns.contains("__rk_rn"),
-      "input uses reserved column name '__rk_rn'; rename it first")
+    Inputs.free(df, "globalNtile", "__rk_rn")
     val (ranked, total) = rowNumbered(df, order, "__rk_rn")
     val q = total / n
     val r = total % n

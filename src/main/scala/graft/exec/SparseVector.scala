@@ -3,6 +3,8 @@ package graft.exec
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.pipeline.Inputs
+
 /** Sparse Vector Technique — AboveThreshold / Sparse (Dwork & Roth 2014,
   * "The Algorithmic Foundations of Differential Privacy", Algorithms 1-2;
   * Lyu-Su-Li 2017, arXiv:1603.01699 for the budget split): scan an ORDERED
@@ -50,8 +52,7 @@ object SparseVector {
     require(epsilon > 0.0,
       s"epsilon must be positive (or infinite for the exact release), got $epsilon")
     require(sensitivity > 0.0, s"sensitivity must be positive, got $sensitivity")
-    Seq(idCol, valueCol).foreach(c =>
-      require(values.columns.contains(c), s"values is missing column '$c'"))
+    Inputs.present(values, "values", idCol, valueCol)
 
     // the query list is a privacy parameter the caller fixed up front —
     // the collect is bounded by construction (limit maxQueries+1, so an

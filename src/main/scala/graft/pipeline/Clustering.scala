@@ -71,11 +71,8 @@ object Clustering {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1L, s"scale must be >= 1, got $scale")
-    Seq(idCol, vecCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
-    for (reserved <- Seq("cluster", "dist_sq", "__v"))
-      require(!df.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
+    Inputs.present(df, "input", idCol, vecCol)
+    Inputs.free(df, "kMeansMicro", "cluster", "dist_sq", "__v")
     df.schema(vecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(et, _) =>
         require(Seq(org.apache.spark.sql.types.FloatType,

@@ -193,7 +193,7 @@ object CorpusStats {
       df: DataFrame, valueCol: String, nBins: Int, k: Int = 1024,
       binCol: String = "bin"): DataFrame = {
     require(nBins >= 1, s"nBins must be >= 1, got $nBins")
-    require(df.columns.contains(valueCol), s"input is missing '$valueCol'")
+    Inputs.present(df, "input", valueCol)
     require(!df.columns.contains(binCol),
       s"input already has a '$binCol' column; pass binCol to rename")
     val v = col(valueCol).cast("double")
@@ -244,8 +244,7 @@ object CorpusStats {
     require(nBins >= 2 && nBins <= 100000,
       s"nBins must be in [2, 100000], got $nBins")
     Seq(ref -> "reference", cur -> "current").foreach { case (df, side) =>
-      require(df.columns.contains(valueCol),
-        s"$side side is missing '$valueCol'")
+      Inputs.present(df, s"$side side", valueCol)
     }
     val v = col(valueCol).cast("double")
     val ps = (1 until nBins).map(_.toDouble / nBins)
@@ -316,14 +315,8 @@ object CorpusStats {
       df: DataFrame, groupCols: Seq[String], xCol: String,
       yCol: String): DataFrame = {
     require(groupCols.nonEmpty, "groupTrend needs at least one group column")
-    (groupCols ++ Seq(xCol, yCol)).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
-    import org.apache.spark.sql.types._
-    for (c <- Seq(xCol, yCol))
-      require(Seq(LongType, IntegerType, ShortType, ByteType)
-          .contains(df.schema(c).dataType),
-        s"groupTrend needs integral columns for exactness, got " +
-          s"${df.schema(c).dataType.simpleString} in '$c'")
+    Inputs.present(df, "input", groupCols ++ Seq(xCol, yCol): _*)
+    Inputs.integral(df, "groupTrend", "column for exactness", xCol, yCol)
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
     df.where(x.isNotNull && y.isNotNull)
@@ -406,8 +399,7 @@ object CorpusStats {
     require(topN >= 1 && topN <= 100000,
       s"topN must be in [1, 1e5] (it bounds a single-partition sort), " +
         s"got $topN")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
+    Inputs.ppmScale(ppmScale)
     val counts = tokens(df, textCol)
       .groupBy("token").agg(count(lit(1)).as("n"))
     val total = counts.agg(sum(col("n")).as("__tot"))
@@ -758,7 +750,7 @@ object CorpusStats {
       maxBoilerplateLines: Int = 1 << 22): DataFrame = {
     require(minDocs >= 2,
       "minDocs must be at least 2: every non-blank line appears in its own document")
-    Reserved.free(df, "stripBoilerplateLines", "__rw", "n_removed")
+    Inputs.free(df, "stripBoilerplateLines", "__rw", "n_removed")
     val spark = df.sparkSession
     val lineHashes = udf((t: String) =>
       if (t == null) Array.empty[Long]
@@ -835,8 +827,7 @@ object CorpusStats {
   def frequentPairs(
       df: DataFrame, basketCol: String, itemCol: String, minSupport: Long,
       maxBasketItems: Int = 10000): DataFrame = {
-    Seq(basketCol, itemCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
+    Inputs.present(df, "input", basketCol, itemCol)
     // bi appears twice below (support agg + semi-join probe) but only
     // within single jobs — ReuseExchange dedups the distinct's shuffle
     // inside each plan, so only `kept` (read by the guard job AND the
@@ -924,10 +915,8 @@ object CorpusStats {
   def pairAffinity(
       df: DataFrame, basketCol: String, itemCol: String, minSupport: Long,
       maxBasketItems: Int = 10000, ppmScale: Long = 1000000L): DataFrame = {
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    Seq(basketCol, itemCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(df, "input", basketCol, itemCol)
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val bi = df
@@ -1007,15 +996,8 @@ object CorpusStats {
         "120 pair columns is the sane aggregate width; split wider " +
         "profiles into batches")
     require(cols.distinct.size == cols.size, "duplicate column in cols")
-    import org.apache.spark.sql.types._
-    cols.foreach { c =>
-      require(df.columns.contains(c), s"input is missing column '$c'")
-      require(Seq(LongType, IntegerType, ShortType, ByteType)
-          .contains(df.schema(c).dataType),
-        s"correlationSums needs integral columns for exactness, got " +
-          s"${df.schema(c).dataType.simpleString} in '$c' — pre-scale " +
-          "decimals to minor units")
-    }
+    Inputs.present(df, "input", cols: _*)
+    Inputs.integral(df, "correlationSums", "column for exactness", cols: _*)
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val pairs = for {
       i <- cols.indices; j <- (i + 1) until cols.size

@@ -19,7 +19,7 @@ object Dedup {
     * row with the smallest `idCol` (deterministic, order-independent).
     */
   def exact(df: DataFrame, keyCols: Seq[String], idCol: String): DataFrame = {
-    Reserved.free(df, "exact", "__rn")
+    Inputs.free(df, "exact", "__rn")
     val w = Window.partitionBy(keyCols.map(col).toIndexedSeq: _*)
       .orderBy(col(idCol))
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
@@ -357,12 +357,9 @@ object Dedup {
   def survivorship(
       df: DataFrame, idCol: String, scoreCol: String,
       clusters: DataFrame, clusterCol: String = "cluster_id"): DataFrame = {
-    Seq(idCol, scoreCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
-    Seq(idCol, clusterCol).foreach(c =>
-      require(clusters.columns.contains(c),
-        s"cluster assignment is missing column '$c'"))
-    Reserved.free(df, "survivorship", "__clu", "__rn", "__dupn", "n_members")
+    Inputs.present(df, "input", idCol, scoreCol)
+    Inputs.present(clusters, "cluster assignment", idCol, clusterCol)
+    Inputs.free(df, "survivorship", "__clu", "__rn", "__dupn", "n_members")
     require(!df.columns.contains(clusterCol),
       s"input already has a column named '$clusterCol' (the output cluster " +
         "column) — the release would carry the name twice; rename one")
@@ -828,7 +825,7 @@ object Dedup {
   def exactAgainst(
       batch: DataFrame, history: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    Reserved.free(batch, "exactAgainst", "__fp")
+    Inputs.free(batch, "exactAgainst", "__fp")
     val fp = TextAnalysis.fingerprint(col(textCol))
     batch.withColumn("__fp", fp)
       .join(history.select(fp.as("__fp")).distinct(), Seq("__fp"), "left_anti")
@@ -1182,8 +1179,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5): DataFrame = {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
-    Seq(idCol, textCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
+    Inputs.present(df, "input", idCol, textCol)
     val minTokens = w + k - 1
     val toks = split(trim(lower(col(textCol))), "\\s+")
     val base = spread(df).select(
@@ -1254,7 +1250,7 @@ object Dedup {
       q: Int = 2, maxLenBucket: Int = 100000): DataFrame = {
     require(maxDistance >= 1, s"maxDistance must be >= 1, got $maxDistance")
     require(q >= 1, s"gram length q must be >= 1, got $q")
-    require(df.columns.contains(strCol), s"input is missing '$strCol'")
+    Inputs.present(df, "input", strCol)
     val d = maxDistance
     val longMin = q * (d + 1) // >= q*d + 1 positional grams
     val dict = spread(df)
@@ -1416,8 +1412,7 @@ object Dedup {
       windowSize: Int): DataFrame = {
     require(windowSize >= 1 && windowSize <= 10000,
       s"windowSize must be in [1, 1e4], got $windowSize")
-    Seq(idCol, sortKeyCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
+    Inputs.present(df, "input", idCol, sortKeyCol)
     val base = df
       .select(col(idCol).cast("string").as("__id"),
         col(sortKeyCol).cast("string").as("__k"))

@@ -71,8 +71,7 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
       scale: Long = 1000000000000L): DataFrame = {
-    require(edges.columns.contains(weightCol),
-      s"edge list is missing weight column '$weightCol'")
+    Inputs.present(edges, "edge list", weightCol)
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
       scale, seeds = None, weightCol = Some(weightCol))
   }
@@ -90,8 +89,7 @@ object Graph {
       seeds: DataFrame, seedCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
       scale: Long = 1000000000000L): DataFrame = {
-    require(seeds.columns.contains(seedCol),
-      s"seeds side is missing column '$seedCol'")
+    Inputs.present(seeds, "seeds side", seedCol)
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
       scale, seeds = Some(seeds.select(col(seedCol).cast("string").as("__n"))
         .where(col("__n").isNotNull).distinct()), weightCol = None)
@@ -107,10 +105,8 @@ object Graph {
       seeds: DataFrame, seedCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
       scale: Long = 1000000000000L): DataFrame = {
-    require(edges.columns.contains(weightCol),
-      s"edge list is missing weight column '$weightCol'")
-    require(seeds.columns.contains(seedCol),
-      s"seeds side is missing column '$seedCol'")
+    Inputs.present(edges, "edge list", weightCol)
+    Inputs.present(seeds, "seeds side", seedCol)
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
       scale, seeds = Some(seeds.select(col(seedCol).cast("string").as("__n"))
         .where(col("__n").isNotNull).distinct()),
@@ -136,8 +132,7 @@ object Graph {
       s"dampingDen ($dampingDen) * scale ($scale) exceeds signed-64-bit " +
         "headroom and the exact fixed-point arithmetic would overflow — " +
         "reduce the damping fraction (e.g. 85/100, not 85e10/1e12)")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     // __w (weighted only — the unweighted edge table stays two columns,
     // exactly the r9 plan): NULL weights drop with NULL endpoints;
     // non-positive weights raise (zero is a deleted edge, negative has
@@ -289,8 +284,7 @@ object Graph {
       iterations: Int = 3, assumeCanonical: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1, 100], got $iterations")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     val directed = edges
       .select(col(srcCol).cast("string").as("__v"),
         col(dstCol).cast("string").as("__nb"))
@@ -355,8 +349,7 @@ object Graph {
     require(minShared >= 1L, s"minShared must be >= 1, got $minShared")
     maxSharedDegree.foreach(m =>
       require(m >= 1L, s"maxSharedDegree must be >= 1, got $m"))
-    Seq(sharedCol, projCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", sharedCol, projCol)
     val base = edges
       .select(col(sharedCol).cast("string").as("__sh"),
         col(projCol).cast("string").as("__p"))
@@ -399,8 +392,7 @@ object Graph {
     */
   def triangleCounts(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     val und = edges
       .select(col(srcCol).cast("string").as("__a"),
         col(dstCol).cast("string").as("__b"))
@@ -462,10 +454,8 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0, 64], got $maxHops")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
-    require(seeds.columns.contains(seedCol),
-      s"seeds side is missing column '$seedCol'")
+    Inputs.present(edges, "edge list", srcCol, dstCol)
+    Inputs.present(seeds, "seeds side", seedCol)
     // NOT pre-partitioned by source (unlike pageRankImpl): the frontier
     // side broadcasts, so the edge table never shuffles anyway — an
     // upfront repartition would only add an exchange (measured +15%)
@@ -561,8 +551,7 @@ object Graph {
     require(k >= 1 && k <= 1000000, s"k must be in [1, 1e6], got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     val directed = edges
       .select(col(srcCol).cast("string").as("__u"),
         col(dstCol).cast("string").as("__v"))
@@ -628,8 +617,7 @@ object Graph {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
     require(maxDegree >= 2L, s"maxDegree must be >= 2, got $maxDegree")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     val su = col(srcCol).cast("string")
     val sv = col(dstCol).cast("string")
     var e = edges
@@ -728,10 +716,8 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
-    Seq(srcCol, dstCol, weightCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
-    require(seeds.columns.contains(seedCol),
-      s"seeds side is missing column '$seedCol'")
+    Inputs.present(edges, "edge list", srcCol, dstCol, weightCol)
+    Inputs.present(seeds, "seeds side", seedCol)
     val wExpr = when(col(weightCol).cast("long") <= 0L,
       raise_error(concat(lit(s"ssspWeighted: non-positive weight in '" +
         weightCol + "': "), col(weightCol).cast("string"))).cast("long"))
@@ -810,10 +796,8 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1, 64], got $maxHops")
     require(maxSeeds >= 1, s"maxSeeds must be >= 1, got $maxSeeds")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
-    require(seeds.columns.contains(seedCol),
-      s"seeds side is missing column '$seedCol'")
+    Inputs.present(edges, "edge list", srcCol, dstCol)
+    Inputs.present(seeds, "seeds side", seedCol)
     val e = edges
       .select(col(srcCol).cast("string").as("__s"),
         col(dstCol).cast("string").as("__d"))
@@ -866,10 +850,8 @@ object Graph {
       ppmScale: Long = 1000000L): DataFrame = {
     require(minCommon >= 1L, s"minCommon must be >= 1, got $minCommon")
     require(maxDegree >= 2L, s"maxDegree must be >= 2, got $maxDegree")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    Seq(srcCol, dstCol).foreach(c =>
-      require(edges.columns.contains(c), s"edge list is missing column '$c'"))
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(edges, "edge list", srcCol, dstCol)
     val su = col(srcCol).cast("string")
     val sv = col(dstCol).cast("string")
     val und = edges

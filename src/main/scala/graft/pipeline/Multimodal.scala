@@ -627,13 +627,6 @@ object Multimodal {
     java.lang.Long.valueOf(hash)
   }
 
-  private val audioFpUdf = udf((b: Array[Byte]) => audioFingerprint(b))
-
-  /** Column form of [[audioFingerprint]] at the default windows/bins —
-    * null for empty payloads.
-    */
-  def audioFingerprintCol(c: Column): Column = audioFpUdf(c)
-
   /** Duplicate-audio GROUP SUMMARIES by [[audioFingerprint]]: one row per
     * group with the min-id representative and size —
     * [[dedupImagesByPhash]]'s shape for audio. The fingerprint runs inside

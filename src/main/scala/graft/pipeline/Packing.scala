@@ -46,9 +46,7 @@ object Packing {
   def packChunks(
       df: DataFrame, idCol: String, tokenCol: String, chunkTokens: Long): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be positive, got $chunkTokens")
-    val idType = df.schema(idCol).dataType
-    require(Seq("tinyint", "smallint", "int", "bigint").contains(idType.simpleString),
-      s"packChunks orders by an integral id column; '$idCol' is ${idType.simpleString}")
+    Inputs.integral(df, "packChunks", "id column", idCol)
     val spark = df.sparkSession
     import spark.implicits._
     val pairs = df

@@ -71,23 +71,18 @@ object Quality {
     require(rules.nonEmpty, "at least one expectation required")
     require(rules.map(_.name).distinct.size == rules.size,
       s"duplicate rule names: ${rules.map(_.name).mkString("; ")}")
-    rules.foreach {
-      case r: Expect.ForeignKey =>
-        r.dimColumns.foreach(c => require(r.dim.columns.contains(c),
-          s"dim '${r.dimName}' is missing column '$c'"))
-        r.columns.foreach(c => require(df.columns.contains(c),
-          s"input is missing column '$c' (rule ${r.name})"))
-      case r: Expect.Unique =>
-        r.columns.foreach(c => require(df.columns.contains(c),
-          s"input is missing column '$c' (rule ${r.name})"))
-      case r: Expect.NotNull => require(df.columns.contains(r.column),
-        s"input is missing column '${r.column}' (rule ${r.name})")
-      case r: Expect.InRange => require(df.columns.contains(r.column),
-        s"input is missing column '${r.column}' (rule ${r.name})")
-      case r: Expect.InSet => require(df.columns.contains(r.column),
-        s"input is missing column '${r.column}' (rule ${r.name})")
-      case r: Expect.MatchesRegex => require(df.columns.contains(r.column),
-        s"input is missing column '${r.column}' (rule ${r.name})")
+    rules.foreach { r =>
+      val side = s"input of rule ${r.name}"
+      r match {
+        case fk: Expect.ForeignKey =>
+          Inputs.present(fk.dim, s"dim '${fk.dimName}'", fk.dimColumns: _*)
+          Inputs.present(df, side, fk.columns: _*)
+        case u: Expect.Unique => Inputs.present(df, side, u.columns: _*)
+        case Expect.NotNull(c) => Inputs.present(df, side, c)
+        case Expect.InRange(c, _, _) => Inputs.present(df, side, c)
+        case Expect.InSet(c, _) => Inputs.present(df, side, c)
+        case Expect.MatchesRegex(c, _) => Inputs.present(df, side, c)
+      }
     }
   }
 
@@ -179,23 +174,16 @@ object Quality {
     */
   def quarantine(df: DataFrame, rules: Seq[Expect]): DataFrame = {
     validateRules(df, rules)
-    require(!df.columns.contains("violated_rules"),
-      "input uses reserved column name 'violated_rules'; rename it first")
     val flags = rules.indices.map(i => s"__q$i")
-    flags.foreach(f => require(!df.columns.contains(f),
-      s"input uses reserved column name '$f'; rename it first"))
     // relational rules join back on __qk_<col> aliases — a colliding input
     // column makes both join sides carry the name (ambiguous-reference
     // error deep in planning); refuse with the collision named instead
-    rules.foreach {
-      case u: Expect.Unique => u.columns.foreach(c =>
-        require(!df.columns.contains(s"__qk_$c"),
-          s"input uses reserved column name '__qk_$c'; rename it first"))
-      case fk: Expect.ForeignKey => fk.columns.foreach(c =>
-        require(!df.columns.contains(s"__qk_$c"),
-          s"input uses reserved column name '__qk_$c'; rename it first"))
-      case _ => ()
-    }
+    val joinKeys = rules.flatMap {
+      case u: Expect.Unique => u.columns
+      case fk: Expect.ForeignKey => fk.columns
+      case _ => Nil
+    }.map(c => s"__qk_$c")
+    Inputs.free(df, "quarantine", "violated_rules" +: (flags ++ joinKeys): _*)
     var cur = df
     rules.zipWithIndex.foreach { case (r, i) =>
       val f = flags(i)
@@ -257,16 +245,12 @@ object Quality {
   def robustOutliers(
       df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 4096, factor: Double = 1.5): DataFrame = {
-    require(df.columns.contains(valueCol), s"input is missing '$valueCol'")
-    groupCols.foreach(c =>
-      require(df.columns.contains(c), s"input is missing group column '$c'"))
+    Inputs.present(df, "input", valueCol +: groupCols: _*)
     require(!groupCols.contains(valueCol),
       s"'$valueCol' cannot be both group and measure")
     require(factor >= 0.0, s"factor must be >= 0, got $factor")
-    for (reserved <- Seq("lo_fence", "hi_fence", "is_outlier", "err_units") ++
-        groupCols.map(c => s"__g_$c"))
-      require(!df.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
+    Inputs.free(df, "robustOutliers", Seq("lo_fence", "hi_fence",
+      "is_outlier", "err_units") ++ groupCols.map(c => s"__g_$c"): _*)
     val v = col(valueCol).cast("double")
     val sk = graft.exec.Kll.quantiles(v, k, Seq(0.25, 0.75)).as("__kll")
     val fences0 =
@@ -315,17 +299,13 @@ object Quality {
   def robustZScores(
       df: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 4096, scaleFactor: Double = 1.4826): DataFrame = {
-    require(df.columns.contains(valueCol), s"input is missing '$valueCol'")
-    groupCols.foreach(c =>
-      require(df.columns.contains(c), s"input is missing group column '$c'"))
+    Inputs.present(df, "input", valueCol +: groupCols: _*)
     require(!groupCols.contains(valueCol),
       s"'$valueCol' cannot be both group and measure")
     require(scaleFactor > 0.0, s"scaleFactor must be > 0, got $scaleFactor")
-    for (reserved <- groupCols.map(c => s"__g_$c") ++
-        Seq("median", "mad", "robust_z", "median_err_units",
-        "mad_err_units", "__absdev"))
-      require(!df.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
+    Inputs.free(df, "robustZScores", groupCols.map(c => s"__g_$c") ++
+      Seq("median", "mad", "robust_z", "median_err_units", "mad_err_units",
+        "__absdev"): _*)
     val v = col(valueCol).cast("double")
     def medTable(src: DataFrame, m: Column, outName: String,
         errName: String): DataFrame = {
@@ -366,17 +346,13 @@ object Quality {
   def winsorize(
       df: DataFrame, groupCols: Seq[String], valueCol: String,
       pLo: Double = 0.01, pHi: Double = 0.99, k: Int = 4096): DataFrame = {
-    require(df.columns.contains(valueCol), s"input is missing '$valueCol'")
-    groupCols.foreach(c =>
-      require(df.columns.contains(c), s"input is missing group column '$c'"))
+    Inputs.present(df, "input", valueCol +: groupCols: _*)
     require(!groupCols.contains(valueCol),
       s"'$valueCol' cannot be both group and measure")
     require(pLo >= 0.0 && pHi <= 1.0 && pLo < pHi,
       s"need 0 <= pLo < pHi <= 1, got [$pLo, $pHi]")
-    for (reserved <- Seq("lo_clip", "hi_clip", "winsorized", "err_units") ++
-        groupCols.map(c => s"__g_$c"))
-      require(!df.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
+    Inputs.free(df, "winsorize", Seq("lo_clip", "hi_clip", "winsorized",
+      "err_units") ++ groupCols.map(c => s"__g_$c"): _*)
     val v = col(valueCol).cast("double")
     val sk = graft.exec.Kll.quantiles(v, k, Seq(pLo, pHi)).as("__kll")
     val clips =
@@ -417,8 +393,7 @@ object Quality {
   def fdViolations(
       df: DataFrame, detCols: Seq[String], depCol: String): DataFrame = {
     require(detCols.nonEmpty, "fdViolations needs at least one determinant")
-    (detCols :+ depCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
+    Inputs.present(df, "input", detCols :+ depCol: _*)
     require(!detCols.contains(depCol),
       s"'$depCol' cannot be both determinant and dependent")
     df.where(detCols.map(col(_).isNotNull).reduce(_ && _))
@@ -464,16 +439,11 @@ object Quality {
   def benfordAudit(
       df: DataFrame, valueCol: String,
       ppmScale: Long = 1000000L): DataFrame = {
-    require(df.columns.contains(valueCol),
-      s"input is missing column '$valueCol'")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    val t = df.schema(valueCol).dataType
-    require(Seq("bigint", "int", "smallint", "tinyint").contains(
-      t.simpleString),
-      s"benfordAudit needs an integral column, got ${t.simpleString} — " +
-        "pre-scale decimals to minor units (the leading digit is scale-" +
-        "invariant, so any fixed power-of-ten scaling preserves the audit)")
+    Inputs.present(df, "input", valueCol)
+    Inputs.ppmScale(ppmScale)
+    // pre-scale decimals to minor units: the leading digit is scale-
+    // invariant, so any fixed power-of-ten scaling preserves the audit
+    Inputs.integral(df, "benfordAudit", "value column", valueCol)
     val spark = df.sparkSession
     import spark.implicits._
     // the literal table is 1e6-scaled; requantize to the caller's scale so
@@ -546,10 +516,8 @@ object Quality {
       df: DataFrame, cols: Seq[String],
       ppmScale: Long = 1000000L): DataFrame = {
     require(cols.nonEmpty, "categoricalProfile needs at least one column")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    cols.foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(df, "input", cols: _*)
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def idiv(a: Column, b: Column): Column = call_function("div", a, b)
     val melted = df.select(explode(array(cols.map(c =>
@@ -624,12 +592,8 @@ object Quality {
     require(!keyCols.contains(valueCol),
       s"'$valueCol' cannot be both key and value (the robustZScores " +
         "disjointness rule) — the mode table would group on a duplicate")
-    (keyCols :+ valueCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
-    require(!df.columns.contains("was_imputed"),
-      "input uses reserved column name 'was_imputed'; rename it first")
-    require(!df.columns.contains("__mode"),
-      "input uses reserved column name '__mode'; rename it first")
+    Inputs.present(df, "input", keyCols :+ valueCol: _*)
+    Inputs.free(df, "imputeMode", "was_imputed", "__mode")
     val freq = df
       .where(keyCols.map(col(_).isNotNull).reduce(_ && _) &&
         col(valueCol).isNotNull)
@@ -681,8 +645,7 @@ object Quality {
     require(keyCols.nonEmpty, "tableDigest needs at least one key column")
     require(buckets >= 1 && buckets <= (1 << 20),
       s"buckets must be in [1, 2^20], got $buckets")
-    (keyCols ++ payloadCols).foreach(c =>
-      require(df.columns.contains(c), s"input is missing column '$c'"))
+    Inputs.present(df, "input", keyCols ++ payloadCols: _*)
     def canon(cs: Seq[String]): Column = concat_ws("\u0001",
       cs.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
     // r14: the codegen'd Md5Prefix kernel — bit-identical to

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.exec.Materialize.Pin
+import graft.exec.Materialize
 
 /** Temporal and interval join operators Spark has no built-in for. Both are
   * lowered to shapes Catalyst already executes well — a single keyed
@@ -44,14 +44,11 @@ object Relational {
       timeCol: String, strict: Boolean = true): DataFrame = {
     require(keyCols.nonEmpty, "asOfJoin needs at least one key column")
     val sideCols = keyCols :+ timeCol
-    sideCols.foreach { c =>
-      require(left.columns.contains(c), s"left side is missing column '$c'")
-      require(right.columns.contains(c), s"right side is missing column '$c'")
-    }
+    Inputs.present(left, "left side", sideCols: _*)
+    Inputs.present(right, "right side", sideCols: _*)
     val reserved = Seq("__t", "__side", "__payload", "__tie", "__left", "__match")
-    for (side <- Seq("left" -> left, "right" -> right); c <- reserved)
-      require(!side._2.columns.contains(c),
-        s"${side._1} side uses reserved internal column name '$c'; rename it first")
+    Inputs.free(left, "asOfJoin", reserved: _*)
+    Inputs.free(right, "asOfJoin", reserved: _*)
     val payloadCols = right.columns.filterNot(sideCols.contains).toSeq
     require(payloadCols.nonEmpty,
       "right side carries no payload columns beyond the key and time")
@@ -110,8 +107,9 @@ object Relational {
     * stage-(i-1) time: a filtered scan, an entity-keyed equi-join against
     * the (entities-sized) previous stage, and a min-aggregate, repeated
     * |steps| times. Every join is keyed on the entity id; each stage's
-    * state is one timestamp per surviving entity; the final counts are
-    * single-row aggregates. At 100 TB each stage reads only its step's
+    * state is one timestamp per surviving entity; the counts are the row
+    * counts each stage's pin job already took, so they cost no job of
+    * their own. At 100 TB each stage reads only its step's
     * events (predicate pushed to the scan) and shuffles entity ids +
     * timestamps, never full events.
     */
@@ -121,32 +119,29 @@ object Relational {
     val spark = events.sparkSession
     import spark.implicits._
     val stages = funnelStages(events, entityCol, typeCol, timeCol, steps, maxGap)
-    stages.zip(steps).zipWithIndex.map { case ((df, step), i) =>
-      (i + 1, step, df.count())
+    stages.zip(steps).zipWithIndex.map { case ((stage, step), i) =>
+      (i + 1, step, stage.rows)
     }.toDF("step", "step_name", "n_entities")
   }
 
   /** The staged reach tables behind [[funnel]]: stage i holds one row per
     * entity that completed steps 1..i, carrying its stage-i earliest
     * completion `__t` and the previous stage's `__pt` (null at stage 1).
-    * Each stage pins eagerly (entity-sized) so downstream counts and the
-    * next stage's join read materialized rows — a lazy chain would
-    * recompute stages 1..i at every consumer, O(|steps|^2) scans.
+    * Each stage pins eagerly (entity-sized) so the next stage's join and
+    * downstream aggregates read materialized rows — a lazy chain would
+    * recompute stages 1..i at every consumer, O(|steps|^2) scans — and
+    * the pin's row count is the stage's entity count.
     */
   private def funnelStages(
       events: DataFrame, entityCol: String, typeCol: String, timeCol: String,
-      steps: Seq[String], maxGap: Option[Long]): Seq[DataFrame] = {
+      steps: Seq[String], maxGap: Option[Long]): Seq[Materialize.Pinned] = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct.size == steps.size,
       s"duplicate step types: ${steps.mkString(", ")}")
-    Seq(entityCol, typeCol, timeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     maxGap.foreach { g =>
       require(g > 0L, s"maxGap must be positive, got $g")
-      val t = events.schema(timeCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"maxGap needs a numeric time column, got ${t.simpleString} — " +
-          "convert timestamps to epoch units first")
+      Inputs.numeric(events, "maxGap", "time column", timeCol)
     }
     val tType = events.schema(timeCol).dataType
     // Null entity ids carry no identity and are DROPPED at every stage —
@@ -154,11 +149,11 @@ object Relational {
     // stage-1 filter, null-id events would pool into one phantom entity
     // that inflates step 1 and then silently vanishes at step 2 (an
     // equi-join never matches null).
-    var reached = events
+    var reached = Materialize(events
       .filter(col(typeCol) === steps.head && col(entityCol).isNotNull)
       .groupBy(col(entityCol).as("__e")).agg(min(col(timeCol)).as("__t"))
-      .withColumn("__pt", lit(null).cast(tType))
-      .pin(s"Relational.funnelStages step ${steps.head}")
+      .withColumn("__pt", lit(null).cast(tType)),
+      s"Relational.funnelStages step ${steps.head}")
     val stages = scala.collection.mutable.ListBuffer(reached)
     for (step <- steps.drop(1)) {
       // conversion window: the next step must land within maxGap of the
@@ -166,15 +161,15 @@ object Relational {
       // semantics — deterministic, mirrored exactly by the oracle)
       val within = maxGap.map(g => col("__nt") <= col("__t") + lit(g))
         .getOrElse(lit(true))
-      reached = events
+      reached = Materialize(events
         .filter(col(typeCol) === step && col(entityCol).isNotNull)
         .select(col(entityCol).as("__e"), col(timeCol).as("__nt"))
-        .join(reached.drop("__pt"), "__e")
+        .join(reached.df.drop("__pt"), "__e")
         .where(col("__nt") > col("__t") && within)
         // one reached row per entity, so min(__t) IS the previous time
         .groupBy(col("__e"))
-        .agg(min(col("__nt")).as("__t"), min(col("__t")).as("__pt"))
-        .pin(s"Relational.funnelStages step $step")
+        .agg(min(col("__nt")).as("__t"), min(col("__t")).as("__pt")),
+        s"Relational.funnelStages step $step")
       stages += reached
     }
     stages.toSeq
@@ -192,19 +187,16 @@ object Relational {
       events: DataFrame, entityCol: String, typeCol: String, timeCol: String,
       steps: Seq[String], maxGap: Option[Long] = None): DataFrame = {
     require(steps.size >= 2, "gap stats need at least two steps")
-    val t = events.schema.apply(timeCol).dataType
-    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"funnelGaps needs a numeric time column, got ${t.simpleString} — " +
-        "convert timestamps to epoch units first")
+    Inputs.numeric(events, "funnelGaps", "time column", timeCol)
     val spark = events.sparkSession
     val stages = funnelStages(events, entityCol, typeCol, timeCol, steps, maxGap)
     // gaps released as doubles: integral time units give integer-valued
     // gaps whose min/max/sum are exact in ANY addition order below 2^53;
     // fractional units make the sum order-sensitive at the last ulp —
     // prefer epoch integers
-    val rows = stages.zip(steps).zipWithIndex.drop(1).map { case ((df, step), i) =>
+    val rows = stages.zip(steps).zipWithIndex.drop(1).map { case ((stage, step), i) =>
       val g = (col("__t") - col("__pt")).cast("double")
-      val r = df.agg(count(lit(1)).as("n"),
+      val r = stage.df.agg(count(lit(1)).as("n"),
         min(g).as("mn"), max(g).as("mx"), sum(g).as("sm")).head()
       org.apache.spark.sql.Row(Integer.valueOf(i + 1), step,
         java.lang.Long.valueOf(r.getLong(0)),
@@ -242,8 +234,7 @@ object Relational {
     */
   def cohortRetention(
       events: DataFrame, entityCol: String, periodCol: String): DataFrame = {
-    Seq(entityCol, periodCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", entityCol, periodCol)
     val active = events
       .select(col(entityCol).as("__e"), col(periodCol).cast("long").as("__p"))
       .where(col("__e").isNotNull && col("__p").isNotNull)
@@ -275,15 +266,13 @@ object Relational {
       fact: DataFrame, valueCol: String, dim: DataFrame,
       loCol: String, hiCol: String, cellWidth: Double): DataFrame = {
     require(cellWidth > 0.0, s"cellWidth must be positive, got $cellWidth")
-    require(fact.columns.contains(valueCol), s"fact side is missing '$valueCol'")
-    Seq(loCol, hiCol).foreach(c =>
-      require(dim.columns.contains(c), s"dim side is missing '$c'"))
+    Inputs.present(fact, "fact side", valueCol)
+    Inputs.present(dim, "dim side", loCol, hiCol)
     val clash = dim.columns.filter(fact.columns.contains)
     require(clash.isEmpty,
       s"dim columns ${clash.mkString(", ")} clash with fact; rename them first")
-    for (side <- Seq("fact" -> fact, "dim" -> dim))
-      require(!side._2.columns.contains("__cell"),
-        s"${side._1} side uses reserved internal column name '__cell'; rename it first")
+    Inputs.free(fact, "rangeJoin", "__cell")
+    Inputs.free(dim, "rangeJoin", "__cell")
 
     val dimCells = dim
       .where(col(hiCol) > col(loCol)) // empty intervals match nothing
@@ -326,14 +315,10 @@ object Relational {
       before: DataFrame, after: DataFrame, keyCols: Seq[String],
       keepUnchanged: Boolean = false): DataFrame = {
     require(keyCols.nonEmpty, "snapshotDiff needs at least one key column")
-    keyCols.foreach { c =>
-      require(before.columns.contains(c), s"before side is missing key '$c'")
-      require(after.columns.contains(c), s"after side is missing key '$c'")
-    }
-    for (reserved <- Seq("change_type", "__in_b", "__in_a"))
-      require(!before.columns.contains(reserved) &&
-        !after.columns.contains(reserved),
-        s"inputs use reserved column name '$reserved'; rename it first")
+    Inputs.present(before, "before side", keyCols: _*)
+    Inputs.present(after, "after side", keyCols: _*)
+    Inputs.free(before, "snapshotDiff", "change_type", "__in_b", "__in_a")
+    Inputs.free(after, "snapshotDiff", "change_type", "__in_b", "__in_a")
     val compareCols =
       before.columns.filter(c => !keyCols.contains(c) && after.columns.contains(c))
     // ONE validation action for both sides: the per-side duplicate-key
@@ -394,11 +379,8 @@ object Relational {
       zeroCols: Seq[String], maxBuckets: Long = 100000000L): DataFrame = {
     require(step > 0L, s"step must be positive, got $step")
     require(maxBuckets >= 1L, s"maxBuckets must be >= 1, got $maxBuckets")
-    require(df.columns.contains(bucketCol), s"input is missing '$bucketCol'")
-    zeroCols.foreach(c =>
-      require(df.columns.contains(c), s"input is missing zero-fill column '$c'"))
-    require(!df.columns.contains("__present"),
-      "input uses reserved column name '__present'; rename it first")
+    Inputs.present(df, "input", bucketCol +: zeroCols: _*)
+    Inputs.free(df, "zeroFillSeries", "__present")
     val spark = df.sparkSession
     // a NULL bucket would sail past the pmod guard (null =!= 0 is null →
     // otherwise branch) and then be dropped silently by the grid left
@@ -456,16 +438,8 @@ object Relational {
       rangePreceding: Long): DataFrame = {
     require(rangePreceding >= 0L,
       s"rangePreceding must be >= 0, got $rangePreceding")
-    Seq(keyCol, orderCol, valueCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
-    val ot = df.schema(orderCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(ot),
-      s"rollingStats needs an integral order column, got ${ot.simpleString} " +
-        "— a silent cast would truncate fractional times; convert to epoch " +
-        "units first")
+    Inputs.present(df, "input", keyCol, orderCol, valueCol)
+    Inputs.integral(df, "rollingStats", "order column", orderCol)
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(orderCol).cast("long"))
       .rangeBetween(-rangePreceding, 0L)
@@ -477,6 +451,29 @@ object Relational {
       .withColumn("n_window", count(lit(1)).over(w))
       .withColumn("min_window", min(col(valueCol)).over(w))
       .withColumn("max_window", max(col(valueCol)).over(w))
+  }
+
+  /** The gaps-and-islands session split shared by [[sessionPaths]],
+    * [[transitionMatrix]], [[sessionConversion]], [[sessionTable]] and
+    * [[sessionFunnel]]: within each entity, rows ordered by `order` (time
+    * first) open a new session where the gap to the previous row's
+    * `timeCol` exceeds `gapUnits`; `out` carries the 1-based per-entity
+    * session index. `kept` is the operator's null-filtered frame. ONE
+    * entity-keyed streaming window (lag + running sum, no per-entity
+    * gather); refuses an entity or order column named like its working
+    * column or `out`, which `withColumn` would silently replace.
+    */
+  private def splitSessions(
+      op: String, kept: DataFrame, entityCol: String, timeCol: String,
+      gapUnits: Long, order: Seq[String], out: String): DataFrame = {
+    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
+    Inputs.free(entityCol +: order, op, "__new", out)
+    val w = Window.partitionBy(entityCol).orderBy(order.map(col): _*)
+    val prev = lag(col(timeCol), 1).over(w)
+    kept
+      .withColumn("__new",
+        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
+      .withColumn(out, sum(col("__new")).over(w))
   }
 
   /** Top session paths: each entity's events split into sessions on gaps
@@ -502,34 +499,19 @@ object Relational {
   def sessionPaths(
       events: DataFrame, entityCol: String, timeCol: String, typeCol: String,
       gapUnits: Long, k: Int, maxLen: Int = 64): DataFrame = {
-    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxLen >= 1, s"maxLen must be >= 1, got $maxLen")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    // same guard as rollingStats: a timestamp column fails the gap
-    // subtraction with a confusing analysis error and a double column
-    // silently compares fractional gaps against an integer gapUnits
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"sessionPaths needs an integral time column, got ${tt.simpleString} " +
-        "— convert to epoch units first")
-    val w = Window.partitionBy(entityCol).orderBy(col(timeCol), col(typeCol))
-    val prev = lag(col(timeCol), 1).over(w)
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    Inputs.integral(events, "sessionPaths", "time column", timeCol)
     // NULL types drop with NULL entities/times (the transitionMatrix /
     // sessionConversion discipline): concat_ws silently SKIPS a null path
     // element, so a kept ('view', NULL, 'buy') session would render the
     // same "view>buy" string as a genuine 2-event journey — distinct
     // journeys colliding in the census
-    val sess = events
+    val sess = splitSessions("sessionPaths", events
       .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__new",
-        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(w))
+        col(typeCol).isNotNull),
+      entityCol, timeCol, gapUnits, Seq(timeCol, typeCol), "__sid")
     val wr = Window.partitionBy(col(entityCol), col("__sid"))
       .orderBy(col(timeCol), col(typeCol))
     val paths = sess.withColumn("__rn", row_number().over(wr))
@@ -575,26 +557,13 @@ object Relational {
   def transitionMatrix(
       events: DataFrame, entityCol: String, timeCol: String, typeCol: String,
       gapUnits: Long, ppmScale: Long = 1000000L): DataFrame = {
-    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"transitionMatrix needs an integral time column, got " +
-        s"${tt.simpleString} — convert to epoch units first")
-    val w = Window.partitionBy(entityCol).orderBy(col(timeCol), col(typeCol))
-    val prev = lag(col(timeCol), 1).over(w)
-    val sess = events
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    Inputs.integral(events, "transitionMatrix", "time column", timeCol)
+    val sess = splitSessions("transitionMatrix", events
       .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__new",
-        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(w))
+        col(typeCol).isNotNull),
+      entityCol, timeCol, gapUnits, Seq(timeCol, typeCol), "__sid")
     val ws = Window.partitionBy(col(entityCol), col("__sid"))
       .orderBy(col(timeCol), col(typeCol))
     val pairs = sess
@@ -643,10 +612,7 @@ object Relational {
       percentiles: Seq[Double] = Seq(0.5, 0.9), k: Int = 4096): DataFrame = {
     require(steps.size >= 2, "latency stats need at least two steps")
     require(percentiles.nonEmpty, "ask for at least one percentile")
-    val t = events.schema.apply(timeCol).dataType
-    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"funnelLatency needs a numeric time column, got ${t.simpleString} — " +
-        "convert timestamps to epoch units first")
+    Inputs.numeric(events, "funnelLatency", "time column", timeCol)
     def lbl(p: Double): String = {
       val pct = p * 100
       if (pct == math.rint(pct)) s"p${pct.toLong}"
@@ -657,9 +623,9 @@ object Relational {
     require(labels.distinct.size == labels.size,
       s"duplicate percentile labels: ${labels.mkString(", ")}")
     val stages = funnelStages(events, entityCol, typeCol, timeCol, steps, maxGap)
-    stages.zip(steps).zipWithIndex.drop(1).map { case ((df, step), i) =>
+    stages.zip(steps).zipWithIndex.drop(1).map { case ((stage, step), i) =>
       val g = (col("__t") - col("__pt")).cast("double")
-      df.select(g.as("__g"))
+      stage.df.select(g.as("__g"))
         .agg(count(lit(1)).as("n_entities"),
           min(col("__g")).as("min_gap"), max(col("__g")).as("max_gap"),
           graft.exec.Kll.quantiles(col("__g"), k, percentiles).as("__kll"))
@@ -691,27 +657,13 @@ object Relational {
   def sessionConversion(
       events: DataFrame, entityCol: String, timeCol: String, typeCol: String,
       gapUnits: Long, convType: String, ppmScale: Long = 1000000L): DataFrame = {
-    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"sessionConversion needs an integral time column, got " +
-        s"${tt.simpleString} — convert to epoch units first")
-    val w = Window.partitionBy(entityCol).orderBy(col(timeCol), col(typeCol))
-    val prev = lag(col(timeCol), 1).over(w)
-    val sess = events
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    Inputs.integral(events, "sessionConversion", "time column", timeCol)
+    splitSessions("sessionConversion", events
       .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-        col(typeCol).isNotNull)
-      .withColumn("__new",
-        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(w))
-    sess
+        col(typeCol).isNotNull),
+      entityCol, timeCol, gapUnits, Seq(timeCol, typeCol), "__sid")
       .groupBy(col(entityCol), col("__sid"))
       .agg(
         min(struct(col(timeCol).as("t"),
@@ -753,14 +705,11 @@ object Relational {
       attrCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "scd2History needs at least one key column")
     require(attrCols.nonEmpty, "scd2History needs at least one attr column")
-    (keyCols ++ attrCols :+ versionCol).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
+    Inputs.present(df, "input", keyCols ++ attrCols :+ versionCol: _*)
     require((keyCols ++ attrCols).distinct.size == keyCols.size + attrCols.size
         && !keyCols.contains(versionCol) && !attrCols.contains(versionCol),
       "key, version, and attr columns must be disjoint")
-    for (reserved <- Seq("valid_from", "valid_to", "__chg"))
-      require(!df.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
+    Inputs.free(df, "scd2History", "valid_from", "valid_to", "__chg")
     val kept = df
       .select((keyCols ++ Seq(versionCol) ++ attrCols).map(col): _*)
       .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
@@ -834,31 +783,16 @@ object Relational {
         s"interval length), got $cellWidth")
     require(maxCellsPerInterval >= 1L,
       s"maxCellsPerInterval must be >= 1, got $maxCellsPerInterval")
-    Seq(loL, hiL).foreach(c =>
-      require(left.columns.contains(c), s"left side is missing '$c'"))
-    Seq(loR, hiR).foreach(c =>
-      require(right.columns.contains(c), s"right side is missing '$c'"))
-    keyCols.foreach { c =>
-      require(left.columns.contains(c), s"left side is missing key '$c'")
-      require(right.columns.contains(c), s"right side is missing key '$c'")
-    }
+    Inputs.present(left, "left side", keyCols ++ Seq(loL, hiL): _*)
+    Inputs.present(right, "right side", keyCols ++ Seq(loR, hiR): _*)
     val clash = right.columns.filterNot(keyCols.contains)
       .filter(left.columns.contains)
     require(clash.isEmpty,
       s"right columns ${clash.mkString(", ")} clash with left; rename first")
-    for ((side, df2) <- Seq("left" -> left, "right" -> right)) {
-      require(!df2.columns.contains("__cell"),
-        s"$side side uses reserved column name '__cell'; rename it first")
-      for (c <- if (side == "left") Seq(loL, hiL) else Seq(loR, hiR)) {
-        val t = df2.schema(c).dataType
-        require(Seq(org.apache.spark.sql.types.LongType,
-            org.apache.spark.sql.types.IntegerType,
-            org.apache.spark.sql.types.ShortType,
-            org.apache.spark.sql.types.ByteType).contains(t),
-          s"intervalOverlapJoin needs integral bounds, got ${t.simpleString} " +
-            s"for '$c' — convert to epoch units first")
-      }
-    }
+    Inputs.free(left, "intervalOverlapJoin", "__cell")
+    Inputs.free(right, "intervalOverlapJoin", "__cell")
+    Inputs.integral(left, "intervalOverlapJoin", "bound", loL, hiL)
+    Inputs.integral(right, "intervalOverlapJoin", "bound", loR, hiR)
     val width =
       if (cellWidth > 0L) cellWidth
       else {
@@ -961,28 +895,14 @@ object Relational {
   def sessionTable(
       events: DataFrame, entityCol: String, timeCol: String,
       gapUnits: Long): DataFrame = {
-    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
-    Seq(entityCol, timeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    for (reserved <- Seq("session_id", "session_start", "session_end",
-        "n_events"))
-      require(!events.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"sessionTable needs an integral time column, got ${tt.simpleString} " +
-        "— convert to epoch units first")
-    val w = Window.partitionBy(entityCol).orderBy(col(timeCol))
-    val prev = lag(col(timeCol), 1).over(w)
-    events
+    Inputs.present(events, "events side", entityCol, timeCol)
+    Inputs.free(events, "sessionTable",
+      "session_id", "session_start", "session_end", "n_events")
+    Inputs.integral(events, "sessionTable", "time column", timeCol)
+    splitSessions("sessionTable", events
       .select(col(entityCol), col(timeCol))
-      .where(col(entityCol).isNotNull && col(timeCol).isNotNull)
-      .withColumn("__new",
-        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("__new")).over(w))
+      .where(col(entityCol).isNotNull && col(timeCol).isNotNull),
+      entityCol, timeCol, gapUnits, Seq(timeCol), "session_id")
       .groupBy(col(entityCol), col("session_id"))
       .agg(min(col(timeCol)).as("session_start"),
         max(col(timeCol)).as("session_end"),
@@ -1009,26 +929,13 @@ object Relational {
       events: DataFrame, entityCol: String, timeCol: String, typeCol: String,
       gapUnits: Long, steps: Seq[String],
       maxGap: Option[Long] = None): DataFrame = {
-    require(gapUnits > 0L, s"gapUnits must be positive, got $gapUnits")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    for (reserved <- Seq("__new", "__sid", "__se"))
-      require(!events.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"sessionFunnel needs an integral time column, got ${tt.simpleString} " +
-        "— convert to epoch units first")
-    val w = Window.partitionBy(entityCol).orderBy(col(timeCol))
-    val prev = lag(col(timeCol), 1).over(w)
-    val tagged = events
-      .where(col(entityCol).isNotNull && col(timeCol).isNotNull)
-      .withColumn("__new",
-        when(prev.isNull || col(timeCol) - prev > gapUnits, 1L).otherwise(0L))
-      .withColumn("__sid", sum(col("__new")).over(w))
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    // the tagged frame keeps every event column for funnel to read
+    Inputs.free(events, "sessionFunnel", "__new", "__sid", "__se")
+    Inputs.integral(events, "sessionFunnel", "time column", timeCol)
+    val tagged = splitSessions("sessionFunnel", events
+      .where(col(entityCol).isNotNull && col(timeCol).isNotNull),
+      entityCol, timeCol, gapUnits, Seq(timeCol), "__sid")
       .withColumn("__se", concat(col(entityCol).cast("string"), lit("#"),
         col("__sid").cast("string")))
     funnel(tagged, "__se", typeCol, timeCol, steps, maxGap)
@@ -1071,18 +978,9 @@ object Relational {
     require(lookback > 0L, s"lookback must be positive, got $lookback")
     require(mode == "last" || mode == "first",
       s"mode must be 'last' or 'first', got '$mode'")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    for (reserved <- Seq("touch_type", "touch_time", "__touch"))
-      require(!events.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"attribution needs an integral time column, got ${tt.simpleString} " +
-        "— convert to epoch units first")
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    Inputs.free(events, "attribution", "touch_type", "touch_time", "__touch")
+    Inputs.integral(events, "attribution", "time column", timeCol)
     val w = Window.partitionBy(entityCol).orderBy(col(timeCol))
       .rangeBetween(-lookback, -1)
     val isTouch = col(typeCol).isin(touchTypes.map(x => x: Any): _*)
@@ -1163,19 +1061,10 @@ object Relational {
           "halfLife or shorten lookback")
     } else require(halfLife == 0L,
       s"halfLife only applies to time_decay, got $halfLife for '$model'")
-    Seq(entityCol, timeCol, typeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
-    for (reserved <- Seq("touch_type", "touch_time", "credit", "__touches",
-        "__ws", "__sw", "__n", "__pos", "__t"))
-      require(!events.columns.contains(reserved),
-        s"input uses reserved column name '$reserved'; rename it first")
-    val tt = events.schema(timeCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(tt),
-      s"multiTouchAttribution needs an integral time column, got " +
-        s"${tt.simpleString} — convert to epoch units first")
+    Inputs.present(events, "events side", entityCol, timeCol, typeCol)
+    Inputs.free(events, "multiTouchAttribution", "touch_type", "touch_time",
+      "credit", "__touches", "__ws", "__sw", "__n", "__pos", "__t")
+    Inputs.integral(events, "multiTouchAttribution", "time column", timeCol)
     val w = Window.partitionBy(entityCol).orderBy(col(timeCol))
       .rangeBetween(-lookback, -1)
     val isTouch = col(typeCol).isin(touchTypes.map(x => x: Any): _*)
@@ -1264,19 +1153,14 @@ object Relational {
       base: DataFrame, changes: DataFrame, keyCols: Seq[String],
       versionCol: String, opCol: String): DataFrame = {
     require(keyCols.nonEmpty, "applyChangelog needs at least one key column")
-    keyCols.foreach(c => require(base.columns.contains(c),
-      s"base is missing key column '$c'"))
-    (keyCols ++ Seq(versionCol, opCol)).foreach(c =>
-      require(changes.columns.contains(c), s"changes is missing '$c'"))
+    Inputs.present(base, "base", keyCols: _*)
+    Inputs.present(changes, "changes", keyCols ++ Seq(versionCol, opCol): _*)
     require(!keyCols.contains(versionCol) && !keyCols.contains(opCol),
       "key, version, and op columns must be disjoint")
     val payload = base.columns.toSeq.filterNot(keyCols.contains)
-    payload.foreach(c => require(changes.columns.contains(c),
-      s"changes is missing payload column '$c' (base and changes must " +
-        "share the payload schema)"))
-    for (reserved <- Seq("__pri", "__ver", "__op", "__rn"))
-      require(!base.columns.contains(reserved),
-        s"base uses reserved column name '$reserved'; rename it first")
+    Inputs.present(changes, "changes (which must share base's payload)",
+      payload: _*)
+    Inputs.free(base, "applyChangelog", "__pri", "__ver", "__op", "__rn")
     val keyedBase = base
       .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
     val keyedChanges = changes
@@ -1370,19 +1254,8 @@ object Relational {
       df: DataFrame, keyCols: Seq[String], loCol: String,
       hiCol: String): DataFrame = {
     require(keyCols.nonEmpty, "mergeIntervals needs at least one key column")
-    (keyCols ++ Seq(loCol, hiCol)).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
-    Seq(loCol, hiCol).foreach { c =>
-      val t = df.schema(c).dataType
-      require(Seq(org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType).contains(t),
-        s"mergeIntervals needs integral endpoints, got ${t.simpleString} " +
-          s"in '$c' — a silent cast would truncate fractional bounds and " +
-          "change merge results; convert dates/timestamps to epoch units " +
-          "first")
-    }
+    Inputs.present(df, "input", keyCols ++ Seq(loCol, hiCol): _*)
+    Inputs.integral(df, "mergeIntervals", "endpoint", loCol, hiCol)
     val keyed = df.select(
       keyCols.map(col) ++ Seq(
         when(col(loCol).isNull || col(hiCol).isNull,
@@ -1438,10 +1311,8 @@ object Relational {
       events: DataFrame, keyCols: Seq[String], periodCol: String,
       ppmScale: Long = 1000000L): DataFrame = {
     require(keyCols.nonEmpty, "periodDeltas needs at least one key column")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    (keyCols :+ periodCol).foreach(c =>
-      require(events.columns.contains(c), s"input is missing '$c'"))
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(events, "input", keyCols :+ periodCol: _*)
     val series = events
       .where((keyCols :+ periodCol).map(col(_).isNotNull).reduce(_ && _))
       .groupBy(keyCols.map(col) :+ col(periodCol).cast("long")
@@ -1485,15 +1356,9 @@ object Relational {
       amountCol: String, tiles: Int = 5): DataFrame = {
     require(tiles >= 2 && tiles <= 100,
       s"tiles must be in [2, 100], got $tiles")
-    Seq(entityCol, timeCol, amountCol).foreach(c =>
-      require(events.columns.contains(c), s"input is missing '$c'"))
-    Seq(timeCol, amountCol).foreach { c =>
-      val t = events.schema(c).dataType
-      require(Seq("bigint", "int", "smallint", "tinyint").contains(
-        t.simpleString),
-        s"rfmSegments needs integral '$c', got ${t.simpleString} — " +
-          "pre-scale currency to minor units / timestamps to epoch units")
-    }
+    Inputs.present(events, "input", entityCol, timeCol, amountCol)
+    Inputs.integral(events, "rfmSegments", "time or amount column",
+      timeCol, amountCol)
     val profile = events
       .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
         col(amountCol).isNotNull)
@@ -1533,15 +1398,9 @@ object Relational {
       df: DataFrame, keyCols: Seq[String], d1Col: String,
       d2Col: String): DataFrame = {
     require(keyCols.nonEmpty, "paretoFrontier needs at least one key column")
-    Reserved.free(df, "paretoFrontier", "__mm")
-    (keyCols ++ Seq(d1Col, d2Col)).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
-    Seq(d1Col, d2Col).foreach { c =>
-      val t = df.schema(c).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"paretoFrontier needs numeric dimensions, got ${t.simpleString} " +
-          s"in '$c'")
-    }
+    Inputs.free(df, "paretoFrontier", "__mm")
+    Inputs.present(df, "input", keyCols ++ Seq(d1Col, d2Col): _*)
+    Inputs.numeric(df, "paretoFrontier", "dimension", d1Col, d2Col)
     val kept = df
       .where((keyCols ++ Seq(d1Col, d2Col)).map(col(_).isNotNull)
         .reduce(_ && _))
@@ -1588,19 +1447,8 @@ object Relational {
       df: DataFrame, keyCols: Seq[String], fromCol: String,
       toCol: String): DataFrame = {
     require(keyCols.nonEmpty, "scdAudit needs at least one key column")
-    (keyCols ++ Seq(fromCol, toCol)).foreach(c =>
-      require(df.columns.contains(c), s"input is missing '$c'"))
-    Seq(fromCol, toCol).foreach { c =>
-      val t = df.schema(c).dataType
-      require(Seq(org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType).contains(t),
-        s"scdAudit needs integral validity bounds, got ${t.simpleString} " +
-          s"in '$c' — a silent cast would truncate fractional bounds and " +
-          "change overlap/gap results; convert dates/timestamps to epoch " +
-          "units first")
-    }
+    Inputs.present(df, "input", keyCols ++ Seq(fromCol, toCol): _*)
+    Inputs.integral(df, "scdAudit", "validity bound", fromCol, toCol)
     val openEnd = Long.MaxValue
     val keyed = df.select(
       keyCols.map(col) ++ Seq(
@@ -1660,11 +1508,10 @@ object Relational {
     require(keyCols.nonEmpty, "joinHotKeys needs at least one key column")
     require(topK >= 1 && topK <= 100000,
       s"topK must be in [1, 1e5], got $topK")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(left, "left side", keyCols: _*)
+    Inputs.present(right, "right side", keyCols: _*)
     keyCols.foreach { c =>
-      require(left.columns.contains(c), s"left side is missing '$c'")
-      require(right.columns.contains(c), s"right side is missing '$c'")
       // the count tables group on STRINGIFIED keys, and stringification
       // diverges where the real join's numeric widening coincides (double
       // 1.0 -> "1.0" vs long 1 -> "1") — a mismatch would make the skew

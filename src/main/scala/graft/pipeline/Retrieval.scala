@@ -46,10 +46,8 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1, got $k")
     require(k1 > 0.0, s"k1 must be positive, got $k1")
     require(b >= 0.0 && b <= 1.0, s"b must be in [0, 1], got $b")
-    Seq(idCol, textCol).foreach(c =>
-      require(docs.columns.contains(c), s"docs side is missing '$c'"))
-    Seq(qidCol, qtextCol).foreach(c =>
-      require(queries.columns.contains(c), s"queries side is missing '$c'"))
+    Inputs.present(docs, "docs side", idCol, textCol)
+    Inputs.present(queries, "queries side", qidCol, qtextCol)
     require(qidCol != idCol,
       s"query and doc id columns share the name '$idCol' — the postings " +
         "join would be ambiguous; rename one side first")
@@ -115,9 +113,7 @@ object Retrieval {
     require(k >= 1, s"k must be >= 1, got $k")
     require(kConst >= 1L, s"kConst must be >= 1, got $kConst")
     require(scale >= 1000000L, s"scale too coarse for stable scores: $scale")
-    Seq(qidCol, idCol, rankCol).foreach(c =>
-      require(rankings.columns.contains(c),
-        s"rankings side is missing '$c'"))
+    Inputs.present(rankings, "rankings side", qidCol, idCol, rankCol)
     val r = when(col(rankCol).cast("long") <= 0L,
       raise_error(concat(lit(s"reciprocalRankFusion: non-positive rank " +
         s"in '$rankCol': "), col(rankCol).cast("string"))).cast("long"))

@@ -81,7 +81,7 @@ object Sampling {
   def stratifiedQuota(
       df: DataFrame, groupCol: String, idCol: String, quota: Int): DataFrame = {
     require(quota > 0, s"quota must be positive: $quota")
-    Reserved.free(df, "stratifiedQuota", "__rk")
+    Inputs.free(df, "stratifiedQuota", "__rk")
     val w = Window.partitionBy(col(groupCol))
       .orderBy(hash32(col(idCol)), col(idCol))
     // NULL ids drop (the deterministicSample convention): their ordering
@@ -119,7 +119,7 @@ object Sampling {
       df: DataFrame, groupCol: String, idCol: String, weightCol: String,
       quota: Int): DataFrame = {
     require(quota > 0, s"quota must be positive: $quota")
-    Reserved.free(df, "weightedQuota", "__rk")
+    Inputs.free(df, "weightedQuota", "__rk")
     val u = (hash32(col(idCol)) + lit(1L)).cast("double") / lit(4294967296.0)
     val key = -log(u) / col(weightCol).cast("double")
     val w = Window.partitionBy(col(groupCol)).orderBy(key, col(idCol))
@@ -216,8 +216,7 @@ object Sampling {
     require(k >= 1 && k <= 1000, s"k must be in [1, 1000], got $k")
     require(!salt.contains("\u0001"),
       "salt must not contain the \\u0001 separator")
-    Seq(userCol, itemCol).foreach(c =>
-      require(positives.columns.contains(c), s"input is missing '$c'"))
+    Inputs.present(positives, "input", userCol, itemCol)
     // the draw hash concatenates (user, item, t, salt) on the \u0001 — a value
     // CONTAINING the separator lets two different positives collide into
     // one hash input and share a candidate stream (perfectly correlated

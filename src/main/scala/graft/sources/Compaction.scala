@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.Inputs
+
 /** Compaction planning for small-file sprawl — the layout-maintenance
   * chore every long-lived 100 TB table accumulates (streaming sinks and
   * fine-grained partitions leave thousands of files far below the
@@ -37,8 +39,7 @@ object Compaction {
       files: DataFrame, pathCol: String, bytesCol: String,
       targetBytes: Long): DataFrame = {
     require(targetBytes > 0L, s"targetBytes must be positive, got $targetBytes")
-    Seq(pathCol, bytesCol).foreach(c =>
-      require(files.columns.contains(c), s"listing is missing column '$c'"))
+    Inputs.present(files, "listing", pathCol, bytesCol)
     val cleaned = files
       .where(col(pathCol).isNotNull && col(bytesCol).isNotNull &&
         col(bytesCol).cast("long") >= 0L)
@@ -67,8 +68,7 @@ object Compaction {
     * byte sum per planned group.
     */
   def compactionSummary(plan: DataFrame): DataFrame = {
-    Seq("group", "bytes").foreach(c =>
-      require(plan.columns.contains(c), s"plan is missing column '$c'"))
+    Inputs.present(plan, "plan", "group", "bytes")
     plan.groupBy("group")
       .agg(count(lit(1)).as("n_files"), sum(col("bytes")).as("total_bytes"))
   }

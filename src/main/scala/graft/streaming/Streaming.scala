@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.exec.Noise
+import graft.pipeline.Inputs
 
 /** Streaming operators over event tables (`readStream` sources). The
   * reference is batch-only (SURVEY §2.8); these extend the engine to the
@@ -608,14 +609,8 @@ object Streaming {
     implicit val stateEnc = Encoders.product[BucketState]
     implicit val outEnc = Encoders.product[BandClaim]
     implicit val keyEnc = Encoders.scalaLong
-    val idType = stream.schema(idCol).dataType
-    require(Seq(org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType),
-      s"streamingNearDupClaims needs an integral id column, got " +
-        s"${idType.simpleString} in '$idCol' — string/UUID ids would cast " +
-        "to NULL and crash the encoder mid-stream; map them to longs first")
+    // string/UUID ids would cast to NULL and crash the encoder mid-stream
+    Inputs.integral(stream, "streamingNearDupClaims", "id column", idCol)
     val sig = Dedup.minhashSignatureText(col(textCol), shingleSize, numHashes)
     val banded = stream
       .withWatermark(tsCol, watermark)
@@ -735,8 +730,7 @@ object Streaming {
     eventTimeTtl.foreach { ttl =>
       require(ttl.ttlMs > 0L, s"eventTimeTtl.ttlMs must be positive, " +
         s"got ${ttl.ttlMs}")
-      require(events.columns.contains(ttl.tsCol),
-        s"events side is missing event-time column '${ttl.tsCol}'")
+      Inputs.present(events, "events side", ttl.tsCol)
       require(events.schema(ttl.tsCol).dataType ==
         org.apache.spark.sql.types.TimestampType,
         s"eventTimeTtl.tsCol must be a timestamp, got " +
@@ -755,30 +749,6 @@ object Streaming {
   // not private: the state encoder instantiates it in generated code
   final case class SessionState(startMs: Long, lastMs: Long, n: Long,
     gv: Int = StateVersions.Session)
-
-  /** Batch counterpart of [[sessionize]]: gaps-and-islands over a seconds
-    * timestamp column. A session starts where the gap to the user's previous
-    * event exceeds `gapSec`; output is one row per (user, session) with
-    * start/end/count. Two stages at scale: one shuffle keyed on the user
-    * column for the ordering window, then a partial-aggregated group-by
-    * whose shuffle carries only session rows (orders of magnitude fewer
-    * than events).
-    */
-  def batchSessions(
-      df: org.apache.spark.sql.DataFrame, userCol: String, tsCol: String,
-      gapSec: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(userCol).orderBy(tsCol)
-    val prev = lag(col(tsCol), 1).over(w)
-    val isNew = when(prev.isNull || col(tsCol) - prev > gapSec, 1L).otherwise(0L)
-    df.withColumn("__new", isNew)
-      .withColumn("session_idx", sum(col("__new")).over(w))
-      .groupBy(col(userCol), col("session_idx"))
-      .agg(min(col(tsCol)).as("session_start"),
-        max(col(tsCol)).as("session_end"),
-        count(lit(1)).as("n_events"))
-  }
 
   /** Streaming funnel: per-entity ordered-step completion over an
     * unbounded stream, with FIXED state — one timestamp per funnel step
@@ -829,8 +799,7 @@ object Streaming {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(steps.distinct.size == steps.size,
       s"duplicate step types: ${steps.mkString(", ")}")
-    Seq(entityCol, typeCol, timeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     val stepIdx = steps.zipWithIndex.toMap
     val nSteps = steps.size
@@ -981,8 +950,7 @@ object Streaming {
     require(percentiles.nonEmpty, "at least one percentile required")
     percentiles.foreach(p =>
       require(p >= 0.0 && p <= 1.0, s"percentile out of [0, 1]: $p"))
-    Seq(keyCol, valueCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", keyCol, valueCol)
     implicit val stateEnc = Encoders.product[KllStateBytes]
     implicit val outEnc = Encoders.product[QuantileRelease]
     implicit val strEnc = Encoders.STRING
@@ -1032,12 +1000,8 @@ object Streaming {
     require(keyCols.nonEmpty, "streamingIntervalJoin needs join keys")
     require(joinType == "inner" || joinType == "left_outer",
       s"joinType must be inner or left_outer, got '$joinType'")
-    keyCols.foreach { c =>
-      require(left.columns.contains(c), s"left side is missing key '$c'")
-      require(right.columns.contains(c), s"right side is missing key '$c'")
-    }
-    require(left.columns.contains(tsL), s"left side is missing '$tsL'")
-    require(right.columns.contains(tsR), s"right side is missing '$tsR'")
+    Inputs.present(left, "left side", keyCols :+ tsL: _*)
+    Inputs.present(right, "right side", keyCols :+ tsR: _*)
     require(tsL != tsR,
       "left and right time columns must be named differently (both are " +
         "released)")
@@ -1228,8 +1192,7 @@ object Streaming {
           "halfLife or shorten lookback")
     } else require(halfLife == 0L,
       s"halfLife only applies to time_decay, got $halfLife for '$model'")
-    Seq(entityCol, typeCol, timeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     val touchSet = touchTypes.toSet
     implicit val stateEnc = Encoders.product[TouchBufState]
@@ -1403,8 +1366,7 @@ object Streaming {
       events: DataFrame, keyCol: String, versionCol: String, opCol: String,
       payloadCol: String, entityTtlMs: Option[Long] = None,
       eventTimeTtl: Option[EventTimeTtl] = None): DataFrame = {
-    Seq(keyCol, versionCol, opCol, payloadCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", keyCol, versionCol, opCol, payloadCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     implicit val stateEnc = Encoders.product[UpsertState]
     implicit val outEnc = Encoders.product[UpsertRow]
@@ -1490,8 +1452,7 @@ object Streaming {
     require(!touchTypes.contains(convType),
       s"conversion type '$convType' cannot also be a touch type")
     require(lookback > 0L, s"lookback must be positive, got $lookback")
-    Seq(entityCol, typeCol, timeCol).foreach(c =>
-      require(events.columns.contains(c), s"events side is missing '$c'"))
+    Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     val touchSet = touchTypes.toSet
     implicit val stateEnc = Encoders.product[TouchState]
@@ -1591,10 +1552,8 @@ object Streaming {
     require(refPpm.size == edges.size + 1,
       s"refPpm must have ${edges.size + 1} entries (one per bin), got " +
         s"${refPpm.size}")
-    require(ppmScale >= 100L && ppmScale <= 1000000000000L,
-      s"ppmScale must be in [1e2, 1e12], got $ppmScale")
-    Seq(tsCol, valueCol).foreach(c =>
-      require(events.columns.contains(c), s"input is missing '$c'"))
+    Inputs.ppmScale(ppmScale)
+    Inputs.present(events, "input", tsCol, valueCol)
     val nBins = edges.size + 1
     val v = col(valueCol).cast("double")
     val bin = edges.zipWithIndex

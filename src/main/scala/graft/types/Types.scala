@@ -30,12 +30,6 @@ object ColumnType {
     val sparkType: DataType = TimestampType; val typeName = "TIMESTAMP"
   }
 
-  val all: Seq[ColumnType] = Seq(Integer, Decimal, Varchar, Date, Timestamp)
-
-  def fromName(name: String): ColumnType =
-    all.find(_.typeName == name.toUpperCase).getOrElse(
-      throw new IllegalArgumentException(s"Unknown column type: $name"))
-
   /** Default replacement value per type for replace_null_and_nan
     * (reference: AnalyticsDefault, _query_expr.py:1053-1071).
     */

@@ -11,8 +11,10 @@ import scala.sys.process._
   * existed but was not re-run at round close; this spec makes `sbt test`
   * itself fail on drift, so a stale block can never ship. Fix = rerun
   * `python3 tools/gen_counts.py` (after refreshing bench_out.json via
-  * graft.Bench and test_out.txt via `sbt -batch test | tee test_out.txt`
-  * when those changed).
+  * graft.Bench and test_out.txt via `sbt -batch test | tee
+  * /tmp/test_run.log; cp /tmp/test_run.log test_out.txt` when those
+  * changed). The log goes elsewhere first because this spec reads
+  * test_out.txt during the very run that would be writing it.
   */
 class DocsCountsSpec extends AnyFunSuite {
 

@@ -897,6 +897,13 @@ class RelationalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(got === Set(
       (1L, 1L, 10L, 15L, 2L), (1L, 2L, 200L, 200L, 1L),
       (2L, 1L, 7L, 7L, 1L)))
+    // 0 -> 100 is exactly the gap (kept), 100 -> 201 exceeds it (split)
+    val edge = Relational.sessionTable(attrDf(Seq[(java.lang.Long,
+        java.lang.Long, String)]((3L, 0L, "x"), (3L, 100L, "x"),
+        (3L, 201L, "x"))).select("u", "t"), "u", "t", 100L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toSet
+    assert(edge === Set((3L, 1L, 0L, 100L, 2L), (3L, 2L, 201L, 201L, 1L)))
     intercept[IllegalArgumentException](
       Relational.sessionTable(attrDf(rows).select("u", "t"), "u", "t", 0L))
     intercept[IllegalArgumentException](
@@ -907,6 +914,51 @@ class RelationalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Relational.sessionTable(attrDf(rows).select("u", "t")
         .withColumn("session_id", org.apache.spark.sql.functions.lit(1L)),
         "u", "t", 10L))
+  }
+
+  // The session split writes `__new` and its session index with
+  // withColumn, which would silently replace a read column of that name.
+  private def sessionEvents = attrDf(Seq[(java.lang.Long, java.lang.Long,
+    String)]((1L, 10L, "a"), (1L, 15L, "b"), (1L, 200L, "a"), (2L, 7L, "b")))
+
+  private def assertSplitRefuses(name: String)(run: => Any): Unit = {
+    var err: IllegalArgumentException = null
+    val jobs = jobsLaunchedBy {
+      err = intercept[IllegalArgumentException](run)
+    }
+    assert(err.getMessage.contains(s"reserved column name '$name'"),
+      err.getMessage)
+    assert(jobs === 0)
+  }
+
+  test("sessionPaths refuses a type column named __sid before any job") {
+    assertSplitRefuses("__sid") {
+      Relational.sessionPaths(sessionEvents.withColumnRenamed("y", "__sid"),
+        "u", "t", "__sid", gapUnits = 100L, k = 5)
+    }
+  }
+
+  test("transitionMatrix refuses a type column named __new before any job") {
+    assertSplitRefuses("__new") {
+      Relational.transitionMatrix(sessionEvents.withColumnRenamed("y", "__new"),
+        "u", "t", "__new", gapUnits = 100L)
+    }
+  }
+
+  test("sessionConversion refuses an entity column named __sid before any " +
+      "job") {
+    assertSplitRefuses("__sid") {
+      Relational.sessionConversion(
+        sessionEvents.withColumnRenamed("u", "__sid"), "__sid", "t", "y",
+        gapUnits = 100L, convType = "b")
+    }
+  }
+
+  test("sessionTable refuses a time column named __new before any job") {
+    assertSplitRefuses("__new") {
+      Relational.sessionTable(sessionEvents.withColumnRenamed("t", "__new"),
+        "u", "__new", gapUnits = 100L)
+    }
   }
 
   test("sessionFunnel: steps chain only WITHIN a session (the per-user " +

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * user frame that happened to carry e.g. `__rn` lost that column to
   * `Dedup.exact`'s row-number scratch, or got scratch values back under
   * its own name — silent wrong results either way. Every such operator now
-  * refuses loudly ([[Reserved]]); this table feeds each one an adversarial
+  * refuses loudly ([[Inputs.free]]); this table feeds each one an adversarial
   * frame carrying its reserved name and pins the refusal, so a new
   * decorate-in-place operator added without a guard gets caught the moment
   * it's listed here (and the audit sweep in the round-13 notes says new

@@ -593,7 +593,7 @@ class StreamingSpec extends SparkSpec {
       in.addData(SessionEvent(1L, ts(10)))
       q.processAllAvailable()
       // a LATE event at minute 8 belongs to the same session (gap 2 < 5)
-      // and precedes its start — batchSessions would start it at 8
+      // and precedes its start — Relational.sessionTable would start it at 8
       in.addData(SessionEvent(1L, ts(8)))
       q.processAllAvailable()
       in.addData(SessionEvent(2L, ts(120))) // close u1's session
@@ -643,31 +643,6 @@ class StreamingSpec extends SparkSpec {
       assert(Streaming.eventLevelEpsilon(perWindowEpsilon = 0.5,
         windowMs = 600000L, slideMs = 600000L) === 0.5)
     } finally q.stop()
-  }
-
-  test("batch sessionization: gaps-and-islands matches hand-computed sessions") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val df = makeDf(
-      StructType(Seq(longCol("u"), longCol("t"))),
-      Seq(
-        // user 1: [10, 20, 700] with gap 100 -> sessions {10,20} and {700}
-        Row(1L, 10L), Row(1L, 20L), Row(1L, 700L),
-        // user 2: single event
-        Row(2L, 5L),
-        // user 3: exactly-at-gap boundary stays in the same session
-        Row(3L, 0L), Row(3L, 100L), Row(3L, 201L)))
-    val out = Streaming.batchSessions(df, "u", "t", gapSec = 100L)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-    assert(out === Set(
-      (1L, 1L, 10L, 20L, 2L),
-      (1L, 2L, 700L, 700L, 1L),
-      (2L, 1L, 5L, 5L, 1L),
-      // 0 -> 100 is exactly the gap (kept), 100 -> 201 exceeds it (split)
-      (3L, 1L, 0L, 100L, 2L),
-      (3L, 2L, 201L, 201L, 1L)))
   }
 
   test("streaming near-dup claims: min-id representative survives, twins drop") {

@@ -11,7 +11,9 @@ the repo:
     mismatch fails loudly instead of propagating a stale bench);
   - bench total / errors / sf: bench_out.json (the committed record);
   - test/suite counts: an `sbt test` log (default test_out.txt, written
-    by `sbt -batch test | tee test_out.txt`).
+    by `sbt -batch test | tee /tmp/test_run.log; cp /tmp/test_run.log
+    test_out.txt` — not tee'd straight into test_out.txt, which
+    DocsCountsSpec reads while that same run is still writing it).
 
 Usage: python3 tools/gen_counts.py [--test-log test_out.txt] [--check]
 
