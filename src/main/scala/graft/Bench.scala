@@ -1,8 +1,10 @@
 package graft
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 /** Benchmark main, and graft's one timing/profiling entry point.
   *
@@ -266,7 +268,9 @@ object Bench {
   }
 
   /** Dev mode: for each query, its formatted physical plan once, then
-    * `repeats` timed runs with the record path's plan/exec split, each
+    * `repeats` timed runs with the record path's plan/exec split and the
+    * Janino compiles the run made (count and wall ms, from Spark's own
+    * codegen metrics — JVM-wide, driver and executor alike), each
     * followed by every Spark job the run scheduled (wall time, the
     * driver-side gap before it — 0 when it overlaps an earlier job —
     * tasks, description) and that job's stages.
@@ -284,6 +288,8 @@ object Bench {
         log.clear()
         // epoch millis, the listener's clock, taken before construction
         val startMs = System.currentTimeMillis()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         df.queryExecution.executedPlan
@@ -292,7 +298,9 @@ object Bench {
         val t2 = System.nanoTime()
         Thread.sleep(300) // let the listener bus drain
         println(f"$name run$run plan=${(t1 - t0) / 1e9}%.3f " +
-          f"exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f rows=$rows")
+          f"exec=${(t2 - t1) / 1e9}%.3f total=${(t2 - t0) / 1e9}%.3f rows=$rows " +
+          f"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+          f"compile_ms=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f")
         val jobs = log.jobs.values.asScala.toSeq.sortBy(_.start)
         var prevEnd = startMs
         jobs.foreach { j =>

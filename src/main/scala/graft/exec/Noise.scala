@@ -142,10 +142,11 @@ object NoiseMechanism {
   */
 final case class NoiseInfo(column: String, mechanism: NoiseMechanism)
 
-/** Executor-side noise sampling. All samplers run inside a nondeterministic
-  * UDF applied to the (small, post-aggregation) result rows — never a driver
-  * collect. Samplers use ThreadLocalRandom: independent per executor thread,
-  * no coordination, no shuffle.
+/** Executor-side noise sampling. Additive noise is drawn by the
+  * nondeterministic [[AddNoise]] expression over the (small,
+  * post-aggregation) result rows — never a driver collect. Samplers use
+  * ThreadLocalRandom: independent per executor thread, no coordination, no
+  * shuffle.
   */
 object Noise {
 
@@ -286,6 +287,24 @@ object Noise {
     // unreachable when some gamma == 0; tolerate caller slack loudly
     throw new IllegalStateException(
       "permuteAndFlip exhausted all candidates — no gamma was zero")
+  }
+
+  /** One draw of `m`'s noise for a LongType value; [[AddNoise]]'s generated
+    * code and its `eval` both call it.
+    */
+  def drawLong(m: NoiseMechanism): Long = m match {
+    case NoiseMechanism.Geometric(b) => sampleGeometric(b)
+    case NoiseMechanism.DiscreteGaussian(s2) => sampleDiscreteGaussian(s2)
+    case other => throw new IllegalStateException(s"unsupported ${other.name}")
+  }
+
+  /** One draw of `m`'s noise for a DoubleType value: the integer mechanisms
+    * give their draw as a double.
+    */
+  def drawDouble(m: NoiseMechanism): Double = m match {
+    case NoiseMechanism.Laplace(b) => sampleLaplace(b)
+    case NoiseMechanism.Gaussian(s2) => sampleGaussian(s2)
+    case _ => drawLong(m).toDouble
   }
 
   /** Continuous Laplace with scale b. */

@@ -45,36 +45,17 @@ final case class AddNoise(child: Expression, mechanism: NoiseMechanism)
   override protected def evalInternal(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)
     if (v == null) null
-    else (dataType, mechanism) match {
-      case (LongType, NoiseMechanism.Geometric(b)) =>
-        v.asInstanceOf[Long] + Noise.sampleGeometric(b)
-      case (LongType, NoiseMechanism.DiscreteGaussian(s2)) =>
-        v.asInstanceOf[Long] + Noise.sampleDiscreteGaussian(s2)
-      case (DoubleType, NoiseMechanism.Geometric(b)) =>
-        v.asInstanceOf[Double] + Noise.sampleGeometric(b)
-      case (DoubleType, NoiseMechanism.DiscreteGaussian(s2)) =>
-        v.asInstanceOf[Double] + Noise.sampleDiscreteGaussian(s2)
-      case (DoubleType, NoiseMechanism.Laplace(b)) =>
-        v.asInstanceOf[Double] + Noise.sampleLaplace(b)
-      case (DoubleType, NoiseMechanism.Gaussian(s2)) =>
-        v.asInstanceOf[Double] + Noise.sampleGaussian(s2)
-      case other => throw new IllegalStateException(s"unsupported $other")
-    }
+    else if (dataType == LongType) v.asInstanceOf[Long] + Noise.drawLong(mechanism)
+    else v.asInstanceOf[Double] + Noise.drawDouble(mechanism)
   }
 
+  // The mechanism reaches the generated code by reference, typed as the
+  // trait, so one source serves every scale and every mechanism of a column
+  // type: a new epsilon is a new reference, not a new class to compile.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sampler = mechanism match {
-      case NoiseMechanism.Geometric(b) =>
-        s"graft.exec.Noise.sampleGeometric(${b}D)"
-      case NoiseMechanism.DiscreteGaussian(s2) =>
-        s"graft.exec.Noise.sampleDiscreteGaussian(${s2}D)"
-      case NoiseMechanism.Laplace(b) =>
-        s"graft.exec.Noise.sampleLaplace(${b}D)"
-      case NoiseMechanism.Gaussian(s2) =>
-        s"graft.exec.Noise.sampleGaussian(${s2}D)"
-      case other => throw new IllegalStateException(s"unsupported ${other.name}")
-    }
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ($c) + $sampler;")
+    val m = ctx.addReferenceObj("mechanism", mechanism, classOf[NoiseMechanism].getName)
+    val draw = if (dataType == LongType) "drawLong" else "drawDouble"
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ($c) + graft.exec.Noise.$draw($m);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): AddNoise =

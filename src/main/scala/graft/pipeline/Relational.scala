@@ -179,42 +179,27 @@ object Relational {
     * first, the surviving entities' gaps t_i - t_{i-1} between earliest
     * completions — count, min, max, and exact sum (the mean is
     * sum/n downstream). Same staged plan as [[funnel]] (the stage tables
-    * already carry both times), so the gap stats cost |steps|-1
-    * single-row aggregates over entity-sized pinned tables. Numeric time
-    * columns only — gaps are differences.
+    * already carry both times); the gap stats are one single-row aggregate
+    * per step over its entity-sized pinned table, unioned lazily like
+    * [[funnelLatency]]'s, so no job runs for them while the frame is
+    * built. Numeric time columns only — gaps are differences.
     */
   def funnelGaps(
       events: DataFrame, entityCol: String, typeCol: String, timeCol: String,
       steps: Seq[String], maxGap: Option[Long] = None): DataFrame = {
     require(steps.size >= 2, "gap stats need at least two steps")
     Inputs.numeric(events, "funnelGaps", "time column", timeCol)
-    val spark = events.sparkSession
     val stages = funnelStages(events, entityCol, typeCol, timeCol, steps, maxGap)
     // gaps released as doubles: integral time units give integer-valued
     // gaps whose min/max/sum are exact in ANY addition order below 2^53;
     // fractional units make the sum order-sensitive at the last ulp —
     // prefer epoch integers
-    val rows = stages.zip(steps).zipWithIndex.drop(1).map { case ((stage, step), i) =>
+    stages.zip(steps).zipWithIndex.drop(1).map { case ((stage, step), i) =>
       val g = (col("__t") - col("__pt")).cast("double")
-      val r = stage.df.agg(count(lit(1)).as("n"),
-        min(g).as("mn"), max(g).as("mx"), sum(g).as("sm")).head()
-      org.apache.spark.sql.Row(Integer.valueOf(i + 1), step,
-        java.lang.Long.valueOf(r.getLong(0)),
-        if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)),
-        if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2)),
-        if (r.isNullAt(3)) null else java.lang.Double.valueOf(r.getDouble(3)))
-    }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      StructType(Seq(
-        StructField("step", IntegerType, nullable = false),
-        StructField("step_name", StringType, nullable = false),
-        StructField("n_entities", LongType, nullable = false),
-        StructField("min_gap", DoubleType, nullable = true),
-        StructField("max_gap", DoubleType, nullable = true),
-        StructField("sum_gap", DoubleType, nullable = true))))
+      stage.df.agg(lit(i + 1).as("step"), lit(step).as("step_name"),
+        count(lit(1)).as("n_entities"), min(g).as("min_gap"),
+        max(g).as("max_gap"), sum(g).as("sum_gap"))
+    }.reduce(_.unionByName(_))
   }
 
   /** Cohort retention matrix: entities cohorted by their FIRST activity

@@ -1,12 +1,16 @@
 package graft.exec
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{avg, col, lit, var_pop}
+
+import graft.SparkSpec
 
 /** Statistical checks of the samplers against their documented
   * distributions (reference noise-scale ground truth: a count at
-  * PureDP(0.5) uses geometric noise with scale 2 - session.py:1037-1043).
+  * PureDP(0.5) uses geometric noise with scale 2 - session.py:1037-1043),
+  * directly and through the [[AddNoise]] expression.
   */
-class NoiseSpec extends AnyFunSuite {
+class NoiseSpec extends SparkSpec {
   private val N = 200000
 
   test("geometric: mean 0, variance 2a/(1-a)^2 at b=2") {
@@ -43,6 +47,36 @@ class NoiseSpec extends AnyFunSuite {
     // CKS discrete Gaussian variance is within O(1) of sigma^2 for sigma >= 1
     assert(math.abs(varEmp - s2) / s2 < 0.1, s"var $varEmp vs $s2")
   }
+
+  // the same moments through AddNoise: its generated code and its `eval`
+  // reach the samplers through Noise.drawLong / drawDouble
+  for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+    test(s"AddNoise under $mode: mean 0 and each mechanism's variance") {
+      val n = N / 2
+      val zeros = codegenSession(mode).range(n)
+      val a = math.exp(-1.0 / 2.0)
+      val geometricVar = 2.0 * a / ((1 - a) * (1 - a))
+      Seq[(String, Column, Double, Double)](
+        ("geometric(2) long", Noise.addLongNoise(lit(0L),
+          NoiseMechanism.Geometric(2.0)), geometricVar, 0.05),
+        ("discrete gaussian(9) long", Noise.addLongNoise(lit(0L),
+          NoiseMechanism.DiscreteGaussian(9.0)), 9.0, 0.1),
+        ("geometric(2) double", Noise.addDoubleNoise(lit(0.0),
+          NoiseMechanism.Geometric(2.0)), geometricVar, 0.05),
+        ("laplace(3) double", Noise.addDoubleNoise(lit(0.0),
+          NoiseMechanism.Laplace(3.0)), 18.0, 0.05),
+        ("gaussian(4) double", Noise.addDoubleNoise(lit(0.0),
+          NoiseMechanism.Gaussian(4.0)), 4.0, 0.05)
+      ).foreach { case (what, noised, varTrue, tol) =>
+        val r = zeros.select(noised.as("x"))
+          .agg(avg(col("x")), var_pop(col("x"))).head()
+        val (mean, varEmp) = (r.getDouble(0), r.getDouble(1))
+        // five standard errors of the mean
+        assert(math.abs(mean) < 5 * math.sqrt(varTrue / n), s"$what: mean $mean")
+        assert(math.abs(varEmp - varTrue) / varTrue < tol,
+          s"$what: var $varEmp vs $varTrue")
+      }
+    }
 
   /** Pearson chi-squared statistic against exact per-bin probabilities.
     * Bins with expected count < 5 are pooled into the tails.

@@ -275,6 +275,28 @@ class RelationalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("funnelGaps: the declared schema, and no job beyond funnel's stage " +
+      "pins while the frame is built") {
+    val steps = Seq("a", "b", "c")
+    val pinJobs = jobsLaunchedBy {
+      Relational.funnel(funnelEvents, "user", "etype", "t", steps)
+    }
+    val gapJobs = jobsLaunchedBy {
+      Relational.funnelGaps(funnelEvents, "user", "etype", "t", steps)
+    }
+    assert(gapJobs === pinJobs)
+    val gaps = Relational.funnelGaps(funnelEvents, "user", "etype", "t", steps)
+    assert(gaps.schema === StructType(Seq(
+      StructField("step", IntegerType, nullable = false),
+      StructField("step_name", StringType, nullable = false),
+      StructField("n_entities", LongType, nullable = false),
+      StructField("min_gap", DoubleType, nullable = true),
+      StructField("max_gap", DoubleType, nullable = true),
+      StructField("sum_gap", DoubleType, nullable = true))))
+    assert(gaps.collect().map(r => (r.getInt(0), r.getString(1))).sorted ===
+      Array(2 -> "b", 3 -> "c"))
+  }
+
   test("funnel: null entity ids drop at EVERY stage — step 1 and step 2 " +
       "agree (no phantom pooled entity)") {
     val ev = Seq[(java.lang.Long, String, java.lang.Long)](
