@@ -56,6 +56,44 @@ object Queries {
       .option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
+  /** Run a streaming frame to completion into the in-memory table `name`
+    * (AvailableNow: everything present at start, then stop) and read the
+    * table back — how every registered streaming query drains its stream.
+    */
+  private def drainToMemory(spark: SparkSession,
+      stream: org.apache.spark.sql.Dataset[_], name: String,
+      outputMode: String): DataFrame = {
+    stream.writeStream.format("memory").queryName(name)
+      .outputMode(outputMode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .awaitTermination()
+    spark.table(name)
+  }
+
+  private val eventsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("event_id", LongType), StructField("user_id", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType),
+      StructField("props", StringType)))
+  }
+  /** events with its event-time column `ts`, for the streaming scans */
+  private val eventsWithTsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType),
+      StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+  }
+  private val documentsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("lang", StringType), StructField("source", StringType),
+      StructField("n_chars", LongType)))
+  }
+
   private def read(spark: SparkSession, dir: String, table: String): DataFrame =
     readMemo.getOrElseUpdate((spark, dir, table),
       if (table == "events") readEvents(spark, dir)
@@ -65,14 +103,8 @@ object Queries {
     * explicit schema without `ts` prunes the column at the scan. Queries
     * needing event time should derive it upstream (see TESTDATA.md).
     */
-  private def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType),
-      StructField("props", StringType)))
-    spark.read.schema(schema).parquet(s"$dir/events.parquet")
-  }
+  private def readEvents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(eventsSchema).parquet(s"$dir/events.parquet")
 
   private def lineitemSession(spark: SparkSession, dir: String): Session =
     Session.fromDataFrame(spark, Inf, "lineitem", read(spark, dir, "lineitem"), AddOneRow())
@@ -1052,7 +1084,6 @@ object Queries {
     }),
     "q191_streaming_upsert" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types._
       // q187's CDC merge on a STREAM with O(1) per-key state (the single
       // highest-version change); AvailableNow over one file is a single
@@ -1068,11 +1099,7 @@ object Queries {
             .when(col("o_orderkey") % 3 === 0, "I").otherwise("U").as("op"))
       val state = graft.streaming.Streaming.streamingUpsert(
         stream, "k", "v", "op", "payload")
-      val name = "q191mem"
-      val q = state.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).select(col("entity").cast("long").as("k"),
+      drainToMemory(s, state, "q191mem", "update").select(col("entity").cast("long").as("k"),
         col("version").as("v"), col("op"), col("payload"))
     }),
     "q192_group_trend" -> ((s, d) => {
@@ -1420,8 +1447,6 @@ object Queries {
         "p_partkey", "p_name", windowSize = 3)),
     "q212_streaming_drift" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // live drift monitor: fixed domain edges, reference ppm derived
       // once from the full batch, then every 10-minute window's L1
       // distance and worst bin — all exact integers
@@ -1438,22 +1463,15 @@ object Queries {
       val n = c.getLong(4)
       val refPpm = (0 to 3).map(i =>
         if (n == 0L) 0L else c.getLong(i) * 1000000L / n)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
         .withColumn("ts", timestamp_seconds(col("event_id")))
       val drift = graft.streaming.Streaming.streamingDrift(
         stream, "ts", "value", edges, refPpm,
         "10 minutes", "0 seconds")
-      val name = "q212mem"
-      val q = drift.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val mem = drainToMemory(s, drift, "q212mem", "complete")
       // scalar release shape: one row per (window, bin) — the driver's
       // canonicalizer cannot sort array columns, so bin_counts explodes
-      s.table(name).select(
+      mem.select(
         col("window.start").cast("long").as("window_start"),
         col("window.end").cast("long").as("window_end"),
         col("n_rows"), col("l1_ppm"),
@@ -1578,25 +1596,15 @@ object Queries {
     }),
     "q167_streaming_attribution" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // q164's last-touch credit on a STREAM with O(1) per-entity state
       // (the single latest touch); AvailableNow over one file is a single
       // batch, so the batch oracle pins the streaming recurrence exactly
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
       val credits = graft.streaming.Streaming.streamingAttribution(
         stream, "user_id", "event_type", "event_id",
         convType = "purchase",
         touchTypes = Seq("click", "view", "signup"), lookback = 500L)
-      val name = "q167mem"
-      val q = credits.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).select(col("entity").cast("long").as("user_id"),
+      drainToMemory(s, credits, "q167mem", "update").select(col("entity").cast("long").as("user_id"),
         col("conv_time").as("event_id"), col("touch_type"), col("touch_time"))
     }),
     "q166_frequent_pairs" -> ((s, d) => {
@@ -1789,8 +1797,6 @@ object Queries {
     }),
     "q174_streaming_quantile_rollup" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // windowed KLL sketches on a STREAM (one bounded sketch per
       // tumbling day; raw values never cross the exchange), then
       // cumulative to-date quantiles re-derived from the released sketch
@@ -1798,26 +1804,18 @@ object Queries {
       // total rows keeps every release in the exact regime: each is the
       // rank-ceil quantile of its day-prefix, certificate 0, oracled by
       // per-prefix quantile_disc
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsWithTsSchema)
       val sk = graft.streaming.Streaming.streamingWindowedSketches(
         stream, "ts", "value", windowDuration = "1 day",
         watermark = "0 seconds", k = 16384)
-      val name = "q174mem"
-      val q = sk.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val mem = drainToMemory(s, sk, "q174mem", "update")
       // single AvailableNow batch -> exactly one row per window (the
       // cumulativeQuantiles one-row-per-window contract); release shape
       // is scalar rows — the values array explodes to (percentile, value)
       // so the driver's canonicalizer never sees a list column
       val pcts = Seq(0.25, 0.5, 0.75)
       graft.streaming.Streaming.cumulativeQuantiles(
-        s.table(name), 16384, pcts)
+        mem, 16384, pcts)
         .select(col("window_start"), col("window_end"), col("n_windows"),
           col("n_rows"), col("err_units"),
           posexplode(col("values")).as(Seq("pi", "value")))
@@ -1829,44 +1827,27 @@ object Queries {
     }),
     "q181_streaming_multi_touch" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // q172's time-decay split on a STREAM: bounded per-entity touch
       // buffer (lookback-pruned, cap loud), identical integer-power-of-
       // two weights — a single AvailableNow batch is bit-identical to
       // the batch operator, so the q172 oracle applies verbatim
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
       val credits = graft.streaming.Streaming.streamingMultiTouchAttribution(
         stream, "user_id", "event_type", "event_id",
         convType = "purchase", touchTypes = Seq("click", "view", "signup"),
         lookback = 500L, model = "time_decay", halfLife = 50L)
-      val name = "q181mem"
-      val q = credits.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).select(col("entity").cast("long").as("user_id"),
+      drainToMemory(s, credits, "q181mem", "update").select(col("entity").cast("long").as("user_id"),
         col("conv_time").as("event_id"), col("touch_type"),
         col("touch_time"), col("credit"))
     }),
     "q180_streaming_interval_join" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // stream-stream enrichment: every click paired with the same
       // user's views from the trailing hour — Spark's symmetric hash
       // join made bounded-state by the watermarks + explicit time-range
       // condition; single AvailableNow batch = batch-equivalent, oracled
       // by the corresponding DuckDB range join
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      def stream() = readStreamTable(s, d, "events", schema)
+      def stream() = readStreamTable(s, d, "events", eventsWithTsSchema)
       val clicks = stream().where(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("cts"),
           col("event_id").as("click_id"))
@@ -1876,40 +1857,24 @@ object Queries {
       val joined = graft.streaming.Streaming.streamingIntervalJoin(
         clicks, views, Seq("user_id"), "cts", "vts",
         "0 seconds", "0 seconds", within = "1 hour")
-      val name = "q180mem"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).select(col("user_id"), col("click_id"), col("view_id"))
+      drainToMemory(s, joined, "q180mem", "append").select(col("user_id"), col("click_id"), col("view_id"))
     }),
     "q177_cumulative_distinct" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // running unique-users line: one bounded KMV sketch per tumbling
       // day on the stream, cumulative to-date distinct count re-derived
       // from the sketch hashes alone — k=1024 > the 150-user universe
       // keeps every release exact (the retained-hash count), oracled by
       // per-day-prefix COUNT(DISTINCT)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsWithTsSchema)
       val sk = graft.streaming.Streaming.streamingWindowedDistinct(
         stream, "ts", "user_id", windowDuration = "1 day",
         watermark = "0 seconds", k = 1024)
-      val name = "q177mem"
-      val q = sk.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.Streaming.cumulativeDistinct(s.table(name), 1024)
+      graft.streaming.Streaming.cumulativeDistinct(
+        drainToMemory(s, sk, "q177mem", "update"), 1024)
     }),
     "q157_streaming_quantiles" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // per-event-type quantiles over a STREAM with bounded per-key state
       // (one serialized sketch per key, O(k log n) bytes): k=4096 keeps
       // every type in the exact regime at the correctness SF, so the
@@ -1918,18 +1883,10 @@ object Queries {
       // quantile_disc. Update-mode sink emits once per (key, batch);
       // reduced to each key's latest (max n) release, q143's
       // batch-count-invariance discipline
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
       val rel = graft.streaming.Streaming.streamingQuantiles(
         stream, "event_type", "value", k = 4096, Seq(0.25, 0.5, 0.75))
-      val name = "q157mem"
-      val q = rel.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val t = s.table(name)
+      val t = drainToMemory(s, rel, "q157mem", "update")
       // rename the aggregate side: a self-join of the memory view against
       // its own aggregate carries the same attribute ids on both sides
       val latest = t.groupBy(col("key")).agg(max(col("n")).as("n"))
@@ -2116,29 +2073,20 @@ object Queries {
     }),
     "q143_streaming_funnel" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // the q130 funnel on a STREAM with fixed per-entity state (one
       // timestamp per step, no event buffer); AvailableNow makes this
       // batch-equivalent, so q130's oracle pins the streaming recurrence
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
       val steps = Seq("view", "click", "purchase")
       val reach = graft.streaming.Streaming.streamingFunnel(
         stream, "user_id", "event_type", "event_id", steps)
-      val name = "q143mem"
-      val q = reach.writeStream.format("memory").queryName(name)
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val mem = drainToMemory(s, reach, "q143mem", "update")
       // update-mode memory sink appends one row per entity PER BATCH —
       // reduce to each entity's latest (max) stage before counting, so the
       // result is invariant to how the input splits into batches
       // (AvailableNow over one file happens to be a single batch, but
       // multi-file inputs or maxFilesPerTrigger must not double-count)
-      val latest = s.table(name).groupBy(col("entity"))
+      val latest = mem.groupBy(col("entity"))
         .agg(max(col("stage")).as("stage"))
       import s.implicits._
       steps.zipWithIndex.map { case (st, i) =>
@@ -2566,68 +2514,42 @@ object Queries {
     }),
     "q101_streaming_quality_gate" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // streaming corpus ingest: the documents table replayed as a file
       // stream, quality-gated and counted per language — the stateless
       // map-side gate composes with Structured Streaming untouched, and
       // availableNow makes the run a deterministic batch equivalent
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val stream = readStreamTable(s, d, "documents", schema)
+      val stream = readStreamTable(s, d, "documents", documentsSchema)
       val gated = stream
         .filter(graft.pipeline.TextAnalysis.qualityOk(col("text")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_pass"),
           sum(graft.pipeline.TextAnalysis.tokenCount(col("text"))).as("n_tokens"))
-      val name = "q101mem"
-      val q = gated.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(s, gated, "q101mem", "complete")
     }),
     "q110_streaming_heavy_hitters" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // bounded-memory top-k over an unbounded key stream: the SpaceSaving
       // sketch state is `capacity` counters forever. Capacity 64 covers
       // this table's 5 distinct event types, so the released ranking is
       // EXACT (error 0, pinned in the projection) and the plain groupBy
       // oracle applies; the approximation regime is SpaceSavingSpec's
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
       val hh = graft.streaming.Streaming.streamingHeavyHitters(
         stream, "event_type", capacity = 64, k = 3)
-      val name = "q110mem"
-      val q = hh.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(s, hh, "q110mem", "complete")
         .select(posexplode(col("top")).as(Seq("pos", "hit")))
         .select((col("pos") + 1).cast("long").as("rank"),
           col("hit.key").as("event_type"), col("hit.count").as("count"))
     }),
     "q111_streaming_neardup" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // ingest-time near-dup dedup: docs arrive in planted exact-copy
       // groups of 3 (synthetic token streams from doc_id/3 — group token
       // ranges are disjoint, so only true copies share buckets) and the
       // min-id representative of each group must be the one that survives
       // every band claim. The oracle regime is exact copies; the NEAR-dup
       // power (twin loses >= 1 of 16 buckets) is StreamingSpec's pin.
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val stream = readStreamTable(s, d, "documents", schema)
+      val stream = readStreamTable(s, d, "documents", documentsSchema)
         // +1: an event at exactly epoch 0 ties the initial watermark and
         // the stateful operator's late-row filter is strict
         .withColumn("ts", timestamp_seconds(col("doc_id") + 1))
@@ -2637,11 +2559,8 @@ object Queries {
               .cast("string")))))
       val claims = graft.streaming.Streaming.streamingNearDupClaims(
         stream, "ts", "doc_id", "text", watermark = "10 minutes")
-      val name = "q111mem"
-      val q = claims.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.streaming.Streaming.noveltyFromClaims(s.table(name), bands = 16)
+      graft.streaming.Streaming.noveltyFromClaims(
+        drainToMemory(s, claims, "q111mem", "append"), bands = 16)
     }),
     "q112_zorder_values" -> ((s, d) => {
       import org.apache.spark.sql.functions._
@@ -2802,48 +2721,29 @@ object Queries {
     // -- streaming (availableNow over the same events data) ---------------
     "q54_streaming_window_counts" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
       // streaming file source needs a directory; glob-filter to the one table
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
         .withColumn("ts", timestamp_seconds(col("event_id")))
       val counts = stream
         .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
         .agg(count(lit(1)).as("count"))
-      val name = "q54mem"
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).select(
+      drainToMemory(s, counts, "q54mem", "complete").select(
         col("window.start").cast("long").as("window_start"),
         col("event_type"), col("count"))
     }),
     "q129_streaming_distinct_users" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // windowed distinct users on a stream: streaming aggregation REJECTS
       // count(DISTINCT ...), so the mergeable HLL sketch is the streaming
       // path, not an approximation convenience. The exact per-window count
       // comes from the batch side of the same data; the release pins the
       // deterministic estimate within 5% of it (~8 sigma at lgK=14)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
         .withColumn("ts", timestamp_seconds(col("event_id")))
       val est = graft.streaming.Streaming.windowedDistinctSketch(
         stream, "ts", "user_id", "10 minutes", "10 minutes")
-      val name = "q129mem"
-      val q = est.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val streamed = s.table(name).select(
+      val mem = drainToMemory(s, est, "q129mem", "complete")
+      val streamed = mem.select(
         col("window.start").cast("long").as("window_start"),
         col("n_rows"), col("n_distinct_est"))
       val exact = readEvents(s, d)
@@ -2871,26 +2771,16 @@ object Queries {
     }),
     "q116_windowed_heavy_hitters" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       // per-window hot keys with FIXED per-window state (the SpaceSaving
       // sketch under a tumbling window). Capacity 64 > 5 event types, so
       // every window's ranking is exact and the plain per-window groupBy
       // oracle applies; rank ties break on the key string in both engines
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      val stream = readStreamTable(s, d, "events", schema)
+      val stream = readStreamTable(s, d, "events", eventsSchema)
         .withColumn("ts", timestamp_seconds(col("event_id")))
       val hh = graft.streaming.Streaming.windowedHeavyHitters(
         stream, "ts", "event_type", "10 minutes", "5 minutes",
         capacity = 64, k = 2)
-      val name = "q116mem"
-      val q = hh.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name)
+      drainToMemory(s, hh, "q116mem", "complete")
         .select(col("window.start").cast("long").as("window_start"),
           posexplode(col("top")).as(Seq("pos", "hit")))
         .select(col("window_start"), (col("pos") + 1).cast("long").as("rank"),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -147,38 +147,9 @@ object Streaming {
     perWindowEpsilon * overlap
   }
 
-  /** Driver-side privacy ledger for unbounded release streams under
-    * USER-level accounting: a user may contribute to every released window,
-    * so window releases compose sequentially and the spend grows without
-    * bound — the accountant stops the query once the cap is reached,
-    * mirroring the batch Session's budget tracking for streams.
-    *
-    * Wire-up: release DataFrames pass through [[observed]] (an `observe`
-    * metric counts released windows per micro-batch), and the accountant
-    * registers as a `StreamingQueryListener`. Listener events are
-    * asynchronous, so enforcement is per micro-batch: the batch that
-    * crosses the cap is still released, every later one is not.
-    *
-    * RESTART durability: pass `ledgerPath` (conventionally a sibling of the
-    * query's checkpointLocation, e.g. `"$ckpt/../dp_ledger"`) and the spend
-    * survives crashes and deploys — [[register]] restores the exact
-    * rational from the ledger, every charge persists it, and [[observed]]
-    * REFUSES to wire an already-exhausted stream (so a restarted exhausted
-    * query releases nothing, rather than one more batch). Without a
-    * ledgerPath the accountant is in-memory only, the pre-round-13
-    * behavior — fine for tests, a double-spend hole in production.
-    *
-    * SINGLE WRITER: a durable ledger admits ONE live accountant. A
-    * `.lease` file (renewed on every charge, TTL `leaseTtlMs`) makes a
-    * second accountant on the same ledgerPath refuse at wiring time with
-    * [[LedgerFencedException]], and a holder that loses its lease to a
-    * post-TTL takeover fails its next charge instead of double-spending.
-    * Crash restarts wait out at most one TTL; planned handovers call
-    * [[releaseLedgerLease]] first.
-    */
   /** Thrown when a durable ledger's lease is observed held by ANOTHER
     * accountant — split-brain. Unlike a transient persist failure (which is
-    * swallowed with the documented one-batch slack), this must propagate:
+    * swallowed with the documented one-charge slack), this must propagate:
     * two accountants interleaving slot writes with independent in-memory
     * spends double-spend the cap without bound.
     */
@@ -196,23 +167,48 @@ object Streaming {
     val DefaultLeaseTtlMs: Long = 15L * 60 * 1000
   }
 
+  /** Driver-side privacy ledger for unbounded release streams under
+    * USER-level accounting: a user may contribute to every released window,
+    * so window releases compose sequentially and the spend grows without
+    * bound — the accountant caps it, mirroring the batch Session's budget
+    * tracking for streams.
+    *
+    * Wire-up: the release sink runs through [[enforcedBatcher]] in
+    * `foreachBatch`. Each micro-batch releases only the prefix the
+    * remaining budget affords, charged BEFORE it is written — the batch
+    * Session's charge-then-release order — so spend never exceeds
+    * `totalEpsilon`.
+    *
+    * RESTART durability: pass `ledgerPath` (conventionally a sibling of the
+    * query's checkpointLocation, e.g. `"$ckpt/../dp_ledger"`) and the spend
+    * survives crashes and deploys — [[restoreLedger]] (which
+    * [[enforcedBatcher]] runs on its first batch) restores the exact
+    * rational from the ledger and every charge persists it, so a restarted
+    * exhausted query releases nothing. Without a ledgerPath the accountant
+    * is in-memory only — fine for tests, a double-spend hole in production.
+    *
+    * SINGLE WRITER: a durable ledger admits ONE live accountant. A
+    * `.lease` file (renewed on every charge, TTL `leaseTtlMs`) makes a
+    * second accountant on the same ledgerPath refuse at restore time with
+    * [[LedgerFencedException]], and a holder that loses its lease to a
+    * post-TTL takeover fails its next charge instead of double-spending.
+    * Crash restarts wait out at most one TTL; planned handovers call
+    * [[releaseLedgerLease]] first.
+    */
   final class DpStreamAccountant(
       val totalEpsilon: Double, val perWindowEpsilon: Double,
       val ledgerPath: Option[String] = None,
-      val leaseTtlMs: Long = DpStreamAccountant.DefaultLeaseTtlMs)
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
+      val leaseTtlMs: Long = DpStreamAccountant.DefaultLeaseTtlMs) {
     import graft.budget.Rat
 
     // EXACT arithmetic, same discipline as the batch Session: every finite
     // double is a rational, so spend is tracked as released x perWindow in
     // Rat — no quantization, no drift, the exhaustion compare is exact.
-    // Listener events arrive per micro-batch (rare), so a lock suffices.
+    // Charges arrive per micro-batch (rare), so a lock suffices.
     private val totalRat = Rat(totalEpsilon)
     private val perWindowRat = Rat(perWindowEpsilon)
     private var spentRat: Rat = Rat.zero
     private val lock = new Object
-    @volatile private var sparkRef: Option[org.apache.spark.sql.SparkSession] = None
     @volatile private var hadoopConf: Option[org.apache.hadoop.conf.Configuration] = None
 
     def spentExact: Rat = lock.synchronized(spentRat)
@@ -221,16 +217,16 @@ object Streaming {
     def exhausted: Boolean = spentExact >= totalRat
 
     /** Record `released` window releases; returns true when the cap is now
-      * reached. Exposed for property tests — the listener path calls it.
+      * reached. [[enforcedBatcher]] calls it; a direct caller with a
+      * `ledgerPath` runs [[restoreLedger]] first, or nothing persists.
       */
     private[graft] def charge(released: Long): Boolean = lock.synchronized {
       spentRat = spentRat + perWindowRat * Rat(released)
-      // cap enforcement must NOT depend on persistence succeeding: a
-      // transient ledger-FS outage that aborted charge() here would also
-      // abort the caller's stop-the-query decision, releasing past the cap
-      // for as long as the outage lasts. In-memory spend is already
-      // updated; worst case of a swallowed persist failure is the same
-      // one-batch restart slack the slot protocol concedes anyway.
+      // a transient ledger-FS outage must not fail the stream: in-memory
+      // spend is already updated and still governs every later
+      // affordability decision of this run; worst case of a swallowed
+      // persist failure is the same one-charge restart slack the slot
+      // protocol concedes anyway.
       // EXCEPTION: a fencing violation (another accountant holds the lease)
       // is not an outage — it is split-brain, and it rethrows.
       try persistLocked()
@@ -251,8 +247,7 @@ object Streaming {
     // alternating slot files, and restore reads BOTH and keeps the larger
     // spend. A crash mid-write corrupts at most the slot being written; the
     // other slot still holds the previous spend, so a restart can lose at
-    // most the final in-flight charge — the same one-batch slack the
-    // listener's asynchrony already concedes — and can never reset to zero.
+    // most the final in-flight charge and can never reset to zero.
     // Format: one line `num/den` of the exact rational (BigInt decimal).
     private def slotPaths(base: String) =
       Seq(new org.apache.hadoop.fs.Path(base + ".0"),
@@ -264,7 +259,7 @@ object Streaming {
     // on the same ledgerPath (two streams misconfigured to share a ledger,
     // or a not-fully-dead old driver) would each keep an independent
     // in-memory spend and interleave slot writes — combined releases
-    // double-spend the cap beyond the documented one-batch slack. The
+    // double-spend the cap beyond the documented one-charge slack. The
     // lease closes it: acquire refuses while another accountant's lease is
     // fresher than `leaseTtlMs`; every successful persist re-verifies
     // ownership (fencing) and renews. A crashed holder stops renewing, so
@@ -400,7 +395,7 @@ object Streaming {
         val restored = slots.flatten
         if (restored.nonEmpty) {
           val prior = restored.max
-          // monotone merge: a re-register mid-run must never move spend back
+          // monotone merge: a restore must never move spend back
           if (prior > spentRat) spentRat = prior
         }
         // point the next write at the STALE slot (the one not holding the
@@ -415,34 +410,21 @@ object Streaming {
         }
       }
 
-    /** Attach the release-count metric consumed by the listener. Refuses an
-      * already-exhausted budget: wiring a new (or restarted) release stream
-      * onto a spent ledger would release at least one more batch before the
-      * asynchronous listener could stop it. Restores the ledger FIRST if
-      * this accountant has not registered yet — with the plausible wiring
-      * order observed -> register -> start, a register-only restore would
-      * let an exhausted restart slip the guard on in-memory zero spend.
+    /** Open the durable ledger: take the single-writer lease and restore
+      * the persisted spend, before any affordability decision. Runs once
+      * per accountant; later calls are no-ops. [[enforcedBatcher]] runs it
+      * on its first batch, so a stream wired through it alone needs no
+      * call; a caller that [[charge]]s directly runs it first. Throws
+      * [[LedgerFencedException]] while another accountant holds the lease.
       */
-    def observed(release: DataFrame): DataFrame = {
+    def restoreLedger(spark: org.apache.spark.sql.SparkSession): this.type = {
       lock.synchronized {
         if (hadoopConf.isEmpty) {
-          val conf = release.sparkSession.sparkContext.hadoopConfiguration
+          val conf = spark.sparkContext.hadoopConfiguration
           hadoopConf = Some(conf)
           restoreLocked(conf)
         }
       }
-      require(!exhausted,
-        f"DP stream budget exhausted: spent $spent%.6g of $totalEpsilon%.6g " +
-          "epsilon (restored from the ledger if this is a restart) — " +
-          "this stream must not release again")
-      release.observe("graft_dp_release", count(lit(1)).as("released"))
-    }
-
-    def register(spark: org.apache.spark.sql.SparkSession): this.type = {
-      sparkRef = Some(spark)
-      hadoopConf = Some(spark.sparkContext.hadoopConfiguration)
-      lock.synchronized(restoreLocked(spark.sparkContext.hadoopConfiguration))
-      spark.streams.addListener(this)
       this
     }
 
@@ -466,16 +448,15 @@ object Streaming {
       }
     }
 
-    /** SYNCHRONOUS, never-exceeding enforcement — the strict alternative to
-      * the [[observed]]/listener wiring (whose asynchrony concedes the
-      * cap-crossing batch): wrap the sink in `foreachBatch` with this
-      * function and each micro-batch releases only the AFFORDABLE prefix of
-      * its rows under the remaining budget, in `orderCols` order (pass the
-      * window-start column — the choice of WHICH windows survive a partial
-      * batch must be deterministic). The charge lands — and persists to the
-      * ledger — BEFORE the write, so a crash between the two wastes budget
-      * but can never over-release. Total spend therefore never exceeds
-      * `totalEpsilon`, including across restarts when `ledgerPath` is set.
+    /** SYNCHRONOUS, never-exceeding enforcement: wrap the sink in
+      * `foreachBatch` with this function and each micro-batch releases
+      * only the AFFORDABLE prefix of its rows under the remaining budget,
+      * in `orderCols` order (pass the window-start column — the choice of
+      * WHICH windows survive a partial batch must be deterministic). The
+      * charge lands — and persists to the ledger — BEFORE the write, so a
+      * crash between the two wastes budget but can never over-release.
+      * Total spend therefore never exceeds `totalEpsilon`, including
+      * across restarts when `ledgerPath` is set.
       *
       * Usage:
       * {{{
@@ -490,20 +471,10 @@ object Streaming {
         "enforcedBatcher needs deterministic order columns — which windows " +
           "survive a partially-affordable batch must not depend on layout")
       (batch: DataFrame, _: Long) => {
-        // enforcedBatcher may be this accountant's ONLY wiring (no
-        // register()/observed() call), so the durable ledger must
-        // initialize HERE too: restore the persisted spend (and take the
-        // single-writer lease) before the first affordability decision.
-        // Without this, a ledgerPath accountant used via enforcedBatcher
-        // alone would track spend in memory only — a restart would reset
-        // it to zero and over-release, violating the never-exceed promise.
-        lock.synchronized {
-          if (hadoopConf.isEmpty) {
-            val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-            hadoopConf = Some(conf)
-            restoreLocked(conf)
-          }
-        }
+        // without the restore, a ledgerPath accountant would track spend
+        // in memory only — a restart would reset it to zero and
+        // over-release, violating the never-exceed promise
+        restoreLedger(batch.sparkSession)
         val afford = affordable
         if (afford > 0L) {
           // pin: the charge must match what is written, and the pin job
@@ -526,17 +497,6 @@ object Streaming {
           batch.foreach(_ => ())
         }
       }
-    }
-
-    override def onQueryStarted(event: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(event: QueryProgressEvent): Unit = {
-      val released = Option(event.progress.observedMetrics.get("graft_dp_release"))
-        .map(_.getLong(0)).getOrElse(0L)
-      if (released > 0 && charge(released))
-        sparkRef.foreach { s =>
-          Option(s.streams.get(event.progress.id)).foreach(_.stop())
-        }
     }
   }
 
@@ -710,6 +670,7 @@ object Streaming {
     * discipline). Mutually exclusive with the processing-time
     * `entityTtlMs` knob.
     */
+  final case class EventTimeTtl(tsCol: String, watermark: String, ttlMs: Long)
 
   /** Shared TTL-knob contract for the stateful per-entity operators
     * (funnel / attribution / multi-touch / upsert): validates the two
@@ -741,7 +702,47 @@ object Streaming {
     else GroupStateTimeout.NoTimeout
   }
 
-  final case class EventTimeTtl(tsCol: String, watermark: String, ttlMs: Long)
+  /** The rest of the per-entity state shell of the same four operators:
+    * how the chosen expiry clock shapes their input and re-arms their
+    * timeout. One copy each (StreamingShellSourceSpec keeps it so).
+    */
+  private object EntityTtl {
+    /** Rows whose `notNull` columns are set and that pass `filter`,
+      * projected to `cols` plus one trailing timestamp. Under
+      * `eventTimeTtl` that is the RAW event-time column of the watermarked
+      * input (an alias keeps the watermark metadata EventTimeTimeout's
+      * analyzer check looks for; a cast would strip it), and rows without
+      * one drop; otherwise it is a null literal.
+      */
+    def input(events: DataFrame, eventTimeTtl: Option[EventTimeTtl],
+        notNull: Seq[String], filter: Seq[Column],
+        cols: Seq[Column]): DataFrame = {
+      val present = notNull.map(c => col(c).isNotNull)
+      eventTimeTtl match {
+        case Some(ttl) => events.withWatermark(ttl.tsCol, ttl.watermark)
+          .where((present ++ (col(ttl.tsCol).isNotNull +: filter))
+            .reduce(_ && _))
+          .select(cols :+ col(ttl.tsCol): _*)
+        case None => events
+          .where((present ++ filter).reduce(_ && _))
+          .select(cols :+ lit(null).cast("timestamp"): _*)
+      }
+    }
+
+    /** Re-arm the timeout of an entity whose state this batch keeps:
+      * processing-time TTL counts from now; event-time TTL expires when
+      * the watermark passes `newestTsMs` (read only under that clock)
+      * plus the TTL, and must sit strictly past the current watermark.
+      */
+    def rearm(state: GroupState[_], entityTtlMs: Option[Long],
+        eventTimeTtl: Option[EventTimeTtl])(newestTsMs: => Long): Unit = {
+      entityTtlMs.foreach(ms => state.setTimeoutDuration(ms))
+      eventTimeTtl.foreach { ttl =>
+        state.setTimeoutTimestamp(math.max(
+          newestTsMs + ttl.ttlMs, state.getCurrentWatermarkMs() + 1))
+      }
+    }
+  }
 
   final case class SessionEvent(userId: Long, ts: Timestamp)
   final case class SessionSummary(
@@ -806,25 +807,13 @@ object Streaming {
     implicit val stateEnc = Encoders.product[FunnelTimes]
     implicit val outEnc = Encoders.product[FunnelReach]
     implicit val strEnc = Encoders.STRING
-    // the event-time column rides along RAW (an alias keeps the watermark
-    // metadata EventTimeTimeout's analyzer check looks for; a cast would
-    // strip it) — null when the TTL clock is processing-time or absent
     implicit val rowEnc = Encoders.tuple(
       Encoders.STRING, Encoders.STRING, Encoders.scalaLong,
       Encoders.TIMESTAMP)
-    val prepared = eventTimeTtl match {
-      case Some(ttl) => events.withWatermark(ttl.tsCol, ttl.watermark)
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          col(ttl.tsCol).isNotNull && col(typeCol).isin(steps: _*))
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), col(ttl.tsCol))
-      case None => events
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          col(typeCol).isin(steps: _*))
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), lit(null).cast("timestamp"))
-    }
-    prepared
+    EntityTtl.input(events, eventTimeTtl, Seq(entityCol, timeCol),
+      Seq(col(typeCol).isin(steps: _*)),
+      Seq(col(entityCol).cast("string"), col(typeCol).cast("string"),
+        col(timeCol).cast("long")))
       .as[(String, String, Long, Timestamp)]
       .groupByKey(_._1)
       .mapGroupsWithState[FunnelTimes, FunnelReach](timeoutConf) {
@@ -853,14 +842,8 @@ object Streaming {
                 times(i) = t
             }
             state.update(FunnelTimes(times.toSeq))
-            entityTtlMs.foreach(state.setTimeoutDuration)
-            eventTimeTtl.foreach { ttl =>
-              // expire when the watermark passes newest-event + TTL; the
-              // timeout must sit strictly past the current watermark
-              val maxTs = evs.iterator.map(_._4.getTime).max
-              state.setTimeoutTimestamp(math.max(
-                maxTs + ttl.ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
+            EntityTtl.rearm(state, entityTtlMs, eventTimeTtl)(
+              evs.iterator.map(_._4.getTime).max)
             FunnelReach(entity, times.takeWhile(_ != Long.MinValue).length)
           }
       }
@@ -1065,25 +1048,30 @@ object Streaming {
     */
   def cumulativeQuantiles(
       windowSketches: DataFrame, k: Int,
-      percentiles: Seq[Double]): DataFrame = {
-    require(windowSketches.columns.contains("window") &&
-      windowSketches.columns.contains("sketch"),
-      "expected the streamingWindowedSketches shape: (window, sketch)")
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("window.end"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    windowSketches
-      .select(col("window"),
-        row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("window.end")))
-          .as("n_windows"),
-        graft.exec.Kll.unionQuantiles(col("sketch"), k, percentiles)
-          .over(w).as("u"))
+      percentiles: Seq[Double]): DataFrame =
+    runningUnion(windowSketches, "streamingWindowedSketches", "u",
+      graft.exec.Kll.unionQuantiles(col("sketch"), k, percentiles))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("n_windows"),
         col("u.n").as("n_rows"), col("u.err_units").as("err_units"),
         col("u.values").as("values"))
+
+  /** The running-union shell of [[cumulativeQuantiles]] and
+    * [[cumulativeDistinct]]: checks the (window, sketch) shape `producer`
+    * releases, then per window its 1-based rank by end (`n_windows`) and
+    * the aggregate `union` over every window up to its end, named `name`.
+    */
+  private def runningUnion(windowSketches: DataFrame, producer: String,
+      name: String, union: => Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(windowSketches.columns.contains("window") &&
+      windowSketches.columns.contains("sketch"),
+      s"expected the $producer shape: (window, sketch)")
+    val byEnd = Window.orderBy(col("window.end"))
+    windowSketches
+      .select(col("window"), row_number().over(byEnd).as("n_windows"),
+        union.over(byEnd.rowsBetween(Window.unboundedPreceding,
+          Window.currentRow)).as(name))
   }
 
   /** Tumbling-window KMV distinct sketches over a stream: one fixed-size
@@ -1113,24 +1101,12 @@ object Streaming {
     * time horizon, never data volume).
     */
   def cumulativeDistinct(
-      windowSketches: DataFrame, k: Int): DataFrame = {
-    require(windowSketches.columns.contains("window") &&
-      windowSketches.columns.contains("sketch"),
-      "expected the streamingWindowedDistinct shape: (window, sketch)")
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("window.end"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    windowSketches
-      .select(col("window"),
-        row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("window.end")))
-          .as("n_windows"),
-        graft.exec.Kmv.unionAgg(col("sketch"), k).over(w).as("__u"))
+      windowSketches: DataFrame, k: Int): DataFrame =
+    runningUnion(windowSketches, "streamingWindowedDistinct", "__u",
+      graft.exec.Kmv.unionAgg(col("sketch"), k))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("n_windows"),
         graft.exec.Kmv.estimate(col("__u"), k).as("n_distinct"))
-  }
 
   // not private: the state encoder instantiates it in generated code
   final case class TouchState(touchType: String, touchTime: Long,
@@ -1201,20 +1177,10 @@ object Streaming {
     implicit val rowEnc = Encoders.tuple(
       Encoders.STRING, Encoders.STRING, Encoders.scalaLong,
       Encoders.TIMESTAMP)
-    val typeFilter = col(typeCol).isin((convType +: touchTypes): _*)
-    val prepared = eventTimeTtl match {
-      case Some(ttl) => events.withWatermark(ttl.tsCol, ttl.watermark)
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          col(ttl.tsCol).isNotNull && typeFilter)
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), col(ttl.tsCol))
-      case None => events
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          typeFilter)
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), lit(null).cast("timestamp"))
-    }
-    prepared
+    EntityTtl.input(events, eventTimeTtl, Seq(entityCol, timeCol),
+      Seq(col(typeCol).isin((convType +: touchTypes): _*)),
+      Seq(col(entityCol).cast("string"), col(typeCol).cast("string"),
+        col(timeCol).cast("long")))
       .as[(String, String, Long, Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[TouchBufState, MultiTouchCredit](
@@ -1278,12 +1244,8 @@ object Streaming {
           }
           if (buf.nonEmpty || state.exists) {
             state.update(TouchBufState(buf.map(_._2), buf.map(_._1)))
-            entityTtlMs.foreach(state.setTimeoutDuration)
-            eventTimeTtl.foreach { ttl =>
-              val maxTs = evs.iterator.map(_._4.getTime).max
-              state.setTimeoutTimestamp(math.max(
-                maxTs + ttl.ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
+            EntityTtl.rearm(state, entityTtlMs, eventTimeTtl)(
+              evs.iterator.map(_._4.getTime).max)
           }
           out.result().iterator
         }
@@ -1291,31 +1253,6 @@ object Streaming {
       .toDF()
   }
 
-  /** Streaming LAST-touch attribution: per entity, O(1) state (the single
-    * most recent touch) credits every conversion to the latest touch
-    * strictly before it and at most `lookback` time units old — the
-    * streaming twin of [[graft.pipeline.Relational.attribution]]'s
-    * `mode = "last"` (first-touch needs the oldest in-window touch, which
-    * no O(1) state can maintain under an advancing window — use the batch
-    * operator). Each conversion is emitted exactly once, in its arrival
-    * batch, with NULL touch columns when unattributed.
-    *
-    * Cross-batch DISORDER under-attributes, never mis-attributes: a touch
-    * arriving in a later batch than its conversion is not retro-credited
-    * (same direction as [[streamingFunnel]]'s disorder contract). Within a
-    * batch, events fold in (time, type) order, so arrival order is
-    * irrelevant. Over a single batch (AvailableNow on one file) the
-    * release is batch-equivalent by construction — the oracled regime.
-    *
-    * `entityTtlMs` bounds total state exactly as in [[streamingFunnel]]
-    * (processing-time timeout; expired entities just lose their pending
-    * touch — requires a recurring trigger to settle). For
-    * backfill/replay, pass `eventTimeTtl` instead: watermark-based
-    * expiry is replay-invariant and settles under AvailableNow (see
-    * [[EventTimeTtl]]); the two knobs are mutually exclusive. Either
-    * expiry direction is safe: an expired entity's next conversion is
-    * UNattributed, never MISattributed.
-    */
   // lastTsMs: newest event time EVER seen for the entity (event-time TTL
   // deadlines must only move forward; 0 when no event-time clock is used).
   // STATE-SCHEMA COMPATIBILITY: adding lastTsMs changed the checkpointed
@@ -1380,19 +1317,9 @@ object Streaming {
       .otherwise(raise_error(concat(
         lit(s"streamingUpsert: unknown op in '$opCol': "),
         coalesce(col(opCol).cast("string"), lit("NULL")))))
-    val prepared = eventTimeTtl match {
-      case Some(ttl) => events.withWatermark(ttl.tsCol, ttl.watermark)
-        .where(col(keyCol).isNotNull && col(versionCol).isNotNull &&
-          col(ttl.tsCol).isNotNull)
-        .select(col(keyCol).cast("string"), col(versionCol).cast("long"),
-          opChecked, col(payloadCol).cast("string"), col(ttl.tsCol))
-      case None => events
-        .where(col(keyCol).isNotNull && col(versionCol).isNotNull)
-        .select(col(keyCol).cast("string"), col(versionCol).cast("long"),
-          opChecked, col(payloadCol).cast("string"),
-          lit(null).cast("timestamp"))
-    }
-    prepared
+    EntityTtl.input(events, eventTimeTtl, Seq(keyCol, versionCol), Nil,
+      Seq(col(keyCol).cast("string"), col(versionCol).cast("long"),
+        opChecked, col(payloadCol).cast("string")))
       .as[(String, Long, String, String, Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[UpsertState, UpsertRow](
@@ -1425,14 +1352,10 @@ object Streaming {
           // had diverged)
           if (cur != null) {
             state.update(cur)
-            entityTtlMs.foreach(state.setTimeoutDuration)
-            eventTimeTtl.foreach { ttl =>
-              // deadline from the newest event time EVER seen (carried in
-              // state): a batch of stale-timestamped traffic must never
-              // pull an armed deadline earlier
-              state.setTimeoutTimestamp(math.max(
-                cur.lastTsMs + ttl.ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
+            // deadline from the newest event time EVER seen (carried in
+            // state): a batch of stale-timestamped traffic must never
+            // pull an armed deadline earlier
+            EntityTtl.rearm(state, entityTtlMs, eventTimeTtl)(cur.lastTsMs)
           }
           if (advanced)
             Iterator.single(UpsertRow(entity, cur.version, cur.op,
@@ -1443,6 +1366,31 @@ object Streaming {
       .toDF()
   }
 
+  /** Streaming LAST-touch attribution: per entity, O(1) state (the single
+    * most recent touch) credits every conversion to the latest touch
+    * strictly before it and at most `lookback` time units old — the
+    * streaming twin of [[graft.pipeline.Relational.attribution]]'s
+    * `mode = "last"` (first-touch needs the oldest in-window touch, which
+    * no O(1) state can maintain under an advancing window — use the batch
+    * operator). Each conversion is emitted exactly once, in its arrival
+    * batch, with NULL touch columns when unattributed.
+    *
+    * Cross-batch DISORDER under-attributes, never mis-attributes: a touch
+    * arriving in a later batch than its conversion is not retro-credited
+    * (same direction as [[streamingFunnel]]'s disorder contract). Within a
+    * batch, events fold in (time, type) order, so arrival order is
+    * irrelevant. Over a single batch (AvailableNow on one file) the
+    * release is batch-equivalent by construction — the oracled regime.
+    *
+    * `entityTtlMs` bounds total state exactly as in [[streamingFunnel]]
+    * (processing-time timeout; expired entities just lose their pending
+    * touch — requires a recurring trigger to settle). For
+    * backfill/replay, pass `eventTimeTtl` instead: watermark-based
+    * expiry is replay-invariant and settles under AvailableNow (see
+    * [[EventTimeTtl]]); the two knobs are mutually exclusive. Either
+    * expiry direction is safe: an expired entity's next conversion is
+    * UNattributed, never MISattributed.
+    */
   def streamingAttribution(
       events: DataFrame, entityCol: String, typeCol: String, timeCol: String,
       convType: String, touchTypes: Seq[String], lookback: Long,
@@ -1461,20 +1409,10 @@ object Streaming {
     implicit val rowEnc = Encoders.tuple(
       Encoders.STRING, Encoders.STRING, Encoders.scalaLong,
       Encoders.TIMESTAMP)
-    val typeFilter = col(typeCol).isin((convType +: touchTypes): _*)
-    val prepared = eventTimeTtl match {
-      case Some(ttl) => events.withWatermark(ttl.tsCol, ttl.watermark)
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          col(ttl.tsCol).isNotNull && typeFilter)
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), col(ttl.tsCol))
-      case None => events
-        .where(col(entityCol).isNotNull && col(timeCol).isNotNull &&
-          typeFilter)
-        .select(col(entityCol).cast("string"), col(typeCol).cast("string"),
-          col(timeCol).cast("long"), lit(null).cast("timestamp"))
-    }
-    prepared
+    EntityTtl.input(events, eventTimeTtl, Seq(entityCol, timeCol),
+      Seq(col(typeCol).isin((convType +: touchTypes): _*)),
+      Seq(col(entityCol).cast("string"), col(typeCol).cast("string"),
+        col(timeCol).cast("long")))
       .as[(String, String, Long, Timestamp)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[TouchState, TouchCredit](
@@ -1503,14 +1441,8 @@ object Streaming {
           }
           if (lastTouch != null) {
             state.update(lastTouch)
-            entityTtlMs.foreach(state.setTimeoutDuration)
-            eventTimeTtl.foreach { ttl =>
-              // expire when the watermark passes newest-event + TTL; the
-              // timeout must sit strictly past the current watermark
-              val maxTs = evs.iterator.map(_._4.getTime).max
-              state.setTimeoutTimestamp(math.max(
-                maxTs + ttl.ttlMs, state.getCurrentWatermarkMs() + 1))
-            }
+            EntityTtl.rearm(state, entityTtlMs, eventTimeTtl)(
+              evs.iterator.map(_._4.getTime).max)
           }
           out.result().iterator
         }

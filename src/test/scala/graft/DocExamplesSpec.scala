@@ -713,27 +713,25 @@ class DocExamplesSpec extends SparkSpec {
       .toFile.getAbsolutePath + "/dp_ledger"
     val a = new Streaming.DpStreamAccountant(
       totalEpsilon = 1.0, perWindowEpsilon = 0.5,
-      ledgerPath = Some(ledger)).register(spark)
+      ledgerPath = Some(ledger)).restoreLedger(spark)
     try {
       a.charge(2) // two released windows -> exactly the cap, persisted
       assert(a.exhausted)
     } finally {
-      spark.streams.removeListener(a)
       // planned handover: release the single-writer lease so the successor
-      // can register immediately (a CRASHED holder instead just stops
+      // can restore immediately (a CRASHED holder instead just stops
       // renewing, and the successor waits out leaseTtlMs)
       a.releaseLedgerLease()
     }
     // a FRESH accountant (the restarted process) restores the exact spend
     val b = new Streaming.DpStreamAccountant(
       totalEpsilon = 1.0, perWindowEpsilon = 0.5,
-      ledgerPath = Some(ledger)).register(spark)
-    try {
-      assert(b.spentExact === Rat(0.5) * Rat(2)) // exactly, from disk
-      val e = intercept[IllegalArgumentException] {
-        b.observed(makeDf(StructType(Seq(longCol("x"))), Seq(Row(1L))))
-      }
-      assert(e.getMessage.contains("exhausted"))
-    } finally spark.streams.removeListener(b)
+      ledgerPath = Some(ledger)).restoreLedger(spark)
+    assert(b.spentExact === Rat(0.5) * Rat(2)) // exactly, from disk
+    // and its release sink writes nothing: no window is affordable
+    var written = 0L
+    b.enforcedBatcher(Seq("x")) { kept => written += kept.count() }(
+      makeDf(StructType(Seq(longCol("x"))), Seq(Row(1L))), 0L)
+    assert(b.affordable === 0L && written === 0L)
   }
 }

@@ -284,6 +284,96 @@ class StreamingRestartSpec extends SparkSpec {
       s"restart must recover the touch buffer: got $got expected $expect")
   }
 
+  test("streamingMultiTouchAttribution expiry: entityTtlMs and " +
+      "eventTimeTtl each drop an idle entity's touch buffer, so its next " +
+      "in-lookback conversion is UNattributed (never MISattributed)") {
+    type Credit = (String, Long, String)
+    def credits(dir: String): Set[Credit] =
+      try spark.read.parquet(dir).collect().map(r => (r.getString(0),
+        r.getLong(1), if (r.isNullAt(2)) null else r.getString(2))).toSet
+      catch { case _: Throwable => Set.empty } // no batch has written yet
+    def sinkTo(dir: String) =
+      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        if (!batch.isEmpty) batch.write.mode("append").parquet(dir)
+
+    // processing-time clock: a 1 ms TTL on a recurring trigger. The empty
+    // batches that follow the touch fire its timeout; the conversion then
+    // finds no buffer even though the touch is inside the lookback
+    locally {
+      val root = Files.createTempDirectory("mtttl").toFile.getAbsolutePath
+      val schema = StructType(Seq(
+        StructField("user", LongType), StructField("etype", StringType),
+        StructField("t", LongType)))
+      def writeWave(rows: Seq[(Long, String, Long)]): Unit =
+        makeDf(schema, rows.map { case (u, e, t) =>
+          org.apache.spark.sql.Row(u, e, t) })
+          .coalesce(1).write.mode("append").parquet(s"$root/in")
+      writeWave(Seq((1L, "click", 10L)))
+      val out = Streaming.streamingMultiTouchAttribution(
+        spark.readStream.schema(schema).parquet(s"$root/in"),
+        "user", "etype", "t", "buy", Seq("click"), lookback = 100L,
+        entityTtlMs = Some(1L))
+      val q = out.writeStream.foreachBatch(sinkTo(s"$root/out"))
+        .option("checkpointLocation", s"$root/ckpt")
+        .outputMode("update")
+        .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+      def pollUntil(what: String)(cond: => Boolean): Unit = {
+        val deadline = System.currentTimeMillis() + 60000
+        while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)
+        assert(cond, s"timed out waiting for $what")
+      }
+      try {
+        // the touch batch has run, then at least three empty batches
+        // after it (each one fires timeouts past the 1 ms TTL)
+        pollUntil("the touch batch") {
+          q.recentProgress.exists(_.numInputRows > 0)
+        }
+        val touchBatch =
+          q.recentProgress.find(_.numInputRows > 0).get.batchId
+        pollUntil("three idle batches after the touch") {
+          q.lastProgress.batchId >= touchBatch + 3
+        }
+        writeWave(Seq((1L, "buy", 50L)))
+        pollUntil("the conversion") { credits(s"$root/out").nonEmpty }
+        assert(credits(s"$root/out") === Set(("1", 50L, null)))
+      } finally q.stop()
+    }
+
+    // watermark clock: an unrelated entity's event at minute 40 moves the
+    // watermark past user 1's minute-1 touch plus the 10-minute TTL, so a
+    // backfill run drops the buffer with no wall-clock waiting
+    locally {
+      val root = Files.createTempDirectory("mtetttl").toFile.getAbsolutePath
+      val schema = StructType(Seq(
+        StructField("user", LongType), StructField("etype", StringType),
+        StructField("t", LongType), StructField("ts", TimestampType)))
+      def writeWave(rows: Seq[(Long, String, Long, Timestamp)]): Unit =
+        makeDf(schema, rows.map { case (u, e, t, w) =>
+          org.apache.spark.sql.Row(u, e, t, w) })
+          .coalesce(1).write.mode("append").parquet(s"$root/in")
+      def runOnce(): Unit = {
+        val out = Streaming.streamingMultiTouchAttribution(
+          spark.readStream.schema(schema).parquet(s"$root/in"),
+          "user", "etype", "t", "buy", Seq("click"), lookback = 100L,
+          eventTimeTtl = Some(Streaming.EventTimeTtl(
+            "ts", "0 seconds", ttlMs = 10 * 60000L)))
+        out.writeStream.foreachBatch(sinkTo(s"$root/out"))
+          .option("checkpointLocation", s"$root/ckpt")
+          .outputMode("update").trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+      }
+      writeWave(Seq((1L, "click", 10L, ts(1))))
+      runOnce()
+      writeWave(Seq((2L, "click", 20L, ts(40))))
+      runOnce()
+      // within the lookback (t = 50, touch t = 10): only expiry explains
+      // the missing credit
+      writeWave(Seq((1L, "buy", 50L, ts(41))))
+      runOnce()
+      assert(credits(s"$root/out") === Set(("1", 50L, null)))
+    }
+  }
+
   test("streamingIntervalJoin resumes from checkpoint: buffered right " +
       "rows survive the restart, matches arrive once, nothing re-emits") {
     val root = Files.createTempDirectory("ssjrestart").toFile.getAbsolutePath
@@ -474,71 +564,58 @@ class StreamingRestartSpec extends SparkSpec {
 
     def runOnce(acct: Streaming.DpStreamAccountant): Unit = {
       val stream = spark.readStream.schema(schema).parquet(inDir)
-      val counts = acct.observed(Streaming.noisyWindowedCounts(
+      val counts = Streaming.noisyWindowedCounts(
         stream, "ts", "etype", "10 minutes", "5 minutes",
-        epsilon = Double.PositiveInfinity))
+        epsilon = Double.PositiveInfinity)
         .select(col("window.start").as("wstart"), col("etype"), col("count"))
-      val q = counts.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
+      val q = counts.writeStream
+        .foreachBatch(acct.enforcedBatcher(Seq("wstart", "etype")) { kept =>
+          kept.write.mode("append").parquet(outDir)
+        })
+        .option("checkpointLocation", ckpt)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
-    def awaitSpend(acct: Streaming.DpStreamAccountant, want: Rat): Unit = {
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (acct.spentExact < want && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(acct.spentExact === want)
-    }
+    def released(): Set[(Long, String, Long)] =
+      spark.read.parquet(outDir).collect()
+        .map(r => (r.getTimestamp(0).getTime / 60000, r.getString(1),
+          r.getLong(2))).toSet
 
     // run 1: one window finalizes ([0,10) x "a") -> spend 1 of 2.
     // leaseTtlMs = 0: each "restart" below simulates a CRASHED driver (the
     // lease is never released), so the successor must see it as stale
     val acctA = new Streaming.DpStreamAccountant(
       totalEpsilon = 2.0, perWindowEpsilon = 1.0,
-      ledgerPath = Some(ledger), leaseTtlMs = 0L).register(spark)
-    try {
-      writeWave(Seq(ts(1) -> "a", ts(2) -> "a", ts(30) -> "z"))
-      runOnce(acctA)
-      awaitSpend(acctA, Rat(1))
-    } finally spark.streams.removeListener(acctA) // simulated process death
+      ledgerPath = Some(ledger), leaseTtlMs = 0L)
+    writeWave(Seq(ts(1) -> "a", ts(2) -> "a", ts(30) -> "z"))
+    runOnce(acctA)
+    assert(acctA.spentExact === Rat(1))
 
     // run 2: a FRESH accountant restores spend 1 from the ledger (not 0 —
     // the double-spend hole this ledger closes), then window [30,40)
     // finalizes and exhausts the cap
     val acctB = new Streaming.DpStreamAccountant(
       totalEpsilon = 2.0, perWindowEpsilon = 1.0,
-      ledgerPath = Some(ledger), leaseTtlMs = 0L).register(spark)
-    try {
-      assert(acctB.spentExact === Rat(1), "restart must restore exact spend")
-      assert(!acctB.exhausted)
-      writeWave(Seq(ts(31) -> "z", ts(70) -> "w"))
-      runOnce(acctB)
-      awaitSpend(acctB, Rat(2))
-      assert(acctB.exhausted)
-    } finally spark.streams.removeListener(acctB)
+      ledgerPath = Some(ledger), leaseTtlMs = 0L).restoreLedger(spark)
+    assert(acctB.spentExact === Rat(1), "restart must restore exact spend")
+    assert(!acctB.exhausted)
+    writeWave(Seq(ts(31) -> "z", ts(70) -> "w"))
+    runOnce(acctB)
+    assert(acctB.spentExact === Rat(2))
+    assert(acctB.exhausted)
 
     // run 3: the restarted-exhausted case — restore says the cap is spent,
-    // and observed() refuses to wire the stream, so NOTHING more releases
-    // (not even the one pre-listener batch the async path would leak)
+    // so the batch that finalizes [70,80) releases NOTHING
     val acctC = new Streaming.DpStreamAccountant(
       totalEpsilon = 2.0, perWindowEpsilon = 1.0,
-      ledgerPath = Some(ledger), leaseTtlMs = 0L).register(spark)
-    try {
-      assert(acctC.spentExact === Rat(2))
-      assert(acctC.exhausted)
-      val stream = spark.readStream.schema(schema).parquet(inDir)
-      val ex = intercept[IllegalArgumentException] {
-        acctC.observed(Streaming.noisyWindowedCounts(
-          stream, "ts", "etype", "10 minutes", "5 minutes",
-          epsilon = Double.PositiveInfinity))
-      }
-      assert(ex.getMessage.contains("exhausted"))
-      // and the two released windows were released exactly once in total
-      val released = spark.read.parquet(outDir).collect()
-        .map(r => (r.getTimestamp(0).getTime / 60000, r.getString(1),
-          r.getLong(2))).toSet
-      assert(released === Set((0L, "a", 2L), (30L, "z", 2L)))
-    } finally spark.streams.removeListener(acctC)
+      ledgerPath = Some(ledger), leaseTtlMs = 0L).restoreLedger(spark)
+    assert(acctC.spentExact === Rat(2))
+    assert(acctC.exhausted)
+    writeWave(Seq(ts(71) -> "w", ts(120) -> "v"))
+    runOnce(acctC)
+    assert(acctC.spentExact === Rat(2))
+    // and the two released windows were released exactly once in total
+    assert(released() === Set((0L, "a", 2L), (30L, "z", 2L)))
   }
 
   test("stateful operators version their checkpointed state: a cross-" +
@@ -594,27 +671,23 @@ class StreamingRestartSpec extends SparkSpec {
     val ledger = Files.createTempDirectory("dplease")
       .toFile.getAbsolutePath + "/led"
     val a = new Streaming.DpStreamAccountant(10.0, 1.0,
-      ledgerPath = Some(ledger)).register(spark)
-    try {
-      a.charge(1)
-      // a holds a fresh lease (default TTL) -> a second accountant on the
-      // same path must refuse BEFORE reading or writing any ledger state
-      val b = new Streaming.DpStreamAccountant(10.0, 1.0,
-        ledgerPath = Some(ledger))
-      val ex = intercept[Streaming.LedgerFencedException](b.register(spark))
-      assert(ex.getMessage.contains("held by another accountant"))
-      // clean handover: release, then a successor restores the exact spend
-      a.releaseLedgerLease()
-      val c = new Streaming.DpStreamAccountant(10.0, 1.0,
-        ledgerPath = Some(ledger)).register(spark)
-      try {
-        assert(c.spentExact === Rat(1))
-        c.charge(1)
-        // the old holder lost the lease: its next charge must fail loudly
-        // (fencing) instead of interleaving slot writes with c
-        intercept[Streaming.LedgerFencedException](a.charge(1))
-      } finally spark.streams.removeListener(c)
-    } finally spark.streams.removeListener(a)
+      ledgerPath = Some(ledger)).restoreLedger(spark)
+    a.charge(1)
+    // a holds a fresh lease (default TTL) -> a second accountant on the
+    // same path must refuse BEFORE reading or writing any ledger state
+    val b = new Streaming.DpStreamAccountant(10.0, 1.0,
+      ledgerPath = Some(ledger))
+    val ex = intercept[Streaming.LedgerFencedException](b.restoreLedger(spark))
+    assert(ex.getMessage.contains("held by another accountant"))
+    // clean handover: release, then a successor restores the exact spend
+    a.releaseLedgerLease()
+    val c = new Streaming.DpStreamAccountant(10.0, 1.0,
+      ledgerPath = Some(ledger)).restoreLedger(spark)
+    assert(c.spentExact === Rat(1))
+    c.charge(1)
+    // the old holder lost the lease: its next charge must fail loudly
+    // (fencing) instead of interleaving slot writes with c
+    intercept[Streaming.LedgerFencedException](a.charge(1))
   }
 
   test("enforcedBatcher used ALONE (no register/observed) initializes and " +

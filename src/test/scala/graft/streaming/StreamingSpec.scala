@@ -136,37 +136,6 @@ class StreamingSpec extends SparkSpec {
     assert(Streaming.eventLevelEpsilon(1.0, 600000L, 400000L) === 2.0)
   }
 
-  test("stream accountant stops the query once the user-level cap is hit") {
-    val sqlCtx = spark.sqlContext
-    import sqlCtx.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = sqlCtx
-    val in = MemoryStream[(Timestamp, String)]
-    val acct = new Streaming.DpStreamAccountant(
-      totalEpsilon = 2.0, perWindowEpsilon = 1.0).register(spark)
-    try {
-      val counts = acct.observed(Streaming.noisyWindowedCounts(
-        in.toDF().toDF("ts", "etype"), "ts", "etype", "10 minutes", "5 minutes",
-        epsilon = Double.PositiveInfinity))
-      val q = counts.writeStream.format("memory").queryName("acct")
-        .outputMode(OutputMode.Append).start()
-      try {
-        // the watermark jump finalizes windows [0,10) and [10,20) in the
-        // second batch: spend 2 reaches the cap and the query stops
-        in.addData((ts(1), "click"), (ts(12), "click"), (ts(25), "click"))
-        q.processAllAvailable()
-        in.addData((ts(90), "click"))
-        q.processAllAvailable()
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while ((!acct.exhausted || q.isActive) && System.nanoTime() < deadline)
-          Thread.sleep(50)
-        assert(acct.exhausted)
-        assert(acct.remaining === 0.0)
-        assert(!q.isActive) // stopped by the accountant, not the test
-        assert(spark.table("acct").count() === 2)
-      } finally if (q.isActive) q.stop()
-    } finally spark.streams.removeListener(acct)
-  }
-
   test("enforcedBatcher NEVER exceeds the cap: the crossing batch is cut " +
       "to the affordable prefix, deterministically, and the charge lands " +
       "before the write") {
@@ -219,20 +188,18 @@ class StreamingSpec extends SparkSpec {
       Rat(BigInt(n), BigInt(d))
     }
     val a = new Streaming.DpStreamAccountant(100.0, 1.0,
-      ledgerPath = Some(ledger), leaseTtlMs = 0L).register(spark)
-    try { a.charge(1); a.charge(1); a.charge(1) } // slots now {3, 2}
-    finally spark.streams.removeListener(a) // simulated crash: lease stays
+      ledgerPath = Some(ledger), leaseTtlMs = 0L).restoreLedger(spark)
+    a.charge(1); a.charge(1); a.charge(1) // slots now {3, 2}
+    // simulated crash: the lease stays
     val b = new Streaming.DpStreamAccountant(100.0, 1.0,
-      ledgerPath = Some(ledger), leaseTtlMs = 0L).register(spark)
-    try {
-      assert(b.spentExact === Rat(3))
-      b.charge(1)
-      // the post-restart write must land on the slot holding 2 (the stale
-      // one) — a reset-to-0 toggle would overwrite the newest slot, and a
-      // torn write there would roll the durable spend back TWO charges
-      assert(Set(slotValue(0), slotValue(1)) === Set(Rat(3), Rat(4)),
-        s"got slots ${slotValue(0)} / ${slotValue(1)}")
-    } finally spark.streams.removeListener(b)
+      ledgerPath = Some(ledger), leaseTtlMs = 0L).restoreLedger(spark)
+    assert(b.spentExact === Rat(3))
+    b.charge(1)
+    // the post-restart write must land on the slot holding 2 (the stale
+    // one) — a reset-to-0 toggle would overwrite the newest slot, and a
+    // torn write there would roll the durable spend back TWO charges
+    assert(Set(slotValue(0), slotValue(1)) === Set(Rat(3), Rat(4)),
+      s"got slots ${slotValue(0)} / ${slotValue(1)}")
   }
 
   test("unlimited budget (totalEpsilon = +Inf): affordable is Long.MaxValue, " +
