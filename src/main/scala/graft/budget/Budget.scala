@@ -40,14 +40,19 @@ final class Rat private (val num: BigInt, val den: BigInt) extends Ordered[Rat]
   def min(o: Rat): Rat = if (this <= o) this else o
   def max(o: Rat): Rat = if (this >= o) this else o
 
+  /** Exact ceiling (throws on infinity). */
+  def ceil: BigInt = {
+    if (isInfinite) throw new ArithmeticException("ceil of infinite Rat")
+    val (q, r) = num /% den // BigInt division truncates toward zero
+    if (r != 0 && num > 0) q + 1 else q
+  }
+
   /** Exact ceiling as a Long (throws on infinity). Used where an integer
     * stability bound is extracted from an exact rational distance — going
     * through Double could round a value like (2^53+1)/1 down.
     */
   def ceilLong: Long = {
-    if (isInfinite) throw new ArithmeticException("ceil of infinite Rat")
-    val q = num /% den // BigInt division truncates toward zero
-    val c = if (q._2 != 0 && num > 0) q._1 + 1 else q._1
+    val c = ceil
     // BigInt.toLong silently truncates to the low 64 bits — for a
     // privacy-relevant stability bound a wrapped (tiny or negative)
     // value would be catastrophic, so refuse out-of-range exactly

@@ -1,13 +1,16 @@
 package graft.compile
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import java.util.random.RandomGenerator
+
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.budget._
 import graft.constraints._
-import graft.exec.{DpQuantile, MagnitudeBucket, Materialize, Noise, NoiseInfo,
-  NoiseMechanism}
+import graft.exec.{DpQuantile, GetBoundsImpl, MagnitudeBucket, Materialize, Noise,
+  NoiseInfo, NoiseMechanism}
 import graft.ir.MechanismHint
 import graft.ir.QueryExpr._
 import graft.ir.MeasureExpr
@@ -54,6 +57,24 @@ object MeasurementPlanner {
     val deltaPer = delta / maxGroups.toDouble
     val tau = sens + b * math.log(1.0 / (2.0 * deltaPer))
     (b, math.max(tau, 1.0))
+  }
+
+  /** Epsilon available to the exponential mechanism (quantile / bounds) at
+    * L1 sensitivity `l1` (it is an eps-DP primitive): eps / l1 under
+    * PureDP/ApproxDP; sqrt(8 rho) / l1 under zCDP (the exponential
+    * mechanism satisfies eps^2/8-zCDP). The selections read the double back
+    * as an exact rational, so a round-to-nearest value above the exact one
+    * steps down until it is not (compared as exact squares).
+    */
+  private[compile] def exponentialEpsilon(budget: PrivacyBudget, l1: Rat): Double = {
+    val (nearest, epsSq) = budget match {
+      case PureDPBudget(eps) => (eps.toDouble / l1.toDouble, eps * eps / (l1 * l1))
+      case ApproxDPBudget(eps, _) => (eps.toDouble / l1.toDouble, eps * eps / (l1 * l1))
+      case RhoZCDPBudget(rho) =>
+        (math.sqrt(8.0 * rho.toDouble) / l1.toDouble, Rat(8) * rho / (l1 * l1))
+    }
+    if (epsSq.isInfinite) Double.PositiveInfinity
+    else Iterator.iterate(nearest)(Math.nextDown).find(d => Rat(d) * Rat(d) <= epsSq).get
   }
 
   /** Aggregation sensitivity: the L1 bound, plus — when the constraint
@@ -190,7 +211,7 @@ final class MeasurementPlanner(
       val t = prepared(child, dropSpecial = Some(m),
         needed = Some(keys.columns :+ m))
       val sens = aggSensitivity(t, Some(keys))
-      val eps = exponentialEpsilon(sens)
+      val eps = MeasurementPlanner.exponentialEpsilon(budget, sens.l1)
       // default: bounded-state binned mechanism (DpQuantile header). Opt-in
       // `spark.graft.quantile.method = intervals` runs the reference's
       // interval-scoring mechanism, which materializes each group's values.
@@ -222,8 +243,8 @@ final class MeasurementPlanner(
               DpQuantile.finishIntervalsUdf(q, lo, hi, eps, maxGroupRows)(col("__vs")))
             .drop("__vs")
         case "binned" =>
-          histogramSelect(t.df, keys, m, DpQuantile.binColumn(_, lo, hi), out,
-            DpQuantile.finishUdf(q, lo, hi, eps))
+          histogramSelect(t.df, keys, m, DpQuantile.binColumn(_, lo, hi),
+            0 until DpQuantile.Bins, out)(DpQuantile.finish(_, q, lo, hi, eps, _))
         case other => throw new IllegalArgumentException(
           s"spark.graft.quantile.method must be 'binned' or 'intervals', got '$other'")
       }
@@ -270,15 +291,15 @@ final class MeasurementPlanner(
           Double.PositiveInfinity, Double.NegativeInfinity)))
       else t0
       val sens = aggSensitivity(t)
-      val eps = exponentialEpsilon(sens)
+      val eps = MeasurementPlanner.exponentialEpsilon(budget, sens.l1)
       val integer = t.schema(m).ctype == ColumnType.Integer
       // magnitude bucket: smallest k with |x| <= 2^k, k in [-32, 62],
       // decided on the exponent and mantissa bits, so it is bit-exact across
       // engines — unlike ceil(log2(x)), whose libm rounding at power-of-2
       // boundaries differs between JVM and C runtimes.
       Inputs.free(keys.columns :+ m, "get_bounds", "__k")
-      val withK = histogramSelect(t.df, keys, m, MagnitudeBucket.column, "__k",
-        GetBoundsImpl.finishUdf(eps))
+      val withK = histogramSelect(t.df, keys, m, MagnitudeBucket.column,
+        GetBoundsImpl.Exponents, "__k")(GetBoundsImpl.finish(_, eps, _))
       val result =
         if (integer) {
           // powers of two are exact in doubles up to 2^62
@@ -492,21 +513,6 @@ final class MeasurementPlanner(
         if (integer) NoiseMechanism.Geometric(b) else NoiseMechanism.Laplace(b)
     }
 
-  /** Epsilon available to the exponential mechanism (quantile / bounds):
-    * direct under PureDP/ApproxDP; via eps = sqrt(8 rho) under zCDP (the
-    * exponential mechanism satisfies eps^2/8-zCDP).
-    */
-  private def exponentialEpsilon(sens: Sens): Double = budget match {
-    // the exponential mechanism is an eps-DP primitive — always L1
-    case PureDPBudget(eps) =>
-      if (eps.isInfinite) Double.PositiveInfinity else eps.toDouble / sens.l1.toDouble
-    case ApproxDPBudget(eps, _) =>
-      if (eps.isInfinite) Double.PositiveInfinity else eps.toDouble / sens.l1.toDouble
-    case RhoZCDPBudget(rho) =>
-      if (rho.isInfinite) Double.PositiveInfinity
-      else math.sqrt(8.0 * rho.toDouble) / sens.l1.toDouble
-  }
-
   /** Budget actually charged for noise-addition queries: ApproxDP charges
     * delta = 0 (reference _base_measurement_visitor.py:591-668).
     */
@@ -633,12 +639,13 @@ final class MeasurementPlanner(
   /** Private selection over per-group histograms (binned quantile,
     * get_bounds): count rows per (keys, bin), gather each group's
     * (bin, count) pairs, left-join the keyset (absent groups get a null
-    * list) and let `finisher` choose `out` from the histogram. `bin` maps
-    * the measure column `m` to its bin.
+    * list) and let `select` choose `out` from the group's dense counts over
+    * `bins` (index i counts bin `bins(i)`). `bin` maps the measure column
+    * `m` to its bin.
     */
-  private def histogramSelect(df: DataFrame, keys: KeySet, m: String,
-      bin: Column => Column, out: String,
-      finisher: UserDefinedFunction): DataFrame = {
+  private def histogramSelect[T: TypeTag](df: DataFrame, keys: KeySet, m: String,
+      bin: Column => Column, bins: Range, out: String)(
+      select: (Array[Long], RandomGenerator) => T): DataFrame = {
     Inputs.free(keys.columns :+ m, "histogram selection",
       "__bin", "__c", "__bins")
     val counts = df.withColumn("__bin", bin(col(m)))
@@ -646,58 +653,17 @@ final class MeasurementPlanner(
       .agg(count(lit(1)).as("__c"))
     val perGroup = groupAgg(counts, keys,
       Seq(collect_list(struct(col("__bin"), col("__c"))).as("__bins")))
+    val (first, size) = (bins.start, bins.size)
+    val finisher = udf((pairs: Seq[Row]) => {
+      val dense = new Array[Long](size)
+      if (pairs != null) pairs.foreach { r =>
+        val i = r.getInt(0) - first
+        if (i >= 0 && i < size) dense(i) += r.getLong(1)
+      }
+      select(dense, Noise.rng())
+    }).asNondeterministic()
     keysetJoin(keys, perGroup, Seq("__bins" -> None))
       .withColumn(out, finisher(col("__bins")))
       .drop("__bins")
   }
-}
-
-/** Finisher for GetBounds: choose the magnitude exponent k such that ~95% of
-  * values satisfy |x| <= 2^k, by private selection over candidate exponents
-  * (reference create_bounds_measurement, threshold 0.95:
-  * _base_measurement_visitor.py:1533-1544,1616). The release is a bare
-  * integer exponent and the finite-eps selection runs EXACTLY — rational
-  * utilities + [[graft.exec.Noise.permuteAndFlip]]'s integer-arithmetic
-  * coins — so this measurement has zero floating-point sampling surface.
-  */
-object GetBoundsImpl {
-  import org.apache.spark.sql.Row
-  import java.util.concurrent.ThreadLocalRandom
-  import graft.budget.Rat
-
-  def finishUdf(eps: Double): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((pairs: Seq[Row]) => {
-      val counts = scala.collection.mutable.Map.empty[Int, Long]
-      if (pairs != null) pairs.foreach { r =>
-        counts(r.getInt(0)) = counts.getOrElse(r.getInt(0), 0L) + r.getLong(1)
-      }
-      val n = counts.values.sum
-      val ks = (-32 to 62).toArray
-      // cumulative count of |x| <= 2^k
-      val cum = new Array[Long](ks.length)
-      var acc = 0L
-      var i = 0
-      while (i < ks.length) {
-        acc += counts.getOrElse(ks(i), 0L)
-        cum(i) = acc
-        i += 1
-      }
-      if (eps.isInfinity) {
-        val idx = cum.indexWhere(_ * 20L >= 19L * n) // cum >= 0.95 * n, exactly
-        ks(if (idx < 0) ks.length - 1 else idx)
-      } else {
-        // utility u = -|cum - 0.95*n| has sensitivity 1.95: a row moves the
-        // cumulative count by <= 1 and the 0.95*n target by 0.95, so the
-        // selection weights divide eps by 2 * 1.95. Scaled by 20 to stay
-        // integral: d20 = |20*cum - 19*n|, uSens20 = 39, all exact.
-        val target20 = 19L * n
-        val d20 = IndexedSeq.tabulate(ks.length) { j =>
-          math.abs(20L * cum(j) - target20)
-        }
-        val dMin = d20.min
-        val scale = Rat(eps) / Rat(2L * 39L)
-        val gammas = d20.map(d => scale * Rat(d - dMin))
-        ks(graft.exec.Noise.permuteAndFlip(gammas, ThreadLocalRandom.current()))
-      }
-    }).asNondeterministic()
 }

@@ -1,8 +1,6 @@
 package graft.exec
 
-import java.util.concurrent.ThreadLocalRandom
-
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -37,20 +35,6 @@ object DpQuantile {
       lit(Bins - 1))
   }
 
-  /** Finisher over per-bin counts: Seq[(bin, count)] -> quantile estimate.
-    * `eps` is the epsilon spent on this aggregate; Double.PositiveInfinity
-    * means noiseless.
-    */
-  def finishUdf(q: Double, low: Double, high: Double, eps: Double): UserDefinedFunction =
-    udf((pairs: Seq[Row]) => {
-      val counts = new Array[Long](Bins)
-      if (pairs != null) pairs.foreach { r =>
-        val b = r.getInt(0)
-        if (b >= 0 && b < Bins) counts(b) += r.getLong(1)
-      }
-      finish(counts, q, low, high, eps, ThreadLocalRandom.current())
-    }).asNondeterministic()
-
   /** Finisher over a group's raw values: the interval-scoring exponential
     * mechanism (see [[finishIntervals]]). `maxGroupRows` is the per-group
     * residency bound the planner enforced on the gather (it collects
@@ -69,7 +53,7 @@ object DpQuantile {
           "(spark.graft.quantile.intervals.maxGroupRows); use the default " +
           "bounded-state binned mechanism (spark.graft.quantile.method = " +
           "binned) for groups this large, or raise the bound explicitly")
-      val rng = ThreadLocalRandom.current()
+      val rng = Noise.rng()
       finishIntervals(arr, q, low, high, eps, () => rng.nextDouble())
     }).asNondeterministic()
 
@@ -158,15 +142,16 @@ object DpQuantile {
     }
   }
 
-  /** The mechanism itself, over materialized per-bin counts. `rng` injects
-    * the randomness source so the statistical acceptance tests
+  /** The mechanism itself, over a group's per-bin counts (the finisher
+    * `MeasurementPlanner.histogramSelect` runs). `rng` injects the
+    * randomness source so the statistical acceptance tests
     * (QuantileFidelitySpec) can drive it seeded; the UDF passes
-    * ThreadLocalRandom.
+    * [[Noise.rng]].
     *
     * Finite-eps bin SELECTION is sampled EXACTLY: rank errors, the q*n
     * target, and eps are exact rationals (a double IS a rational), and
     * permute-and-flip runs on integer permutations + CKS
-    * Bernoulli(exp(-gamma)) coins ([[Noise.permuteAndFlip]]) — no
+    * Bernoulli(exp(-gamma)) coins ([[Noise.selectMin]]) — no
     * transcendental floating point touches the data-dependent choice,
     * the same discipline the exact CKS samplers enforce for additive
     * noise. Permute-and-flip is eps-DP with the same 2 * uSens scaling
@@ -192,9 +177,9 @@ object DpQuantile {
       cum += counts(i)
       i += 1
     }
-    val dMin = d2.min
     if (eps.isInfinity) {
       // among max-utility bins pick the one nearest the q-th bin position
+      val dMin = d2.min
       val anchor = q * (Bins - 1)
       var pick = -1
       var dist = Double.MaxValue
@@ -212,8 +197,7 @@ object DpQuantile {
       // above so the divisor doubles too: uSens = 1 + q (rank moves by <= 1,
       // target q*n by q per added/removed row) -> 4 * (1 + q) against d2
       val scale = Rat(eps) / (Rat(4) * (Rat(1) + Rat(q)))
-      val gammas = IndexedSeq.tabulate(Bins)(j => scale * (d2(j) - dMin))
-      val pick = Noise.permuteAndFlip(gammas, rng)
+      val pick = Noise.selectMin(d2.toIndexedSeq, scale, rng)
       low + (pick + rng.nextDouble()) * width
     }
   }

@@ -1,6 +1,7 @@
 package graft.exec
 
 import java.util.concurrent.ThreadLocalRandom
+import java.util.random.RandomGenerator
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -144,71 +145,56 @@ final case class NoiseInfo(column: String, mechanism: NoiseMechanism)
 
 /** Executor-side noise sampling. Additive noise is drawn by the
   * nondeterministic [[AddNoise]] expression over the (small,
-  * post-aggregation) result rows — never a driver collect. Samplers use
-  * ThreadLocalRandom: independent per executor thread, no coordination, no
-  * shuffle.
+  * post-aggregation) result rows — never a driver collect. Every sampler
+  * takes its generator; the entry points pass [[rng]]. The integer samplers
+  * and the selections are EXACT: every coin is the one CKS step
+  * [[bernoulliExpFrac]], with no floating point (SURVEY §7.4).
   */
 object Noise {
 
+  /** ThreadLocalRandom: independent per executor thread, no coordination. */
+  def rng(): RandomGenerator = ThreadLocalRandom.current()
+
+  private val One = BigInt(1)
+  private val Quantum = BigInt(1) << 20
+
   /** Two-sided geometric (discrete Laplace), pmf ∝ exp(-|k| * s/t), sampled
-    * EXACTLY with integer arithmetic only (Canonne-Kamath-Steinke,
-    * arXiv:2004.00010, Algorithm 2) — no transcendental floating point in
-    * the sampling path, closing the naive-Laplace FP attack surface
-    * (SURVEY §7.4 "secure sampling"). The requested scale `b` is quantized
-    * UP to t/2^20 >= b, so the realized noise is never below the calibrated
-    * scale.
+    * EXACTLY (Canonne-Kamath-Steinke, arXiv:2004.00010, Algorithm 2). The
+    * requested scale `b` is quantized UP to t/2^20 >= b, with
+    * t = ceil(b * 2^20) computed exactly as a BigInt at every scale, so the
+    * realized noise is never below the calibrated scale. A draw outside the
+    * Long range saturates at its end.
     */
-  def sampleGeometric(b: Double): Long = {
+  def sampleGeometric(b: Double, rng: RandomGenerator): Long = {
     if (b == 0.0) return 0L
-    if (b > (1L << 34).toDouble) {
-      // astronomically large scale (eps ~ 0): exact integer path would
-      // overflow; noise this large is unusable anyway, FP tails irrelevant
-      val u = ThreadLocalRandom.current().nextDouble() - 0.5
-      return math.round(-b * math.signum(u) * math.log1p(-2.0 * math.abs(u)))
-    }
-    val s = 1L << 20
-    val t = math.max(math.ceil(b * s).toLong, 1L)
-    sampleDiscreteLaplace(t, s)
+    require(!b.isInfinite, s"geometric scale must be finite, got $b")
+    val t = (Rat(b) * Rat(Quantum, One)).ceil.max(One)
+    saturate(sampleDiscreteLaplace(t, Quantum, rng))
   }
 
   /** Exact discrete Laplace with rational scale t/s (CKS Algorithm 2). */
-  def sampleDiscreteLaplace(t: Long, s: Long): Long = {
-    val rng = ThreadLocalRandom.current()
+  def sampleDiscreteLaplace(t: BigInt, s: BigInt, rng: RandomGenerator): BigInt = {
     while (true) {
-      val u = rng.nextLong(t)
+      val u = uniformBigInt(t, rng)
       if (bernoulliExpFrac(u, t, rng)) {
         // V ~ Geometric(1 - e^-1): count of successful Bernoulli(e^-1) draws
         var v = 0L
-        while (bernoulliExpFrac(1, 1, rng)) v += 1
-        val x = u + t * v
-        val y = x / s
+        while (bernoulliExpFrac(One, One, rng)) v += 1
+        val y = (u + t * v) / s
         val negative = rng.nextBoolean()
-        if (!(negative && y == 0L)) return if (negative) -y else y
+        if (!(negative && y.signum == 0)) return if (negative) -y else y
       }
     }
-    0L // unreachable
+    BigInt(0) // unreachable
   }
 
-  /** Exact Bernoulli(exp(-num/den)) for 0 <= num/den <= 1 via the von
-    * Neumann series trick (CKS Algorithm 1): draw Bernoulli(num/(den*k))
-    * until the first failure at step k; accept iff k is odd. Only integer
-    * comparisons against uniform longs.
-    */
-  private def bernoulliExpFrac(
-      num: Long, den: Long, rng: ThreadLocalRandom): Boolean = {
-    var k = 1L
-    while (true) {
-      if (num == 0 || rng.nextLong(den * k) >= num) return k % 2 == 1
-      k += 1
-    }
-    false // unreachable
-  }
+  private def saturate(y: BigInt): Long =
+    if (y.isValidLong) y.toLong else if (y.signum > 0) Long.MaxValue else Long.MinValue
 
   /** Uniform BigInt in [0, bound): rejection sampling on raw random bits —
     * exact, no floating point. Expected < 2 draws.
     */
-  private def uniformBigInt(
-      bound: BigInt, rng: java.util.random.RandomGenerator): BigInt = {
+  private def uniformBigInt(bound: BigInt, rng: RandomGenerator): BigInt = {
     require(bound > 0, s"bound must be positive, got $bound")
     if (bound.isValidLong) return BigInt(rng.nextLong(bound.toLong))
     val bits = bound.bitLength
@@ -223,14 +209,15 @@ object Noise {
     BigInt(0) // unreachable
   }
 
-  /** BigInt-capable [[bernoulliExpFrac]] (CKS Algorithm 1): exact
-    * Bernoulli(exp(-num/den)) for 0 <= num/den <= 1.
+  /** Exact Bernoulli(exp(-num/den)) for 0 <= num/den <= 1 via the von
+    * Neumann series trick (CKS Algorithm 1): draw Bernoulli(num/(den*k))
+    * until the first failure at step k; accept iff k is odd. Only integer
+    * comparisons against uniform integers.
     */
-  private def bernoulliExpFracBig(
-      num: BigInt, den: BigInt, rng: java.util.random.RandomGenerator): Boolean = {
+  private def bernoulliExpFrac(num: BigInt, den: BigInt, rng: RandomGenerator): Boolean = {
     var k = 1L
     while (true) {
-      if (num == 0 || uniformBigInt(den * k, rng) >= num) return k % 2 == 1
+      if (num.signum == 0 || uniformBigInt(den * k, rng) >= num) return k % 2 == 1
       k += 1
     }
     false // unreachable
@@ -242,16 +229,16 @@ object Noise {
     * the exp(-1) chain fails with probability 1 - 1/e per link, so large
     * gammas short-circuit almost immediately.
     */
-  def bernoulliExp(gamma: Rat, rng: java.util.random.RandomGenerator): Boolean = {
+  def bernoulliExp(gamma: Rat, rng: RandomGenerator): Boolean = {
     require(!gamma.isInfinite && gamma >= Rat(0),
       s"gamma must be finite and non-negative, got $gamma")
-    val one = Rat(1)
-    var g = gamma
-    while (g > one) {
-      if (!bernoulliExpFracBig(BigInt(1), BigInt(1), rng)) return false
-      g = g - one
+    val (w, frac) = gamma.num /% gamma.den
+    var whole = w
+    while (whole.signum > 0) {
+      if (!bernoulliExpFrac(One, One, rng)) return false
+      whole -= 1
     }
-    bernoulliExpFracBig(g.num, g.den, rng)
+    bernoulliExpFrac(frac, gamma.den, rng)
   }
 
   /** Exact DP selection via permute-and-flip (McKenna & Sheldon 2020,
@@ -268,8 +255,7 @@ object Noise {
     * gamma must be zero (the max-utility candidate), so one pass always
     * releases.
     */
-  def permuteAndFlip(
-      gammas: IndexedSeq[Rat], rng: java.util.random.RandomGenerator): Int = {
+  def permuteAndFlip(gammas: IndexedSeq[Rat], rng: RandomGenerator): Int = {
     require(gammas.nonEmpty, "permuteAndFlip needs at least one candidate")
     val order = Array.tabulate(gammas.length)(identity)
     var i = order.length - 1
@@ -289,12 +275,22 @@ object Noise {
       "permuteAndFlip exhausted all candidates — no gamma was zero")
   }
 
+  /** The private-selection step of the binned quantile and get_bounds:
+    * release the index of a small distance `d(i)` (utility -d(i)) through
+    * [[permuteAndFlip]] with gamma_i = scale * (d(i) - min d), where
+    * `scale` = eps / (2 * uSens) in the units of `d`.
+    */
+  def selectMin(d: IndexedSeq[Rat], scale: Rat, rng: RandomGenerator): Int = {
+    val dMin = d.min
+    permuteAndFlip(d.map(x => scale * (x - dMin)), rng)
+  }
+
   /** One draw of `m`'s noise for a LongType value; [[AddNoise]]'s generated
     * code and its `eval` both call it.
     */
   def drawLong(m: NoiseMechanism): Long = m match {
-    case NoiseMechanism.Geometric(b) => sampleGeometric(b)
-    case NoiseMechanism.DiscreteGaussian(s2) => sampleDiscreteGaussian(s2)
+    case NoiseMechanism.Geometric(b) => sampleGeometric(b, rng())
+    case NoiseMechanism.DiscreteGaussian(s2) => sampleDiscreteGaussian(s2, rng())
     case other => throw new IllegalStateException(s"unsupported ${other.name}")
   }
 
@@ -302,43 +298,46 @@ object Noise {
     * give their draw as a double.
     */
   def drawDouble(m: NoiseMechanism): Double = m match {
-    case NoiseMechanism.Laplace(b) => sampleLaplace(b)
-    case NoiseMechanism.Gaussian(s2) => sampleGaussian(s2)
+    case NoiseMechanism.Laplace(b) => sampleLaplace(b, rng())
+    case NoiseMechanism.Gaussian(s2) => sampleGaussian(s2, rng())
     case _ => drawLong(m).toDouble
   }
 
-  /** Continuous Laplace with scale b. */
-  def sampleLaplace(b: Double): Double = {
+  /** Continuous Laplace with scale b. A uniform draw of exactly 0.0 would
+    * give log1p(-1) = -infinity, so it is redrawn.
+    */
+  def sampleLaplace(b: Double, rng: RandomGenerator): Double = {
     if (b == 0.0) return 0.0
-    val u = ThreadLocalRandom.current().nextDouble() - 0.5
+    var u = rng.nextDouble() - 0.5
+    while (u == -0.5) u = rng.nextDouble() - 0.5
     -b * math.signum(u) * math.log1p(-2.0 * math.abs(u))
   }
 
   /** Continuous Gaussian with variance sigma2. */
-  def sampleGaussian(sigma2: Double): Double =
-    if (sigma2 == 0.0) 0.0
-    else ThreadLocalRandom.current().nextGaussian() * math.sqrt(sigma2)
+  def sampleGaussian(sigma2: Double, rng: RandomGenerator): Double =
+    if (sigma2 == 0.0) 0.0 else rng.nextGaussian() * math.sqrt(sigma2)
 
-  /** Discrete Gaussian with variance parameter sigma2, via rejection from a
-    * discrete Laplace proposal (Canonne-Kamath-Steinke, arXiv:2004.00010,
-    * Algorithm 3 — the sampler the reference uses for zCDP integer noise).
+  /** Discrete Gaussian with variance parameter sigma2, sampled EXACTLY by
+    * rejection from a discrete Laplace proposal (Canonne-Kamath-Steinke,
+    * arXiv:2004.00010, Algorithm 3 — the sampler the reference uses for
+    * zCDP integer noise), with sigma^2 the exact rational value of
+    * `sigma2`. Acceptance is Θ(1), so there is no attempt cap. A draw
+    * outside the Long range saturates at its end.
     */
-  def sampleDiscreteGaussian(sigma2: Double): Long = {
+  def sampleDiscreteGaussian(sigma2: Double, rng: RandomGenerator): Long = {
     if (sigma2 == 0.0) return 0L
-    val sigma = math.sqrt(sigma2)
-    val t = math.floor(sigma).toLong + 1
-    val rng = ThreadLocalRandom.current()
-    var attempts = 0
-    while (attempts < 10000) {
-      val y = sampleGeometric(t.toDouble)
-      val d = math.abs(y).toDouble - sigma2 / t
-      val pAccept = math.exp(-(d * d) / (2.0 * sigma2))
-      if (rng.nextDouble() < pAccept) return y
-      attempts += 1
+    require(!sigma2.isInfinite, s"discrete Gaussian variance must be finite, got $sigma2")
+    val s2 = Rat(sigma2)
+    // floor(sqrt(x)) = floor(sqrt(floor(x))) for every real x >= 0
+    val t = BigInt((s2.num / s2.den).bigInteger.sqrt()) + 1
+    val shift = s2 / Rat(t, One)
+    val twoS2 = Rat(2) * s2
+    while (true) {
+      val y = sampleDiscreteLaplace(t, One, rng)
+      val d = Rat(y.abs, One) - shift
+      if (bernoulliExp(d * d / twoS2, rng)) return saturate(y)
     }
-    // Statistically unreachable (acceptance prob is Θ(1)); fall back to a
-    // rounded continuous sample rather than looping forever.
-    math.round(sampleGaussian(sigma2))
+    0L // unreachable
   }
 
   import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}

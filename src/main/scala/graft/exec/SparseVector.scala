@@ -70,7 +70,8 @@ object SparseVector {
     val rhoScale = if (epsilon.isInfinity) 0.0 else 2.0 * c * sensitivity / epsilon
     val nuScale = if (epsilon.isInfinity) 0.0 else 4.0 * c * sensitivity / epsilon
 
-    var rho = Noise.sampleLaplace(rhoScale)
+    val rng = Noise.rng()
+    var rho = Noise.sampleLaplace(rhoScale, rng)
     val released = Seq.newBuilder[(Any, Long)]
     var nReleased = 0
     var i = 0
@@ -87,10 +88,10 @@ object SparseVector {
         case other => throw new IllegalArgumentException(
           s"value column '$valueCol' must be numeric, got $other")
       }
-      if (v + Noise.sampleLaplace(nuScale) > threshold + rho) {
+      if (v + Noise.sampleLaplace(nuScale, rng) > threshold + rho) {
         nReleased += 1
         released += ((row.get(0), nReleased.toLong))
-        rho = Noise.sampleLaplace(rhoScale) // refresh after each positive
+        rho = Noise.sampleLaplace(rhoScale, rng) // refresh after each positive
       }
       i += 1
     }

@@ -67,7 +67,7 @@ class NoiseInverseCdfSpec extends AnyFunSuite {
     // the sampler and the analytic CDF describe the same distribution:
     // compare empirical quantiles of 20k draws against inverseCdf +-1 step
     val b = 3.0
-    val draws = Array.fill(20000)(Noise.sampleGeometric(b).toDouble).sorted
+    val draws = Array.fill(20000)(Noise.sampleGeometric(b, Noise.rng()).toDouble).sorted
     for (p <- Seq(0.25, 0.5, 0.75, 0.9)) {
       val emp = draws(((draws.length - 1) * p).toInt)
       val ana = Geometric(b).inverseCdf(p)

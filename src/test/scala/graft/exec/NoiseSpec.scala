@@ -15,7 +15,7 @@ class NoiseSpec extends SparkSpec {
 
   test("geometric: mean 0, variance 2a/(1-a)^2 at b=2") {
     val b = 2.0
-    val xs = Array.fill(N)(Noise.sampleGeometric(b).toDouble)
+    val xs = Array.fill(N)(Noise.sampleGeometric(b, Noise.rng()).toDouble)
     val mean = xs.sum / N
     val varEmp = xs.map(x => (x - mean) * (x - mean)).sum / N
     val a = math.exp(-1.0 / b)
@@ -26,7 +26,7 @@ class NoiseSpec extends SparkSpec {
 
   test("laplace: variance 2b^2") {
     val b = 3.0
-    val xs = Array.fill(N)(Noise.sampleLaplace(b))
+    val xs = Array.fill(N)(Noise.sampleLaplace(b, Noise.rng()))
     val mean = xs.sum / N
     val varEmp = xs.map(x => (x - mean) * (x - mean)).sum / N
     assert(math.abs(mean) < 0.1)
@@ -35,14 +35,14 @@ class NoiseSpec extends SparkSpec {
 
   test("gaussian: variance sigma^2") {
     val s2 = 4.0
-    val xs = Array.fill(N)(Noise.sampleGaussian(s2))
+    val xs = Array.fill(N)(Noise.sampleGaussian(s2, Noise.rng()))
     val varEmp = xs.map(x => x * x).sum / N
     assert(math.abs(varEmp - s2) / s2 < 0.05)
   }
 
   test("discrete gaussian: integer-valued, variance ~ sigma^2") {
     val s2 = 9.0
-    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2).toDouble)
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, Noise.rng()).toDouble)
     val varEmp = xs.map(x => x * x).sum / N
     // CKS discrete Gaussian variance is within O(1) of sigma^2 for sigma >= 1
     assert(math.abs(varEmp - s2) / s2 < 0.1, s"var $varEmp vs $s2")
@@ -103,7 +103,7 @@ class NoiseSpec extends SparkSpec {
     val a = math.exp(-1.0 / b)
     val p0 = (1 - a) / (1 + a)
     def pmf(k: Long): Double = p0 * math.pow(a, math.abs(k).toDouble)
-    val xs = Array.fill(N)(Noise.sampleGeometric(b))
+    val xs = Array.fill(N)(Noise.sampleGeometric(b, Noise.rng()))
     val (chi2, dof) = chiSquared(xs, pmf, -12, 12)
     // dof ~ 24; chi-squared critical value at alpha = 1e-6 is ~65 — a
     // genuinely wrong scale (b=1.9 or 2.1) lands in the thousands at N=200k
@@ -115,14 +115,26 @@ class NoiseSpec extends SparkSpec {
     // normalization over the effective support (|k| <= 40 is 13 sigma)
     val z = (-40 to 40).map(k => math.exp(-k * k / (2 * s2))).sum
     def pmf(k: Long): Double = math.exp(-k * k / (2 * s2)) / z
-    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2))
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, Noise.rng()))
     val (chi2, dof) = chiSquared(xs, pmf, -10, 10)
     assert(chi2 < 65.0, s"chi2 $chi2 at dof $dof")
   }
 
+  test("discrete gaussian sigma^2=0.5 (t = 1): chi-squared fit of " +
+      "exp(-k^2/2s^2) pmf") {
+    val s2 = 0.5
+    val z = (-20 to 20).map(k => math.exp(-k * k / (2 * s2))).sum
+    def pmf(k: Long): Double = math.exp(-k * k / (2 * s2)) / z
+    val rng = new java.util.SplittableRandom(16)
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, rng))
+    val (chi2, dof) = chiSquared(xs, pmf, -4, 4)
+    // dof ~ 6; the critical value at alpha = 1e-6 is ~39
+    assert(chi2 < 40.0, s"chi2 $chi2 at dof $dof")
+  }
+
   test("laplace b=3: CDF agreement at fixed quantile probes") {
     val b = 3.0
-    val xs = Array.fill(N)(Noise.sampleLaplace(b)).sorted
+    val xs = Array.fill(N)(Noise.sampleLaplace(b, Noise.rng())).sorted
     // two-sided Laplace CDF: F(x) = 0.5 + 0.5 sign(x) (1 - exp(-|x|/b))
     def cdf(x: Double): Double =
       0.5 + 0.5 * math.signum(x) * (1 - math.exp(-math.abs(x) / b))
@@ -136,10 +148,10 @@ class NoiseSpec extends SparkSpec {
   }
 
   test("zero scale is exactly noiseless") {
-    assert((1 to 1000).forall(_ => Noise.sampleGeometric(0.0) == 0L))
-    assert((1 to 1000).forall(_ => Noise.sampleLaplace(0.0) == 0.0))
-    assert((1 to 1000).forall(_ => Noise.sampleGaussian(0.0) == 0.0))
-    assert((1 to 1000).forall(_ => Noise.sampleDiscreteGaussian(0.0) == 0L))
+    assert((1 to 1000).forall(_ => Noise.sampleGeometric(0.0, Noise.rng()) == 0L))
+    assert((1 to 1000).forall(_ => Noise.sampleLaplace(0.0, Noise.rng()) == 0.0))
+    assert((1 to 1000).forall(_ => Noise.sampleGaussian(0.0, Noise.rng()) == 0.0))
+    assert((1 to 1000).forall(_ => Noise.sampleDiscreteGaussian(0.0, Noise.rng()) == 0L))
     assert(NoiseMechanism.Geometric(0.0).isNoiseless)
     assert(NoiseMechanism.Exponential(Double.PositiveInfinity).isNoiseless)
   }
