@@ -40,43 +40,6 @@ object MeasurementPlanner {
     if (noise.forall(_.mechanism.isNoiseless)) df
     else Materialize(df, "MeasurementPlanner.releaseOnce").df
 
-  /** Noise scale and count threshold for DP partition selection at input
-    * distance `sens` (d_in-aware, mirroring the reference's pass of d_in to
-    * core create_partition_selection_measurement,
-    * _measurement_visitor.py:141-147). One protected unit can contribute up
-    * to `sens` rows to a single new group and create up to ceil(sens)
-    * distinct new groups, so the threshold clears the per-group contribution
-    * bound and the failure probability delta is split across the groups the
-    * unit could create: tau = sens + b * ln(1 / (2 * delta / maxGroups)).
-    * At sens = 1 this is the classic 1 + b * ln(1/(2*delta)).
-    */
-  def partitionSelectionParams(
-      sens: Double, eps: Double, delta: Double): (Double, Double) = {
-    val b = 2.0 * sens / eps
-    val maxGroups = math.max(1L, math.ceil(sens).toLong)
-    val deltaPer = delta / maxGroups.toDouble
-    val tau = sens + b * math.log(1.0 / (2.0 * deltaPer))
-    (b, math.max(tau, 1.0))
-  }
-
-  /** Epsilon available to the exponential mechanism (quantile / bounds) at
-    * L1 sensitivity `l1` (it is an eps-DP primitive): eps / l1 under
-    * PureDP/ApproxDP; sqrt(8 rho) / l1 under zCDP (the exponential
-    * mechanism satisfies eps^2/8-zCDP). The selections read the double back
-    * as an exact rational, so a round-to-nearest value above the exact one
-    * steps down until it is not (compared as exact squares).
-    */
-  private[compile] def exponentialEpsilon(budget: PrivacyBudget, l1: Rat): Double = {
-    val (nearest, epsSq) = budget match {
-      case PureDPBudget(eps) => (eps.toDouble / l1.toDouble, eps * eps / (l1 * l1))
-      case ApproxDPBudget(eps, _) => (eps.toDouble / l1.toDouble, eps * eps / (l1 * l1))
-      case RhoZCDPBudget(rho) =>
-        (math.sqrt(8.0 * rho.toDouble) / l1.toDouble, Rat(8) * rho / (l1 * l1))
-    }
-    if (epsSq.isInfinite) Double.PositiveInfinity
-    else Iterator.iterate(nearest)(Math.nextDown).find(d => Rat(d) * Rat(d) <= epsSq).get
-  }
-
   /** Aggregation sensitivity: the L1 bound, plus — when the constraint
     * structure grants it — the EXACT squared L2 bound. Scaling by a per-row
     * factor f scales the square by f^2. (Companion-level so pattern matches
@@ -84,8 +47,6 @@ object MeasurementPlanner {
     */
   private[compile] final case class Sens(l1: Rat, l2Sq: Option[Rat] = None) {
     def *(f: Rat): Sens = Sens(l1 * f, l2Sq.map(_ * f * f))
-    def isZero: Boolean = l1.isZero
-    def toDouble: Double = l1.toDouble
     /** Squared sensitivity for Gaussian-family calibration. */
     def sq: Rat = l2Sq.getOrElse(l1 * l1)
   }
@@ -210,8 +171,7 @@ final class MeasurementPlanner(
     case GroupByQuantile(child, keys, m, q, lo, hi, out) =>
       val t = prepared(child, dropSpecial = Some(m),
         needed = Some(keys.columns :+ m))
-      val sens = aggSensitivity(t, Some(keys))
-      val eps = MeasurementPlanner.exponentialEpsilon(budget, sens.l1)
+      val mech = NoiseMechanism.exponential(budget, aggSensitivity(t, Some(keys)).l1)
       // default: bounded-state binned mechanism (DpQuantile header). Opt-in
       // `spark.graft.quantile.method = intervals` runs the reference's
       // interval-scoring mechanism, which materializes each group's values.
@@ -240,15 +200,15 @@ final class MeasurementPlanner(
             t.df.withColumn("__v", col(m).cast("double")), keys, Seq(gather))
           keysetJoin(keys, perGroup, Seq("__vs" -> None))
             .withColumn(out,
-              DpQuantile.finishIntervalsUdf(q, lo, hi, eps, maxGroupRows)(col("__vs")))
+              DpQuantile.finishIntervalsUdf(q, lo, hi, mech.scale, maxGroupRows)(col("__vs")))
             .drop("__vs")
         case "binned" =>
           histogramSelect(t.df, keys, m, DpQuantile.binColumn(_, lo, hi),
-            0 until DpQuantile.Bins, out)(DpQuantile.finish(_, q, lo, hi, eps, _))
+            0 until DpQuantile.Bins, out)(DpQuantile.finish(_, q, lo, hi, mech.epsilon, _))
         case other => throw new IllegalArgumentException(
           s"spark.graft.quantile.method must be 'binned' or 'intervals', got '$other'")
       }
-      MeasureOut(result, Seq(NoiseInfo(out, NoiseMechanism.Exponential(eps))), noiseSpend)
+      MeasureOut(result, Seq(NoiseInfo(out, mech)), noiseSpend)
 
     case e @ GetGroups(child, _) =>
       // DP partition selection by noisy-count thresholding (Korolova et al. /
@@ -260,20 +220,9 @@ final class MeasurementPlanner(
           s"get_groups requires an ApproxDP budget, got $other")
       }
       val t = prepared(child)
-      val sens = aggSensitivity(t)
       val cols = e.schema(cat).columnNames
       Inputs.free(cols, "get_groups", "__c")
-      val (b, threshold) =
-        if (eps.isInfinite) (0.0, 1.0)
-        else {
-          if (delta.isZero) throw new IllegalArgumentException(
-            "get_groups requires delta > 0")
-          if (eps.isZero) throw new IllegalArgumentException(
-            "get_groups requires epsilon > 0")
-          MeasurementPlanner.partitionSelectionParams(
-            sens.toDouble, eps.toDouble, delta.toDouble)
-        }
-      val mech = NoiseMechanism.Geometric(b)
+      val (mech, threshold) = NoiseMechanism.partitionSelection(aggSensitivity(t).l1, eps, delta)
       val result = t.df.groupBy(cols.map(col).toIndexedSeq: _*)
         .agg(count(lit(1)).as("__c"))
         .withColumn("__c", Noise.addLongNoise(col("__c"), mech))
@@ -290,8 +239,7 @@ final class MeasurementPlanner(
         t0.copy(df = t0.df.filter(!col(m).isin(
           Double.PositiveInfinity, Double.NegativeInfinity)))
       else t0
-      val sens = aggSensitivity(t)
-      val eps = MeasurementPlanner.exponentialEpsilon(budget, sens.l1)
+      val mech = NoiseMechanism.exponential(budget, aggSensitivity(t).l1)
       val integer = t.schema(m).ctype == ColumnType.Integer
       // magnitude bucket: smallest k with |x| <= 2^k, k in [-32, 62],
       // decided on the exponent and mantissa bits, so it is bit-exact across
@@ -299,7 +247,7 @@ final class MeasurementPlanner(
       // boundaries differs between JVM and C runtimes.
       Inputs.free(keys.columns :+ m, "get_bounds", "__k")
       val withK = histogramSelect(t.df, keys, m, MagnitudeBucket.column,
-        GetBoundsImpl.Exponents, "__k")(GetBoundsImpl.finish(_, eps, _))
+        GetBoundsImpl.Exponents, "__k")(GetBoundsImpl.finish(_, mech.epsilon, _))
       val result =
         if (integer) {
           // powers of two are exact in doubles up to 2^62
@@ -310,8 +258,7 @@ final class MeasurementPlanner(
           withK.withColumn(lowerName, -pow(lit(2.0), col("__k")))
             .withColumn(upperName, pow(lit(2.0), col("__k")))
             .drop("__k")
-      MeasureOut(result,
-        Seq(NoiseInfo(upperName, NoiseMechanism.Exponential(eps))), noiseSpend)
+      MeasureOut(result, Seq(NoiseInfo(upperName, mech)), noiseSpend)
 
     case SuppressAggregates(child, threshold) =>
       val inner = compile(child)
@@ -460,58 +407,19 @@ final class MeasurementPlanner(
     budget.isInstanceOf[RhoZCDPBudget] && hint != MechanismHint.Laplace
 
   /** DEFAULT -> concrete mechanism given budget kind and value type
-    * (reference _rewrite_rules.py:91-199), with the noise scale calibrated
-    * to sensitivity / (budget / parts).
+    * (reference _rewrite_rules.py:91-199), calibrated to sensitivity /
+    * (budget / parts) by [[NoiseMechanism.additive]].
     */
   private def selectMechanism(
       hint: MechanismHint, integer: Boolean, sens: Sens, parts: Int): NoiseMechanism = {
-    // an epsilon/rho of exactly zero cannot calibrate additive noise (the
-    // scale would be sens/0); the fully-zero budget is rejected at evaluate,
-    // and this catches the ApproxDP(0, delta > 0) corner, where delta alone
-    // can only drive partition selection, never noise addition
-    def requireNonZero(v: Rat): Rat = {
-      if (v.isZero && !sens.isZero) throw new IllegalArgumentException(
-        "noise-addition queries require a non-zero epsilon/rho " +
-          "(a delta-only budget can only drive partition selection)")
-      v
-    }
-    def laplaceScale(eps0: Rat): Double = {
-      val eps = requireNonZero(eps0)
-      if (eps.isInfinite || sens.isZero) 0.0
-      else (sens.l1 / (eps / Rat(parts))).toDouble
-    }
-    budget match {
-      case PureDPBudget(eps) => lapLike(hint, integer, laplaceScale(eps))
-      case ApproxDPBudget(eps, _) => lapLike(hint, integer, laplaceScale(eps))
-      case RhoZCDPBudget(rho0) =>
-        val rho = requireNonZero(rho0)
-        hint match {
-          case MechanismHint.Laplace =>
-            // eps-DP mechanism run under zCDP: eps = sqrt(2 rho / parts).
-            // An L1 mechanism can never take the L2 credit.
-            val s = if (rho.isInfinite || sens.isZero) 0.0
-              else sens.l1.toDouble / math.sqrt(2.0 * (rho / Rat(parts)).toDouble)
-            if (integer) NoiseMechanism.Geometric(s) else NoiseMechanism.Laplace(s)
-          case _ =>
-            // sigma^2 = Delta_2^2 / (2 rho); the SQUARED sensitivity is an
-            // exact rational even when the bound itself is irrational
-            // (r * sqrt(g)), so no ceil is needed and the scale matches the
-            // reference's symbolic calibration exactly
-            val s2 = if (rho.isInfinite || sens.isZero) 0.0
-              else (sens.sq / (Rat(2) * (rho / Rat(parts)))).toDouble
-            if (integer) NoiseMechanism.DiscreteGaussian(s2)
-            else NoiseMechanism.Gaussian(s2)
-        }
-    }
-  }
-
-  private def lapLike(hint: MechanismHint, integer: Boolean, b: Double): NoiseMechanism =
-    hint match {
-      case MechanismHint.Gaussian => throw new IllegalArgumentException(
+    if (hint == MechanismHint.Gaussian && !budget.isInstanceOf[RhoZCDPBudget])
+      throw new IllegalArgumentException(
         "Gaussian noise requires a zCDP budget (reference _rewrite_rules.py:110-115)")
-      case _ =>
-        if (integer) NoiseMechanism.Geometric(b) else NoiseMechanism.Laplace(b)
-    }
+    // the squared L2 sensitivity is exact even for an irrational bound
+    // (r * sqrt(g)); an L1 mechanism never takes the L2 credit
+    NoiseMechanism.additive(budget.split(parts), sens.l1, integer,
+      if (isL2(hint)) Some(sens.sq) else None)
+  }
 
   /** Budget actually charged for noise-addition queries: ApproxDP charges
     * delta = 0 (reference _base_measurement_visitor.py:591-668).
@@ -601,7 +509,8 @@ final class MeasurementPlanner(
     val sens = aggSensitivity(t, Some(e.keys), l2 = isL2(e.mechanism))
     val intPath = isIntegerMeasure(t.schema, m, lo, hi)
     val mid = if (intPath) math.floor((lo + hi) / 2.0) else (lo + hi) / 2.0
-    val half = if (intPath) math.max(hi - mid, mid - lo) else (hi - lo) / 2.0
+    // the larger side of the clamp range around the midpoint, exactly
+    val half = (Rat(hi) - Rat(mid)).max(Rat(mid) - Rat(lo))
     val spread = !e.isInstanceOf[GroupByBoundedAverage]
     val nParts = if (spread) 3 else 2
     def mech(integer: Boolean, s: Sens) =
@@ -611,9 +520,9 @@ final class MeasurementPlanner(
       else least(greatest(col(m).cast("double"), lit(lo)), lit(hi)) - lit(mid)
     // (noise-info label, part)
     val parts =
-      Seq("sum" -> Part("__sd", sum(dev), intPath, mech(intPath, sens * Rat(half)))) ++
+      Seq("sum" -> Part("__sd", sum(dev), intPath, mech(intPath, sens * half))) ++
         (if (spread) Seq("sumsq" -> Part("__sq", sum(dev * dev), intPath,
-          mech(intPath, sens * Rat(half * half)))) else Nil) :+
+          mech(intPath, sens * (half * half)))) else Nil) :+
         ("count" -> Part("__n", count(lit(1)), integer = true, mech(true, sens)))
     val noisy = additive(t.df, e.keys, parts.map(_._2)).df
     def d(c: String) = col(c).cast("double")

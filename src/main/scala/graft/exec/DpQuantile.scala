@@ -161,7 +161,7 @@ object DpQuantile {
     * selected bin index, so it carries no FP privacy surface.
     */
   private[graft] def finish(
-      counts: Array[Long], q: Double, low: Double, high: Double, eps: Double,
+      counts: Array[Long], q: Double, low: Double, high: Double, eps: Rat,
       rng: java.util.random.RandomGenerator): Double = {
     val n = counts.sum
     val width = (high - low) / Bins
@@ -177,7 +177,7 @@ object DpQuantile {
       cum += counts(i)
       i += 1
     }
-    if (eps.isInfinity) {
+    if (eps.isInfinite) {
       // among max-utility bins pick the one nearest the q-th bin position
       val dMin = d2.min
       val anchor = q * (Bins - 1)
@@ -196,7 +196,7 @@ object DpQuantile {
       // gamma_i = eps * (u_max - u_i) / (2 * uSens), with utilities doubled
       // above so the divisor doubles too: uSens = 1 + q (rank moves by <= 1,
       // target q*n by q per added/removed row) -> 4 * (1 + q) against d2
-      val scale = Rat(eps) / (Rat(4) * (Rat(1) + Rat(q)))
+      val scale = eps / (Rat(4) * (Rat(1) + Rat(q)))
       val pick = Noise.selectMin(d2.toIndexedSeq, scale, rng)
       low + (pick + rng.nextDouble()) * width
     }

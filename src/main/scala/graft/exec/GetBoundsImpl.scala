@@ -21,18 +21,18 @@ object GetBoundsImpl {
     * first k whose cumulative count reaches 0.95 * n (an empty group gives
     * the smallest exponent).
     */
-  def finish(counts: Array[Long], eps: Double, rng: RandomGenerator): Int = {
+  def finish(counts: Array[Long], eps: Rat, rng: RandomGenerator): Int = {
     val n = counts.sum
     // cumulative count of |x| <= 2^k
     val cum = counts.scanLeft(0L)(_ + _).tail
-    if (eps.isInfinity) Exponents(cum.indexWhere(_ * 20L >= 19L * n)) // exactly cum >= 0.95 * n
+    if (eps.isInfinite) Exponents(cum.indexWhere(_ * 20L >= 19L * n)) // exactly cum >= 0.95 * n
     else {
       // utility u = -|cum - 0.95*n| has sensitivity 1.95: a row moves the
       // cumulative count by <= 1 and the 0.95*n target by 0.95, so the
       // selection weights divide eps by 2 * 1.95. Scaled by 20 to stay
       // integral: d20 = |20*cum - 19*n|, uSens20 = 39, all exact.
       val d20 = cum.toIndexedSeq.map(c => Rat(math.abs(20L * c - 19L * n)))
-      Exponents(Noise.selectMin(d20, Rat(eps) / Rat(2L * 39L), rng))
+      Exponents(Noise.selectMin(d20, eps / Rat(2L * 39L), rng))
     }
   }
 }

@@ -6,20 +6,26 @@ import java.util.random.RandomGenerator
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.budget.Rat
+import graft.budget.{ApproxDPBudget, PrivacyBudget, PureDPBudget, Rat, RhoZCDPBudget}
 
 /** Concrete noise mechanisms (reference: the five-mechanism enum at
-  * src/tmlt/analytics/_noise_info.py:49-68). `scale` semantics:
+  * src/tmlt/analytics/_noise_info.py:49-68). Each carries its parameter as
+  * the EXACT rational calibration gave it (SURVEY §7.4):
   *  - Geometric / Laplace: b, the distribution scale (= sensitivity / epsilon)
   *  - Gaussian / DiscreteGaussian: sigma^2 (= sensitivity^2 / (2 rho))
-  * A scale of exactly 0 (infinite budget) adds no noise and keeps results
+  *  - Exponential: epsilon (infinite = noiseless)
+  * A parameter of exactly 0 (infinite budget) adds no noise and keeps results
   * bit-deterministic — this is what the infinite-budget correctness oracles
   * rely on (reference doctest: session.py:1037-1043 shows noise scale
   * Delta/epsilon = 2 for a count at epsilon=0.5).
   */
-sealed trait NoiseMechanism extends Serializable {
-  def name: String
-  def scale: Double
+sealed abstract class NoiseMechanism(val name: String, param: Rat, up: Boolean, cap: Rat)
+    extends Serializable {
+  /** The parameter as a double rounded toward more noise (up for b and
+    * sigma^2, down for epsilon), for the continuous samplers, [[inverseCdf]]
+    * and the intervals quantile; the exact samplers read the rational.
+    */
+  val scale: Double = NoiseMechanism.checked(name, param, up, cap)
   def isNoiseless: Boolean = scale == 0.0
   /** The p-quantile of this mechanism's noise distribution (reference
     * _noise_info.py `_inverse_cdf`): the error bar a release carries at
@@ -28,58 +34,144 @@ sealed trait NoiseMechanism extends Serializable {
   def inverseCdf(p: Double): Double = NoiseMechanism.inverseCdf(this, p)
 }
 object NoiseMechanism {
-  // A negative or NaN scale is ALWAYS a caller bug, and the samplers'
-  // clamping would otherwise turn it into near-zero noise — a release the
-  // caller believes is DP-protected but is essentially exact. Fail at
-  // construction, the only place the mistake is still attributable.
-  private def checkScale(scale: Double, name: String): Unit =
-    require(scale >= 0.0 && !scale.isNaN,
-      s"$name noise scale must be >= 0 (0 = noiseless), got $scale")
-  final case class Geometric(scale: Double) extends NoiseMechanism {
-    NoiseMechanism.checkScale(scale, "Geometric"); val name = "Geometric"
+  final case class Geometric(b: Rat) extends NoiseMechanism("Geometric", b, true, IntegerCap)
+  final case class Laplace(b: Rat) extends NoiseMechanism("Laplace", b, true, Rat.Inf)
+  final case class Gaussian(sigma2: Rat) extends NoiseMechanism("Gaussian", sigma2, true, Rat.Inf)
+  final case class DiscreteGaussian(sigma2: Rat)
+      extends NoiseMechanism("DiscreteGaussian", sigma2, true, IntegerCap * IntegerCap)
+  /** Exponential mechanism (quantile, get_bounds). */
+  final case class Exponential(epsilon: Rat)
+      extends NoiseMechanism("Exponential", epsilon, false, Rat.Inf) {
+    override def isNoiseless: Boolean = epsilon.isInfinite
   }
-  final case class Laplace(scale: Double) extends NoiseMechanism {
-    NoiseMechanism.checkScale(scale, "Laplace"); val name = "Laplace"
+
+  /** The largest b, or sigma, of an integer mechanism: below it P(|draw| >=
+    * 2^62) < 2^-1000, so no draw saturates at the ends of the Long range,
+    * where a release would read Long.MinValue + the true value.
+    */
+  private val IntegerCap = Rat(BigInt(1) << 52, BigInt(1))
+
+  // Mechanisms are built at calibration, before the charge: refuse here a
+  // negative parameter (the samplers would clamp it to near-zero noise), an
+  // integer one past IntegerCap, or one whose rounded-up double is infinite.
+  private def checked(name: String, p: Rat, up: Boolean, cap: Rat): Double = {
+    require(p >= Rat.zero, s"$name noise parameter must be >= 0 (0 = noiseless), got $p")
+    val d = rounded(p, up)
+    require(p <= cap && !(up && d.isInfinite), s"$name noise parameter ${p.toDouble} is " +
+      s"too large to sample (at most ${cap.toDouble}); spend a larger budget on this query")
+    d
   }
-  final case class Gaussian(scale: Double) extends NoiseMechanism {
-    NoiseMechanism.checkScale(scale, "Gaussian"); val name = "Gaussian"
+
+  /** The double nearest `r` toward more noise: >= r when `up`, else <= r. */
+  private def rounded(r: Rat, up: Boolean): Double = {
+    var d = r.toDouble
+    if (up) while (Rat(d) < r) d = Math.nextUp(d)
+    else while (Rat(d) > r) d = Math.nextAfter(d, Double.NegativeInfinity)
+    d
   }
-  final case class DiscreteGaussian(scale: Double) extends NoiseMechanism {
-    NoiseMechanism.checkScale(scale, "DiscreteGaussian")
-    val name = "DiscreteGaussian"
+
+  /** The one calibration step of an additive release: the mechanism for the
+    * budget `share` at L1 sensitivity `l1`, Gaussian-family when `l2Sq` (the
+    * squared L2 sensitivity) is given under zCDP. PureDP / ApproxDP:
+    * b = l1 / eps. zCDP: sigma^2 = l2Sq / (2 rho); an L1 mechanism is eps-DP
+    * at eps = sqrt(2 rho), so b = l1 * sqrtUpper(1 / (2 rho)), the one
+    * inexact step, rounded up.
+    */
+  def additive(share: PrivacyBudget, l1: Rat, integer: Boolean,
+      l2Sq: Option[Rat] = None): NoiseMechanism = {
+    val (v, zcdp) = epsilonOrRho(share)
+    // the fully-zero budget is rejected at evaluate; this catches
+    // ApproxDP(0, delta > 0), whose delta can only drive partition selection
+    if (v.isZero && !l1.isZero) throw new IllegalArgumentException(
+      "noise-addition queries require a non-zero epsilon/rho " +
+        "(a delta-only budget can only drive partition selection)")
+    val gaussian = zcdp && l2Sq.isDefined
+    val p = if (l1.isZero) Rat.zero
+      else if (gaussian) l2Sq.get / (Rat(2) * v)
+      else if (zcdp) l1 * Rat.sqrtUpper(Rat.one / (Rat(2) * v))
+      else l1 / v
+    if (gaussian) { if (integer) DiscreteGaussian(p) else Gaussian(p) }
+    else if (integer) Geometric(p) else Laplace(p)
   }
-  /** Exponential mechanism (quantile); `scale` = epsilon (inf = noiseless). */
-  final case class Exponential(scale: Double) extends NoiseMechanism {
-    NoiseMechanism.checkScale(scale, "Exponential")
-    val name = "Exponential"
-    override def isNoiseless: Boolean = scale.isInfinity
+
+  /** [[additive]] at a caller's `epsilon` (infinite = the exact release)
+    * and `sensitivity` times `factor`; both must be positive.
+    */
+  def pure(epsilon: Double, sensitivity: Double, factor: Long,
+      integer: Boolean): NoiseMechanism = {
+    require(epsilon > 0.0,
+      s"epsilon must be positive (or infinite for the exact release), got $epsilon")
+    require(sensitivity > 0.0, s"sensitivity must be positive, got $sensitivity")
+    additive(PureDPBudget(epsilon), Rat(sensitivity) * Rat(factor), integer)
   }
+
+  /** The exponential mechanism at L1 sensitivity `l1` (an eps-DP primitive):
+    * eps / l1 under PureDP / ApproxDP; sqrt(8 rho) / l1 under zCDP (it is
+    * eps^2/8-zCDP) as 1 / sqrtUpper(l1^2 / 8 rho), never above the exact value.
+    */
+  def exponential(share: PrivacyBudget, l1: Rat): Exponential = {
+    val (v, zcdp) = epsilonOrRho(share)
+    Exponential(if (l1.isZero) Rat.Inf
+      else if (zcdp) Rat.one / Rat.sqrtUpper(l1 * l1 / (Rat(8) * v)) else v / l1)
+  }
+
+  private def epsilonOrRho(share: PrivacyBudget): (Rat, Boolean) = share match {
+    case PureDPBudget(eps)      => (eps, false)
+    case ApproxDPBudget(eps, _) => (eps, false)
+    case RhoZCDPBudget(rho)     => (rho, true)
+  }
+
+  /** Noise and count threshold for DP partition selection at input
+    * distance `sens` (d_in-aware, mirroring the reference's pass of d_in to
+    * core create_partition_selection_measurement,
+    * _measurement_visitor.py:141-147). One protected unit can contribute up
+    * to `sens` rows to a single new group and create up to ceil(sens)
+    * distinct new groups, so the threshold clears the per-group contribution
+    * bound and the failure probability delta is split across the groups the
+    * unit could create: tau = sens + b * ln(maxGroups / (2 * delta)), with
+    * b = 2 * sens / eps; at sens = 1 the classic 1 + b * ln(1/(2*delta)).
+    * Returns the geometric and ceil(tau) >= 1, the least noisy count
+    * released. `Math.log` is within 1 ulp of ln: at the rounded-up argument,
+    * stepped up twice (an ulp doubles at a power of two), it bounds ln above.
+    */
+  def partitionSelection(sens: Rat, eps: Rat, delta: Rat): (Geometric, Long) =
+    if (eps.isInfinite) (Geometric(Rat.zero), 1L)
+    else {
+      require(!delta.isZero, "get_groups requires delta > 0")
+      require(!eps.isZero, "get_groups requires epsilon > 0")
+      val b = Rat(2) * sens / eps
+      val x = Rat(sens.ceil.max(1), 1) / (Rat(2) * delta)
+      val tau = sens + b * Rat(Math.nextUp(Math.nextUp(Math.log(rounded(x, up = true)))))
+      (Geometric(b), if (tau.isInfinite || tau.ceil > Long.MaxValue) Long.MaxValue
+        else tau.ceil.max(1).toLong)
+    }
 
   private[exec] def inverseCdf(m: NoiseMechanism, p: Double): Double = {
     require(p > 0.0 && p < 1.0, s"p must be in (0, 1): $p")
+    val s = m.scale
     m match {
-      case Laplace(b) =>
-        if (b == 0.0) 0.0
-        else if (p < 0.5) b * math.log(2.0 * p)
-        else -b * math.log(2.0 * (1.0 - p))
-      case Geometric(b) =>
+      case _: Laplace =>
+        if (s == 0.0) 0.0
+        else if (p < 0.5) s * math.log(2.0 * p)
+        else -s * math.log(2.0 * (1.0 - p))
+      case _: Geometric =>
         // two-sided geometric (discrete Laplace) with pmf ∝ alpha^|k|,
-        // alpha = exp(-1/b): the smallest k >= 0 with
+        // alpha = exp(-1/s): the smallest k >= 0 with
         // 1 - alpha^(k+1)/(1+alpha) >= p; p < 1/2 by symmetry
-        if (b == 0.0) 0.0
+        if (s == 0.0) 0.0
         else if (p < 0.5) -inverseCdf(m, 1.0 - p)
         else {
-          val alpha = math.exp(-1.0 / b)
+          val alpha = math.exp(-1.0 / s)
           val k = math.ceil(
             math.log((1.0 - p) * (1.0 + alpha)) / math.log(alpha)) - 1.0
           math.max(0.0, k)
         }
-      case Gaussian(s2) => math.sqrt(s2) * probit(p)
-      case DiscreteGaussian(s2) =>
-        if (s2 == 0.0) 0.0
+      case _: Gaussian => math.sqrt(s) * probit(p)
+      case _: DiscreteGaussian =>
+        if (s == 0.0) 0.0
         else if (p < 0.5) -inverseCdf(m, 1.0 - p)
         else {
-          val sigma = math.sqrt(s2)
+          val sigma = math.sqrt(s)
           // wide sigmas are indistinguishable from the rounded continuous
           // Gaussian; narrow ones walk the exact pmf
           if (sigma > 200.0) math.rint(sigma * probit(p))
@@ -87,20 +179,20 @@ object NoiseMechanism {
             val cut = (10.0 * sigma).toInt + 10
             var z = 0.0
             var k = -cut
-            while (k <= cut) { z += math.exp(-k * k / (2.0 * s2)); k += 1 }
+            while (k <= cut) { z += math.exp(-k * k / (2.0 * s)); k += 1 }
             var cum = 0.0
             var ans = cut.toDouble
             var found = false
             k = -cut
             while (k <= cut && !found) {
-              cum += math.exp(-k * k / (2.0 * s2))
+              cum += math.exp(-k * k / (2.0 * s))
               if (cum / z >= p) { ans = k.toDouble; found = true }
               k += 1
             }
             ans
           }
         }
-      case Exponential(_) => throw new UnsupportedOperationException(
+      case _: Exponential => throw new UnsupportedOperationException(
         "the exponential mechanism releases an index, not additive noise; " +
           "it has no noise CDF")
     }
@@ -163,12 +255,13 @@ object Noise {
     * requested scale `b` is quantized UP to t/2^20 >= b, with
     * t = ceil(b * 2^20) computed exactly as a BigInt at every scale, so the
     * realized noise is never below the calibrated scale. A draw outside the
-    * Long range saturates at its end.
+    * Long range saturates at its end (calibration caps b at 2^52, see
+    * [[NoiseMechanism]], so a release never gets there).
     */
-  def sampleGeometric(b: Double, rng: RandomGenerator): Long = {
-    if (b == 0.0) return 0L
+  def sampleGeometric(b: Rat, rng: RandomGenerator): Long = {
+    if (b.isZero) return 0L
     require(!b.isInfinite, s"geometric scale must be finite, got $b")
-    val t = (Rat(b) * Rat(Quantum, One)).ceil.max(One)
+    val t = (b * Rat(Quantum, One)).ceil.max(One)
     saturate(sampleDiscreteLaplace(t, Quantum, rng))
   }
 
@@ -298,8 +391,8 @@ object Noise {
     * give their draw as a double.
     */
   def drawDouble(m: NoiseMechanism): Double = m match {
-    case NoiseMechanism.Laplace(b) => sampleLaplace(b, rng())
-    case NoiseMechanism.Gaussian(s2) => sampleGaussian(s2, rng())
+    case m: NoiseMechanism.Laplace => sampleLaplace(m.scale, rng())
+    case m: NoiseMechanism.Gaussian => sampleGaussian(m.scale, rng())
     case _ => drawLong(m).toDouble
   }
 
@@ -317,17 +410,16 @@ object Noise {
   def sampleGaussian(sigma2: Double, rng: RandomGenerator): Double =
     if (sigma2 == 0.0) 0.0 else rng.nextGaussian() * math.sqrt(sigma2)
 
-  /** Discrete Gaussian with variance parameter sigma2, sampled EXACTLY by
-    * rejection from a discrete Laplace proposal (Canonne-Kamath-Steinke,
-    * arXiv:2004.00010, Algorithm 3 — the sampler the reference uses for
-    * zCDP integer noise), with sigma^2 the exact rational value of
-    * `sigma2`. Acceptance is Θ(1), so there is no attempt cap. A draw
-    * outside the Long range saturates at its end.
+  /** Discrete Gaussian with the exact rational variance parameter
+    * sigma^2 = `s2`, sampled EXACTLY by rejection from a discrete Laplace
+    * proposal (Canonne-Kamath-Steinke, arXiv:2004.00010, Algorithm 3 — the
+    * sampler the reference uses for zCDP integer noise). Acceptance is Θ(1),
+    * so there is no attempt cap. A draw outside the Long range saturates at
+    * its end (calibration caps sigma at 2^52).
     */
-  def sampleDiscreteGaussian(sigma2: Double, rng: RandomGenerator): Long = {
-    if (sigma2 == 0.0) return 0L
-    require(!sigma2.isInfinite, s"discrete Gaussian variance must be finite, got $sigma2")
-    val s2 = Rat(sigma2)
+  def sampleDiscreteGaussian(s2: Rat, rng: RandomGenerator): Long = {
+    if (s2.isZero) return 0L
+    require(!s2.isInfinite, s"discrete Gaussian variance must be finite, got $s2")
     // floor(sqrt(x)) = floor(sqrt(floor(x))) for every real x >= 0
     val t = BigInt((s2.num / s2.den).bigInteger.sqrt()) + 1
     val shift = s2 / Rat(t, One)

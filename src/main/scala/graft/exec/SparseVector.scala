@@ -37,6 +37,15 @@ import graft.pipeline.Inputs
   */
 object SparseVector {
 
+  /** The threshold and answer Laplace scales. Sparse = c sequential
+    * AboveThreshold passes at eps/c each; within a pass,
+    * eps_1 = eps_2 = eps/(2c): rho ~ Lap(2c*sens/eps), nu ~ Lap(4c*sens/eps).
+    */
+  private[exec] def scales(epsilon: Double, sensitivity: Double, c: Int): (Double, Double) = {
+    def scale(k: Int) = NoiseMechanism.pure(epsilon, sensitivity, k.toLong * c, integer = false)
+    (scale(2).scale, scale(4).scale)
+  }
+
   /** Scan `values` in ascending `idCol` order and release the ids of the
     * first `maxPositives` queries whose `valueCol` exceeds `threshold`,
     * with total privacy cost `epsilon` (each query `sensitivity`-bounded
@@ -49,9 +58,7 @@ object SparseVector {
       threshold: Double, maxPositives: Int, epsilon: Double,
       sensitivity: Double = 1.0, maxQueries: Int = 65536): DataFrame = {
     require(maxPositives >= 1, s"maxPositives must be >= 1, got $maxPositives")
-    require(epsilon > 0.0,
-      s"epsilon must be positive (or infinite for the exact release), got $epsilon")
-    require(sensitivity > 0.0, s"sensitivity must be positive, got $sensitivity")
+    val (rhoScale, nuScale) = scales(epsilon, sensitivity, maxPositives)
     Inputs.present(values, "values", idCol, valueCol)
 
     // the query list is a privacy parameter the caller fixed up front —
@@ -65,10 +72,6 @@ object SparseVector {
         "list — aggregate or split the query set, or raise maxQueries " +
         "explicitly if the list really is that large")
     val c = maxPositives
-    // Sparse = c sequential AboveThreshold passes at eps/c each; within a
-    // pass, eps_1 = eps_2 = eps/(2c): rho ~ Lap(2c*sens/eps), nu ~ Lap(4c*sens/eps)
-    val rhoScale = if (epsilon.isInfinity) 0.0 else 2.0 * c * sensitivity / epsilon
-    val nuScale = if (epsilon.isInfinity) 0.0 else 4.0 * c * sensitivity / epsilon
 
     val rng = Noise.rng()
     var rho = Noise.sampleLaplace(rhoScale, rng)

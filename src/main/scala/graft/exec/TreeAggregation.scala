@@ -41,18 +41,14 @@ object TreeAggregation {
       df: DataFrame, tCol: String, countCol: String,
       maxT: Long, epsilon: Double, sensitivity: Double = 1.0): DataFrame = {
     require(maxT >= 1, "maxT must be positive")
-    require(epsilon > 0.0,
-      s"epsilon must be positive (or infinite for the exact release), got $epsilon")
-    require(sensitivity > 0.0, s"sensitivity must be positive, got $sensitivity")
+    val height = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxT - 1)) + 1
+    val mech = NoiseMechanism.pure(epsilon, sensitivity, height, integer = true)
     // the tree is sized by maxT: an index past it would decompose into
     // nodes that were never built (and never noised) — fail, don't drop
     val bounds = df.agg(min(col(tCol).cast("long")), max(col(tCol).cast("long"))).head()
     if (!bounds.isNullAt(1)) require(bounds.getLong(0) >= 0 && bounds.getLong(1) < maxT,
       s"time indexes must sit in [0, $maxT): found [${bounds.getLong(0)}, " +
         s"${bounds.getLong(1)}]")
-    val height = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxT - 1)) + 1
-    val scale =
-      if (epsilon.isInfinity) 0.0 else sensitivity * height / epsilon
 
     // every index contributes its count to `height` ancestor nodes:
     // node at level l covering t is j = t >> l
@@ -76,7 +72,7 @@ object TreeAggregation {
     }.reduce(_ unionByName _)
     val nodes = allNodes.join(sums, Seq("__l", "__j"), "left")
       .withColumn("__s", Noise.addLongNoise(
-        coalesce(col("__raw"), lit(0L)), NoiseMechanism.Geometric(scale)))
+        coalesce(col("__raw"), lit(0L)), mech))
       .select(col("__l"), col("__j"), col("__s"))
 
     // dyadic cover of [0, t]: with n = t+1, every SET bit l of n

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.exec.Noise
+import graft.budget.Rat
+import graft.exec.{Noise, NoiseMechanism}
 import graft.pipeline.Inputs
 
 /** Streaming operators over event tables (`readStream` sources). The
@@ -114,10 +115,9 @@ object Streaming {
       events: DataFrame, tsCol: String, keyCol: String,
       windowDuration: String, watermark: String,
       epsilon: Double, sensitivity: Double = 1.0): DataFrame = {
-    val scale = if (epsilon.isInfinity) 0.0 else sensitivity / epsilon
+    val mech = NoiseMechanism.pure(epsilon, sensitivity, 1, integer = true)
     windowedCounts(events, tsCol, keyCol, windowDuration, watermark)
-      .withColumn("count",
-        Noise.addLongNoise(col("count"), graft.exec.NoiseMechanism.Geometric(scale)))
+      .withColumn("count", Noise.addLongNoise(col("count"), mech))
   }
 
   /** Sliding-window counts: like [[windowedCounts]] but each event lands in
@@ -199,7 +199,6 @@ object Streaming {
       val totalEpsilon: Double, val perWindowEpsilon: Double,
       val ledgerPath: Option[String] = None,
       val leaseTtlMs: Long = DpStreamAccountant.DefaultLeaseTtlMs) {
-    import graft.budget.Rat
 
     // EXACT arithmetic, same discipline as the batch Session: every finite
     // double is a rational, so spend is tracked as released x perWindow in

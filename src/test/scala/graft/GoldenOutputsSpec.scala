@@ -53,7 +53,7 @@ class GoldenOutputsSpec extends SparkSpec {
     // sensitivity 1 at epsilon 2 -> geometric noise at scale 1/2, on the
     // one output column, named
     assert(s.noiseInfo(QueryBuilder("t").count(), PureDPBudget(2.0)) ===
-      Seq(NoiseInfo("count", NoiseMechanism.Geometric(0.5))))
+      Seq(NoiseInfo("count", NoiseMechanism.Geometric(Rat(1, 2)))))
   }
 
   test("golden: QueryBuilder histogram sugar — binned keys in bin order") {

@@ -34,12 +34,12 @@ class PrivacyCalibrationSpec extends SparkSpec {
       .groupby(keys).countDistinct(Seq("uid"), mechanism = MechanismHint.Laplace)
     // L1 across <=4 touched groups: sens 4 at eps = sqrt(2 rho) = 1 -> scale 4.
     // The (wrong) L2 credit would give ceil(sqrt(4)) = 2 -> scale 2.
-    assert(idSess.noiseInfo(q, rho).head.mechanism === Geometric(4.0))
+    assert(idSess.noiseInfo(q, rho).head.mechanism === Geometric(Rat(4)))
     // Default hint resolves to discrete Gaussian, which IS L2: sens 2,
     // sigma^2 = 4/(2*0.5) = 4.
     val qg = QueryBuilder("t").enforce(MaxGroupsPerID("grp", 4))
       .groupby(keys).countDistinct(Seq("uid"))
-    assert(idSess.noiseInfo(qg, rho).head.mechanism === DiscreteGaussian(4.0))
+    assert(idSess.noiseInfo(qg, rho).head.mechanism === DiscreteGaussian(Rat(4)))
   }
 
   test("Laplace hint under zCDP: constraint-pair credit is also gated") {
@@ -49,11 +49,11 @@ class PrivacyCalibrationSpec extends SparkSpec {
       .groupby(keys).count(mechanism = h)
     // Gaussian family: L2 credit 1*sqrt(4) = 2 -> sigma^2 = 4/(2*0.5) = 4
     assert(idSess.noiseInfo(q(MechanismHint.Default), rho).head.mechanism
-      === DiscreteGaussian(4.0))
+      === DiscreteGaussian(Rat(4)))
     // Laplace hint: L1 bound 1*4 = 4 at eps = 1 -> scale 4 (sqrt credit would
     // wrongly give 2)
     assert(idSess.noiseInfo(q(MechanismHint.Laplace), rho).head.mechanism
-      === Geometric(4.0))
+      === Geometric(Rat(4)))
   }
 
   test("squared L2 credits scale QUADRATICALLY through row-stability factors") {
@@ -71,13 +71,13 @@ class PrivacyCalibrationSpec extends SparkSpec {
       .flatMap(r => Seq(r, r), Seq("x" -> ColumnDescriptor(graft.types.ColumnType.Integer)),
         maxRows = 2, augment = true)
       .groupby(keys).count()
-    assert(s.noiseInfo(q, rho).head.mechanism === DiscreteGaussian(8.0))
+    assert(s.noiseInfo(q, rho).head.mechanism === DiscreteGaussian(Rat(8)))
     // and the L1 path sees distance 2*2 = 4: Laplace hint at eps=1 -> scale 4
     val qL = QueryBuilder("t")
       .flatMap(r => Seq(r, r), Seq("x" -> ColumnDescriptor(graft.types.ColumnType.Integer)),
         maxRows = 2, augment = true)
       .groupby(keys).count(mechanism = MechanismHint.Laplace)
-    assert(s.noiseInfo(qL, rho).head.mechanism === Geometric(4.0))
+    assert(s.noiseInfo(qL, rho).head.mechanism === Geometric(Rat(4)))
   }
 
   test("views over credited tables keep the L2 credit " +
@@ -94,10 +94,10 @@ class PrivacyCalibrationSpec extends SparkSpec {
     val keys = KeySet.fromColumn("grp", Seq("a", "b"))
     // same variance as the inline chain: Delta_2^2 = (1*2)^2 * 2 = 8
     assert(s.noiseInfo(QueryBuilder("doubled").groupby(keys).count(), rho)
-      .head.mechanism === DiscreteGaussian(8.0))
+      .head.mechanism === DiscreteGaussian(Rat(8)))
     // ungrouped still uses the L1 distance 4 -> sigma^2 = 16
     assert(s.noiseInfo(QueryBuilder("doubled").count(), rho)
-      .head.mechanism === DiscreteGaussian(16.0))
+      .head.mechanism === DiscreteGaussian(Rat(16)))
   }
 
   test("AddMaxRowsInMaxGroups: L2 credit needs Gaussian family AND matching group-by") {
@@ -111,30 +111,30 @@ class PrivacyCalibrationSpec extends SparkSpec {
     // grouped by g, default hint -> discrete Gaussian with the L2 credit:
     // sens 2, sigma^2 = 4/(2*0.5) = 4
     assert(s.noiseInfo(QueryBuilder("t").groupby(gKeys).count(), rho)
-      .head.mechanism === DiscreteGaussian(4.0))
+      .head.mechanism === DiscreteGaussian(Rat(4)))
     // UNGROUPED count: the 4 changed rows all hit one value -> L1 = 4,
     // sigma^2 = 16/(2*0.5) = 16 (the credit would wrongly give 4)
     assert(s.noiseInfo(QueryBuilder("t").count(), rho).head.mechanism
-      === DiscreteGaussian(16.0))
+      === DiscreteGaussian(Rat(16)))
     // grouped by a DIFFERENT column: same, no credit
     val vKeys = KeySet.fromColumn("v", Seq(1, 2))
     assert(s.noiseInfo(QueryBuilder("t").groupby(vKeys).count(), rho)
-      .head.mechanism === DiscreteGaussian(16.0))
+      .head.mechanism === DiscreteGaussian(Rat(16)))
     // Laplace hint under zCDP -> L1 mechanism even when grouped by g:
     // eps = sqrt(2*0.5) = 1 -> scale 4 (the sqrt credit would give 2)
     assert(s.noiseInfo(QueryBuilder("t").groupby(gKeys)
       .count(mechanism = MechanismHint.Laplace), rho).head.mechanism
-      === Geometric(4.0))
+      === Geometric(Rat(4)))
     // exponential mechanism (quantile) composes in L1 too: eps/sens =
     // sqrt(8*0.5)/4 = 0.5
     assert(s.noiseInfo(QueryBuilder("t").groupby(gKeys).median("v", 0, 10), rho)
-      .head.mechanism === Exponential(0.5))
+      .head.mechanism === Exponential(Rat(1, 2)))
     // the credit follows renames and dies with projection of g
     assert(s.noiseInfo(QueryBuilder("t").rename(Map("g" -> "h"))
       .groupby(KeySet.fromColumn("h", Seq("a", "b"))).count(), rho)
-      .head.mechanism === DiscreteGaussian(4.0))
+      .head.mechanism === DiscreteGaussian(Rat(4)))
     assert(s.noiseInfo(QueryBuilder("t").select("v")
-      .groupby(vKeys).count(), rho).head.mechanism === DiscreteGaussian(16.0))
+      .groupby(vKeys).count(), rho).head.mechanism === DiscreteGaussian(Rat(16)))
   }
 
   test("L2 credit dies when the grouping column's values are rewritten") {
@@ -148,22 +148,22 @@ class PrivacyCalibrationSpec extends SparkSpec {
     val gKeys = KeySet.fromColumn("g", Seq("a", "b"))
     // baseline: credit applies (sens 2 -> sigma^2 4 at rho 0.5)
     assert(s.noiseInfo(QueryBuilder("t").groupby(gKeys).count(), rho)
-      .head.mechanism === DiscreteGaussian(4.0))
+      .head.mechanism === DiscreteGaussian(Rat(4)))
     // replacing nulls in g can merge protected groups -> L1 (sens 4 -> 16)
     assert(s.noiseInfo(QueryBuilder("t").replaceNullAndNan(Map("g" -> "z"))
-      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(16.0))
+      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(Rat(16)))
     // the no-argument form rewrites every non-id column, g included
     assert(s.noiseInfo(QueryBuilder("t").replaceNullAndNan()
-      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(16.0))
+      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(Rat(16)))
     // in-place rebinning coarsens the groups -> credit dies
     assert(s.noiseInfo(QueryBuilder("t")
       .binColumn("g", BinningSpec(Seq("a", "zz")), name = Some("g"))
       .groupby(KeySet.fromColumn("g", Seq("['a', 'zz']"))).count(), rho)
-      .head.mechanism === DiscreteGaussian(16.0))
+      .head.mechanism === DiscreteGaussian(Rat(16)))
     // binning to a NEW column leaves the credit intact for group-bys on g
     assert(s.noiseInfo(QueryBuilder("t")
       .binColumn("v", BinningSpec(Seq(0.0, 10.0)))
-      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(4.0))
+      .groupby(gKeys).count(), rho).head.mechanism === DiscreteGaussian(Rat(4)))
   }
 
   test("delta-only budgets cannot drive noise addition") {
@@ -177,15 +177,17 @@ class PrivacyCalibrationSpec extends SparkSpec {
   }
 
   test("partition-selection threshold is d_in-aware") {
-    val (b1, tau1) = MeasurementPlanner.partitionSelectionParams(1.0, 1.0, 1e-6)
-    // classic sens-1 formula: b = 2/eps, tau = 1 + b*ln(1/(2 delta))
-    assert(b1 === 2.0)
-    assert(math.abs(tau1 - (1.0 + 2.0 * math.log(1.0 / 2e-6))) < 1e-9)
-    val (b3, tau3) = MeasurementPlanner.partitionSelectionParams(3.0, 1.0, 1e-6)
-    assert(b3 === 6.0)
+    val delta = Rat(1, 1000000)
+    val (g1, tau1) = graft.exec.NoiseMechanism.partitionSelection(Rat(1), Rat(1), delta)
+    // classic sens-1 formula: b = 2/eps, tau = 1 + b*ln(1/(2 delta)),
+    // released at the least count >= tau
+    assert(g1.b === Rat(2))
+    assert(tau1 === math.ceil(1.0 + 2.0 * math.log(1.0 / 2e-6)).toLong)
+    val (g3, tau3) = graft.exec.NoiseMechanism.partitionSelection(Rat(3), Rat(1), delta)
+    assert(g3.b === Rat(6))
     // sens + b*ln(maxGroups/(2 delta)): clears one unit's per-group
     // contribution and splits delta across the 3 groups it could create
-    assert(math.abs(tau3 - (3.0 + 6.0 * math.log(3.0 / 2e-6))) < 1e-9)
+    assert(tau3 === math.ceil(3.0 + 6.0 * math.log(3.0 / 2e-6)).toLong)
     assert(tau3 > tau1)
   }
 

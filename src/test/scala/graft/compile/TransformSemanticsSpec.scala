@@ -82,8 +82,8 @@ class TransformSemanticsSpec extends SparkSpec {
         .count(),
       graft.budget.PureDPBudget(1)).head.mechanism
     // one input row can become maxRows output rows: sens 2 -> scale 2, 5 -> 5
-    assert(scaleFor(2) === graft.exec.NoiseMechanism.Geometric(2.0))
-    assert(scaleFor(5) === graft.exec.NoiseMechanism.Geometric(5.0))
+    assert(scaleFor(2) === graft.exec.NoiseMechanism.Geometric(Rat(2)))
+    assert(scaleFor(5) === graft.exec.NoiseMechanism.Geometric(Rat(5)))
   }
 
   test("map replace narrows to the declared columns; augment keeps inputs") {

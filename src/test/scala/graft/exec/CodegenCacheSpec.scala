@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.budget.Rat
 
 /** What keeps repeated DP releases compiled. Spark's code-generation cache
   * is keyed by generated source, and its size is a static conf that
@@ -33,13 +34,13 @@ class CodegenCacheSpec extends SparkSpec {
     def doubleNoised(m: NoiseMechanism) =
       sources(ids.select(Noise.addDoubleNoise(col("id").cast("double"), m).as("v")))
 
-    val long = Seq(NoiseMechanism.Geometric(2.0), NoiseMechanism.Geometric(4.0),
-      NoiseMechanism.DiscreteGaussian(3.0)).map(longNoised)
+    val long = Seq(NoiseMechanism.Geometric(Rat(2)), NoiseMechanism.Geometric(Rat(4)),
+      NoiseMechanism.DiscreteGaussian(Rat(3))).map(longNoised)
     assert(long.head.size === 1)
     assert(long.head.head.contains("graft.exec.Noise.drawLong("), long.head.head)
     long.tail.foreach(s => assert(s === long.head))
 
-    val double = Seq(NoiseMechanism.Laplace(2.0), NoiseMechanism.Gaussian(3.0))
+    val double = Seq(NoiseMechanism.Laplace(Rat(2)), NoiseMechanism.Gaussian(Rat(3)))
       .map(doubleNoised)
     assert(double.head.size === 1)
     assert(double.head.head.contains("graft.exec.Noise.drawDouble("), double.head.head)

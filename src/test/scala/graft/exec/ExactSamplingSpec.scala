@@ -47,7 +47,7 @@ class ExactSamplingSpec extends AnyFunSuite {
   test("sampleGeometric draws no floating point, up to b = 2^50") {
     for (b <- Seq(0.5, 2.0, math.pow(2, 35), math.pow(2, 50))) {
       val rng = new IntegerOnly(11)
-      val xs = Array.fill(2000)(Noise.sampleGeometric(b, rng))
+      val xs = Array.fill(2000)(Noise.sampleGeometric(Rat(b), rng))
       assert(rng.draws >= 2000, s"b=$b")
       assert(xs.exists(_ > 0) && xs.exists(_ < 0), s"b=$b")
     }
@@ -57,14 +57,14 @@ class ExactSamplingSpec extends AnyFunSuite {
       "10^40 (a BigInt proposal scale)") {
     for (s2 <- Seq(0.25, 9.0, 1e6, 1e40)) {
       val rng = new IntegerOnly(12)
-      val xs = Array.fill(2000)(Noise.sampleDiscreteGaussian(s2, rng))
+      val xs = Array.fill(2000)(Noise.sampleDiscreteGaussian(Rat(s2), rng))
       assert(rng.draws >= 2000, s"sigma^2=$s2")
       assert(xs.exists(_ > 0) && xs.exists(_ < 0), s"sigma^2=$s2")
     }
   }
 
   test("a draw past the Long range saturates at its end") {
-    val xs = Array.fill(200)(Noise.sampleDiscreteGaussian(1e40, new IntegerOnly(13)))
+    val xs = Array.fill(200)(Noise.sampleDiscreteGaussian(Rat(1e40), new IntegerOnly(13)))
     assert(xs.contains(Long.MaxValue) || xs.contains(Long.MinValue))
   }
 
@@ -81,7 +81,7 @@ class ExactSamplingSpec extends AnyFunSuite {
     val b = math.pow(2, 35)
     val n = 200000
     val rng = new SplittableRandom(15)
-    val xs = Array.fill(n)(Noise.sampleGeometric(b, rng).toDouble)
+    val xs = Array.fill(n)(Noise.sampleGeometric(Rat(b), rng).toDouble)
     val mean = xs.sum / n
     val varEmp = xs.map(x => (x - mean) * (x - mean)).sum / n
     // 2a/(1-a)^2 with a = exp(-1/b) is 2b^2 - 1/6 + O(1/b^2)

@@ -2,13 +2,15 @@ package graft.exec
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.budget.Rat
+
 /** get_bounds' kernel as a plain function over a group's bucket counts:
   * the deterministic infinite-budget rule and the finite-eps selection,
   * seeded.
   */
 class GetBoundsKernelSpec extends AnyFunSuite {
 
-  private val Inf = Double.PositiveInfinity
+  private val Inf = Rat.Inf
 
   /** Dense counts over GetBoundsImpl.Exponents from (exponent -> rows). */
   private def counts(rows: (Int, Long)*): Array[Long] = {
@@ -38,7 +40,7 @@ class GetBoundsKernelSpec extends AnyFunSuite {
     // 10 rows at each k in 0..19: 95% of 200 is reached at k = 18
     val c = counts((0 to 19).map(k => k -> 10L): _*)
     assert(GetBoundsImpl.finish(c, Inf, rng) === 18)
-    val picks = (1 to 4000).map(_ => GetBoundsImpl.finish(c, 0.5, rng))
+    val picks = (1 to 4000).map(_ => GetBoundsImpl.finish(c, Rat(1, 2), rng))
     val freq = picks.groupBy(identity).view.mapValues(_.size).toMap.withDefaultValue(0)
     assert(freq.maxBy(_._2)._1 === 18, freq.toString)
     // below the target the distance grows by 200 per bucket; every bucket
@@ -51,7 +53,7 @@ class GetBoundsKernelSpec extends AnyFunSuite {
     val c = counts((0 to 19).map(k => k -> 10L): _*)
     def run(seed: Long) = {
       val rng = new java.util.Random(seed)
-      (1 to 50).map(_ => GetBoundsImpl.finish(c, 0.5, rng))
+      (1 to 50).map(_ => GetBoundsImpl.finish(c, Rat(1, 2), rng))
     }
     assert(run(7) === run(7))
     assert(run(7) !== run(8))

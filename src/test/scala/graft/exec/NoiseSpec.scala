@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{avg, col, lit, var_pop}
 
 import graft.SparkSpec
+import graft.budget.Rat
 
 /** Statistical checks of the samplers against their documented
   * distributions (reference noise-scale ground truth: a count at
@@ -15,7 +16,7 @@ class NoiseSpec extends SparkSpec {
 
   test("geometric: mean 0, variance 2a/(1-a)^2 at b=2") {
     val b = 2.0
-    val xs = Array.fill(N)(Noise.sampleGeometric(b, Noise.rng()).toDouble)
+    val xs = Array.fill(N)(Noise.sampleGeometric(Rat(b), Noise.rng()).toDouble)
     val mean = xs.sum / N
     val varEmp = xs.map(x => (x - mean) * (x - mean)).sum / N
     val a = math.exp(-1.0 / b)
@@ -42,7 +43,7 @@ class NoiseSpec extends SparkSpec {
 
   test("discrete gaussian: integer-valued, variance ~ sigma^2") {
     val s2 = 9.0
-    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, Noise.rng()).toDouble)
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(Rat(s2), Noise.rng()).toDouble)
     val varEmp = xs.map(x => x * x).sum / N
     // CKS discrete Gaussian variance is within O(1) of sigma^2 for sigma >= 1
     assert(math.abs(varEmp - s2) / s2 < 0.1, s"var $varEmp vs $s2")
@@ -58,15 +59,15 @@ class NoiseSpec extends SparkSpec {
       val geometricVar = 2.0 * a / ((1 - a) * (1 - a))
       Seq[(String, Column, Double, Double)](
         ("geometric(2) long", Noise.addLongNoise(lit(0L),
-          NoiseMechanism.Geometric(2.0)), geometricVar, 0.05),
+          NoiseMechanism.Geometric(Rat(2))), geometricVar, 0.05),
         ("discrete gaussian(9) long", Noise.addLongNoise(lit(0L),
-          NoiseMechanism.DiscreteGaussian(9.0)), 9.0, 0.1),
+          NoiseMechanism.DiscreteGaussian(Rat(9))), 9.0, 0.1),
         ("geometric(2) double", Noise.addDoubleNoise(lit(0.0),
-          NoiseMechanism.Geometric(2.0)), geometricVar, 0.05),
+          NoiseMechanism.Geometric(Rat(2))), geometricVar, 0.05),
         ("laplace(3) double", Noise.addDoubleNoise(lit(0.0),
-          NoiseMechanism.Laplace(3.0)), 18.0, 0.05),
+          NoiseMechanism.Laplace(Rat(3))), 18.0, 0.05),
         ("gaussian(4) double", Noise.addDoubleNoise(lit(0.0),
-          NoiseMechanism.Gaussian(4.0)), 4.0, 0.05)
+          NoiseMechanism.Gaussian(Rat(4))), 4.0, 0.05)
       ).foreach { case (what, noised, varTrue, tol) =>
         val r = zeros.select(noised.as("x"))
           .agg(avg(col("x")), var_pop(col("x"))).head()
@@ -103,7 +104,7 @@ class NoiseSpec extends SparkSpec {
     val a = math.exp(-1.0 / b)
     val p0 = (1 - a) / (1 + a)
     def pmf(k: Long): Double = p0 * math.pow(a, math.abs(k).toDouble)
-    val xs = Array.fill(N)(Noise.sampleGeometric(b, Noise.rng()))
+    val xs = Array.fill(N)(Noise.sampleGeometric(Rat(b), Noise.rng()))
     val (chi2, dof) = chiSquared(xs, pmf, -12, 12)
     // dof ~ 24; chi-squared critical value at alpha = 1e-6 is ~65 — a
     // genuinely wrong scale (b=1.9 or 2.1) lands in the thousands at N=200k
@@ -115,7 +116,7 @@ class NoiseSpec extends SparkSpec {
     // normalization over the effective support (|k| <= 40 is 13 sigma)
     val z = (-40 to 40).map(k => math.exp(-k * k / (2 * s2))).sum
     def pmf(k: Long): Double = math.exp(-k * k / (2 * s2)) / z
-    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, Noise.rng()))
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(Rat(s2), Noise.rng()))
     val (chi2, dof) = chiSquared(xs, pmf, -10, 10)
     assert(chi2 < 65.0, s"chi2 $chi2 at dof $dof")
   }
@@ -126,7 +127,7 @@ class NoiseSpec extends SparkSpec {
     val z = (-20 to 20).map(k => math.exp(-k * k / (2 * s2))).sum
     def pmf(k: Long): Double = math.exp(-k * k / (2 * s2)) / z
     val rng = new java.util.SplittableRandom(16)
-    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(s2, rng))
+    val xs = Array.fill(N)(Noise.sampleDiscreteGaussian(Rat(s2), rng))
     val (chi2, dof) = chiSquared(xs, pmf, -4, 4)
     // dof ~ 6; the critical value at alpha = 1e-6 is ~39
     assert(chi2 < 40.0, s"chi2 $chi2 at dof $dof")
@@ -148,22 +149,23 @@ class NoiseSpec extends SparkSpec {
   }
 
   test("zero scale is exactly noiseless") {
-    assert((1 to 1000).forall(_ => Noise.sampleGeometric(0.0, Noise.rng()) == 0L))
+    assert((1 to 1000).forall(_ => Noise.sampleGeometric(Rat.zero, Noise.rng()) == 0L))
     assert((1 to 1000).forall(_ => Noise.sampleLaplace(0.0, Noise.rng()) == 0.0))
     assert((1 to 1000).forall(_ => Noise.sampleGaussian(0.0, Noise.rng()) == 0.0))
-    assert((1 to 1000).forall(_ => Noise.sampleDiscreteGaussian(0.0, Noise.rng()) == 0L))
-    assert(NoiseMechanism.Geometric(0.0).isNoiseless)
-    assert(NoiseMechanism.Exponential(Double.PositiveInfinity).isNoiseless)
+    assert((1 to 1000).forall(_ => Noise.sampleDiscreteGaussian(Rat.zero, Noise.rng()) == 0L))
+    assert(NoiseMechanism.Geometric(Rat(0)).isNoiseless)
+    assert(NoiseMechanism.Exponential(Rat.Inf).isNoiseless)
   }
 
   test("negative or NaN mechanism scales refuse at construction — the " +
       "samplers would otherwise clamp them to near-zero noise") {
-    for (mk <- Seq[Double => NoiseMechanism](
+    for (mk <- Seq[Rat => NoiseMechanism](
         NoiseMechanism.Geometric(_), NoiseMechanism.Laplace(_),
         NoiseMechanism.Gaussian(_), NoiseMechanism.DiscreteGaussian(_),
         NoiseMechanism.Exponential(_))) {
-      intercept[IllegalArgumentException] { mk(-1.0) }
-      intercept[IllegalArgumentException] { mk(Double.NaN) }
+      intercept[IllegalArgumentException] { mk(Rat(-1)) }
+      // a NaN parameter cannot be built: it has no rational value
+      intercept[IllegalArgumentException] { mk(Rat(Double.NaN)) }
     }
   }
 }

@@ -50,7 +50,7 @@ class QuantileFidelitySpec extends AnyFunSuite {
     val rng = new java.util.Random(seed)
     val counts = countsOf(values)
     (1 to reps).map(_ =>
-      DpQuantile.finish(counts, q, Low, High, eps, rng))
+      DpQuantile.finish(counts, q, Low, High, graft.budget.Rat(eps), rng))
   }
 
   /** t = 3 (95%) rank-error bound. u_opt on this corpus is ~0.5 (each bin

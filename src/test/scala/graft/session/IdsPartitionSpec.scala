@@ -48,7 +48,7 @@ class IdsPartitionSpec extends SparkSpec {
     // (reference table_stability rows: (INF_BUDGET, 2), (INF_BUDGET_ZCDP, 2))
     assert(kids("part0").noiseInfo(QueryBuilder("part0").count(),
       PureDPBudget(1)).head.mechanism
-      === graft.exec.NoiseMechanism.Geometric(2.0))
+      === graft.exec.NoiseMechanism.Geometric(Rat(2)))
     // with maxIDs > 1 the IDs factor rides in viewStability; describe must
     // surface the full k * maxIDs distance, not the bare AddMaxRows cap
     val s3 = Session.fromDataFrame(spark, Inf, "id_a1", df,
@@ -59,7 +59,7 @@ class IdsPartitionSpec extends SparkSpec {
     assert(k3("pa").describe().contains("effective rows distance: 6"))
     assert(k3("pa").noiseInfo(QueryBuilder("pa").count(),
       PureDPBudget(1)).head.mechanism
-      === graft.exec.NoiseMechanism.Geometric(6.0))
+      === graft.exec.NoiseMechanism.Geometric(Rat(6)))
   }
 
   test("MaxGroupsPerID on the partition column keeps children as IDs tables " +
@@ -95,7 +95,7 @@ class IdsPartitionSpec extends SparkSpec {
       Seq("part0" -> "A", "part1" -> "B"))
     val q = QueryBuilder("part0").enforce(MaxRowsPerID(1)).count()
     assert(kids("part0").noiseInfo(q, PureDPBudget(1)).head.mechanism
-      === graft.exec.NoiseMechanism.Geometric(2.0))
+      === graft.exec.NoiseMechanism.Geometric(Rat(2)))
     // describe surfaces the distance actually driving calibration
     assert(kids("part0").describe().contains("effective id distance: 2"))
 
@@ -109,7 +109,7 @@ class IdsPartitionSpec extends SparkSpec {
       Seq("part0" -> "A", "part1" -> "B"))
     kz("part0").noiseInfo(QueryBuilder("part0").enforce(MaxRowsPerID(1)).count(),
       graft.budget.RhoZCDPBudget(Rat(1, 2))).head.mechanism match {
-      case graft.exec.NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === 2.0)
+      case graft.exec.NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === Rat(2))
       case other => fail(s"expected DiscreteGaussian, got $other")
     }
     // the zCDP child still answers exactly at infinite budget: part0 holds
@@ -124,7 +124,7 @@ class IdsPartitionSpec extends SparkSpec {
         .count(mechanism = graft.ir.MechanismHint.Laplace),
       graft.budget.RhoZCDPBudget(Rat(1, 4))).head.mechanism match {
       case graft.exec.NoiseMechanism.Geometric(b) =>
-        assert(b >= 2.0 && b < 2.0 + 1e-9)
+        assert(b >= Rat(2) && b < Rat(2) + Rat(1, 1000000000))
       case other => fail(s"expected Geometric, got $other")
     }
   }
@@ -148,7 +148,7 @@ class IdsPartitionSpec extends SparkSpec {
     assert(grand("gx").noiseInfo(
       QueryBuilder("gx").enforce(MaxRowsPerID(1)).count(),
       PureDPBudget(1)).head.mechanism
-      === graft.exec.NoiseMechanism.Geometric(4.0))
+      === graft.exec.NoiseMechanism.Geometric(Rat(4)))
 
     val zInf = graft.budget.RhoZCDPBudget(Rat.Inf)
     val sz = Session.fromDataFrame(spark, zInf, "id_a1", df, AddRowsWithID("id"))
@@ -165,7 +165,7 @@ class IdsPartitionSpec extends SparkSpec {
     gz("gx").noiseInfo(
       QueryBuilder("gx").enforce(MaxRowsPerID(1)).count(),
       graft.budget.RhoZCDPBudget(Rat(1, 2))).head.mechanism match {
-      case graft.exec.NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === 4.0)
+      case graft.exec.NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === Rat(4))
       case other => fail(s"expected DiscreteGaussian, got $other")
     }
   }

@@ -168,10 +168,10 @@ class IdsSystemSpec extends SparkSpec {
     val q = QueryBuilder("t").enforce(MaxRowsPerID(3)).count()
     // d_in = 1 user, 3 rows per user, eps 1 -> geometric scale 3
     assert(s.noiseInfo(q, PureDPBudget(1)).head.mechanism
-      === NoiseMechanism.Geometric(3.0))
+      === NoiseMechanism.Geometric(Rat(3)))
     val q2 = QueryBuilder("t").enforce(MaxRowsPerID(1)).count()
     assert(s.noiseInfo(q2, PureDPBudget(Rat(1, 2))).head.mechanism
-      === NoiseMechanism.Geometric(2.0))
+      === NoiseMechanism.Geometric(Rat(2)))
   }
 
   test("quantile on an IDs table is deterministic at infinite budget") {

@@ -433,7 +433,7 @@ class RowsSystemSpec extends SparkSpec {
     // under its infinite leaf budgets... here finite: noiseInfo pins scale 1
     assert(grand("txp").noiseInfo(QueryBuilder("txp").count(),
       PureDPBudget(1.0)).head.mechanism
-      === graft.exec.NoiseMechanism.Geometric(1.0))
+      === graft.exec.NoiseMechanism.Geometric(Rat(1)))
     // and each grandchild's budget is the full partition budget
     assert(grand("txp").remainingPrivacyBudget === PureDPBudget(2.0))
     grand("txp").evaluate(QueryBuilder("txp").count(), PureDPBudget(2.0))

@@ -56,7 +56,7 @@ class SessionSpec extends SparkSpec {
     val q = QueryBuilder("a").enforce(MaxRowsPerID(1)).count()
     // joint d_in = 2, MaxRowsPerID(1) => sens 2; eps 0.5 -> scale 4
     assert(s.noiseInfo(q, PureDPBudget(0.5)).head.mechanism
-      === NoiseMechanism.Geometric(4.0))
+      === NoiseMechanism.Geometric(Rat(4)))
 
     // multiple private tables: an undeclared id space is a builder error
     val ex = intercept[IllegalArgumentException] {
@@ -319,7 +319,7 @@ class SessionSpec extends SparkSpec {
   test("finite-budget count is noisy but near truth; noiseInfo reports scale 2 at eps=0.5") {
     val s = rowSession(PureDPBudget(Rat.Inf))
     val info = s.noiseInfo(QueryBuilder("t").count(), PureDPBudget(0.5))
-    assert(info === Seq(graft.exec.NoiseInfo("count", NoiseMechanism.Geometric(2.0))))
+    assert(info === Seq(graft.exec.NoiseInfo("count", NoiseMechanism.Geometric(Rat(2)))))
     val noisy = (1 to 50).map(_ =>
       s.evaluate(QueryBuilder("t").count(), PureDPBudget(0.5)).collect().head.getLong(0))
     assert(noisy.exists(_ != 6L), "noise should perturb some draws")
@@ -330,7 +330,7 @@ class SessionSpec extends SparkSpec {
     val s = Session.fromDataFrame(spark, RhoZCDPBudget(Rat.Inf), "t", df, AddOneRow())
     val info = s.noiseInfo(QueryBuilder("t").count(), RhoZCDPBudget(0.5))
     info.head.mechanism match {
-      case NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === 1.0) // 1/(2*0.5)
+      case NoiseMechanism.DiscreteGaussian(s2) => assert(s2 === Rat(1)) // 1/(2*0.5)
       case other => fail(s"expected DiscreteGaussian, got $other")
     }
     intercept[IllegalArgumentException] {
@@ -402,7 +402,7 @@ class SessionSpec extends SparkSpec {
     // fan-out of pub on flag is 2 -> count sensitivity 2 -> scale 2/0.5 = 4
     val info = s.noiseInfo(
       QueryBuilder("t").joinPublic("pub", Seq("flag")).count(), PureDPBudget(0.5))
-    assert(info.head.mechanism === NoiseMechanism.Geometric(4.0))
+    assert(info.head.mechanism === NoiseMechanism.Geometric(Rat(4)))
   }
 
   test("suppress drops below-threshold groups") {
@@ -505,20 +505,20 @@ class SessionSpec extends SparkSpec {
       AddMaxRowsInMaxGroups("flag", maxGroups = 2, maxRowsPerGroup = 3))
     // PureDP: d_in = 6 -> count scale 6/eps = 12 at eps 0.5
     val info = s.noiseInfo(QueryBuilder("t").count(), PureDPBudget(0.5))
-    assert(info.head.mechanism === NoiseMechanism.Geometric(12.0))
+    assert(info.head.mechanism === NoiseMechanism.Geometric(Rat(12)))
     val sz = Session.fromDataFrame(spark, RhoZCDPBudget(Rat.Inf), "t", df,
       AddMaxRowsInMaxGroups("flag", maxGroups = 2, maxRowsPerGroup = 3))
     // zCDP UNGROUPED count: all 6 changed rows can hit the single released
     // value, so the sqrt credit must NOT apply — sigma^2 = 36/(2*0.5) = 36
     val infoZ = sz.noiseInfo(QueryBuilder("t").count(), RhoZCDPBudget(0.5))
-    assert(infoZ.head.mechanism === NoiseMechanism.DiscreteGaussian(36.0))
+    assert(infoZ.head.mechanism === NoiseMechanism.DiscreteGaussian(Rat(36)))
     // zCDP grouped BY the protected change's column: per-group structure
     // aligns, Delta_2 = 3*sqrt(2) carried as the exact square 18 (no ceil)
     // -> sigma^2 = 18/(2*0.5) = 18, the reference's symbolic calibration
     val keys = KeySet.fromColumn("flag", Seq("A", "B"))
     val infoG = sz.noiseInfo(QueryBuilder("t").groupby(keys).count(),
       RhoZCDPBudget(0.5))
-    assert(infoG.head.mechanism === NoiseMechanism.DiscreteGaussian(18.0))
+    assert(infoG.head.mechanism === NoiseMechanism.DiscreteGaussian(Rat(18)))
   }
 
   test("accountant tree: later sibling retires earlier; parent retires children") {

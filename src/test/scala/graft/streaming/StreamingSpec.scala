@@ -127,6 +127,24 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("noisy windowed counts refuse a non-positive epsilon or sensitivity " +
+      "when called") {
+    val sqlCtx = spark.sqlContext
+    import sqlCtx.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = sqlCtx
+    val events = MemoryStream[(Timestamp, String)].toDF().toDF("ts", "etype")
+    def counts(epsilon: Double, sensitivity: Double) = Streaming.noisyWindowedCounts(
+      events, "ts", "etype", "10 minutes", "5 minutes", epsilon, sensitivity)
+    // epsilon = 0 would build an infinite scale, which fails only on the
+    // first micro-batch; sensitivity 0 would release exact counts
+    assert(intercept[IllegalArgumentException](counts(0.0, 1.0))
+      .getMessage.contains("epsilon"))
+    assert(intercept[IllegalArgumentException](counts(1.0, 0.0))
+      .getMessage.contains("sensitivity"))
+    assert(intercept[IllegalArgumentException](counts(1.0, -1.0))
+      .getMessage.contains("sensitivity"))
+  }
+
   test("event-level epsilon: tumbling composes in parallel, sliding by overlap") {
     // tumbling: window == slide, overlap 1
     assert(Streaming.eventLevelEpsilon(0.5, 600000L, 600000L) === 0.5)
