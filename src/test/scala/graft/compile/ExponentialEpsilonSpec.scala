@@ -28,7 +28,7 @@ class ExponentialEpsilonSpec extends AnyFunSuite {
     }
   }
 
-  test("zCDP: at most sqrt(8 rho)/l1, where the nearest double is above") {
+  test("zCDP: at most sqrt(8 rho)/l1; the nearest double is above") {
     // rho = 1/4: 8 rho = 2 is exact in doubles and math.sqrt(2.0) rounds
     // up; rho = 1/3 is above sqrt(8 rho) at both l1
     for (rho <- Seq(Rat(1, 3), Rat(1, 4)); l1 <- Seq(1L, 3L)) {
