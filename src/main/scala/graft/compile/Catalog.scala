@@ -52,9 +52,10 @@ object Metric {
     * materializes); the sensitivity calculation picks the L2 bound only
     * when the selected mechanism is Gaussian-family — a zCDP *budget*
     * alone is not enough, since a Laplace hint under zCDP lowers to a
-    * pure-DP mechanism that needs the L1 bound.
+    * pure-DP mechanism that needs the L1 bound. Lowered once per base
+    * table, when the session is built.
     */
-  def fromProtectedChange(pc: ProtectedChange, budget: PrivacyBudget): Metric =
+  def fromProtectedChange(pc: ProtectedChange): Metric =
     pc match {
       case AddMaxRows(n) => RowsMetric(Rat(n))
       case AddMaxRowsInMaxGroups(gcol, groups, perGroup) =>
@@ -65,32 +66,24 @@ object Metric {
     }
 }
 
-/** A private table as the compiler sees it: data + schema + unit of
-  * protection + constraints established so far (reference: Catalog +
-  * accountant state, _catalog.py:17-129).
+/** A private table as the compiler sees it: data + schema + the metric
+  * neighboring inputs differ in + constraints established so far
+  * (reference: Catalog + accountant state, _catalog.py:17-129).
   *
-  * `viewStability` is the accumulated row-stability of the transformation
-  * that produced a view (1 for base tables): d_in(view) = d_in(base) *
-  * viewStability under a rows metric.
-  *
-  * `idDistance`, when present, REPLACES the AddRowsWithID-derived IDs
-  * distance with an exact (L1 bound, exact square) pair. Set by
-  * partition_and_create on a MaxGroupsPerID column — one ID reaches up to g
-  * children that each hold the full budget, so each child's distance is
-  * g*maxIDs (PureDP/ApproxDP) or sqrt(g)*maxIDs (zCDP; the square g*maxIDs^2
-  * is exact, the L1 bound is rounded up) — and by views over IDs tables,
-  * where it preserves the exact pair instead of a ceil-rounded maxIDs
-  * (reference: core AddRemoveKeys output metrics of the partition
+  * `metric` is the one distance the compiler reads. A base table's comes
+  * from its declared protected change when the session is built; a view
+  * stores its chain's output metric; a partition child stores its parent's,
+  * scaled (reference: core AddRemoveKeys output metrics of the partition
   * transformation; test/system/session/ids/test_partition.py asserts
-  * table_stability 2 and sqrt(2) for g = 2).
+  * table_stability 2 and sqrt(2) for g = 2). `protectedChange` is only the
+  * declaration `describe()` prints next to it.
   */
 final case class PrivateTable(
     df: DataFrame,
     schema: TableSchema,
     protectedChange: ProtectedChange,
-    constraints: Seq[Constraint] = Nil,
-    viewStability: Rat = Rat.one,
-    idDistance: Option[(Rat, Rat)] = None)
+    metric: Metric,
+    constraints: Seq[Constraint] = Nil)
 
 final case class Catalog(
     privateTables: Map[String, PrivateTable],

@@ -73,7 +73,7 @@ object MeasurementPlanner {
 final class MeasurementPlanner(
     catalog: Catalog, budget: PrivacyBudget, spark: SparkSession) {
 
-  private val transformPlanner = new TransformPlanner(catalog, budget, spark)
+  private val transformPlanner = new TransformPlanner(catalog, spark)
   private val cat = catalog.schemas
 
   def compile(expr: MeasureExpr): MeasureOut = expr match {

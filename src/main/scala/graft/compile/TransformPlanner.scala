@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.budget.{PrivacyBudget, Rat}
+import graft.budget.Rat
 import graft.constraints._
 import graft.ir.QueryExpr._
 import graft.ir.{CatalogSchemas, TransformExpr}
@@ -29,8 +29,7 @@ final case class TransformOut(
   * lambdas leave codegen, matching the reference's UDF semantics but running
   * JVM-native instead of crossing into Python workers.
   */
-final class TransformPlanner(
-    catalog: Catalog, budget: PrivacyBudget, spark: SparkSession) {
+final class TransformPlanner(catalog: Catalog, spark: SparkSession) {
 
   private val cat: CatalogSchemas = catalog.schemas
 
@@ -44,19 +43,7 @@ final class TransformPlanner(
 
     case PrivateSource(id) =>
       val t = catalog.privateTables(id)
-      val metric = Metric.fromProtectedChange(t.protectedChange, budget) match {
-        case RowsMetric(d, l2) =>
-          // the credit is a SQUARED L2 bound: a linear row-stability factor
-          // scales it quadratically
-          RowsMetric(d * t.viewStability,
-            l2.map { case (c, v) => c -> v * t.viewStability * t.viewStability })
-        case m: IDsMetric => t.idDistance match {
-          // exact override (partitioned child / view): L1 bound + exact square
-          case Some((d, sq)) => m.copy(distance = d, sqDistance = Some(sq))
-          case None          => m
-        }
-      }
-      TransformOut(t.df, expr.schema(cat), metric, t.constraints)
+      TransformOut(t.df, expr.schema(cat), t.metric, t.constraints)
 
     case e @ Rename(child, mapping) =>
       val c = compile(child)
@@ -455,12 +442,4 @@ final class TransformPlanner(
       .select((joinCols ++ leftOnly ++ rightOnly ++
         overlap.flatMap(c => Seq(s"${c}_left", s"${c}_right"))).map(col): _*)
   }
-}
-
-object TransformPlanner {
-  /** Default replacement values per type (reference AnalyticsDefault,
-    * _query_expr.py:1053-1071).
-    */
-  private[graft] val Epoch = java.sql.Date.valueOf("1970-01-01")
-  private[graft] val EpochTs = java.sql.Timestamp.valueOf("1970-01-01 00:00:00")
 }

@@ -47,9 +47,9 @@ final class Session private (
     * (test_session.py test_invalid_data_properties), an unknown name gets a
     * not-found error listing the private sources — never a bare KeyError.
     */
-  private def privateSchemaOrFail(table: String, what: String): TableSchema =
+  private def privateTableOrFail(table: String, what: String): PrivateTable =
     privateTables.get(table) match {
-      case Some(t) => t.schema
+      case Some(t) => t
       case None if publicTables.contains(table) =>
         throw new IllegalArgumentException(
           s"Table '$table' is a public table, which cannot have $what.")
@@ -60,7 +60,7 @@ final class Session private (
     }
 
   def getSchema(table: String): TableSchema =
-    privateSchemaOrFail(table, "a private schema")
+    privateTableOrFail(table, "a private schema").schema
 
   /** Column name -> analytics type (reference session.py get_column_types). */
   def getColumnTypes(table: String): Map[String, graft.types.ColumnType] =
@@ -70,15 +70,15 @@ final class Session private (
     * (reference session.py get_grouping_column).
     */
   def getGroupingColumn(table: String): Option[String] =
-    privateSchemaOrFail(table, "a grouping column").groupingColumn
+    privateTableOrFail(table, "a grouping column").schema.groupingColumn
 
   /** The privacy-ID column of an IDs table (reference get_id_column). */
   def getIdColumn(table: String): Option[String] =
-    privateSchemaOrFail(table, "an id column").idColumn
+    privateTableOrFail(table, "an id column").schema.idColumn
 
   /** The identifier space of an IDs table (reference get_id_space). */
   def getIdSpace(table: String): Option[String] =
-    privateSchemaOrFail(table, "an id space").idSpace
+    privateTableOrFail(table, "an id space").schema.idSpace
 
   /** The registered public tables (reference public_source_dataframes). */
   def publicSourceDataframes: Map[String, DataFrame] = publicTables.toMap
@@ -87,8 +87,7 @@ final class Session private (
     * reference's per-table constraint registry, surfaced by describe).
     */
   def getConstraints(table: String): Seq[Constraint] =
-    privateTables.getOrElse(table, throw new IllegalArgumentException(
-      s"private table '$table' does not exist")).constraints
+    privateTableOrFail(table, "constraints").constraints
 
   /** Retire this session: no further queries or views can be issued
     * (reference session.py stop).
@@ -156,7 +155,7 @@ final class Session private (
     // calibrated to what is actually charged (reference session.py adjusts
     // via _get_adjusted_budget before visiting the query)
     val adjusted = PrivacyBudget.adjustToRemaining(budget, remaining)
-    val (out, _) = compileMeasure(query, adjusted)
+    val out = compileMeasure(query, adjusted)
     spend(out.spend)
     MeasurementPlanner.releaseOnce(out.df, out.noise)
   }
@@ -169,14 +168,13 @@ final class Session private (
     */
   def noiseInfo(query: Query, budget: PrivacyBudget): Seq[NoiseInfo] = {
     checkActive() // a retired session answers no interactions, even free ones
-    compileMeasure(query, budget)._1.noise
+    compileMeasure(query, budget).noise
   }
 
-  private def compileMeasure(query: Query, budget: PrivacyBudget): (MeasureOut, TableSchema) = {
+  private def compileMeasure(query: Query, budget: PrivacyBudget): MeasureOut = {
     val cat = catalog
-    val schema = query.expr.schema(cat.schemas) // analyze/validate eagerly
-    val planner = new MeasurementPlanner(cat, budget, spark)
-    (planner.compile(query.expr), schema)
+    query.expr.schema(cat.schemas) // analyze/validate eagerly
+    new MeasurementPlanner(cat, budget, spark).compile(query.expr)
   }
 
   /** Register a transformation as a derived private table (reference
@@ -187,42 +185,16 @@ final class Session private (
     Session.assertIdentifier(name)
     if (privateTables.contains(name) || publicTables.contains(name))
       throw new IllegalArgumentException(s"table '$name' already exists")
-    val cat = catalog
-    // validate + compile with the *current* budget kind for metric math
-    val planner = new TransformPlanner(cat, remaining, spark)
-    val out = planner.compile(qb.expr)
+    val out = new TransformPlanner(catalog, spark).compile(qb.expr)
     val df = if (cache) out.df.persist() else out.df
-    val (pc, viewStab) = out.metric match {
-      // a surviving L2 credit factors exactly back into an
-      // AddMaxRowsInMaxGroups declaration: with d = g*r and the squared
-      // credit vSq = r^2*g, g = d^2/vSq and r = vSq/d are integers for
-      // every credit this engine produces (stability factors scale d and
-      // sqrt(vSq) by the same integer), so the view's grouped queries keep
-      // the sqrt(g) credit instead of silently over-noising
-      case RowsMetric(d, Some((c, vSq))) if {
-        val g = d * d / vSq
-        val r = vSq / d
-        !d.isInfinite && g.den == BigInt(1) && r.den == BigInt(1) &&
-          g.num > 0 && r.num > 0 && g.num <= Int.MaxValue && r.num <= Int.MaxValue
-      } =>
-        val g = (d * d / vSq).num.toInt
-        val r = (vSq / d).num.toInt
-        (AddMaxRowsInMaxGroups(c, g, r), Rat.one)
-      case RowsMetric(d, _) => (AddMaxRows(1), d) // d already includes the chain
-      case IDsMetric(idCol, idSpace, d, _) =>
-        (AddRowsWithID(idCol, idSpace,
-          if (d >= Rat(Int.MaxValue.toLong)) Int.MaxValue
-          else d.ceilLong.max(1L).toInt),
-          Rat.one)
-    }
-    // IDs views carry the exact (L1, squared) distance pair so a partitioned
-    // parent's sqrt(g) factor survives the view instead of being ceil-rounded
-    val idDist = out.metric match {
-      case m: IDsMetric => Some((m.distance, m.sq))
-      case _            => None
+    // the view keeps its chain's metric as it is; the declaration is only
+    // what describe() prints beside the effective distance
+    val declared = out.metric match {
+      case m: IDsMetric  => AddRowsWithID(m.idColumn, m.idSpace)
+      case _: RowsMetric => AddOneRow()
     }
     privateTables(name) =
-      PrivateTable(df, out.schema, pc, out.constraints, viewStab, idDist)
+      PrivateTable(df, out.schema, declared, out.metric, out.constraints)
     viewNames += name
   }
 
@@ -253,8 +225,7 @@ final class Session private (
       column: String,
       splits: Seq[(String, Any)]): Map[String, Session] = {
     checkActive()
-    val t = privateTables.getOrElse(sourceId,
-      throw new IllegalArgumentException(s"private table '$sourceId' does not exist"))
+    val t = privateTableOrFail(sourceId, "partitions")
     if (!t.schema.contains(column))
       throw new IllegalArgumentException(s"partition column '$column' not in schema")
     // parallel composition requires DISJOINT children: a value appearing in
@@ -290,18 +261,17 @@ final class Session private (
             s"does not match partition column '$column' of type $ctype")
       }
     }
-    // IDs tables: the constraint set decides the children's metric
-    // (reference _create_partition_transformation, session.py:1380-1423, and
+    // IDs tables: the constraint set decides the children's metric, which
+    // each child stores as its parent's, scaled (reference
+    // _create_partition_transformation, session.py:1380-1423, and
     // test/system/session/ids/test_partition.py):
     //  - MaxGroupsPerID on the PARTITION column -> children stay IDs tables
     //    (the bound caps how many children one ID reaches);
     //  - otherwise MaxRowsPerID(k) -> children become plain rows tables at
-    //    rows distance k * maxIDs (one ID's <= k rows land among the
-    //    children; the IDs distance rides in viewStability), id metadata
-    //    dropped;
+    //    rows distance k * (IDs distance), id metadata dropped;
     //  - anything else (including MaxRowsPerGroupPerID alone) is an error.
-    val template: graft.compile.PrivateTable = t.protectedChange match {
-      case AddRowsWithID(_, _, maxIDs) =>
+    val template: PrivateTable = t.metric match {
+      case m: IDsMetric =>
         val groupsBound = t.constraints.collectFirst {
           case g @ graft.constraints.MaxGroupsPerID(c, _) if c == column => g }
         val rowsBound = t.constraints.collectFirst {
@@ -312,37 +282,32 @@ final class Session private (
             // one ID reaches up to g = gb.max children, each holding the
             // full child budget, so each child's IDs distance scales by g
             // under PureDP/ApproxDP and by sqrt(g) under zCDP (the square
-            // g*maxIDs^2 is exact; the L1 bound is rounded up) — reference
+            // g*d^2 is exact; the L1 bound is rounded up) — reference
             // test/system/session/ids/test_partition.py asserts
             // table_stability 2 and sqrt(2) for g = 2. Leaving the distance
             // unscaled would under-noise every child query by g (sqrt(g)).
             val g = Rat(gb.max.toLong)
-            val (d0, sq0) = t.idDistance.getOrElse(
-              (Rat(maxIDs.toLong), Rat(maxIDs.toLong * maxIDs)))
             val scaled = remaining match {
-              case _: RhoZCDPBudget => (d0 * Rat.sqrtUpper(g), sq0 * g)
-              case _                => (d0 * g, sq0 * g * g)
+              case _: RhoZCDPBudget =>
+                m.copy(distance = m.distance * Rat.sqrtUpper(g),
+                  sqDistance = Some(m.sq * g))
+              case _ =>
+                m.copy(distance = m.distance * g, sqDistance = Some(m.sq * g * g))
             }
-            t.copy(constraints = t.constraints.filterNot(_ == gb),
-              idDistance = Some(scaled))
+            t.copy(metric = scaled, constraints = t.constraints.filterNot(_ == gb))
           case (None, Some(graft.constraints.MaxRowsPerID(k))) =>
-            // rows distance = k * (IDs distance); the distance rides in
-            // viewStability so an already-scaled idDistance (nested
-            // partitioning) is honored exactly
-            val d0 = t.idDistance.map(_._1).getOrElse(Rat(maxIDs.toLong))
             t.copy(
               schema = t.schema.copy(idColumn = None, idSpace = None),
               protectedChange = AddMaxRows(k),
-              constraints = Nil,
-              viewStability = d0,
-              idDistance = None)
+              metric = RowsMetric(Rat(k.toLong) * m.distance),
+              constraints = Nil)
           case _ =>
             throw new IllegalArgumentException(
               "You must create a MaxGroupsPerID or MaxRowsPerID constraint " +
                 "before using partition_and_create on tables with the " +
                 "AddRowsWithID protected change (reference session.py:1390-1418)")
         }
-      case _ => t
+      case _: RowsMetric => t
     }
     val adjusted = PrivacyBudget.adjustToRemaining(budget, remaining)
     spend(adjusted)
@@ -382,19 +347,17 @@ final class Session private (
     sb.append("Private tables:\n")
     privateSources.foreach { n =>
       val t = privateTables(n)
-      // a partitioned child's distance outgrows its AddRowsWithID
-      // declaration (x groups bound, or its root under zCDP) — show the
-      // distance actually driving noise calibration when they differ
-      val idDistNote = (t.protectedChange, t.idDistance) match {
-        case (AddRowsWithID(_, _, m), Some((d, _))) if d != Rat(m.toLong) =>
+      // a view or partition child's distance can outgrow its declaration
+      // (a chain's stability, x groups bound, or its root under zCDP) —
+      // show the distance actually driving noise calibration when they differ
+      val distanceNote = (t.protectedChange, t.metric) match {
+        case (AddRowsWithID(_, _, m), IDsMetric(_, _, d, _)) if d != Rat(m.toLong) =>
           s"; effective id distance: $d"
-        // a MaxRowsPerID-partitioned child carries its parent's IDs distance
-        // in viewStability: surface k * maxIDs, not the bare AddMaxRows(k)
-        case (AddMaxRows(k), _) if t.viewStability != Rat.one =>
-          s"; effective rows distance: ${Rat(k.toLong) * t.viewStability}"
+        case (AddMaxRows(k), RowsMetric(d, _)) if d != Rat(k.toLong) =>
+          s"; effective rows distance: $d"
         case _ => ""
       }
-      sb.append(s"  $n (protected: ${t.protectedChange}" + idDistNote +
+      sb.append(s"  $n (protected: ${t.protectedChange}" + distanceNote +
         (if (t.constraints.nonEmpty) s"; constraints: ${t.constraints.mkString(", ")}"
          else "") + ")\n")
       t.schema.columns.foreach { case (c, d) =>
@@ -555,7 +518,7 @@ object Session {
               idSpace = Some(idSpace))
           case _ => TableSchema.fromSpark(coerced.schema)
         }
-        name -> PrivateTable(coerced, schema, pc)
+        name -> PrivateTable(coerced, schema, pc, Metric.fromProtectedChange(pc))
       }
       new Session(spark, b, mutable.Map(priv.toSeq: _*),
         mutable.Map(publics.toSeq.map { case (n, df) => n -> CoerceSchema(df) }: _*))

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SourceGuard.{mainLines, show}
 
 /** Source guard: randomness has one seam and exact sampling one coin.
   * `ThreadLocalRandom` is named in `src/main` only by `exec/Noise.scala`'s
@@ -12,22 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * CKS Bernoulli(exp(-num/den)) step `bernoulliExpFrac` is defined once.
   */
 class NoiseSourceSpec extends AnyFunSuite {
-
-  /** (file, 1-based line, line) for every src/main Scala line. */
-  private def mainLines(): List[(Path, Int, String)] = {
-    val main = Paths.get("src/main")
-    assert(Files.isDirectory(main), s"cannot locate src/main from ${Paths.get("").toAbsolutePath}")
-    val stream = Files.walk(main)
-    try stream.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .flatMap { (p: Path) =>
-        Files.readAllLines(p).asScala.zipWithIndex.map { case (l, i) => (p, i + 1, l) }
-      }.toList
-    finally stream.close()
-  }
-
-  private def show(hits: Seq[(Path, Int, String)]) =
-    hits.map { case (p, i, l) => s"$p:$i: ${l.trim}" }.mkString("\n")
 
   test("ThreadLocalRandom appears in src/main only in exec/Noise.scala") {
     val hits = mainLines().filter { case (p, _, l) =>

@@ -49,8 +49,8 @@ class IdsPartitionSpec extends SparkSpec {
     assert(kids("part0").noiseInfo(QueryBuilder("part0").count(),
       PureDPBudget(1)).head.mechanism
       === graft.exec.NoiseMechanism.Geometric(Rat(2)))
-    // with maxIDs > 1 the IDs factor rides in viewStability; describe must
-    // surface the full k * maxIDs distance, not the bare AddMaxRows cap
+    // with maxIDs > 1 describe must surface the child's full k * maxIDs
+    // rows distance, not the bare AddMaxRows cap
     val s3 = Session.fromDataFrame(spark, Inf, "id_a1", df,
       AddRowsWithID("id", maxIDs = 3))
     s3.createView(QueryBuilder("id_a1").enforce(MaxRowsPerID(2)), "v3",

@@ -759,7 +759,8 @@ class SessionErrorTablesSpec extends SparkSpec {
     ("get_column_types", (s, n) => s.getColumnTypes(n)),
     ("get_grouping_column", (s, n) => s.getGroupingColumn(n)),
     ("get_id_column", (s, n) => s.getIdColumn(n)),
-    ("get_id_space", (s, n) => s.getIdSpace(n)))
+    ("get_id_space", (s, n) => s.getIdSpace(n)),
+    ("get_constraints", (s, n) => s.getConstraints(n)))
 
   for ((gname, get) <- getters) {
     test(s"getter table: $gname on an unknown table lists the private sources") {
