@@ -21,13 +21,7 @@ import graft.session.Session
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-demo")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     run(spark, sfDir)
     spark.stop()
@@ -301,24 +295,29 @@ object Demo {
       println(s"kept ${sd.filter(col("kept")).count()} of ${sd.count()} vectors")
     }
 
-    banner("18. Layout + shuffle hygiene: skew report, z-order, top-k sketch")
-    locally {
-      import org.apache.spark.sql.functions._
+    // every event column but the undecodable nanosecond `ts`, as steps 18
+    // and 19 read it
+    val eventLog = {
       import org.apache.spark.sql.types._
-      val events = spark.read.schema(StructType(Seq(
+      spark.read.schema(StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType), StructField("value", DoubleType),
         StructField("props", StringType))))
         .parquet(s"$sfDir/events.parquet")
+    }
+
+    banner("18. Layout + shuffle hygiene: skew report, z-order, top-k sketch")
+    locally {
+      import org.apache.spark.sql.functions._
       println("is user_id safe to shuffle on? (entropy_e6 ~ ln(n_keys)*1e6 = uniform)")
-      graft.sources.Salting.keySkewReport(events, "user_id").show()
+      graft.sources.Salting.keySkewReport(eventLog, "user_id").show()
       println("morton codes give every z column locality (layout: ZOrder.writeZOrdered):")
-      events.select(col("event_id"),
+      eventLog.select(col("event_id"),
         graft.sources.ZOrder.zValue2(pmod(col("user_id"), lit(16)),
           pmod(col("event_id"), lit(16)), bits = 4).as("z"))
         .orderBy("event_id").limit(3).show()
       println("bounded-memory top event types (SpaceSaving, exact under capacity):")
-      events.agg(graft.exec.SpaceSaving.spaceSavingTopK(
+      eventLog.agg(graft.exec.SpaceSaving.spaceSavingTopK(
         col("event_type"), capacity = 64, k = 3).as("top"))
         .select(explode(col("top"))).show(truncate = false)
     }
@@ -326,18 +325,12 @@ object Demo {
     banner("19. Temporal/interval joins and threshold release")
     locally {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.types._
       import spark.implicits._
-      val events = spark.read.schema(StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType))))
-        .parquet(s"$sfDir/events.parquet")
       println("as-of join: each purchase with the user's latest PRIOR click")
       println("(one exchange + carry-forward window; no theta join):")
-      val purchases = events.where($"event_type" === "purchase")
+      val purchases = eventLog.where($"event_type" === "purchase")
         .select($"user_id", $"event_id".as("t"), $"value".as("purchase_value"))
-      val clicks = events.where($"event_type" === "click")
+      val clicks = eventLog.where($"event_type" === "click")
         .select($"user_id", $"event_id".as("t"),
           $"event_id".as("click_id"), $"value".as("click_value"))
       graft.pipeline.Relational.asOfJoin(purchases, clicks, Seq("user_id"), "t")
@@ -347,12 +340,12 @@ object Demo {
       val bands = Seq(("small", 0.0, 10.0), ("large", 8.0, 100.0))
         .toDF("band", "lo", "hi")
       graft.pipeline.Relational.rangeJoin(
-        events.select($"event_id", $"value"), "value",
+        eventLog.select($"event_id", $"value"), "value",
         bands, "lo", "hi", cellWidth = 10.0)
         .groupBy("band").count().orderBy("band").show()
       println("SVT AboveThreshold: identities of the first 2 event types over")
       println("2000 hits, eps total NOT growing with the number scanned:")
-      val counts = events.groupBy("event_type")
+      val counts = eventLog.groupBy("event_type")
         .agg(count(lit(1)).cast("double").as("n"))
       graft.exec.SparseVector.aboveThreshold(counts, "event_type", "n",
         threshold = 2000.0, maxPositives = 2, epsilon = 1.0).show()

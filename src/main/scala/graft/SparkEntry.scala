@@ -10,7 +10,7 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
-  /** The one session recipe of graft's mains (Bench, Verify, ScaleUp):
+  /** The one session recipe of graft's mains (Bench, Verify, ScaleUp, Demo):
     * `local[cpus]` with one shuffle partition per core, UTC, no UI, WARN
     * logging — so numbers from any of them describe the same engine.
     */

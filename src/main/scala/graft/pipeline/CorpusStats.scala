@@ -112,15 +112,7 @@ object CorpusStats {
     require(percentiles.nonEmpty, "profile at least one percentile")
     percentiles.foreach(p =>
       require(p >= 0.0 && p <= 1.0, s"percentile out of [0, 1]: $p"))
-    def lbl(p: Double): String = {
-      val pct = p * 100
-      if (pct == math.rint(pct)) s"p${pct.toLong}"
-      else "p" + BigDecimal(pct).underlying.stripTrailingZeros.toPlainString
-        .replace('.', '_')
-    }
-    val labels = percentiles.map(lbl)
-    require(labels.distinct.size == labels.size,
-      s"duplicate percentile labels: ${labels.mkString(", ")}")
+    val labels = Inputs.percentileLabels(percentiles)
     val v = col(valueCol).cast("double")
     val pctArr = percentile(v, lit(percentiles.toArray)).as("__ps")
     df.groupBy(groupCols.map(col): _*)
@@ -153,15 +145,7 @@ object CorpusStats {
       k: Int = 400): DataFrame = {
     require(groupCols.nonEmpty, "group by at least one column")
     require(percentiles.nonEmpty, "profile at least one percentile")
-    def lbl(p: Double): String = {
-      val pct = p * 100
-      if (pct == math.rint(pct)) s"p${pct.toLong}"
-      else "p" + BigDecimal(pct).underlying.stripTrailingZeros.toPlainString
-        .replace('.', '_')
-    }
-    val labels = percentiles.map(lbl)
-    require(labels.distinct.size == labels.size,
-      s"duplicate percentile labels: ${labels.mkString(", ")}")
+    val labels = Inputs.percentileLabels(percentiles)
     val v = col(valueCol).cast("double")
     df.groupBy(groupCols.map(col): _*)
       .agg(count(v).as("n_rows"), min(v).as("vmin"), max(v).as("vmax"),

@@ -19,6 +19,78 @@ import graft.exec.Materialize.Pin
   */
 object Graph {
 
+  /** The directed edge list every graph operator reads: `(__s, __d)` with
+    * both endpoints cast to strings and rows with a NULL endpoint dropped.
+    * With `weight = Some((weightCol, op))` it also carries `__w`: the
+    * column must be integral (checked on the driver — a cast would
+    * truncate 2.5 to 2), a NULL weight drops the row, and a non-positive
+    * weight raises `"$op: non-positive weight in '…'"` (zero is a deleted
+    * edge, a negative weight has no mass or path semantics).
+    */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String,
+      weight: Option[(String, String)] = None): DataFrame = {
+    Inputs.present(edges, "edge list",
+      Seq(srcCol, dstCol) ++ weight.map(_._1): _*)
+    val wExpr = weight.map { case (w, op) =>
+      Inputs.integral(edges, op, "weight column", w)
+      when(col(w).cast("long") <= 0L,
+        raise_error(concat(lit(s"$op: non-positive weight in '$w': "),
+          col(w).cast("string"))).cast("long"))
+        .otherwise(col(w).cast("long"))
+    }
+    edges
+      .select(Seq(col(srcCol).cast("string").as("__s"),
+        col(dstCol).cast("string").as("__d")) ++ wExpr.map(_.as("__w")): _*)
+      .where(wExpr.map(_ => col("__w").isNotNull)
+        .foldLeft(col("__s").isNotNull && col("__d").isNotNull)(_ && _))
+  }
+
+  /** The undirected simple graph of `edges`: one `(__u, __v)` row with
+    * `__u < __v` per connected pair — direction, duplicate rows and
+    * self-loops normalized away.
+    */
+  private def simple(
+      edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    directed(edges, srcCol, dstCol)
+      .where(col("__s") =!= col("__d"))
+      .select(least(col("__s"), col("__d")).as("__u"),
+        greatest(col("__s"), col("__d")).as("__v"))
+      .distinct()
+
+  /** The undirected simple graph of `edges` in BOTH orientations: a
+    * `(__u, __v)` and a `(__v, __u)` row per pair, self-loops dropped.
+    *
+    * assumeCanonical (r14, guide §2.4 — remove shuffles outright): the
+    * `distinct` is a full shuffle of BOTH orientations (2|E| rows) whose
+    * only job is to collapse duplicate input rows and mutual orientations.
+    * A caller whose edge list is already DISTINCT with at most one
+    * orientation per pair (e.g. produced with a `src < dst` guard, or
+    * bipartite with disjoint endpoint namespaces) gets the identical
+    * symmetric simple graph without it — the swapped copy of a
+    * one-orientation distinct set cannot collide with the original. The
+    * burden of proof is the CALLER's; a wrong claim double-counts edges.
+    */
+  private def symmetric(edges: DataFrame, srcCol: String, dstCol: String,
+      assumeCanonical: Boolean): DataFrame = {
+    val d = directed(edges, srcCol, dstCol).where(col("__s") =!= col("__d"))
+    val both = d.select(col("__s").as("__u"), col("__d").as("__v"))
+      .unionByName(d.select(col("__d").as("__u"), col("__s").as("__v")))
+    if (assumeCanonical) both else both.distinct()
+  }
+
+  /** Both orientations `(__s, __w)` of a [[simple]] edge table. */
+  private def adjacency(und: DataFrame): DataFrame =
+    und.select(col("__u").as("__s"), col("__v").as("__w"))
+      .unionByName(und.select(col("__v").as("__s"), col("__u").as("__w")))
+
+  /** The distinct non-NULL ids of `seeds` as strings, in column `name`. */
+  private def seedSet(
+      seeds: DataFrame, seedCol: String, name: String): DataFrame = {
+    Inputs.present(seeds, "seeds side", seedCol)
+    seeds.select(col(seedCol).cast("string").as(name))
+      .where(col(name).isNotNull).distinct()
+  }
+
   /** PageRank with integer fixed-point arithmetic.
     *
     * Semantics (the public power-iteration formulation, e.g. Brin & Page
@@ -59,9 +131,9 @@ object Graph {
     * ranking when edges have magnitudes (trade volume, message counts,
     * shared-item counts). Same exact fixed-point arithmetic, same
     * one-join-one-sum iteration shape as [[pageRank]]; with all weights 1
-    * the two are bit-identical. Rows with a NULL weight are dropped like
-    * NULL endpoints; a non-positive weight fails loudly (a zero weight is
-    * a deleted edge and a negative one has no mass semantics). Caller
+    * the two are bit-identical. The weight column must be integral; rows
+    * with a NULL weight drop like NULL endpoints, and a non-positive weight
+    * fails loudly (a zero weight is a deleted edge). Caller
     * contract: scale * max(weight) must fit a signed 64-bit long (the
     * default 1e12 scale leaves ~9.2e6 of weight headroom); weights beyond
     * that should be pre-divided by a common factor, which leaves the
@@ -70,11 +142,9 @@ object Graph {
   def pageRankWeighted(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000L): DataFrame = {
-    Inputs.present(edges, "edge list", weightCol)
+      scale: Long = 1000000000000L): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
       scale, seeds = None, weightCol = Some(weightCol))
-  }
 
   /** Personalized PageRank: the teleport mass lands ONLY on `seeds`
     * (restricted to nodes present in the graph) instead of uniformly —
@@ -88,12 +158,9 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000L): DataFrame = {
-    Inputs.present(seeds, "seeds side", seedCol)
+      scale: Long = 1000000000000L): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
-      scale, seeds = Some(seeds.select(col(seedCol).cast("string").as("__n"))
-        .where(col("__n").isNotNull).distinct()), weightCol = None)
-  }
+      scale, seeds = Some(seedSet(seeds, seedCol, "__n")), weightCol = None)
 
   /** [[personalizedPageRank]] with [[pageRankWeighted]]'s proportional
     * mass split — proximity to a seed set over a weighted graph ("which
@@ -104,14 +171,10 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       seeds: DataFrame, seedCol: String,
       iterations: Int = 5, dampingNum: Long = 85L, dampingDen: Long = 100L,
-      scale: Long = 1000000000000L): DataFrame = {
-    Inputs.present(edges, "edge list", weightCol)
-    Inputs.present(seeds, "seeds side", seedCol)
+      scale: Long = 1000000000000L): DataFrame =
     pageRankImpl(edges, srcCol, dstCol, iterations, dampingNum, dampingDen,
-      scale, seeds = Some(seeds.select(col(seedCol).cast("string").as("__n"))
-        .where(col("__n").isNotNull).distinct()),
+      scale, seeds = Some(seedSet(seeds, seedCol, "__n")),
       weightCol = Some(weightCol))
-  }
 
   private def pageRankImpl(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -132,17 +195,6 @@ object Graph {
       s"dampingDen ($dampingDen) * scale ($scale) exceeds signed-64-bit " +
         "headroom and the exact fixed-point arithmetic would overflow — " +
         "reduce the damping fraction (e.g. 85/100, not 85e10/1e12)")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    // __w (weighted only — the unweighted edge table stays two columns,
-    // exactly the r9 plan): NULL weights drop with NULL endpoints;
-    // non-positive weights raise (zero is a deleted edge, negative has
-    // no mass semantics).
-    val wExpr = weightCol.map { w =>
-      when(col(w).cast("long") <= 0L,
-        raise_error(concat(lit(s"pageRankWeighted: non-positive weight in '" +
-          w + "': "), col(w).cast("string"))).cast("long"))
-        .otherwise(col(w).cast("long"))
-    }
     // pre-partitioned by source ONCE: every iteration's contribution join
     // keys on __s, so while the pin keeps the physical partitioning the
     // (big) edge table never crosses the wire again — without it, each of
@@ -150,12 +202,8 @@ object Graph {
     // volume at 100 TB). The pin keeps it only with adaptive execution
     // off: under AQE (the default) the pinned frame reports
     // UnknownPartitioning and a non-broadcast join re-shuffles the edges
-    val e = edges
-      .select(Seq(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d")) ++
-        wExpr.map(_.as("__w")).toSeq: _*)
-      .where(wExpr.map(_ => col("__w").isNotNull).toSeq
-        .foldLeft(col("__s").isNotNull && col("__d").isNotNull)(_ && _))
+    val e = directed(edges, srcCol, dstCol,
+        weightCol.map(_ -> "pageRankWeighted"))
       .repartition(col("__s"))
       .pin("Graph.pageRank edges")
     // nodes AND out-degree in ONE keyed aggregate (r14, guide §2.4): the
@@ -284,29 +332,11 @@ object Graph {
       iterations: Int = 3, assumeCanonical: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 100,
       s"iterations must be in [1, 100], got $iterations")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    val directed = edges
-      .select(col(srcCol).cast("string").as("__v"),
-        col(dstCol).cast("string").as("__nb"))
-      .where(col("__v").isNotNull && col("__nb").isNotNull &&
-        col("__v") =!= col("__nb"))
-    // assumeCanonical (r14, guide §2.4 — remove shuffles outright): the
-    // symmetrize step's `distinct` is a full shuffle of BOTH orientations
-    // (2|E| rows) whose only job is to collapse duplicate input rows and
-    // mutual orientations. A caller whose edge list is already DISTINCT
-    // with at most one orientation per pair (e.g. produced with a
-    // `src < dst` guard, or bipartite with disjoint endpoint namespaces)
-    // gets the identical symmetric simple graph without it — the swapped
-    // copy of a one-orientation distinct set cannot collide with the
-    // original. The burden of proof is the CALLER's; a wrong claim
-    // double-counts votes. Default false.
-    val symmetric = directed
-      .unionByName(directed.select(col("__nb").as("__v"),
-        col("__v").as("__nb")))
-    val e = (if (assumeCanonical) symmetric else symmetric.distinct())
-      .repartition(col("__nb"))
+    // node __u takes the most frequent label among its neighbors __v
+    val e = symmetric(edges, srcCol, dstCol, assumeCanonical)
+      .repartition(col("__v"))
       .pin("Graph.labelPropagation edges")
-    var labels = e.select(col("__v").as("__n")).distinct()
+    var labels = e.select(col("__u").as("__n")).distinct()
       .select(col("__n"), col("__n").as("__lab"))
       .pin("Graph.labelPropagation labels")
     // per-round checkpoint kept deliberately: fusing all rounds into one
@@ -315,13 +345,13 @@ object Graph {
     // boundary), so each round stays a small, constant-size plan
     for (round <- 1 to iterations) {
       labels = e
-        .join(labels.select(col("__n").as("__nb"), col("__lab")), "__nb")
-        .groupBy(col("__v"), col("__lab"))
+        .join(labels.select(col("__n").as("__v"), col("__lab")), "__v")
+        .groupBy(col("__u"), col("__lab"))
         .agg(count(lit(1)).as("__c"))
-        .groupBy(col("__v"))
+        .groupBy(col("__u"))
         .agg(min(struct((-col("__c")).as("nc"), col("__lab").as("l")))
           .as("__b"))
-        .select(col("__v").as("__n"), col("__b").getField("l").as("__lab"))
+        .select(col("__u").as("__n"), col("__b").getField("l").as("__lab"))
         .pin(s"Graph.labelPropagation round $round")
     }
     labels.select(col("__n").as("node"), col("__lab").as("label"))
@@ -392,16 +422,7 @@ object Graph {
     */
   def triangleCounts(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    val und = edges
-      .select(col(srcCol).cast("string").as("__a"),
-        col(dstCol).cast("string").as("__b"))
-      .where(col("__a").isNotNull && col("__b").isNotNull &&
-        col("__a") =!= col("__b"))
-      .select(least(col("__a"), col("__b")).as("__u"),
-        greatest(col("__a"), col("__b")).as("__v"))
-      .distinct()
-      .pin("Graph.triangleCounts edges")
+    val und = simple(edges, srcCol, dstCol).pin("Graph.triangleCounts edges")
     val deg = und.select(col("__u").as("__n"))
       .unionByName(und.select(col("__v").as("__n")))
       .groupBy("__n").agg(count(lit(1)).as("__deg"))
@@ -454,19 +475,11 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 64,
       s"maxHops must be in [0, 64], got $maxHops")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    Inputs.present(seeds, "seeds side", seedCol)
     // NOT pre-partitioned by source (unlike pageRankImpl): the frontier
     // side broadcasts, so the edge table never shuffles anyway — an
     // upfront repartition would only add an exchange (measured +15%)
-    val e = edges
-      .select(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d"))
-      .where(col("__s").isNotNull && col("__d").isNotNull)
-      .pin("Graph.bfsDistances edges")
-    val seed0 = Materialize(seeds
-      .select(col(seedCol).cast("string").as("__n"))
-      .where(col("__n").isNotNull).distinct()
+    val e = directed(edges, srcCol, dstCol).pin("Graph.bfsDistances edges")
+    val seed0 = Materialize(seedSet(seeds, seedCol, "__n")
       .withColumn("__dist", lit(0L)), "Graph.bfsDistances seeds")
     frontierLoop(e, seed0, Nil, maxHops, "Graph.bfsDistances")
       .select(col("__n").as("node"), col("__dist").as("dist"))
@@ -551,18 +564,7 @@ object Graph {
     require(k >= 1 && k <= 1000000, s"k must be in [1, 1e6], got $k")
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    val directed = edges
-      .select(col(srcCol).cast("string").as("__u"),
-        col(dstCol).cast("string").as("__v"))
-      .where(col("__u").isNotNull && col("__v").isNotNull &&
-        col("__u") =!= col("__v"))
-    // assumeCanonical: skip the symmetrize distinct when the caller
-    // guarantees a distinct, one-orientation-per-pair edge list — the
-    // [[labelPropagation]] contract verbatim (full rationale there)
-    val symmetric = directed
-      .unionByName(directed.select(col("__v").as("__u"), col("__u").as("__v")))
-    var e = (if (assumeCanonical) symmetric else symmetric.distinct())
+    var e = symmetric(edges, srcCol, dstCol, assumeCanonical)
       .pin("Graph.kCore edges")
     var round = 0
     var converged = false
@@ -617,18 +619,8 @@ object Graph {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
     require(maxDegree >= 2L, s"maxDegree must be >= 2, got $maxDegree")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    val su = col(srcCol).cast("string")
-    val sv = col(dstCol).cast("string")
-    var e = edges
-      .where(su.isNotNull && sv.isNotNull && su =!= sv)
-      .select(least(su, sv).as("__u"), greatest(su, sv).as("__v"))
-      .distinct()
-      .pin("Graph.kTruss edges")
-    def adj(ed: DataFrame) = ed
-      .select(col("__u").as("__s"), col("__v").as("__w"))
-      .unionByName(ed.select(col("__v").as("__s"), col("__u").as("__w")))
-    val hub = adj(e).groupBy("__s").agg(count(lit(1)).as("__deg"))
+    var e = simple(edges, srcCol, dstCol).pin("Graph.kTruss edges")
+    val hub = adjacency(e).groupBy("__s").agg(count(lit(1)).as("__deg"))
       .where(col("__deg") > maxDegree).limit(1).collect()
     require(hub.isEmpty,
       s"kTruss: node ${hub.headOption.map(_.getString(0)).getOrElse("")} " +
@@ -639,7 +631,7 @@ object Graph {
     // shared by the peel rounds and both release branches so the support
     // semantics cannot fork between them
     def supportOf(ed: DataFrame): DataFrame = {
-      val a = adj(ed)
+      val a = adjacency(ed)
       val sup = ed
         .join(a.withColumnsRenamed(Map("__s" -> "__u", "__w" -> "__w1")),
           Seq("__u"))
@@ -716,22 +708,10 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 64,
       s"maxRounds must be in [1, 64], got $maxRounds")
-    Inputs.present(edges, "edge list", srcCol, dstCol, weightCol)
-    Inputs.present(seeds, "seeds side", seedCol)
-    val wExpr = when(col(weightCol).cast("long") <= 0L,
-      raise_error(concat(lit(s"ssspWeighted: non-positive weight in '" +
-        weightCol + "': "), col(weightCol).cast("string"))).cast("long"))
-      .otherwise(col(weightCol).cast("long"))
-    val e = edges
-      .select(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d"), wExpr.as("__w"))
-      .where(col("__s").isNotNull && col("__d").isNotNull &&
-        col("__w").isNotNull)
+    val e = directed(edges, srcCol, dstCol, Some(weightCol -> "ssspWeighted"))
       .repartition(col("__s"))
       .pin("Graph.ssspWeighted edges")
-    val seed0 = Materialize(seeds
-      .select(col(seedCol).cast("string").as("__n"))
-      .where(col("__n").isNotNull).distinct()
+    val seed0 = Materialize(seedSet(seeds, seedCol, "__n")
       .withColumn("__dist", lit(0L)), "Graph.ssspWeighted seeds")
     var settled = seed0.df
     var frontier = seed0.df
@@ -796,16 +776,9 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1, 64], got $maxHops")
     require(maxSeeds >= 1, s"maxSeeds must be >= 1, got $maxSeeds")
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    Inputs.present(seeds, "seeds side", seedCol)
-    val e = edges
-      .select(col(srcCol).cast("string").as("__s"),
-        col(dstCol).cast("string").as("__d"))
-      .where(col("__s").isNotNull && col("__d").isNotNull)
-      .pin("Graph.reachProfile edges")
-    val seed0 = Materialize(seeds
-      .select(col(seedCol).cast("string").as("__seed"))
-      .where(col("__seed").isNotNull).distinct(), "Graph.reachProfile seeds")
+    val e = directed(edges, srcCol, dstCol).pin("Graph.reachProfile edges")
+    val seed0 = Materialize(seedSet(seeds, seedCol, "__seed"),
+      "Graph.reachProfile seeds")
     val nSeeds = seed0.rows
     require(nSeeds <= maxSeeds,
       s"reachProfile: $nSeeds seeds exceed maxSeeds=$maxSeeds — settled " +
@@ -851,16 +824,8 @@ object Graph {
     require(minCommon >= 1L, s"minCommon must be >= 1, got $minCommon")
     require(maxDegree >= 2L, s"maxDegree must be >= 2, got $maxDegree")
     Inputs.ppmScale(ppmScale)
-    Inputs.present(edges, "edge list", srcCol, dstCol)
-    val su = col(srcCol).cast("string")
-    val sv = col(dstCol).cast("string")
-    val und = edges
-      .where(su.isNotNull && sv.isNotNull && su =!= sv)
-      .select(least(su, sv).as("__u"), greatest(su, sv).as("__v"))
-      .distinct()
-      .pin("Graph.linkPrediction edges")
-    val adj = und.select(col("__u").as("__s"), col("__v").as("__w"))
-      .unionByName(und.select(col("__v").as("__s"), col("__u").as("__w")))
+    val und = simple(edges, srcCol, dstCol).pin("Graph.linkPrediction edges")
+    val adj = adjacency(und)
     // the loud hub refusal rides the degree table's own (mandatory, eager)
     // materialization: raise_error fires during the pin job,
     // so validation costs ZERO extra jobs — the previous limit(1) probe

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
 /** The input contract of the pipeline operators, checked on the driver
   * before any Spark job: the columns an operator reads are present, of the
   * type its arithmetic needs, and clear of the names it writes; its
-  * `ppmScale` is in range. Every guard fails with an
+  * `ppmScale`, attribution window and percentile labels are valid. Every
+  * guard fails with an
   * `IllegalArgumentException` naming the operator or frame and the column.
   *
   * Reserved names: operators that decorate a USER frame with internal
@@ -61,6 +62,51 @@ private[graft] object Inputs {
   def ppmScale(scale: Long): Unit =
     require(scale >= 100L && scale <= 1000000000000L,
       s"ppmScale must be in [1e2, 1e12], got $scale")
+
+  /** The attribution window shared by the batch and streaming attribution
+    * operators: at least one touch type, the conversion type not among
+    * them, and a positive lookback.
+    */
+  def attribution(touchTypes: Seq[String], convType: String,
+      lookback: Long): Unit = {
+    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
+    require(!touchTypes.contains(convType),
+      s"conversion type '$convType' cannot also be a touch type")
+    require(lookback > 0L, s"lookback must be positive, got $lookback")
+  }
+
+  /** The multi-touch credit model: `time_decay` needs a positive half-life
+    * with at most 40 half-lives in the lookback (its integer weights are
+    * 2^(40-k)); the other models take none.
+    */
+  def creditModel(model: String, halfLife: Long, lookback: Long): Unit = {
+    require(Seq("linear", "position", "time_decay").contains(model),
+      s"model must be linear, position or time_decay, got '$model'")
+    if (model == "time_decay") {
+      require(halfLife > 0L,
+        s"time_decay needs a positive halfLife, got $halfLife")
+      require(lookback / halfLife <= 40L,
+        s"lookback/halfLife = ${lookback / halfLife} exceeds 40 half-lives " +
+          "— the integer weight 2^(40-k) would overflow exactness; raise " +
+          "halfLife or shorten lookback")
+    } else require(halfLife == 0L,
+      s"halfLife only applies to time_decay, got $halfLife for '$model'")
+  }
+
+  /** Output column names for percentiles: 0.5 → `p50`, 0.995 → `p99_5`.
+    * Two percentiles that name the same column are refused.
+    */
+  def percentileLabels(ps: Seq[Double]): Seq[String] = {
+    val labels = ps.map { p =>
+      val pct = p * 100
+      if (pct == math.rint(pct)) s"p${pct.toLong}"
+      else "p" + BigDecimal(pct).underlying.stripTrailingZeros.toPlainString
+        .replace('.', '_')
+    }
+    require(labels.distinct.size == labels.size,
+      s"duplicate percentile labels: ${labels.mkString(", ")}")
+    labels
+  }
 
   def free(df: DataFrame, op: String, names: String*): Unit =
     free(df.columns.toSeq, op, names: _*)

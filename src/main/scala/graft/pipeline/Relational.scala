@@ -598,15 +598,7 @@ object Relational {
     require(steps.size >= 2, "latency stats need at least two steps")
     require(percentiles.nonEmpty, "ask for at least one percentile")
     Inputs.numeric(events, "funnelLatency", "time column", timeCol)
-    def lbl(p: Double): String = {
-      val pct = p * 100
-      if (pct == math.rint(pct)) s"p${pct.toLong}"
-      else "p" + BigDecimal(pct).underlying.stripTrailingZeros.toPlainString
-        .replace('.', '_')
-    }
-    val labels = percentiles.map(lbl)
-    require(labels.distinct.size == labels.size,
-      s"duplicate percentile labels: ${labels.mkString(", ")}")
+    val labels = Inputs.percentileLabels(percentiles)
     val stages = funnelStages(events, entityCol, typeCol, timeCol, steps, maxGap)
     stages.zip(steps).zipWithIndex.drop(1).map { case ((stage, step), i) =>
       val g = (col("__t") - col("__pt")).cast("double")
@@ -957,10 +949,7 @@ object Relational {
       events: DataFrame, entityCol: String, timeCol: String, typeCol: String,
       convType: String, touchTypes: Seq[String], lookback: Long,
       mode: String = "last"): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(convType),
-      s"conversion type '$convType' cannot also be a touch type")
-    require(lookback > 0L, s"lookback must be positive, got $lookback")
+    Inputs.attribution(touchTypes, convType, lookback)
     require(mode == "last" || mode == "first",
       s"mode must be 'last' or 'first', got '$mode'")
     Inputs.present(events, "events side", entityCol, timeCol, typeCol)
@@ -1029,23 +1018,10 @@ object Relational {
       convType: String, touchTypes: Seq[String], lookback: Long,
       model: String = "linear", halfLife: Long = 0L,
       maxTouchesPerConversion: Int = 65536): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(convType),
-      s"conversion type '$convType' cannot also be a touch type")
-    require(lookback > 0L, s"lookback must be positive, got $lookback")
-    require(Seq("linear", "position", "time_decay").contains(model),
-      s"model must be linear, position or time_decay, got '$model'")
+    Inputs.attribution(touchTypes, convType, lookback)
+    Inputs.creditModel(model, halfLife, lookback)
     require(maxTouchesPerConversion >= 1,
       s"maxTouchesPerConversion must be >= 1, got $maxTouchesPerConversion")
-    if (model == "time_decay") {
-      require(halfLife > 0L,
-        s"time_decay needs a positive halfLife, got $halfLife")
-      require(lookback / halfLife <= 40L,
-        s"lookback/halfLife = ${lookback / halfLife} exceeds 40 half-lives " +
-          "— the integer weight 2^(40-k) would overflow exactness; raise " +
-          "halfLife or shorten lookback")
-    } else require(halfLife == 0L,
-      s"halfLife only applies to time_decay, got $halfLife for '$model'")
     Inputs.present(events, "events side", entityCol, timeCol, typeCol)
     Inputs.free(events, "multiTouchAttribution", "touch_type", "touch_time",
       "credit", "__touches", "__ws", "__sw", "__n", "__pos", "__t")

@@ -351,8 +351,11 @@ final class Session private (
       // (a chain's stability, x groups bound, or its root under zCDP) —
       // show the distance actually driving noise calibration when they differ
       val distanceNote = (t.protectedChange, t.metric) match {
-        case (AddRowsWithID(_, _, m), IDsMetric(_, _, d, _)) if d != Rat(m.toLong) =>
-          s"; effective id distance: $d"
+        case (AddRowsWithID(_, _, m), im @ IDsMetric(_, _, d, _)) if d != Rat(m.toLong) =>
+          // a zCDP child's distance is a rounded-up root; its exact square
+          // is what the Gaussian calibrations read
+          s"; effective id distance: $d" +
+            (if (im.sq != d * d) s" (squared: ${im.sq})" else "")
         case (AddMaxRows(k), RowsMetric(d, _)) if d != Rat(k.toLong) =>
           s"; effective rows distance: $d"
         case _ => ""

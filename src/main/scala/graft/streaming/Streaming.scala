@@ -1150,23 +1150,10 @@ object Streaming {
       maxTouchesPerEntity: Int = 4096,
       entityTtlMs: Option[Long] = None,
       eventTimeTtl: Option[EventTimeTtl] = None): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(convType),
-      s"conversion type '$convType' cannot also be a touch type")
-    require(lookback > 0L, s"lookback must be positive, got $lookback")
-    require(Seq("linear", "position", "time_decay").contains(model),
-      s"model must be linear, position or time_decay, got '$model'")
+    Inputs.attribution(touchTypes, convType, lookback)
+    Inputs.creditModel(model, halfLife, lookback)
     require(maxTouchesPerEntity >= 1,
       s"maxTouchesPerEntity must be >= 1, got $maxTouchesPerEntity")
-    if (model == "time_decay") {
-      require(halfLife > 0L,
-        s"time_decay needs a positive halfLife, got $halfLife")
-      require(lookback / halfLife <= 40L,
-        s"lookback/halfLife = ${lookback / halfLife} exceeds 40 half-lives " +
-          "— the integer weight 2^(40-k) would overflow exactness; raise " +
-          "halfLife or shorten lookback")
-    } else require(halfLife == 0L,
-      s"halfLife only applies to time_decay, got $halfLife for '$model'")
     Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     val touchSet = touchTypes.toSet
@@ -1395,10 +1382,7 @@ object Streaming {
       convType: String, touchTypes: Seq[String], lookback: Long,
       entityTtlMs: Option[Long] = None,
       eventTimeTtl: Option[EventTimeTtl] = None): DataFrame = {
-    require(touchTypes.nonEmpty, "attribution needs at least one touch type")
-    require(!touchTypes.contains(convType),
-      s"conversion type '$convType' cannot also be a touch type")
-    require(lookback > 0L, s"lookback must be positive, got $lookback")
+    Inputs.attribution(touchTypes, convType, lookback)
     Inputs.present(events, "events side", entityCol, typeCol, timeCol)
     val timeoutConf = ttlTimeoutConf(events, entityTtlMs, eventTimeTtl)
     val touchSet = touchTypes.toSet

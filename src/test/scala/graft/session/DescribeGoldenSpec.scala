@@ -103,4 +103,24 @@ class DescribeGoldenSpec extends SparkSpec {
         |    (id space: default_id_space)
         |""".stripMargin)
   }
+
+  test("golden: a zCDP partitioned child also shows its exact squared distance") {
+    // under zCDP the child's distance is sqrt(g), rounded up to a rational;
+    // the Gaussian calibrations read its exact square g
+    val s = Session.fromDataFrame(spark, RhoZCDPBudget(2.0), "ids", df,
+      AddRowsWithID("uid"))
+    s.createView(
+      QueryBuilder("ids").enforce(MaxGroupsPerID("flag", 2)), "grouped")
+    val kids = s.partitionAndCreate("grouped", RhoZCDPBudget(1.0), "flag",
+      Seq("part_a" -> "A"))
+    assert(kids("part_a").describe() ===
+      """Remaining privacy budget: RhoZCDPBudget(rho=1)
+        |Private tables:
+        |  part_a (protected: AddRowsWithID(uid,default_id_space,1); effective id distance: 388736063997/274877906944 (squared: 2))
+        |    flag: VARCHAR [nullable]
+        |    qty: INTEGER [nullable]
+        |    uid: INTEGER [id, nullable]
+        |    (id space: default_id_space)
+        |""".stripMargin)
+  }
 }
