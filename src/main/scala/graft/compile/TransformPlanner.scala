@@ -124,9 +124,8 @@ final class TransformPlanner(catalog: Catalog, spark: SparkSession) {
       // table, measured on the actual data
       // (reference _constraint_propagation.py:199-210)
       val stats = pubRaw.groupBy(joinCols.map(col).toIndexedSeq: _*)
-        .agg(count(lit(1)).as("__n")).agg(max("__n"), sum("__n")).head()
+        .agg(count(lit(1)).as("__n")).agg(max("__n")).head()
       val fanout = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-      val pubRows = if (stats.isNullAt(1)) 0L else stats.getLong(1)
       // broadcast by estimated BYTES, not rows: a wide 4M-row public table
       // can blow the driver/executor broadcast limit even when a narrow one
       // fits. Catalyst's own size estimate (logical plan stats) accounts for

@@ -42,9 +42,7 @@ object Bpe {
       df: DataFrame, textCol: String, numMerges: Int,
       minPairCount: Long = 2L, maxWords: Long = 1L << 20): Model = {
     require(numMerges >= 0, "numMerges must be non-negative")
-    val fetched = df
-      .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
+    val fetched = TextAnalysis.wordRows(df, textCol, "w")
       .groupBy("w").agg(count(lit(1)).as("n"))
       .limit(graft.Limits.toIntBound(maxWords) + 1)
       .collect()
@@ -194,9 +192,7 @@ object Bpe {
     // same code-point symbol alphabet as train() (see toSymbols: UTF-16
     // units would put lone surrogates in rows, which UTF-8 encoding mangles)
     val toSyms = udf((w: String) => toSymbols(w).toSeq)
-    var words = df
-      .select(explode(split(trim(lower(col(textCol))), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
+    var words = TextAnalysis.wordRows(df, textCol, "w")
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(toSyms(col("w")).as("syms"), col("n"))
       .filter(size(col("syms")) >= 2) // single-symbol words never pair
@@ -334,7 +330,7 @@ object Bpe {
         new java.util.HashMap[String, Array[String]]()
       override def apply(t: String): Seq[String] = {
         if (t == null) return null
-        val words = t.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")
+        val words = TextAnalysis.wordsOf(t, lower = true)
         val out = Seq.newBuilder[String]
         words.foreach { w =>
           if (w.nonEmpty) {

@@ -338,14 +338,13 @@ object CorpusStats {
   }
 
   /** One row per non-empty lowercased whitespace token, keeping `extra`
-    * columns — THE tokenization convention every token oracle mirrors as
+    * columns — the tokenization convention every token oracle mirrors as
     * DuckDB's `string_split_regex(trim(lower(text)), '\s+')`; q78/q83/q87
-    * all hash against it, so it lives in exactly one place.
+    * all hash against it. It is [[TextAnalysis.wordRows]], the token
+    * stream BM25 and BPE training read too, over the one word split.
     */
   private def tokens(df: DataFrame, textCol: String, extra: Column*): DataFrame =
-    df.select(extra :+
-        explode(split(trim(lower(col(textCol))), "\\s+")).as("token"): _*)
-      .filter(length(col("token")) > 0)
+    TextAnalysis.wordRows(df, textCol, "token", extra: _*)
 
   /** Exact corpus-wide top-`k` tokens by occurrence count, ties broken by
     * token string so the released set is deterministic on any engine. The
@@ -610,7 +609,7 @@ object CorpusStats {
     require(k > 0.0, s"smoothing k must be positive, got $k")
     val base = Dedup.spread(df).select(col(idCol),
       when(length(trim(col(textCol))) > 0,
-        split(trim(lower(col(textCol))), "\\s+"))
+        TextAnalysis.wordsLower(col(textCol)))
         .otherwise(array().cast("array<string>")).as("__ts"))
     val biUdf = udf((ts: Seq[String]) =>
       if (ts == null || ts.length < 2) Array.empty[(String, String)]
@@ -682,18 +681,6 @@ object CorpusStats {
       .filter(col("n_docs") >= minDocs)
   }
 
-  /** Space-only trim, matching Spark's `trim` and DuckDB's `trim` (both
-    * strip U+0020 only — Java's `String.trim` strips every char <= 0x20
-    * and would diverge from the SQL oracle on tabs and carriage returns).
-    */
-  private def spaceTrim(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
   /** FNV-1a 64-bit over UTF-16 code units — the internal line key for
     * [[stripBoilerplateLines]]. Never released, so it needs no SQL mirror;
     * it only has to be one fixed function of the line in both passes.
@@ -741,7 +728,7 @@ object CorpusStats {
       else {
         val seen = new java.util.HashSet[Long]
         t.split("\n", -1).foreach { raw =>
-          val l = spaceTrim(raw)
+          val l = TextAnalysis.spaceTrim(raw)
           if (l.nonEmpty) seen.add(fnv1a64(l))
         }
         val out = new Array[Long](seen.size)
@@ -776,7 +763,7 @@ object CorpusStats {
         val kept = new scala.collection.mutable.ArrayBuffer[String](lines.length)
         var removed = 0L
         lines.foreach { raw =>
-          val l = spaceTrim(raw)
+          val l = TextAnalysis.spaceTrim(raw)
           if (l.nonEmpty && set.contains(fnv1a64(l))) removed += 1
           else kept += raw
         }

@@ -27,11 +27,10 @@ object Dedup {
 
   /** Word k-gram shingle set of a text column (distinct, order ignored). */
   def shingles(c: Column, k: Int): Column = {
-    val toks = split(trim(c), "\\s+")
+    val toks = TextAnalysis.words(c)
     array_distinct(
       when(size(toks) < k, array(concat_ws(" ", toks)))
-        .otherwise(transform(sequence(lit(0), size(toks) - k),
-          i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
+        .otherwise(TextAnalysis.wordWindows(toks, size(toks) - k, k)))
   }
 
   /** Per-document span-duplication fraction — the ExactSubstr signal
@@ -61,7 +60,7 @@ object Dedup {
   def spanDuplicationFraction(
       df: DataFrame, idCol: String, textCol: String, k: Int = 3): DataFrame = {
     require(k >= 1, "k must be positive")
-    val toks = split(trim(col(textCol)), "\\s+")
+    val toks = TextAnalysis.words(col(textCol))
     // guard BOTH emptiness and short docs: sequence(0, negative) would
     // count down, not produce an empty list. The token-hash array projects
     // in its own step so the split runs once per row; the gram step
@@ -82,39 +81,30 @@ object Dedup {
         col("n_dup_starts").cast("double") / col("n_starts").cast("double"))
   }
 
-  /** JVM-side mirror of [[shingles]]: space-trim (Spark `trim` semantics),
-    * `\s+` split, k-gram join by one space, distinct in first-seen order.
+  /** JVM-side mirror of [[shingles]] over one non-null text: its words
+    * ([[TextAnalysis.wordsOf]], lowercased with `lower`), k-gram join by one
+    * space, distinct in first-seen order.
     */
-  private def shingleArr(t: String, k: Int): Array[String] = {
-    var s = 0
-    var e = t.length
-    while (s < e && t.charAt(s) == ' ') s += 1
-    while (e > s && t.charAt(e - 1) == ' ') e -= 1
-    val toks = t.substring(s, e).split("\\s+")
+  private def shingleArr(t: String, k: Int, lower: Boolean = false): Array[String] = {
+    val toks = TextAnalysis.wordsOf(t, lower)
     if (toks.length < k) Array(toks.mkString(" "))
-    else Array.tabulate(toks.length - k + 1) { i =>
-      val sb = new java.lang.StringBuilder
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      sb.toString
-    }.distinct
+    else {
+      val ws = java.util.Arrays.asList(toks: _*)
+      Array.tabulate(toks.length - k + 1)(i => String.join(" ", ws.subList(i, i + k))).distinct
+    }
   }
 
   /** [[shingleArr]] over lowercased text — the shingling kernel shared
     * with CorpusStats.ngramDocFrequency. NULL in, NULL out: the Catalyst
     * twin `shingles(lower(c), k)` is NULL on NULL text (every member of
     * its expression chain is null-propagating), and the two kernels must
-    * agree on EVERY input or swapping them changes results — the old
-    * `null -> Array("")` mapping minted one empty-string gram per null
-    * document that the declarative path never counted.
+    * agree on every input or swapping them changes results; both split
+    * words by the one definition in [[TextAnalysis.words]], and
+    * TextKernelTwinSpec runs them side by side.
     */
   private[pipeline] def lowerShingles(t: String, k: Int): Array[String] =
     if (t == null) null
-    else shingleArr(t.toLowerCase(java.util.Locale.ROOT), k)
+    else shingleArr(t, k, lower = true)
 
   /** [[lowerShingles]] as a Column — the JVM-kernel twin of
     * `shingles(lower(c), k)` for hot paths: the declarative
@@ -175,9 +165,7 @@ object Dedup {
   private def signatureOf(shingles: Array[String], numHashes: Int): Array[Long] = {
     val mins = Array.fill(numHashes)(Long.MaxValue)
     shingles.foreach { s =>
-      // 64-bit base hash: two seeded 32-bit murmurs over the string
-      val h = (scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c).toLong << 32) |
-        (scala.util.hashing.MurmurHash3.stringHash(s, 0x85ebca6b).toLong & 0xffffffffL)
+      val h = shingleHash(s)
       var i = 0
       while (i < numHashes) {
         // splitmix64-style odd multiplier per function keeps the family
@@ -189,6 +177,11 @@ object Dedup {
     }
     mins
   }
+
+  /** 64-bit shingle hash: two seeded 32-bit murmurs over the string. */
+  private def shingleHash(s: String): Long =
+    (scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c).toLong << 32) |
+      (scala.util.hashing.MurmurHash3.stringHash(s, 0x85ebca6b).toLong & 0xffffffffL)
 
   def minhashSignature(shingleSet: Column, numHashes: Int): Column = {
     val u = udf((shingles: Seq[String]) =>
@@ -538,7 +531,7 @@ object Dedup {
       java.lang.Long.valueOf(out)
       }
     })
-    u(split(trim(lower(c)), "\\s+"))
+    u(TextAnalysis.wordsLower(c))
   }
 
   /** Near-dup pairs by SimHash with full recall at near-linear cost.
@@ -690,7 +683,7 @@ object Dedup {
     // (interpreted higher-order functions have no subexpression
     // elimination), which is O(tokens^2) string work per document —
     // measured 5x slower than the kernel on the documents table. The
-    // kernel mirrors `shingles` exactly (agreement is spec-asserted) but
+    // kernel mirrors `shingles` exactly (TextKernelTwinSpec asserts it) but
     // emits 64-bit shingle HASHES, not strings: the frequency aggregate,
     // per-doc prefix window, and prefix self-join all shuffle and compare
     // 8-byte longs instead of ~25-byte gram strings. A hash collision can
@@ -698,14 +691,7 @@ object Dedup {
     // adds a candidate or shifts the tie-break order — never drops a true
     // pair past the exact-verify stage's recall.
     val shUdf = udf((t: String) => if (t == null) null else {
-      val sh = shingleArr(t, n)
-      val out = new Array[Long](sh.length)
-      var i = 0
-      while (i < sh.length) {
-        out(i) = (scala.util.hashing.MurmurHash3.stringHash(sh(i), 0x9747b28c).toLong << 32) |
-          (scala.util.hashing.MurmurHash3.stringHash(sh(i), 0x85ebca6b).toLong & 0xffffffffL)
-        i += 1
-      }
+      val out = shingleArr(t, n).map(shingleHash)
       java.util.Arrays.sort(out)
       out
     })
@@ -920,7 +906,7 @@ object Dedup {
         }.toSeq
       }
     })
-    u(split(trim(c), "\\s+"))
+    u(TextAnalysis.words(c))
   }
 
   /** Per-document contamination score: for each `docs` row, how many of its
@@ -1117,9 +1103,10 @@ object Dedup {
     * low bit of xxhash64(dimension index, plane) — the same derivation the
     * original Catalyst formulation used (`XXH64` is Spark's own xxhash64
     * kernel, so signatures are unchanged). Runs as one fused JVM loop per
-    * row over a memoized sign matrix: the declarative
-    * aggregate/zip_with/xxhash64 tree is interpreted per element and was
-    * the dominant cost of every LSH plan.
+    * row over a memoized sign matrix — [[Similarity.bandSignatures]] with
+    * one band of `planes` bits: the declarative aggregate/zip_with/xxhash64
+    * tree is interpreted per element and was the dominant cost of every
+    * LSH plan.
     */
   def hyperplaneSignature(vec: Column, planes: Int): Column = {
     require(planes >= 8 && planes <= 64 && planes % 8 == 0,
@@ -1127,23 +1114,9 @@ object Dedup {
         "split is 8-bit (planes < 8 silently returns ZERO pairs; a " +
         "non-multiple silently drops the top bits) and the signature is " +
         "one long (a shift past 63 wraps mod 64, corrupting low bits)")
-    val u = udf((v: Array[Double]) => {
+    val u = udf((v: Array[Double]) =>
       if (v == null) null
-      else {
-        val signs = Dedup.planeSigns(planes, v.length)
-        var sig = 0L
-        var p = 0
-        while (p < planes) {
-          val row = signs(p)
-          var dot = 0.0
-          var i = 0
-          while (i < v.length) { dot += row(i) * v(i); i += 1 }
-          if (dot > 0) sig |= (1L << p)
-          p += 1
-        }
-        java.lang.Long.valueOf(sig)
-      }
-    })
+      else java.lang.Long.valueOf(Similarity.bandSignatures(v, 1, planes)(0)))
     u(vec.cast("array<double>"))
   }
 
@@ -1181,7 +1154,7 @@ object Dedup {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
     Inputs.present(df, "input", idCol, textCol)
     val minTokens = w + k - 1
-    val toks = split(trim(lower(col(textCol))), "\\s+")
+    val toks = TextAnalysis.wordsLower(col(textCol))
     val base = spread(df).select(
       col(idCol).cast("string").as("__id"),
       array_join(toks, " ").as("__norm"),
@@ -1439,9 +1412,10 @@ object Dedup {
         (col("__rb") - col("__ra")).as("rank_gap"))
   }
 
-  /** Memoized +-1 plane matrix for [[hyperplaneSignature]]; entry (p, i) is
-    * the low bit of Spark's xxhash64 over the two int columns (i, p) with
-    * the default seed 42, i.e. XXH64.hashInt(p, XXH64.hashInt(i, 42)).
+  /** Memoized +-1 plane matrix for [[Similarity.bandSignatures]]; entry
+    * (p, i) is the low bit of Spark's xxhash64 over the two int columns
+    * (i, p) with the default seed 42, i.e.
+    * XXH64.hashInt(p, XXH64.hashInt(i, 42)).
     */
   private val planeSignsCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Array[Double]]]()

@@ -53,16 +53,13 @@ object Retrieval {
         "join would be ambiguous; rename one side first")
     require(qidCol != "token" && idCol != "token",
       "id columns must not be named 'token' (the tokenization scratch name)")
-    def toks(df: DataFrame, id: String, text: String) = df
-      .select(col(id), explode(split(trim(lower(col(text))), "\\s+")).as("token"))
-      .filter(length(col("token")) > 0)
-    val dToks = toks(docs, idCol, textCol)
+    val dToks = TextAnalysis.wordRows(docs, textCol, "token", col(idCol))
     val tf = dToks.groupBy(col(idCol), col("token"))
       .agg(count(lit(1)).as("__tf"))
     val dlen = dToks.groupBy(col(idCol)).agg(count(lit(1)).as("__dl"))
     val stats = dlen.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__total"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("__df"))
-    val qTerms = toks(queries, qidCol, qtextCol)
+    val qTerms = TextAnalysis.wordRows(queries, qtextCol, "token", col(qidCol))
       .select(col(qidCol), col("token")).distinct()
     val contrib = qTerms
       .join(tf, "token")

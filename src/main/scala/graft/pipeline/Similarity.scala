@@ -366,6 +366,8 @@ object Similarity {
     * `bandBits` planes (planes t*bandBits until (t+1)*bandBits of the shared
     * memoized plane matrix) into one long — the classic L-hash-table LSH
     * layout, not limited to 64 total planes like a single packed signature.
+    * The one hyperplane kernel: [[Dedup.hyperplaneSignature]] is its
+    * single-band case.
     */
   private[pipeline] def bandSignatures(
       v: Array[Double], numBands: Int, bandBits: Int): Array[Long] = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines. All
@@ -42,10 +42,61 @@ object TextAnalysis {
       "\\s+", " "))
   }
 
+  /** The words of a text column — the one word split every text operator
+    * reads: Spark `trim` (U+0020 only), then a `\s+` regex split. An edge
+    * empty word is kept (`"a b\n"` is `[a, b, ""]`, blank text is `[""]`),
+    * exactly as the SQL oracles' `string_split_regex(trim(…), '\s+')`
+    * gives it; each operator keeps its own rule for blank and short text.
+    */
+  private[pipeline] def words(c: Column): Column = split(trim(c), "\\s+")
+
+  /** [[words]] of the lowercased text. */
+  private[pipeline] def wordsLower(c: Column): Column = words(lower(c))
+
+  /** Space-only trim, matching Spark's `trim` and DuckDB's `trim` (both
+    * strip U+0020 only — Java's `String.trim` strips every char <= 0x20
+    * and would diverge from the SQL oracle on tabs and carriage returns).
+    */
+  private[pipeline] def spaceTrim(s: String): String = {
+    var a = 0
+    var b = s.length
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    if (a == 0 && b == s.length) s else s.substring(a, b)
+  }
+
+  /** JVM twin of [[words]] (of [[wordsLower]] with `lower`, folding case
+    * under `Locale.ROOT`) for row kernels. NULL in, NULL out; the split
+    * limit -1 keeps the trailing empty word that Spark's `split` keeps.
+    */
+  private[pipeline] def wordsOf(t: String, lower: Boolean = false): Array[String] =
+    if (t == null) null
+    else spaceTrim(if (lower) t.toLowerCase(java.util.Locale.ROOT) else t)
+      .split("\\s+", -1)
+
+  /** One row per non-empty lowercased word of `textCol`, named `as`, after
+    * the `extra` columns — the token stream the token statistics, BM25 and
+    * BPE training read.
+    */
+  private[pipeline] def wordRows(
+      df: DataFrame, textCol: String, as: String, extra: Column*): DataFrame =
+    df.select(extra :+ explode(wordsLower(col(textCol))).as(as): _*)
+      .filter(length(col(as)) > 0)
+
+  /** Space-joined windows of `width` words of `toks`, one starting at
+    * every `stride`-th word from 0 to `lastStart` (a slice past the end
+    * shortens the window). Stride 1 gives the word n-grams; it indexes by
+    * `i`, not `i * 1`, so the n-gram plans keep their expression trees.
+    */
+  private[pipeline] def wordWindows(
+      toks: Column, lastStart: Column, width: Int, stride: Int = 1): Column =
+    transform(sequence(lit(0), lastStart), i =>
+      concat_ws(" ", slice(toks, (if (stride == 1) i else i * stride) + 1, lit(width))))
+
   /** Whitespace token count; empty/blank text counts 0. */
   def tokenCount(c: Column): Column =
     when(length(trim(c)) === 0, lit(0L))
-      .otherwise(size(split(trim(c), "\\s+")).cast("long"))
+      .otherwise(size(words(c)).cast("long"))
 
   /** A BPE-ish subword token estimate: word-piece boundaries at whitespace,
     * punctuation and case/digit changes; approximates tokenizer output
@@ -79,7 +130,7 @@ object TextAnalysis {
     val stops = Seq("the", "and", "of", "to", "a", "in", "is", "it",
       "that", "for", "on", "with", "as", "was", "at", "by")
     val toks = tokenCount(c)
-    val stopToks = size(filter(split(trim(lower(c)), "\\s+"), t =>
+    val stopToks = size(filter(wordsLower(c), t =>
       regexp_replace(t, "^\\p{Punct}+|\\p{Punct}+$", "").isin(stops: _*)))
     when(toks === 0, lit(0.0)).otherwise(
       stopToks.cast("double") / toks.cast("double"))
@@ -153,10 +204,9 @@ object TextAnalysis {
     * double reproduces bit-for-bit in any engine.
     */
   def repeatedNgramFraction(c: Column, n: Int = 2): Column = {
-    val toks = split(trim(lower(c)), "\\s+")
+    val toks = wordsLower(c)
     val grams = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+      .otherwise(wordWindows(toks, size(toks) - n, n))
     when(size(grams) <= 0, lit(0.0)).otherwise(
       (size(grams) - size(array_distinct(grams))).cast("double") /
         size(grams).cast("double"))
@@ -187,15 +237,13 @@ object TextAnalysis {
     require(stride <= window,
       s"stride ($stride) must not exceed window ($window): a larger stride " +
         "would skip tokens, breaking the every-token-covered contract")
-    val toks = split(trim(c), "\\s+")
+    val toks = words(c)
     val n = size(toks)
     // int division: Column./ is double division; token counts stay far
     // below 2^53 so floor(double)/cast is exact, and sequence needs ints
     val lastIdx = floor((n - 1).cast("double") / lit(stride.toDouble)).cast("int")
     when(length(trim(c)) === 0, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), lastIdx),
-        i => concat_ws(" ", slice(toks, i * stride + 1, lit(window)))))
+      .otherwise(wordWindows(toks, lastIdx, window, stride))
   }
 
   /** Mask personally-identifying / non-content spans with placeholder
@@ -267,7 +315,7 @@ object TextAnalysis {
         }
       }
     })
-    u(split(trim(lower(c)), "\\s+"))
+    u(wordsLower(c))
   }
 
   /** Character n-gram based language ID over a fixed language set, as a

@@ -269,32 +269,40 @@ object Streaming {
     private def leasePath(base: String) =
       new org.apache.hadoop.fs.Path(base + ".lease")
 
+    /** One ledger file (a lease or a slot), parsed by `parse`: None when
+      * the file is absent, unreadable, or torn (`parse` fails or throws).
+      */
+    private def readLedgerFile[A](fs: org.apache.hadoop.fs.FileSystem,
+        p: org.apache.hadoop.fs.Path)(parse: String => Option[A]): Option[A] =
+      try {
+        val in = fs.open(p) // an absent file throws FileNotFoundException
+        try parse(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+        finally in.close()
+      } catch { case scala.util.control.NonFatal(_) => None }
+
+    /** Create or overwrite one ledger file with `line`; failures throw. */
+    private def writeLedgerFile(fs: org.apache.hadoop.fs.FileSystem,
+        p: org.apache.hadoop.fs.Path, line: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
     private def readLease(fs: org.apache.hadoop.fs.FileSystem,
         p: org.apache.hadoop.fs.Path): Option[(String, Long, String)] =
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          txt.trim.split("\\s+").toSeq match {
-            case tok +: ms +: rest if ms.forall(_.isDigit) && ms.nonEmpty =>
-              Some((tok, ms.toLong, rest.mkString(" ")))
-            case _ => None // torn lease write: treated as absent
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
+      readLedgerFile(fs, p)(_.split("\\s+").toSeq match {
+        case tok +: ms +: rest if ms.forall(_.isDigit) && ms.nonEmpty =>
+          Some((tok, ms.toLong, rest.mkString(" ")))
+        case _ => None // torn lease write: treated as absent
+      })
 
     private def writeLeaseLocked(fs: org.apache.hadoop.fs.FileSystem,
         p: org.apache.hadoop.fs.Path): Unit = {
       val host =
         try java.net.InetAddress.getLocalHost.getHostName
         catch { case scala.util.control.NonFatal(_) => "unknown" }
-      val line = s"$leaseToken ${System.currentTimeMillis()} $host " +
-        s"${ProcessHandle.current().pid()}\n"
-      val out = fs.create(p, true)
-      try out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeLedgerFile(fs, p, s"$leaseToken ${System.currentTimeMillis()} $host " +
+        s"${ProcessHandle.current().pid()}\n")
     }
 
     private def acquireLeaseLocked(
@@ -353,10 +361,7 @@ object Streaming {
       val p = slotPaths(base)(slotToggle)
       val fs = p.getFileSystem(conf)
       verifyLeaseLocked(fs, base)
-      val out = fs.create(p, true)
-      try out.write(s"${spentRat.num}/${spentRat.den}\n"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeLedgerFile(fs, p, s"${spentRat.num}/${spentRat.den}\n")
       // advance the toggle only after the write SUCCEEDS: a failed persist
       // must retry the same stale slot. Flipping first would point the next
       // write at the slot holding the newest durable spend, and a crash
@@ -369,28 +374,16 @@ object Streaming {
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
-    private def readSlot(fs: org.apache.hadoop.fs.FileSystem,
-        p: org.apache.hadoop.fs.Path): Option[Rat] =
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          txt.trim.split("/") match {
-            case Array(n, d) => Some(Rat(BigInt(n), BigInt(d)))
-            case _ => None
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None } // torn write
-
     private def restoreLocked(conf: org.apache.hadoop.conf.Configuration): Unit =
       ledgerPath.foreach { base =>
         // single-writer guard FIRST: refuse before reading any state if
         // another live accountant holds this ledger
         acquireLeaseLocked(conf)
         val fs = new org.apache.hadoop.fs.Path(base + ".0").getFileSystem(conf)
-        val slots = slotPaths(base).map(readSlot(fs, _))
+        val slots = slotPaths(base).map(readLedgerFile(fs, _)(_.split("/") match {
+          case Array(n, d) => Some(Rat(BigInt(n), BigInt(d)))
+          case _ => None // torn slot write
+        }))
         val restored = slots.flatten
         if (restored.nonEmpty) {
           val prior = restored.max
