@@ -353,7 +353,8 @@ final class MeasurementPlanner(
     * irrational bound is rounded up to stay a safe overestimate.
     *
     * `l2` must be true ONLY when the downstream mechanism is calibrated to L2
-    * sensitivity (Gaussian family under zCDP). A zCDP *budget* alone is not
+    * sensitivity (Gaussian family under zCDP); every caller passes [[isL2]],
+    * which checks both. A zCDP *budget* alone is not
     * enough: a Laplace mechanism hint under zCDP lowers to a pure-DP
     * mechanism via eps = sqrt(2 rho), and that mechanism needs the L1 bound
     * r*g — granting sqrt(g) there would under-noise by ~sqrt(g). Likewise
@@ -372,7 +373,6 @@ final class MeasurementPlanner(
         })
       case m @ IDsMetric(_, _, d, _) =>
         val groups = t.constraints.collect { case MaxGroupsPerID(c, g) => c -> g.toLong }.toMap
-        val zcdp = l2 && budget.isInstanceOf[RhoZCDPBudget]
         // per-ID L1 bounds and, for Gaussian consumers grouped on the
         // constraint column, exact SQUARED L2 bounds (r * sqrt(g) squared
         // is the rational r^2 * g — the reference carries the symbolic
@@ -383,7 +383,7 @@ final class MeasurementPlanner(
               case MaxRowsPerGroupPerID(c, r) if groups.contains(c) => groups(c) * r
             }
         val l2SqBounds: Seq[Long] =
-          if (!zcdp) Nil
+          if (!l2) Nil
           else t.constraints.collect { case MaxRowsPerID(n) => n.toLong * n } ++
             t.constraints.collect {
               case MaxRowsPerGroupPerID(c, r) if groups.contains(c) =>

@@ -4,10 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.BooleanType
 
-/** The one place graft pins an intermediate result. Every iterative
-  * operator, every eager pipeline result and every DP release goes through
-  * [[Materialize.apply]], so how a frame is pinned is decided here and
-  * nowhere else.
+/** The one place graft holds rows. Every iterative operator, every eager
+  * pipeline result and every DP release is pinned through
+  * [[Materialize.apply]], and every frame an operator reads more than once
+  * within one call is cached through [[Materialize.scoped]], so how rows
+  * are held, and for how long, is decided here and nowhere else. (The
+  * user-facing caches, `Session.createView(cache = true)` and
+  * `KeySet.cache`, are the only other holders.)
   *
   * The pin is Spark's eager `localCheckpoint`: the rows live in executor
   * block storage, and the returned frame scans them, reporting the output
@@ -65,6 +68,20 @@ object Materialize {
         (n, hits)
       } finally sc.setLocalProperty(JobDescription, outer)
     Pinned(pinned, counts.map(_._1).toIndexedSeq, counts.map(_._2).sum)
+  }
+
+  /** Run `body` with `reuse`, which caches a frame the body reads more
+    * than once at `Dataset.persist()`'s default level (MEMORY_AND_DISK,
+    * deserialized; the first job that reads it fills it) and returns it.
+    * Every reused frame is released, newest first and without blocking,
+    * when the body returns or throws, so a refused input leaves no cache
+    * entry behind. A frame read after the scope recomputes what it reused:
+    * the body returns a pinned frame, or one that does not read them.
+    */
+  def scoped[A](body: (DataFrame => DataFrame) => A): A = {
+    var held = List.empty[DataFrame]
+    try body { df => held ::= df.persist(); df }
+    finally held.foreach(_.unpersist(false))
   }
 
   /** `df.pin(label)`: [[apply]] for a caller that needs only the frame. */

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize
 import graft.exec.Materialize.Pin
 
 /** Corpus clustering for training-data curation: topic balance, diversity
@@ -61,13 +62,13 @@ object Clustering {
     * longs) — the entry [[Ivf.trainDistributed]] rides for a full-corpus
     * coarse quantizer. `materializeAssignment = false` skips the release
     * checkpoint for centroid-only callers (the returned frame is then lazy
-    * and must not be consumed after this method unpersists the working
-    * cache).
+    * and recomputes the working vectors, whose cache is released when this
+    * method returns).
     */
   private[pipeline] def kMeansMicroImpl(
       df: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int,
       scale: Long, materializeAssignment: Boolean)
-      : (DataFrame, Array[Array[Long]]) = {
+      : (DataFrame, Array[Array[Long]]) = Materialize.scoped { reuse =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1L, s"scale must be >= 1, got $scale")
@@ -111,8 +112,7 @@ object Clustering {
     require(k.toLong * dim <= 4L * 1000 * 1000,
       s"kMeansMicro: k*dim = ${k.toLong * dim} exceeds the driver-resident " +
         "centroid budget (4e6 longs) — reduce k or the dimensionality")
-    val cached = micro.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = reuse(micro)
     // deterministic seeds: the k smallest-id vectors (k·dim driver longs)
     var centroids: Array[Array[Long]] = cached.orderBy(col("__id")).limit(k)
       .select(col("__v")).collect()
@@ -164,7 +164,6 @@ object Clustering {
     val outRaw = lastAssign.select(col("__id").as(idCol), col("cluster"),
       col("dist_sq"))
     val out = if (materializeAssignment) outRaw.pin("Clustering.kMeans assignment") else outRaw
-    cached.unpersist(false)
     (out, centroids)
   }
 }

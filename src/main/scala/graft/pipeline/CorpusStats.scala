@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.exec.Materialize
 import graft.exec.Materialize.Pin
 
 /** One-pass corpus profiling: the summary a pipeline owner wants BEFORE
@@ -605,7 +606,7 @@ object CorpusStats {
     */
   def bigramLogProb(
       df: DataFrame, idCol: String, textCol: String,
-      k: Double = 0.5): DataFrame = {
+      k: Double = 0.5): DataFrame = Materialize.scoped { reuse =>
     require(k > 0.0, s"smoothing k must be positive, got $k")
     val base = Dedup.spread(df).select(col(idCol),
       when(length(trim(col(textCol))) > 0,
@@ -624,13 +625,12 @@ object CorpusStats {
         xxhash64(col("__b._1"), col("__b._2")).as("__g"),
         xxhash64(col("__b._1")).as("__hu"))
     // the bigram-type table feeds BOTH the cost model and the context row
-    // sums: persist it so the corpus-wide aggregation runs once, then pin
+    // sums: reuse it so the corpus-wide aggregation runs once, then pin
     // the finished (small, model-sized) cost table eagerly — the final
     // per-document join re-derives only the cheap transition stream, and
     // AQE picks that join's strategy from the checkpoint's REAL size
     // instead of a UDF-generate guess
-    val cuv = bi.groupBy("__g", "__hu").agg(count(lit(1)).as("__cuv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cuv = reuse(bi.groupBy("__g", "__hu").agg(count(lit(1)).as("__cuv")))
     val cu = cuv.groupBy("__hu").agg(sum(col("__cuv")).as("__cu"))
     val vocab = base.select(explode(col("__ts")).as("__tok"))
       .agg(countDistinct(col("__tok")).as("__vsz"))
@@ -640,7 +640,6 @@ object CorpusStats {
           (col("__cuv").cast("double") + lit(k))) * 1e6, 0)
           .cast("long").as("__cost_e6"))
       .pin("CorpusStats.bigramLogProb costs")
-    cuv.unpersist(false)
     bi.join(costs, Seq("__g"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("__cost_e6")).as("nll_sum_e6"))
@@ -802,7 +801,7 @@ object CorpusStats {
     // bi appears twice below (support agg + semi-join probe) but only
     // within single jobs — ReuseExchange dedups the distinct's shuffle
     // inside each plan, so only `kept` (read by the guard job AND the
-    // pair job) earns a persist
+    // pair job) is reused
     val bi = df
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .where(col("__b").isNotNull && col("__i").isNotNull)
@@ -812,7 +811,7 @@ object CorpusStats {
 
   /** [[frequentPairs]] body over an ALREADY-deduplicated (__b, __i)
     * incidence — the shared kernel [[pairAffinity]] reuses so its own
-    * deduplicated (and persisted) incidence is not re-distinct'd a
+    * deduplicated (and cached) incidence is not re-distinct'd a
     * second time (one full shuffle saved).
     */
   private def frequentPairsOn(
@@ -830,7 +829,7 @@ object CorpusStats {
     */
   private def frequentPairsWith(
       bi: DataFrame, supports: DataFrame, minSupport: Long,
-      maxBasketItems: Int): DataFrame = {
+      maxBasketItems: Int): DataFrame = Materialize.scoped { reuse =>
     // parameter validation lives HERE so both entry points (frequentPairs
     // and pairAffinity) share it: minSupport = 0 through pairAffinity used
     // to disable the A-priori prune silently and release every
@@ -840,8 +839,7 @@ object CorpusStats {
     val freqItems = supports
       .where(col("__s") >= minSupport)
       .select(col("__i"))
-    val kept = bi.join(freqItems, Seq("__i"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = reuse(bi.join(freqItems, Seq("__i"), "left_semi"))
     val big = kept.groupBy("__b").agg(count(lit(1)).as("__n"))
       .where(col("__n") > maxBasketItems).limit(1).collect()
     require(big.isEmpty, {
@@ -850,14 +848,12 @@ object CorpusStats {
         s"items (> maxBasketItems=$maxBasketItems); its wedge fan-out " +
         "would be quadratic — raise maxBasketItems or pre-filter"
     })
-    val out = kept.as("a").join(kept.as("b"),
+    kept.as("a").join(kept.as("b"),
         col("a.__b") === col("b.__b") && col("a.__i") < col("b.__i"))
       .groupBy(col("a.__i").as("item_a"), col("b.__i").as("item_b"))
       .agg(count(lit(1)).as("support"))
       .where(col("support") >= minSupport)
       .pin("CorpusStats.frequentPairs")
-    kept.unpersist(false)
-    out
   }
 
   /** [[frequentPairs]] plus the association strength every basket
@@ -885,22 +881,22 @@ object CorpusStats {
     */
   def pairAffinity(
       df: DataFrame, basketCol: String, itemCol: String, minSupport: Long,
-      maxBasketItems: Int = 10000, ppmScale: Long = 1000000L): DataFrame = {
+      maxBasketItems: Int = 10000,
+      ppmScale: Long = 1000000L): DataFrame = Materialize.scoped { reuse =>
     Inputs.ppmScale(ppmScale)
     Inputs.present(df, "input", basketCol, itemCol)
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     def idiv(a: Column, b: Column): Column = call_function("div", a, b)
-    val bi = df
+    val bi = reuse(df
       .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .where(col("__b").isNotNull && col("__i").isNotNull)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // ONE per-item support aggregate feeds both the A-priori prune inside
     // frequentPairsWith and the lift/confidence joins below. r14 passed the
     // same LAZY aggregate to both and leaned on Catalyst exchange reuse —
     // but the consumers run in DIFFERENT JOBS (the guard collect vs the
     // final checkpoint), and exchange reuse never spans jobs, so the
-    // aggregate re-scanned the persisted incidence once per job (r14
+    // aggregate re-scanned the cached incidence once per job (r14
     // verdict item 5: no ReusedExchange in the plan dump). Materialize it
     // instead: one item-keyed shuffle total, every consumer scans the
     // checkpointed rows (guide §2.4 / §5 — it is REUSED and recomputing
@@ -909,7 +905,7 @@ object CorpusStats {
       .pin("CorpusStats.pairAffinity supports")
     val pairs = frequentPairsWith(bi, supports, minSupport, maxBasketItems)
     val nBaskets = bi.agg(countDistinct(col("__b")).as("n_baskets"))
-    val out = pairs
+    pairs
       .join(supports.select(col("__i").as("item_a"),
         col("__s").as("support_a")), Seq("item_a"))
       .join(supports.select(col("__i").as("item_b"),
@@ -924,8 +920,6 @@ object CorpusStats {
         idiv(dec(col("support")) * lit(ppmScale), dec(col("support_b")))
           .as("conf_b_to_a_ppm"))
       .pin("CorpusStats.pairAffinity")
-    bi.unpersist(false)
-    out
   }
 
   /** Pairwise correlation building blocks for a set of integral columns:

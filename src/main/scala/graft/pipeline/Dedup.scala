@@ -248,27 +248,24 @@ object Dedup {
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3,
-      threshold: Double = 0.5, maxBucket: Int = 64): DataFrame = {
-    // persisted: the plan references the signatures from the candidate
+      threshold: Double = 0.5, maxBucket: Int = 64): DataFrame = Materialize.scoped { reuse =>
+    // reused: the plan references the signatures from the candidate
     // buckets and both sides of the signature-score join — without the
     // cache the shingle+sketch kernel would rerun three times
-    val sigs = spread(df).select(col(idCol).as("__id"),
-      minhashSignatureText(col(textCol), shingleSize, numHashes).as("__sig"))
-      .persist()
+    val sigs = reuse(spread(df).select(col(idCol).as("__id"),
+      minhashSignatureText(col(textCol), shingleSize, numHashes).as("__sig")))
     val pairs = minhashCandidates(sigs, numHashes, bands, maxBucket)
     val sa = sigs.select(col("__id").as("__a"), col("__sig").as("__sa"))
     val sb = sigs.select(col("__id").as("__b"), col("__sig").as("__sb"))
-    // pin the (small) scored pair set eagerly so the signature cache can be
-    // released immediately rather than by the context cleaner
-    val result = pairs.join(sa, "__a").join(sb, "__b")
+    // pin the (small) scored pair set eagerly so the signature cache is
+    // released when the scope ends rather than by the context cleaner
+    pairs.join(sa, "__a").join(sb, "__b")
       .withColumn("jaccard_est",
         size(filter(zip_with(col("__sa"), col("__sb"), (x, y) => x === y),
           (m: Column) => m)).cast("double") / lit(numHashes.toDouble))
       .filter(col("jaccard_est") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), col("jaccard_est"))
       .pin("Dedup.minhashPairs")
-    sigs.unpersist(false)
-    result
   }
 
   /** Candidate pairs from MinHash banding, verified by the exact n-gram
@@ -410,13 +407,13 @@ object Dedup {
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String, maxIters: Int = 16,
-      inMemoryCutoff: Long = InMemoryEdgeCutoff): DataFrame = {
+      inMemoryCutoff: Long = InMemoryEdgeCutoff): DataFrame = Materialize.scoped { reuse =>
     // The edge list is typically the output of an expensive candidate+verify
-    // pipeline: persist it so the size probe, the collect (small case), and
+    // pipeline: reuse it so the size probe, the collect (small case), and
     // the propagation loop (large case) all run that pipeline exactly once.
     // The probe is a count — no edge rows reach the driver unless the edge
     // set is small enough for the union-find path.
-    val pairs = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).persist()
+    val pairs = reuse(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val edgeCount = pairs.count()
     // the small path is only valid when the LARGE path's semantics can be
     // reproduced exactly: ids must be integral longs (the union-by-MIN
@@ -427,7 +424,6 @@ object Dedup {
       .forall(_ == org.apache.spark.sql.types.LongType)
     if (edgeCount <= inMemoryCutoff && longIds) {
       val sample = pairs.collect() // from cache
-      pairs.unpersist(false)
       val spark = edges.sparkSession
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       val verts = scala.collection.mutable.Set.empty[Long]
@@ -447,54 +443,53 @@ object Dedup {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       import spark.implicits._
-      return verts.toSeq.map(v => (v, find(v))).toDF("id", "component")
+      verts.toSeq.map(v => (v, find(v))).toDF("id", "component")
+    } else {
+      val e = reuse(pairs
+        .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
+      // localCheckpoint (not cache) per round: the pointer-jump self-join
+      // references the label table twice, so an un-truncated logical plan
+      // would double every iteration — checkpointing pins each round's rows
+      // AND resets the lineage to a leaf
+      var labels = e.select(col("src").as("id")).distinct()
+        .withColumn("component", col("id"))
+        .pin("Dedup.connectedComponents labels")
+      var iter = 0
+      var converged = false
+      while (iter < maxIters && !converged) {
+        val incoming = e.join(labels.withColumnsRenamed(Map("id" -> "src")), Seq("src"))
+          .groupBy(col("dst").as("id")).agg(min("component").as("__in"))
+        // pointer jump: follow my label to ITS label — chains contract
+        // geometrically, so deep components converge in O(log diameter)
+        val jump = labels.select(col("id").as("component"), col("component").as("__jp"))
+        // the convergence flag rides the round's own select (newComp is the
+        // same `least`, compared against the incoming component) — the old
+        // probe JOINED next against labels, a full extra join job per round;
+        // now the round's pin job counts the flag as it writes the rows, so
+        // the check costs no job at all
+        val newComp = least(col("component"),
+          coalesce(col("__in"), col("component")),
+          coalesce(col("__jp"), col("component")))
+        val next = Materialize(labels
+          .join(incoming, Seq("id"), "left")
+          .join(jump, Seq("component"), "left")
+          .select(col("id"), newComp.as("__nc"),
+            (newComp =!= col("component")).as("__chg")),
+          s"Dedup.connectedComponents round ${iter + 1}", Some("__chg"))
+        labels = next.df.select(col("id"), col("__nc").as("component"))
+        converged = next.flagged == 0L
+        iter += 1
+      }
+      if (!converged) {
+        throw new IllegalStateException(
+          s"connectedComponents did not converge within $maxIters rounds " +
+            "(component diameter exceeds ~2^maxIters under pointer jumping); " +
+            "raise maxIters — labels from a stopped-early propagation would " +
+            "be silently wrong")
+      }
+      labels
     }
-    val e = pairs
-      .unionAll(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().cache()
-    // localCheckpoint (not cache) per round: the pointer-jump self-join
-    // references the label table twice, so an un-truncated logical plan
-    // would double every iteration — checkpointing pins each round's rows
-    // AND resets the lineage to a leaf
-    var labels = e.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .pin("Dedup.connectedComponents labels")
-    var iter = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      val incoming = e.join(labels.withColumnsRenamed(Map("id" -> "src")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min("component").as("__in"))
-      // pointer jump: follow my label to ITS label — chains contract
-      // geometrically, so deep components converge in O(log diameter)
-      val jump = labels.select(col("id").as("component"), col("component").as("__jp"))
-      // the convergence flag rides the round's own select (newComp is the
-      // same `least`, compared against the incoming component) — the old
-      // probe JOINED next against labels, a full extra join job per round;
-      // now the round's pin job counts the flag as it writes the rows, so
-      // the check costs no job at all
-      val newComp = least(col("component"),
-        coalesce(col("__in"), col("component")),
-        coalesce(col("__jp"), col("component")))
-      val next = Materialize(labels
-        .join(incoming, Seq("id"), "left")
-        .join(jump, Seq("component"), "left")
-        .select(col("id"), newComp.as("__nc"),
-          (newComp =!= col("component")).as("__chg")),
-        s"Dedup.connectedComponents round ${iter + 1}", Some("__chg"))
-      labels = next.df.select(col("id"), col("__nc").as("component"))
-      converged = next.flagged == 0L
-      iter += 1
-    }
-    e.unpersist()
-    pairs.unpersist(false)
-    if (!converged) {
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIters rounds " +
-          "(component diameter exceeds ~2^maxIters under pointer jumping); " +
-          "raise maxIters — labels from a stopped-early propagation would " +
-          "be silently wrong")
-    }
-    labels
   }
 
   /** 64-bit SimHash of the token multiset: bit b of the result is the sign
@@ -557,17 +552,17 @@ object Dedup {
     */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = 4096): DataFrame = Materialize.scoped { reuse =>
     require(maxHamming <= 3,
       "4-way banding guarantees full recall only for maxHamming <= 3")
-    // Persist the signatures: they are 16 bytes/doc but cost an md5 per
+    // Reuse the signatures: they are 16 bytes/doc but cost an md5 per
     // token to compute, and the multi-level plan references them from the
     // per-level size aggregation AND both sides of each pair self-join —
     // uncached, the kernel would rerun O(levels * joins) times. Every cache
-    // taken here is unpersisted explicitly once the result is pinned below.
-    val sh = spread(df).select(col(idCol).as("__id"), simhash64(col(textCol)).as("__sh"))
-      .where(col("__sh").isNotNull) // null text: no signature, no pairs
-      .persist()
+    // taken here is released when the scope ends, after the pin below.
+    val sh = reuse(spread(df)
+      .select(col(idCol).as("__id"), simhash64(col(textCol)).as("__sh"))
+      .where(col("__sh").isNotNull)) // null text: no signature, no pairs
 
     // Disjoint 4-way partitions of the 64 signature bits, one per level:
     // contiguous 16-bit chunks, then bit-stride-4, then nibble-stride-16.
@@ -593,21 +588,18 @@ object Dedup {
         .filter(col("hamming") <= maxHamming)
     }
 
-    val cached = scala.collection.mutable.Buffer[DataFrame](sh)
-    var frontier = banded(sh, levelMasks.head, lit(0L)).persist()
-    cached += frontier
+    var frontier = reuse(banded(sh, levelMasks.head, lit(0L)))
     var out: DataFrame = null
     var l = 0
     var done = false
     while (l < levelMasks.length && !done) {
       // bucket sizes via map-side-combinable agg (never collect_list on an
       // unbounded bucket), joined back to route rows by size
-      val sizes = frontier.groupBy("__key").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") >= 2).persist()
-      cached += sizes
+      val sizes = reuse(frontier.groupBy("__key").agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= 2))
       val withN = frontier.join(sizes, "__key")
       val last = l == levelMasks.length - 1
-      // cheap driver probe on the (persisted) per-bucket counts: in the
+      // cheap driver probe on the (reused) per-bucket counts: in the
       // common case nothing is oversized and the deeper levels' shuffle DAG
       // is never built at all
       val anyOver = !last && !sizes.filter(col("__n") > maxBucket).isEmpty
@@ -617,19 +609,16 @@ object Dedup {
       if (anyOver) {
         val over = withN.filter(col("__n") > maxBucket)
           .select(col("__key"), col("__id"), col("__sh"))
-        frontier = banded(over, levelMasks(l + 1), col("__key")).persist()
-        cached += frontier
+        frontier = reuse(banded(over, levelMasks(l + 1), col("__key")))
       } else done = true
       l += 1
     }
     // a qualifying pair can surface under several chunk keys and levels.
-    // Pin the (small) result eagerly so every intermediate cache can be
-    // released NOW instead of waiting for the context cleaner — repeated
-    // pipeline runs in a long-lived session must not accumulate stale
-    // blocks in executor storage.
-    val result = out.distinct().pin("Dedup.simhashPairs")
-    cached.foreach(_.unpersist(false))
-    result
+    // Pin the (small) result eagerly so every intermediate cache is
+    // released when the scope ends instead of by the context cleaner —
+    // repeated pipeline runs in a long-lived session must not accumulate
+    // stale blocks in executor storage.
+    out.distinct().pin("Dedup.simhashPairs")
   }
 
   /** Exact n-gram Jaccard similarity of two text columns (for verifying LSH
@@ -677,7 +666,7 @@ object Dedup {
     */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5): DataFrame = {
+      n: Int = 3, threshold: Double = 0.5): DataFrame = Materialize.scoped { reuse =>
     // single JVM kernel per row for the shingle set: the Catalyst
     // `shingles` tree re-evaluates its captured split per lambda element
     // (interpreted higher-order functions have no subexpression
@@ -695,17 +684,15 @@ object Dedup {
       java.util.Arrays.sort(out)
       out
     })
-    // persisted: the sorted shingle-hash sets feed the token index AND both
+    // reused: the sorted shingle-hash sets feed the token index AND both
     // sides of the verify join — ~a dozen longs per document, far cheaper
     // to cache than to re-shingle (the verify stage previously re-shingled
     // raw text once per candidate SIDE, ~50x per document on vocabularies
     // where the prefix join is collision-heavy — it was 60% of the plan)
-    val docs = spread(df).select(col(idCol).as("__id"),
-      shUdf(col(textCol)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks = docs.select(col("__id"), size(col("__sh")).as("__len"),
-      explode(col("__sh")).as("__tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = reuse(spread(df).select(col(idCol).as("__id"),
+      shUdf(col(textCol)).as("__sh")))
+    val toks = reuse(docs.select(col("__id"), size(col("__sh")).as("__len"),
+      explode(col("__sh")).as("__tok")))
     val freq = toks.groupBy("__tok").agg(count(lit(1)).as("__df"))
     // rank tokens per document under the global (rarity, token) order and
     // keep only the prefix that the threshold cannot skip past
@@ -716,12 +703,11 @@ object Dedup {
     // (values in play are small integers, so 1e-9 cannot cross between
     // non-equal integers), and the exact verify stage discards the extras.
     val w = Window.partitionBy("__id").orderBy(col("__df"), col("__tok"))
-    val prefix = toks.join(freq, "__tok")
+    val prefix = reuse(toks.join(freq, "__tok")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <=
         col("__len") - ceil(lit(threshold) * col("__len") - lit(1e-9)) + lit(1))
-      .select(col("__tok"), col("__id"), col("__len"), col("__rn"))
-      .persist()
+      .select(col("__tok"), col("__id"), col("__len"), col("__rn")))
     // PPJoin-style pruning, both exact:
     //  - length filter: J >= t forces t*|b| <= |a| (and symmetrically);
     //  - positional filter: a qualifying pair's globally-smallest shared
@@ -761,17 +747,13 @@ object Dedup {
           inter.toDouble / (a.length + b.length - inter).toDouble)
       }
     })
-    // pin the (near-dup-sized) verified pair set eagerly so the caches can
-    // be released immediately rather than by the context cleaner
-    val result = cand.join(ta, "__a").join(tb, "__b")
+    // pin the (near-dup-sized) verified pair set eagerly so the caches are
+    // released when the scope ends rather than by the context cleaner
+    cand.join(ta, "__a").join(tb, "__b")
       .withColumn("jaccard", jac(col("__sa"), col("__sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("__a").as("id_a"), col("__b").as("id_b"), col("jaccard"))
       .pin("Dedup.ngramJaccardPairs")
-    prefix.unpersist(false)
-    toks.unpersist(false)
-    docs.unpersist(false)
-    result
   }
 
   /** Benchmark decontamination: the ids of `docs` rows sharing at least one
@@ -1220,18 +1202,17 @@ object Dedup {
     */
   def editDistancePairs(
       df: DataFrame, strCol: String, maxDistance: Int,
-      q: Int = 2, maxLenBucket: Int = 100000): DataFrame = {
+      q: Int = 2, maxLenBucket: Int = 100000): DataFrame = Materialize.scoped { reuse =>
     require(maxDistance >= 1, s"maxDistance must be >= 1, got $maxDistance")
     require(q >= 1, s"gram length q must be >= 1, got $q")
     Inputs.present(df, "input", strCol)
     val d = maxDistance
     val longMin = q * (d + 1) // >= q*d + 1 positional grams
-    val dict = spread(df)
+    val dict = reuse(spread(df)
       .select(col(strCol).cast("string").as("__s"))
       .filter(col("__s").isNotNull && length(col("__s")) > 0)
       .distinct()
-      .withColumn("__len", length(col("__s")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__len", length(col("__s"))))
     // --- long path: rarest-first q-gram prefix index
     val grams = dict.filter(col("__len") >= longMin)
       .select(col("__s"), col("__len"),
@@ -1269,13 +1250,11 @@ object Dedup {
       .filter(col("__s") =!= col("__t"))
       .select(least(col("__s"), col("__t")).as("__a"),
         greatest(col("__s"), col("__t")).as("__b"))
-    val result = longCand.union(shortCand).distinct()
+    longCand.union(shortCand).distinct()
       .withColumn("dist", levenshtein(col("__a"), col("__b"), d))
       .filter(col("dist") =!= -1)
       .select(col("__a").as("name_a"), col("__b").as("name_b"), col("dist"))
       .pin("Dedup.editDistancePairs")
-    dict.unpersist(false)
-    result
   }
 
   /** Entity resolution over a string dictionary: every distinct `strCol`
@@ -1306,15 +1285,14 @@ object Dedup {
   def resolveEntities(
       df: DataFrame, strCol: String, maxDistance: Int,
       q: Int = 2, maxLenBucket: Int = 100000,
-      canonical: String = "min"): DataFrame = {
+      canonical: String = "min"): DataFrame = Materialize.scoped { reuse =>
     require(canonical == "min" || canonical == "frequent",
       s"canonical must be 'min' or 'frequent', got '$canonical'")
     val pairs = editDistancePairs(df, strCol, maxDistance, q, maxLenBucket)
     val dict = spread(df).select(col(strCol).cast("string").as("name"))
       .filter(col("name").isNotNull && length(col("name")) > 0)
       .distinct()
-    val ids = graft.exec.Ranks.globalRowNumber(dict, Seq(col("name")), "__nid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ids = reuse(graft.exec.Ranks.globalRowNumber(dict, Seq(col("name")), "__nid"))
     val edges = pairs
       .join(ids.select(col("name").as("name_a"), col("__nid").as("__ia")),
         "name_a")
@@ -1348,13 +1326,11 @@ object Dedup {
           .select(col("component"), col("__b").getField("n").as("__canon"))
         members.join(best, "component").select(col("name"), col("__canon"))
       }
-    val out = ids.select(col("name"))
+    ids.select(col("name"))
       .join(clustered, Seq("name"), "left")
       .select(col("name"),
         coalesce(col("__canon"), col("name")).as("canonical"))
       .pin("Dedup.resolveEntities")
-    ids.unpersist(false)
-    out
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo 1995, the merge/

@@ -221,6 +221,26 @@ object Quality {
       .drop(flags: _*)
   }
 
+  /** `rows` with per-group statistics of one [[graft.exec.Kll]] quantile
+    * sketch joined back: the sketch of `m` at `qs` (named `__kll`) is
+    * aggregated per group of `groupCols` (globally when empty) and
+    * projected to `stats`, the keys renamed `__g_*` so they survive the
+    * join. Ungrouped, the one stats row is a broadcast cross join; grouped,
+    * a null-safe left join on the keys, which are then dropped.
+    */
+  private def withKllStats(rows: DataFrame, groupCols: Seq[String], m: Column,
+      k: Int, qs: Seq[Double], stats: Column*): DataFrame = {
+    val sk = graft.exec.Kll.quantiles(m, k, qs).as("__kll")
+    val table =
+      (if (groupCols.isEmpty) rows.agg(sk)
+       else rows.groupBy(groupCols.map(col): _*).agg(sk))
+        .select(groupCols.map(c => col(c).as(s"__g_$c")) ++ stats: _*)
+    if (groupCols.isEmpty) rows.crossJoin(broadcast(table))
+    else rows.join(table,
+      groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _), "left")
+      .drop(groupCols.map(c => s"__g_$c"): _*)
+  }
+
   /** Robust (Tukey-fence) outlier tagging: per group, the IQR fences
     * [q1 − factor·(q3−q1), q3 + factor·(q3−q1)] from ONE bounded-state
     * [[graft.exec.Kll]] sketch aggregate, joined back so every row gains
@@ -252,26 +272,17 @@ object Quality {
     Inputs.free(df, "robustOutliers", Seq("lo_fence", "hi_fence",
       "is_outlier", "err_units") ++ groupCols.map(c => s"__g_$c"): _*)
     val v = col(valueCol).cast("double")
-    val sk = graft.exec.Kll.quantiles(v, k, Seq(0.25, 0.75)).as("__kll")
-    val fences0 =
-      (if (groupCols.isEmpty) df.agg(sk)
-       else df.groupBy(groupCols.map(col): _*).agg(sk))
-        .select(groupCols.map(c => col(c).as(s"__g_$c")) ++ Seq(
-          (col("__kll.values")(0) -
-            lit(factor) * (col("__kll.values")(1) - col("__kll.values")(0)))
-            .as("lo_fence"),
-          (col("__kll.values")(1) +
-            lit(factor) * (col("__kll.values")(1) - col("__kll.values")(0)))
-            .as("hi_fence"),
-          col("__kll.err_units").as("err_units")): _*)
-    val joined =
-      if (groupCols.isEmpty) df.crossJoin(broadcast(fences0))
-      else df.join(fences0,
-        groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _), "left")
-        .drop(groupCols.map(c => s"__g_$c"): _*)
-    joined.withColumn("is_outlier",
-      when(v.isNull || isnan(v), lit(null).cast("boolean"))
-        .otherwise(v < col("lo_fence") || v > col("hi_fence")))
+    withKllStats(df, groupCols, v, k, Seq(0.25, 0.75),
+      (col("__kll.values")(0) -
+        lit(factor) * (col("__kll.values")(1) - col("__kll.values")(0)))
+        .as("lo_fence"),
+      (col("__kll.values")(1) +
+        lit(factor) * (col("__kll.values")(1) - col("__kll.values")(0)))
+        .as("hi_fence"),
+      col("__kll.err_units").as("err_units"))
+      .withColumn("is_outlier",
+        when(v.isNull || isnan(v), lit(null).cast("boolean"))
+          .otherwise(v < col("lo_fence") || v > col("hi_fence")))
   }
 
   /** Robust z-scores: per group, z = (x − median) / (MAD · `scaleFactor`)
@@ -307,25 +318,13 @@ object Quality {
       Seq("median", "mad", "robust_z", "median_err_units", "mad_err_units",
         "__absdev"): _*)
     val v = col(valueCol).cast("double")
-    def medTable(src: DataFrame, m: Column, outName: String,
-        errName: String): DataFrame = {
-      val agg = graft.exec.Kll.quantiles(m, k, Seq(0.5)).as("__kll")
-      (if (groupCols.isEmpty) src.agg(agg)
-       else src.groupBy(groupCols.map(col): _*).agg(agg))
-        .select(groupCols.map(c => col(c).as(s"__g_$c")) ++ Seq(
-          col("__kll.values")(0).as(outName),
-          col("__kll.err_units").as(errName)): _*)
-    }
-    def joinStats(rows: DataFrame, stats: DataFrame): DataFrame =
-      if (groupCols.isEmpty) rows.crossJoin(broadcast(stats))
-      else rows.join(stats,
-        groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _), "left")
-        .drop(groupCols.map(c => s"__g_$c"): _*)
-    val withMedian = joinStats(df,
-      medTable(df, v, "median", "median_err_units"))
-    val deviations = withMedian.withColumn("__absdev", abs(v - col("median")))
-    val withMad = joinStats(deviations,
-      medTable(deviations, col("__absdev"), "mad", "mad_err_units"))
+    def withMedian(rows: DataFrame, m: Column, outName: String,
+        errName: String): DataFrame =
+      withKllStats(rows, groupCols, m, k, Seq(0.5),
+        col("__kll.values")(0).as(outName), col("__kll.err_units").as(errName))
+    val deviations = withMedian(df, v, "median", "median_err_units")
+      .withColumn("__absdev", abs(v - col("median")))
+    val withMad = withMedian(deviations, col("__absdev"), "mad", "mad_err_units")
       .drop("__absdev")
     withMad.withColumn("robust_z",
       when(v.isNull || isnan(v) || col("mad") === 0.0,
@@ -354,22 +353,13 @@ object Quality {
     Inputs.free(df, "winsorize", Seq("lo_clip", "hi_clip", "winsorized",
       "err_units") ++ groupCols.map(c => s"__g_$c"): _*)
     val v = col(valueCol).cast("double")
-    val sk = graft.exec.Kll.quantiles(v, k, Seq(pLo, pHi)).as("__kll")
-    val clips =
-      (if (groupCols.isEmpty) df.agg(sk)
-       else df.groupBy(groupCols.map(col): _*).agg(sk))
-        .select(groupCols.map(c => col(c).as(s"__g_$c")) ++ Seq(
-          col("__kll.values")(0).as("lo_clip"),
-          col("__kll.values")(1).as("hi_clip"),
-          col("__kll.err_units").as("err_units")): _*)
-    val joined =
-      if (groupCols.isEmpty) df.crossJoin(broadcast(clips))
-      else df.join(clips,
-        groupCols.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _), "left")
-        .drop(groupCols.map(c => s"__g_$c"): _*)
-    joined.withColumn("winsorized",
-      when(v.isNull || isnan(v), lit(null).cast("double"))
-        .otherwise(least(greatest(v, col("lo_clip")), col("hi_clip"))))
+    withKllStats(df, groupCols, v, k, Seq(pLo, pHi),
+      col("__kll.values")(0).as("lo_clip"),
+      col("__kll.values")(1).as("hi_clip"),
+      col("__kll.err_units").as("err_units"))
+      .withColumn("winsorized",
+        when(v.isNull || isnan(v), lit(null).cast("double"))
+          .otherwise(least(greatest(v, col("lo_clip")), col("hi_clip"))))
   }
 
   /** Functional-dependency violation report: for the asserted dependency

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import com.ibm.icu.lang.UCharacter
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -66,13 +68,24 @@ object TextAnalysis {
   }
 
   /** JVM twin of [[words]] (of [[wordsLower]] with `lower`, folding case
-    * under `Locale.ROOT`) for row kernels. NULL in, NULL out; the split
-    * limit -1 keeps the trailing empty word that Spark's `split` keeps.
+    * by [[lowerOf]]) for row kernels. NULL in, NULL out; the split limit
+    * -1 keeps the trailing empty word that Spark's `split` keeps.
     */
   private[pipeline] def wordsOf(t: String, lower: Boolean = false): Array[String] =
     if (t == null) null
-    else spaceTrim(if (lower) t.toLowerCase(java.util.Locale.ROOT) else t)
-      .split("\\s+", -1)
+    else spaceTrim(if (lower) lowerOf(t) else t).split("\\s+", -1)
+
+  /** Spark's `lower` of one string, step for step as Spark 4.1 runs it on
+    * a UTF8_BINARY string at the default `spark.sql.icu.caseMappings.enabled`
+    * (`CollationAwareUTF8String.toLowerCase`): all-ASCII text maps A-Z only;
+    * any other text takes ICU's full case mapping under the JVM default
+    * locale, so a `tr` locale folds `İ` to `i` on both sides. ICU is called
+    * directly because Spark's class builds a 2.6 MB title-case table on
+    * first use.
+    */
+  private def lowerOf(t: String): String =
+    if (t.chars.allMatch(_ < 0x80)) t.toLowerCase(java.util.Locale.ROOT)
+    else UCharacter.toLowerCase(t)
 
   /** One row per non-empty lowercased word of `textCol`, named `as`, after
     * the `extra` columns — the token stream the token statistics, BM25 and

@@ -20,7 +20,7 @@ class TextKernelTwinSpec extends SparkSpec {
   private val texts: Seq[String] = Seq(
     null, "", "  ", "a b\n", "\ta b", "\u0001a b", "p q\n", "q \n",
     " a  b ", "a\tb\nc ", "Mixed CASE Words Mixed case", "Ab", "x Y",
-    "one two three four five")
+    "one two three four five") ++ LowerLocaleProbe.texts
 
   private val schema = StructType(Seq(StructField("t", StringType)))
 
@@ -68,6 +68,19 @@ class TextKernelTwinSpec extends SparkSpec {
       }
     }
   }
+
+  // the default locale is JVM-wide: each run gets a JVM of its own
+  for ((lang, country) <- Seq(("tr", "TR"), ("en", "US")))
+    test(s"wordsOf lowercases as Spark's lower under a $lang-$country default locale") {
+      val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+      val proc = new ProcessBuilder(javaBin.toString, "-Xmx128m",
+          s"-Duser.language=$lang", s"-Duser.country=$country",
+          "-cp", System.getProperty("java.class.path"),
+          "graft.pipeline.LowerLocaleProbe")
+        .redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+      assert(proc.waitFor() === 0, out)
+    }
 
   test("contaminatedIds and streamingDecontaminate flag the same ids") {
     val docSchema = StructType(Seq(longCol("id"), strCol("text")))
